@@ -188,8 +188,9 @@ object QueryCatalog {
     // (Spark round = BigDecimal HALF_UP on the shortest decimal repr + Java
     // %.2f, vs DuckDB round = scaled binary + C printf) that diverge on
     // near-midpoint values; the exact z_score / pct_deviation numerics are
-    // emitted as columns alongside. AlertOp itself (the operator) still
-    // formats the reference's full message — see AlertOpSpec's truth table.
+    // emitted as columns alongside. AlertOp.check (the pipeline's alert
+    // kernel) still formats the reference's full message — see AlertOpSpec's
+    // truth table.
     val zr = lit(s"z_score exceeds threshold=${cfg.alertZThreshold}")
     val pr = lit(s"pct_deviation exceeds threshold=${cfg.alertPctThreshold}%")
     joined
@@ -292,7 +293,7 @@ object QueryCatalog {
         expr(tsMillis).as("eventTime"))
       .as[Metric]
     val aggs = deduped.map(m => WindowAggregate(m.nodeId, m.cpu, m.eventTime))
-    BaselineOp(aggs, replayCfg).toDF()
+    BaselineOp.replay(aggs, replayCfg).toDF()
       .select(
         col("nodeId").as("node_id"),
         col("eventTime").as("event_time"),

@@ -80,7 +80,7 @@ final case class Alert(
     eventTime: Long,
     baselineEventTime: Long)
 
-/** Per-key state of the baseline operator (flinkarima.py:171-189).
+/** Per-key state of the baseline kernel (flinkarima.py:171-189).
   * `history` holds z-scored samples, `rawHistory` raw samples, both capped at
   * maxHistory; `count/mean/m2` are the Welford accumulators over raw samples;
   * `emitCounter` gates model fits (flinkarima.py:218-223).
@@ -101,17 +101,6 @@ final case class NodeState(
 object NodeState {
   val empty: NodeState = NodeState(Vector.empty, Vector.empty, 0, 0L, 0.0, 0.0)
 }
-
-/** Union envelope for the alert operator's two inputs (the reference's
-  * broadcast+keyed two-input operator, flinkarima.py:284-376, expressed as a
-  * single keyed stream in Spark).
-  */
-final case class BaselineOrAggregate(
-    nodeId: String,
-    eventTime: Long,
-    isBaseline: Boolean,
-    aggregate: Option[WindowAggregate],
-    baseline: Option[Baseline])
 
 /** Output envelope of the fused streaming pipeline: the reference emits both
   * baselines and alerts as JSON strings to stdout (flinkarima.py:471-474).

@@ -1,98 +1,25 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
 import graft.core.PipelineConfig
-import graft.model.{Alert, Baseline, BaselineOrAggregate, WindowAggregate}
+import graft.model.{Alert, Baseline, WindowAggregate}
 
-/** Latest-baseline enrichment + alerting (O9/O10/O11,
-  * /root/reference/src/flinkarima.py:284-376).
+/** Latest-baseline alerting kernel (O9/O10/O11,
+  * /root/reference/src/flinkarima.py:284-376), called by [[NodePipeline]]
+  * once per finalized window with the key's latest baseline.
   *
   * The reference physically broadcasts every baseline to all alert instances
   * and keeps a `node_id -> latest baseline` map in broadcast state. That is a
   * Flink API artifact: both streams are keyed by the SAME key, so the
-  * Spark-native form co-partitions them — union the tagged streams and hold
-  * only this key's latest baseline in keyed state (strictly less data
-  * movement at scale than a broadcast; SURVEY §7.5.2).
+  * Spark-native form keeps only this key's latest baseline in the key's own
+  * pipeline state — no broadcast state, strictly less data movement at scale
+  * (SURVEY §7.5.2).
   *
-  * Within a micro-batch, elements are processed in event-time order with
-  * aggregates before baselines at equal timestamps — in the reference the raw
-  * path is one map shorter than the SARIMAX path, so an aggregate is alerted
-  * against the PREVIOUS baseline, not the one it itself triggers.
-  *
-  * Composition note: chaining [[BaselineOp]] -> [[AlertOp]] stacks two
-  * `flatMapGroupsWithState` operators, which Structured Streaming rejects in
-  * a single streaming query — the chained form is for BATCH replay (or two
-  * separate streaming queries with an intermediate sink). The single-query
-  * streaming path is the fused [[NodePipeline]].
+  * Ordering: a window is checked BEFORE it is fed to [[BaselineOp.step]], so
+  * at equal timestamps the alert precedes the baseline — in the reference the
+  * raw path is one map shorter than the SARIMAX path, so an aggregate is
+  * alerted against the PREVIOUS baseline, not the one it itself triggers.
   */
 object AlertOp {
-
-  /** Wrapper so GroupState has a product-encodable shape. */
-  final case class LatestBaseline(baseline: Option[Baseline])
-
-  def tag(aggregates: Dataset[WindowAggregate], baselines: Dataset[Baseline]): Dataset[BaselineOrAggregate] = {
-    import aggregates.sparkSession.implicits._
-    val aggTagged = aggregates.map(a => BaselineOrAggregate(a.nodeId, a.eventTime, isBaseline = false, Some(a), None))
-    val baseTagged = baselines.map(b => BaselineOrAggregate(b.nodeId, b.eventTime, isBaseline = true, None, Some(b)))
-    aggTagged.union(baseTagged)
-  }
-
-  /** `idleTtlMillis = None` (the default) matches the reference exactly: the
-    * latest baseline per key is kept FOREVER (the Flink MapState at
-    * flinkarima.py:288 never expires either). At 100 TB key cardinality
-    * that is a leak — decommissioned nodes hold a baseline each for the
-    * life of the stream — so `Some(ttl)` arms a processing-time idle
-    * timeout (the [[NodePipeline]] retention pattern): a key that receives
-    * no rows for `ttl` is evicted entirely. Any row for the key (baseline
-    * OR aggregate) re-arms its timer; after eviction the key simply has no
-    * baseline again, so its next aggregates are suppressed (flinkarima.py
-    * :313-316) until a fresh baseline arrives — the same cold-start
-    * semantics as a brand-new key.
-    */
-  def apply(
-      tagged: Dataset[BaselineOrAggregate],
-      cfg: PipelineConfig,
-      idleTtlMillis: Option[Long] = None): Dataset[Alert] = {
-    import tagged.sparkSession.implicits._
-    val timeout =
-      if (idleTtlMillis.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    tagged
-      .groupByKey(_.nodeId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(processGroup(cfg, idleTtlMillis) _)
-  }
-
-  def processGroup(cfg: PipelineConfig, idleTtlMillis: Option[Long] = None)(
-      key: String,
-      rows: Iterator[BaselineOrAggregate],
-      state: GroupState[LatestBaseline]): Iterator[Alert] = {
-    if (state.hasTimedOut) {
-      // idle past TTL: evict the latest-baseline state for this key
-      state.remove()
-      Iterator.empty
-    } else {
-      var latest = state.getOption.getOrElse(LatestBaseline(None)).baseline
-      val out = ArrayBuffer.empty[Alert]
-      rows.toArray.sortBy(r => (r.eventTime, r.isBaseline)).foreach { row =>
-        if (row.isBaseline) {
-          // skip baselines without a node id (flinkarima.py:368-370)
-          row.baseline.foreach(b => if (b.nodeId.nonEmpty) latest = Some(b))
-        } else {
-          row.aggregate.foreach { aggRow =>
-            check(cfg, aggRow, latest).foreach(out += _)
-          }
-        }
-      }
-      state.update(LatestBaseline(latest))
-      // no-op in batch replay (every group is processed exactly once)
-      idleTtlMillis.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-  }
 
   /** Alert math — exact port of flinkarima.py:301-360. No baseline yet for the
     * key => no alert (:313-316); pct guarded by `baseline >= min_baseline`

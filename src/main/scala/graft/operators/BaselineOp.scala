@@ -1,23 +1,20 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.PipelineConfig
 import graft.model.{Baseline, NodeState, WindowAggregate}
 import graft.ts.{DailyTrend, SarimaxLite, Welford}
 
-/** Per-key stateful SARIMAX baseline operator (O6/O7,
-  * /root/reference/src/flinkarima.py:145-258).
-  *
-  * Spark-native form: `groupByKey(_.nodeId).flatMapGroupsWithState` carrying
-  * [[NodeState]] — the idiomatic "UDF with state", co-partitioned by key, so
-  * state scales with key cardinality across executors (RocksDB state store
-  * provider at production scale).
+/** Per-key SARIMAX baseline kernel (O6/O7,
+  * /root/reference/src/flinkarima.py:145-258): [[step]] is the reference's
+  * `process_element` as a pure `(NodeState, aggregate) -> (NodeState',
+  * baseline?)` function. [[NodePipeline]] calls it once per finalized window
+  * and keeps the [[NodeState]] in its own keyed state; [[replay]] folds it
+  * over stored aggregates in batch.
   *
   * Exact reference semantics preserved per element:
   *   1. z-score the sample with the PRE-update Welford stats (:194-198);
@@ -26,32 +23,22 @@ import graft.ts.{DailyTrend, SarimaxLite, Welford}
   *   4. bump emit counter modulo emitEveryN; fit+emit only when the counter
   *      wraps AND history >= minHistory (:218-223);
   *   5. fit failures are logged and swallowed (:257-258).
-  *
-  * Micro-batch note: elements of one batch are processed in event-time order
-  * (the reference processes in arrival order; SURVEY §7.4.2).
   */
 object BaselineOp extends Logging {
 
-  def apply(aggregates: Dataset[WindowAggregate], cfg: PipelineConfig): Dataset[Baseline] = {
+  /** Batch replay: each key's aggregates folded through [[step]] from
+    * [[NodeState.empty]] in event-time order (the reference processes in
+    * arrival order; SURVEY §7.4.2).
+    */
+  def replay(aggregates: Dataset[WindowAggregate], cfg: PipelineConfig): Dataset[Baseline] = {
     import aggregates.sparkSession.implicits._
-    aggregates
-      .groupByKey(_.nodeId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(processGroup(cfg) _)
-  }
-
-  def processGroup(cfg: PipelineConfig)(
-      key: String,
-      rows: Iterator[WindowAggregate],
-      state: GroupState[NodeState]): Iterator[Baseline] = {
-    var st = state.getOption.getOrElse(NodeState.empty)
-    val out = ArrayBuffer.empty[Baseline]
-    rows.toArray.sortBy(_.eventTime).foreach { aggRow =>
-      val (next, emitted) = step(cfg, st, aggRow)
-      st = next
-      emitted.foreach(out += _)
+    aggregates.groupByKey(_.nodeId).flatMapGroups { (_, rows) =>
+      rows.toArray.sortBy(_.eventTime)
+        .foldLeft((NodeState.empty, Vector.empty[Baseline])) { case ((st, out), aggRow) =>
+          val (next, emitted) = step(cfg, st, aggRow)
+          (next, out ++ emitted)
+        }._2
     }
-    state.update(st)
-    out.iterator
   }
 
   /** One reference `process_element` step: (state, aggregate) -> (state', baseline?). */

@@ -8,8 +8,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.core.PipelineConfig
 import graft.model._
 
-/** Fused per-key streaming pipeline: tumbling-window aggregation + SARIMAX
-  * baseline + latest-baseline alerting in ONE keyed stateful operator.
+/** The job's one stateful operator: tumbling-window aggregation + SARIMAX
+  * baseline + latest-baseline alerting, fused into a single keyed
+  * `flatMapGroupsWithState` stage over the pure kernels [[AlertOp.check]]
+  * and [[BaselineOp.step]].
   *
   * Why fused: Structured Streaming allows at most one
   * `flatMapGroupsWithState` stage per streaming query (and none after a
@@ -17,8 +19,8 @@ import graft.model._
   * (/root/reference/src/flinkarima.py:392-476) is keyed by the same
   * `node_id` — the dataflow is logically one keyed pipeline (the broadcast
   * edge is a Flink API artifact, see [[AlertOp]]). Fusing gives a single
-  * shuffle on `node_id` and a single state store — less data movement than
-  * the reference's two hash exchanges + broadcast.
+  * shuffle on `node_id` and a single state store, with no broadcast state —
+  * less data movement than the reference's two hash exchanges + broadcast.
   *
   * Window semantics: event-time tumbling windows. A window for a key is
   * finalized either by a later-window record for that key (zero-lateness
@@ -27,12 +29,9 @@ import graft.model._
   * processing-time idle timeout of `windowMillis`, so a node that goes
   * quiet still emits its last window (and can still alert: a dead node is
   * exactly the case alerting exists for). Records at or before an already
-  * finalized window are dropped.
-  *
-  * The modular [[WindowAgg]] + [[BaselineOp]] + [[AlertOp]] operators remain
-  * available for batch analytics; under Structured Streaming each stateful
-  * stage would need its own query with an intermediate sink — the fused form
-  * is the single-query streaming path.
+  * finalized window are dropped. A finalized window is alerted against the
+  * previous baseline before it feeds the baseline, so at equal timestamps
+  * the alert comes first (see [[AlertOp]]).
   */
 object NodePipeline {
 

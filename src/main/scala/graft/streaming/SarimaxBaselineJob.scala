@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.{GraftSession, PipelineConfig}
-import graft.model.{Metric, PipelineOutput}
+import graft.model.Metric
 import graft.operators.{MetricParse, NodePipeline}
 import graft.sources.MetricDatagen
 
@@ -53,12 +53,6 @@ object SarimaxBaselineJob {
     if (cfg.useDatagen) MetricDatagen.stream(spark, cfg.datagenNodes, cfg.datagenRate)
     else kafkaMetrics(spark, cfg)
 
-  /** The full transform graph, source-agnostic (also runs in batch mode for
-    * replay over stored metrics).
-    */
-  def outputs(metricStream: Dataset[Metric], cfg: PipelineConfig): Dataset[PipelineOutput] =
-    NodePipeline(metricStream, cfg)
-
   /** Start the query: baselines + alerts to the console, like the
     * reference's two `.print()` sinks (flinkarima.py:471-474), with
     * checkpointing every trigger (O13).
@@ -66,7 +60,7 @@ object SarimaxBaselineJob {
   def start(spark: SparkSession, cfg: PipelineConfig): StreamingQuery = {
     val checkpoint = cfg.checkpointLocation
       .getOrElse(Files.createTempDirectory("graft-checkpoint-").toString)
-    outputs(metrics(spark, cfg), cfg).writeStream
+    NodePipeline(metrics(spark, cfg), cfg).writeStream
       .outputMode("append")
       .format("console")
       .option("truncate", value = false)

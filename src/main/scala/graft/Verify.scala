@@ -29,7 +29,9 @@ object Verify {
     // actions, so small queries fill the idle cores a big query leaves —
     // ~2-3x faster wall clock than the sequential per-query loop.
     // Queries whose construction runs eager driver work (staging writes,
-    // CC rounds, k-means) are thread-safe: all shared state is the session.
+    // CC rounds, k-means) are thread-safe: all shared state is the session
+    // (operator materializations are plan-owned local checkpoints that no
+    // other query can match or release).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)

@@ -32,7 +32,8 @@ import org.apache.spark.storage.StorageLevel
 object Clusters {
 
   /** (id, component) for every node incident to at least one edge; the
-    * component label is the minimum node id reachable from the node.
+    * component label is the minimum node id reachable from the node. The
+    * call leaves no CacheManager entry: the returned plan owns what it reads.
     *
     * `driverEdgeThreshold`: LSH near-dup pair relations are orders of
     * magnitude smaller than the corpus that produced them — frequently
@@ -76,9 +77,6 @@ object Clusters {
         "maxIter == 1 always throws under failOnNonConvergence; use maxIter >= 2 " +
         "(budget rounds-to-fixpoint + 1) or pass failOnNonConvergence = false")
     val spark = edges.sparkSession
-    // the distributed path's final labels outlive the call — release the
-    // previous invocation's (round 18, the [[Stage.trackPersist]] convention)
-    Stage.invocationStart(spark, "Clusters.connectedComponents")
     // the labels relation appears TWICE in every round's plan (message join
     // + union), so the raw logical plan would DOUBLE per round — 2^20 tree
     // nodes by iteration 20, OOMing the planner long before any data moves.
@@ -174,12 +172,11 @@ object Clusters {
           "(graph diameter likely exceeds the budget; labels would be wrong). " +
           "Raise maxIter, or pass failOnNonConvergence=false to accept partial labels.")
     }
-    // return the PERSISTED relation itself (not another lineage-cut copy):
-    // the caller gets the cached labels and — unlike a derived RDD-scan
-    // wrapper — can release the one retained cache with `.unpersist()` when
-    // done (the next invocation releases it regardless, via the registry).
-    // Intermediate rounds were already unpersisted above.
-    Stage.trackPersist("Clusters.connectedComponents", persisted)
+    // the returned labels leave CacheManager: a local checkpoint the
+    // caller's plan owns (Graph scaladoc: lifetime and fault posture)
+    val out = persisted.localCheckpoint()
+    persisted.unpersist()
+    out
   }
 
   /** Union-find with path compression over collected edges; labels every

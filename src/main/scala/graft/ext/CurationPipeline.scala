@@ -29,7 +29,8 @@ object CurationPipeline {
     * the MinHash-LSH verify stage consumes it through several branches
     * (signatures, both gram sides, the anti-join left side), and without
     * materialization each branch re-executes the fingerprint groupBy +
-    * semi-join lineage. Parquet staging (not `localCheckpoint`) on purpose:
+    * semi-join lineage. Parquet staging (not `localCheckpoint`) wherever a
+    * shared location exists, on purpose:
     * localCheckpoint blocks live only in executor-local storage, so at
     * cluster scale a single lost executor kills the job, whereas staged
     * files sit in shared storage, cut the lineage, and give every
@@ -40,9 +41,7 @@ object CurationPipeline {
     * handling cleanup) — executor tasks write the parts, so a node-local
     * path would scatter them. The default uses the session's checkpoint
     * dir when one is configured (already required to be shared storage),
-    * else a local temp dir that is deleted on JVM exit — correct for
-    * local[*] runs, and loudly wrong (missing parts) rather than subtly
-    * wrong on a multi-node cluster without a checkpoint dir.
+    * else an eager local checkpoint ([[exactStage]]).
     */
   def curate(
       docs: DataFrame,
@@ -104,12 +103,12 @@ object CurationPipeline {
     * wrote to a NODE-LOCAL temp dir, which is exactly as loss-fragile
     * as executor-local cache blocks while paying a write job, footer
     * re-planning, and one parquet scan per consumer branch; the staged
-    * set now lives as an eagerly-materialized MEMORY_AND_DISK cache
-    * instead (InMemoryRelation reports real materialized size stats to
-    * downstream join planning, as the parquet footers did). One staged
-    * cache is retained per session — the next curate() call unpersists
-    * the previous one — so repeated invocations cannot accumulate
-    * storage.
+    * set is an eager `localCheckpoint()` instead: it carries real size
+    * stats to join planning as the parquet footers did, matches no other
+    * plan, stays out of CacheManager, and is freed by ContextCleaner with
+    * the returned plan, so repeated or concurrent calls neither share nor
+    * accumulate storage. Its blocks are executor-local (a lost executor
+    * fails the query); the parquet branch is the fault-tolerant one.
     */
   private def exactStage(
       docs: DataFrame,
@@ -135,20 +134,7 @@ object CurationPipeline {
       case Some(dir) =>
         toStage.write.mode("overwrite").parquet(dir)
         spark.read.parquet(dir)
-      case None =>
-        // unpersist the previous invocation's stage FIRST: CacheManager
-        // dedups cache entries by canonicalized plan, so unpersisting
-        // after would drop the entry the new stage just attached to —
-        // and reusing a live entry across invocations would skip the
-        // recomputation every invocation must perform (each run computes
-        // from the parquet inputs; only the parquet round trip is saved).
-        // Round 18: routed through the shared [[Stage.invocationStart]]/
-        // [[Stage.trackPersist]] registry — the same convention every
-        // invocation-scoped persist in the library now uses.
-        Stage.invocationStart(spark, "CurationPipeline.exactStage")
-        val cached = Stage.trackPersist("CurationPipeline.exactStage", toStage)
-        cached.count() // materialize now: consumers plan against real stats
-        cached
+      case None => toStage.localCheckpoint()
     }
   }
 
@@ -205,18 +191,14 @@ object CurationPipeline {
     import graft.functions.TextFunctions._
     val spark = docs.sparkSession
     import spark.implicits._
-    // the recovered set feeds four branches (urls, keepers, feats, lang), so
-    // it persists for the invocation; the previous invocation's cache is
-    // released first so every call recomputes the decode stack from its
-    // inputs (round 18 — the exactStage convention, [[Stage.trackPersist]])
-    Stage.invocationStart(spark, "CurationPipeline.crawlCurate")
+    // four branches read recovered: a local checkpoint (Graph scaladoc: lifetime)
     val pages = Html.encodeHtmlDocs(docs)
     val archives = Archives.encodeWarcHttpArchives(pages, nArchives, textCol = "html")
-    val recovered = Stage.trackPersist("CurationPipeline.crawlCurate",
-      Archives.warcHttpExtractBodies(archives)
-        .as[(Long, String)]
-        .map { case (id, html) => (id, Html.extractText(html)) }
-        .toDF("doc_id", "text"))
+    val recovered = Archives.warcHttpExtractBodies(archives)
+      .as[(Long, String)]
+      .map { case (id, html) => (id, Html.extractText(html)) }
+      .toDF("doc_id", "text")
+      .localCheckpoint()
     val urls = Url.normalize(Url.attachUrls(recovered)).toDF()
     val allowed = Robots.evaluate(
       urls.select(col("doc_id"), col("host"), col("path")),

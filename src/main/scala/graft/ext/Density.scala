@@ -53,13 +53,10 @@ object Density {
       .groupBy("cx", "cy")
       .agg(count(lit(1)).as("n_points"))
       .withColumn("cell", col("cx") * Pack + (col("cy") + YOffset))
-    // dense feeds three branches (neighbor keys, the join probe, the final
-    // left join) — persisted for the invocation, previous invocation's
-    // cache released first (round 18, the [[Stage.trackPersist]] convention)
-    Stage.invocationStart(rel.sparkSession, "Density.gridDbscan")
-    val dense = Stage.trackPersist("Density.gridDbscan",
-      cells.filter(col("n_points") >= minPts)
-        .select("cell", "cx", "cy"))
+    // three branches read dense: a local checkpoint (Graph scaladoc: lifetime)
+    val dense = cells.filter(col("n_points") >= minPts)
+      .select("cell", "cx", "cy")
+      .localCheckpoint()
     // 8-adjacency as an EQUI-join: each dense cell emits its 8 neighbor
     // keys; an edge exists where a neighbor key hits another dense cell.
     val offsets = for (dx <- -1 to 1; dy <- -1 to 1 if dx != 0 || dy != 0) yield (dx, dy)

@@ -30,6 +30,15 @@ import org.apache.spark.storage.StorageLevel
   * constant-size per round instead of doubling), previous rounds
   * unpersisted. Edges partition by src once and are reused every
   * iteration.
+  *
+  * Lifetimes are plan-owned: what every round reads and the final round
+  * behind the result are eager `localCheckpoint()`s — RDD scans no other
+  * plan can canonically match, never registered in CacheManager, freed by
+  * ContextCleaner at the first driver GC after the returned plan becomes
+  * unreachable. Fault-tolerance posture: those blocks are executor-local,
+  * so a lost executor fails the query instead of recomputing it (why
+  * [[CurationPipeline]] stages to parquet whenever a shared directory
+  * exists).
   */
 object Graph {
 
@@ -75,14 +84,9 @@ object Graph {
       driverEdgeThreshold: Int = 200000): DataFrame = {
     val spark = edges.sparkSession
     def cutLineage(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-    // relations that outlive the call (e/nodes and the final hub/auth on
-    // the distributed path) persist for the invocation; the previous
-    // invocation's caches are released first (round 18, the
-    // [[Stage.trackPersist]] convention). Loop intermediates keep their
-    // plain persist + in-loop unpersist.
-    Stage.invocationStart(spark, "Graph.hits")
-    val e = Stage.trackPersist("Graph.hits",
-      edges.select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("long")))
+    // every round reads e and nodes: local checkpoints (object scaladoc)
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("long"))
+      .localCheckpoint()
     // small-graph fast path (the [[Clusters]] threshold pattern): an
     // 8-round × 2-phase distributed iteration is ~40 scheduled jobs — for
     // a graph that fits on the driver, the SAME integer recurrence runs
@@ -111,12 +115,11 @@ object Graph {
         }.toMap)
         it += 1
       }
-      e.unpersist()
       import spark.implicits._
       return nodes.map(h => (h, hub(h), auth(h))).toSeq.toDF("h", "hub", "auth")
     }
-    val nodes = Stage.trackPersist("Graph.hits",
-      e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct())
+    val nodes = e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct()
+      .localCheckpoint()
     def rescale(scores: DataFrame, colName: String): DataFrame = {
       val total = scores.agg(sum(colName)).head.getLong(0)
       if (total == 0L) scores // edgeless corner: nothing to normalize
@@ -145,23 +148,22 @@ object Graph {
       hub = nextHub
       it += 1
     }
-    // the final round's hub/auth back the returned plan: registered so the
-    // next invocation releases them
-    Stage.trackPersist("Graph.hits", hub)
-    Stage.trackPersist("Graph.hits", auth)
-    hub.join(auth, "h").select(col("h"), col("hub"), col("auth"))
+    // the returned rounds leave CacheManager (object scaladoc)
+    val out = hub.join(auth, "h").select(col("h"), col("hub"), col("auth")).localCheckpoint()
+    hub.unpersist()
+    auth.unpersist()
+    out
   }
 
   def pagerank(edges: DataFrame, iterations: Int = 10, scale: Long = 1000000000000L,
       driverEdgeThreshold: Int = 200000): DataFrame = {
     val spark = edges.sparkSession
     def cutLineage(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-    // invocation-scoped persists — see [[hits]]
-    Stage.invocationStart(spark, "Graph.pagerank")
-    val e = Stage.trackPersist("Graph.pagerank",
-      edges
-        .select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("long"))
-        .repartition(col("src")))
+    // every round reads e, outd and nodes: local checkpoints (object scaladoc)
+    val e = edges
+      .select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("long"))
+      .repartition(col("src"))
+      .localCheckpoint()
     // small-graph fast path — same recurrence on the driver (see [[hits]])
     if (driverEdgeThreshold > 0 && e.count() <= driverEdgeThreshold) {
       val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -179,14 +181,12 @@ object Graph {
         }.toMap
         it += 1
       }
-      e.unpersist()
       import spark.implicits._
       return nodes.map(h => (h, pr(h))).toSeq.toDF("h", "pr")
     }
-    val outd = Stage.trackPersist("Graph.pagerank",
-      e.groupBy("src").agg(sum("weight").as("od")))
-    val nodes = Stage.trackPersist("Graph.pagerank",
-      e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct())
+    val outd = e.groupBy("src").agg(sum("weight").as("od")).localCheckpoint()
+    val nodes = e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct()
+      .localCheckpoint()
     val n = nodes.count()
     val base = (15L * scale) / (100L * n)
     var pr = cutLineage(nodes.select(col("h"), lit(scale / n).as("pr")))
@@ -209,8 +209,10 @@ object Graph {
       pr = next
       it += 1
     }
-    Stage.trackPersist("Graph.pagerank", pr) // final round backs the returned plan
-    pr
+    // the returned round leaves CacheManager (object scaladoc)
+    val out = pr.localCheckpoint()
+    pr.unpersist()
+    out
   }
 
   /** Crawl-frontier prioritization — the scheduling read-out the three
@@ -267,21 +269,17 @@ object Graph {
     * path; north-star scope.
     */
   def triangles(edges: DataFrame): DataFrame = {
-    // und feeds the orientation + degree branches, deg the orientation +
-    // final join — both persist for the invocation; the previous
-    // invocation's caches are released first (round 18, the
-    // [[Stage.trackPersist]] convention)
-    Stage.invocationStart(edges.sparkSession, "Graph.triangles")
-    val und = Stage.trackPersist("Graph.triangles",
-      edges
-        .filter(col("src") =!= col("dst"))
-        .select(
-          least(col("src"), col("dst")).cast("long").as("u"),
-          greatest(col("src"), col("dst")).cast("long").as("v"))
-        .distinct())
-    val deg = Stage.trackPersist("Graph.triangles",
-      und.select(col("u").as("h")).unionAll(und.select(col("v").as("h")))
-        .groupBy("h").agg(count(lit(1)).as("deg")))
+    // und and deg each feed two branches: local checkpoints (object scaladoc)
+    val und = edges
+      .filter(col("src") =!= col("dst"))
+      .select(
+        least(col("src"), col("dst")).cast("long").as("u"),
+        greatest(col("src"), col("dst")).cast("long").as("v"))
+      .distinct()
+      .localCheckpoint()
+    val deg = und.select(col("u").as("h")).unionAll(und.select(col("v").as("h")))
+      .groupBy("h").agg(count(lit(1)).as("deg"))
+      .localCheckpoint()
     // orient from lower (deg, h) to higher; carry the head's order key for the wedge sort
     val ann = und
       .join(deg.select(col("h").as("u"), col("deg").as("du")), "u")
@@ -353,12 +351,11 @@ object Graph {
       driverEdgeThreshold: Int = 200000): DataFrame = {
     val spark = edges.sparkSession
     def cutLineage(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-    // invocation-scoped persists — see [[hits]]
-    Stage.invocationStart(spark, "Graph.bfs")
-    val e = Stage.trackPersist("Graph.bfs",
-      edges
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .repartition(col("src")))
+    // every round reads e and nodes: local checkpoints (object scaladoc)
+    val e = edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .repartition(col("src"))
+      .localCheckpoint()
     val seed = seeds.select(col("h").cast("long")).distinct()
     if (driverEdgeThreshold > 0 && e.count() <= driverEdgeThreshold) {
       val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -375,13 +372,12 @@ object Graph {
         }.toMap
         it += 1
       }
-      e.unpersist()
       import spark.implicits._
       return nodes.map(h => (h, if (dep(h) >= Unreached) None else Some(dep(h))))
         .toSeq.toDF("host", "depth")
     }
-    val nodes = Stage.trackPersist("Graph.bfs",
-      e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct())
+    val nodes = e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct()
+      .localCheckpoint()
     var dep = cutLineage(
       nodes.join(seed.withColumn("__s", lit(0L)), Seq("h"), "left")
         .select(col("h"), coalesce(col("__s"), lit(Unreached)).as("d")))
@@ -399,8 +395,10 @@ object Graph {
       dep = next
       it += 1
     }
-    Stage.trackPersist("Graph.bfs", dep) // final round backs the returned plan
-    dep.select(col("h").as("host"),
+    // the returned round leaves CacheManager (object scaladoc)
+    val fin = dep.localCheckpoint()
+    dep.unpersist()
+    fin.select(col("h").as("host"),
       when(col("d") >= Unreached, lit(null).cast("long")).otherwise(col("d")).as("depth"))
   }
 
@@ -443,12 +441,11 @@ object Graph {
         least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .distinct()
-    // invocation-scoped persists — see [[hits]]
-    Stage.invocationStart(spark, "Graph.lpa")
-    val nb = Stage.trackPersist("Graph.lpa",
-      und.select(col("u").as("h"), col("v").as("nbr"))
-        .unionAll(und.select(col("v").as("h"), col("u").as("nbr")))
-        .repartition(col("h")))
+    // every round reads nb: a local checkpoint (object scaladoc)
+    val nb = und.select(col("u").as("h"), col("v").as("nbr"))
+      .unionAll(und.select(col("v").as("h"), col("u").as("nbr")))
+      .repartition(col("h"))
+      .localCheckpoint()
     if (driverEdgeThreshold > 0 && nb.count() <= 2L * driverEdgeThreshold) {
       val es = nb.collect().map(r => (r.getLong(0), r.getLong(1)))
       val byH = es.groupBy(_._1)
@@ -463,7 +460,6 @@ object Graph {
         }.toMap
         it += 1
       }
-      nb.unpersist()
       import spark.implicits._
       return nodes.map(h => (h, lbl(h))).toDF("host", "community")
     }
@@ -483,8 +479,10 @@ object Graph {
       lab = next
       it += 1
     }
-    Stage.trackPersist("Graph.lpa", lab) // final round backs the returned plan
-    lab.select(col("h").as("host"), col("lbl").as("community"))
+    // the returned round leaves CacheManager (object scaladoc)
+    val fin = lab.localCheckpoint()
+    lab.unpersist()
+    fin.select(col("h").as("host"), col("lbl").as("community"))
   }
 
   /** Bounded k-core peeling over the undirected distinct view of the edge
@@ -511,9 +509,6 @@ object Graph {
       driverEdgeThreshold: Int = 200000): DataFrame = {
     val spark = edges.sparkSession
     def cutLineage(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-    // invocation-scoped persists — see [[hits]] (here only the final
-    // round's edge set outlives the call; `und` is released in-function)
-    Stage.invocationStart(spark, "Graph.kcore")
     val und = edges
       .filter(col("src") =!= col("dst"))
       .select(
@@ -555,8 +550,10 @@ object Graph {
       cur = next
       it += 1
     }
-    Stage.trackPersist("Graph.kcore", cur) // final round backs the returned plan
-    val out = cur.select(col("u").as("h")).unionAll(cur.select(col("v").as("h")))
+    // the returned round leaves CacheManager (object scaladoc)
+    val fin = cur.localCheckpoint()
+    cur.unpersist()
+    val out = fin.select(col("u").as("h")).unionAll(fin.select(col("v").as("h")))
       .groupBy("h").agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k)
       .select(col("h").as("host"), col("core_deg"))

@@ -174,16 +174,13 @@ object InvertedIndex {
       (pid, ts)
     }
     val wanted = parsed.flatMap(_._2).distinct
-    // positions feeds one base + (m-1) join branches per phrase — persisted
-    // for the invocation, previous invocation's cache released first
-    // (round 18, the [[Stage.trackPersist]] convention)
-    Stage.invocationStart(docs.sparkSession, "InvertedIndex.phraseRetrieval")
-    val positions = Stage.trackPersist("InvertedIndex.phraseRetrieval",
-      docs
-        .filter(col(idCol).isNotNull && col(textCol).isNotNull)
-        .select(col(idCol).cast("long").as("doc_id"),
-          posexplode(split(normText(col(textCol)), " ")).as(Seq("pos", "term")))
-        .filter(col("term").isin(wanted: _*)))
+    // m branches per phrase read positions: a local checkpoint (Graph scaladoc)
+    val positions = docs
+      .filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol).cast("long").as("doc_id"),
+        posexplode(split(normText(col(textCol)), " ")).as(Seq("pos", "term")))
+      .filter(col("term").isin(wanted: _*))
+      .localCheckpoint()
     val perPhrase = parsed.map { case (pid, ts) =>
       val base = positions
         .filter(col("term") === ts.head)

@@ -67,80 +67,6 @@ private[graft] object Stage {
     if (need) df.repartition(target) else df
   }
 
-  // ---- invocation-scoped persists -----------------------------------
-  //
-  // Several operators persist a relation that the RETURNED lazy plan's
-  // branches consume (the crawl decode set, phrase positions, dense
-  // cells, the triangle orientation, the iterative finals) — the persist
-  // must outlive the builder, so it cannot be unpersisted before return.
-  // But CacheManager keys entries by CANONICALIZED plan, and a later
-  // invocation of the same operator over the same inputs builds the
-  // identical plan: without cleanup Spark keeps the FIRST invocation's
-  // entry, silently serving it to every later invocation instead of
-  // recomputing ("Asked to cache already cached data"), and the cache
-  // lives until the session dies — a storage leak in a long-lived job
-  // and, in the bench, a rep that no longer computes from the parquet
-  // inputs (the no-cross-run-caching rule; the CurationPipeline
-  // exactStage convention). The registry below bounds retained storage
-  // to ONE live invocation per site and makes every invocation recompute.
-  private val liveCaches =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, List[DataFrame]]]()
-
-  private def cachesFor(
-      spark: org.apache.spark.sql.SparkSession): java.util.concurrent.ConcurrentHashMap[String, List[DataFrame]] =
-    liveCaches.synchronized {
-      var m = liveCaches.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, List[DataFrame]]()
-        liveCaches.put(spark, m)
-      }
-      m
-    }
-
-  /** Start an invocation of the operator identified by `site`: unpersist
-    * everything the PREVIOUS invocation registered there (non-blocking —
-    * the entry is dropped synchronously, block cleanup proceeds in the
-    * background exactly as exactStage's unpersist does).
-    */
-  def invocationStart(spark: org.apache.spark.sql.SparkSession, site: String): Unit = {
-    val prev = cachesFor(spark).remove(site)
-    if (prev != null) prev.foreach(d => scala.util.Try(d.unpersist(false)))
-  }
-
-  /** Release EVERY invocation-scoped cache of `spark` — the harness
-    * boundary between two timed queries (Bench/TimeOne reps, Verify
-    * dumps). Per-site [[invocationStart]] alone leaves each site's last
-    * cache live until that operator runs again, and a LIVE entry is
-    * served to ANY later plan containing the same canonical subtree —
-    * not just the same operator (observed: kcore's undirected edge view
-    * inside crawl_priority picking up host_triangles' tracked cache).
-    * Releasing at the query boundary makes every timed run start with
-    * zero live query-derived caches, so each run computes from its
-    * inputs; within one query the sharing persists() exist for is
-    * untouched (the release runs after the action completes). The
-    * fixture-staging cache (QueryCatalog.stagedFixture) is a separate,
-    * disclosed registry and is deliberately NOT released here.
-    */
-  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val m = liveCaches.synchronized { liveCaches.remove(spark) }
-    if (m != null)
-      m.values().forEach(l => l.foreach(d => scala.util.Try(d.unpersist(false))))
-  }
-
-  /** Persist `df` (MEMORY_AND_DISK, the library convention; a no-op when
-    * the caller persisted it already) and register it under `site` so the
-    * NEXT [[invocationStart]] of that site releases it. Relations a builder
-    * unpersists itself (loop intermediates) should use plain `.persist` —
-    * tracking is for what outlives the call.
-    */
-  def trackPersist(site: String, df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachesFor(df.sparkSession).merge(site, List(df), (a, b) => b ++ a)
-    df
-  }
-
   /** Fail fast when a compiled per-doc kernel is about to cast a
     * non-integral id to long (r17 advice): non-numeric ids (e.g. string
     * doc ids, which the expression-based forms supported) cast to null

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, MapType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +28,20 @@ class HarnessContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"array/map output columns crash the driver's pandas row-sort; " +
         s"fold them into scalars in the QueryCatalog projection:\n${offenders.mkString("\n")}")
+  }
+
+  test("a throwing query lands in queries_failed, not in the medians, totals or slowest") {
+    val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(16).toDF("id")
+    val atBuild: (SparkSession, String) => DataFrame = (_, _) => throw new IllegalStateException("boom")
+    val atRun: (SparkSession, String) => DataFrame = (s, _) => s.range(1).selectExpr("raise_error('boom')")
+    val (detail, line) = Bench.run(spark, sf, Seq("ok" -> ok, "fails_at_build" -> atBuild, "fails_at_run" -> atRun))
+    assert(detail.contains(""""queries_failed":["fails_at_build","fails_at_run"]"""), detail)
+    assert(detail.contains(""""queries":{"ok":"""), detail)
+    Seq("fails_at_build", "fails_at_run").foreach { k =>
+      assert(detail.split("\"" + k + "\"").length == 2, s"$k appears outside queries_failed: $detail")
+      assert(!line.contains(k), line)
+    }
+    assert(line.contains(""""n_queries":1,"""), line)
   }
 
   test("every oracle key has a registered query") {

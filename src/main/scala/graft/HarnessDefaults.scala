@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.core.ForkFreeLocalFs
+
 /** ONE definition of the harness mains' session configuration (Bench,
   * TimeOne, Verify, Explain) so the measured configuration cannot drift
   * between the bench and its companion tools — the r17 drift (TimeOne
@@ -41,6 +43,10 @@ import org.apache.spark.sql.SparkSession
   *    default), UTC session time, UI off: the bench contract's
   *    local-mode posture, shared verbatim by every tool so a plan dumped
   *    by Explain is the plan Bench times and Verify dumps.
+  *  - [[graft.core.ForkFreeLocalFs.settings]] (`spark.hadoop.fs.file.impl`,
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`): the same fork-free
+  *    local filesystem GraftSession installs, so local file writes here
+  *    run Hadoop's `chmod`/`readlink` in-process too.
   */
 object HarnessDefaults {
   def builder(cpus: String, shufflePartitions: Option[String] = None): SparkSession.Builder =
@@ -54,4 +60,5 @@ object HarnessDefaults {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+      .config(ForkFreeLocalFs.settings)
 }

@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * a 1000-executor cluster: AQE on (runtime re-planning, skew-join splitting,
   * partition coalescing), shuffle partitions sized to the environment instead
   * of the 200 default, UTC session time for deterministic date semantics.
+  * [[ForkFreeLocalFs.settings]] sets `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl`, so local checkpoint
+  * commits run Hadoop's `chmod`/`readlink` in-process instead of forking.
   */
 object GraftSession {
 
@@ -30,6 +33,7 @@ object GraftSession {
       // keep their plans; PlanShapeSpec pins the injection behavior.)
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(ForkFreeLocalFs.settings)
     master.orElse(Some(s"local[$cpus]")).fold(b)(b.master)
   }
 

@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.ForkFreeLocalFs
+
 /** One shared local session for all suites (sbt runs suites in one JVM;
-  * SparkSession.builder.getOrCreate reuses it).
+  * SparkSession.builder.getOrCreate reuses it). It installs the product
+  * sessions' fork-free local filesystem, so the streaming specs commit
+  * their checkpoints through it.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
@@ -15,6 +19,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
       .config("spark.ui.enabled", "false")
+      .config(ForkFreeLocalFs.settings)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

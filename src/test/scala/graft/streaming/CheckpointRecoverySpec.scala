@@ -11,7 +11,8 @@ import graft.model.{Metric, PipelineOutput}
 import graft.operators.NodePipeline
 
 /** O13 exercised, not just asserted: stop the fused pipeline mid-stream and
-  * restart it from the checkpoint under the RocksDB state store provider.
+  * restart it from the checkpoint, under the RocksDB state store provider
+  * and under the HDFS-backed default the product job runs.
   * The restarted query must (a) not re-emit windows already finalized before
   * the stop, (b) finalize the window that was OPEN at stop time (its
   * OpenWindow state round-tripped through the store), and (c) continue the
@@ -28,7 +29,20 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     assert(pred, s"timed out waiting for: $what")
   }
 
+  private val RocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val HdfsBacked = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
   test("restart from checkpoint resumes window + baseline state (RocksDB)") {
+    restartResumesState(RocksDb)
+  }
+
+  // the provider the product job and stream_fleet run: its delta files are
+  // written and renamed through the shared session's fork-free local fs
+  test("restart from checkpoint resumes window + baseline state (HDFS-backed default)") {
+    restartResumesState(HdfsBacked)
+  }
+
+  private def restartResumesState(providerClass: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -46,9 +60,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     // also the honest sink to recover through
     val outDir = Files.createTempDirectory("graft-recovery-out-").toString
     val prevProvider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", providerClass)
     try {
       val input = MemoryStream[Metric]
       def sample(i: Int, v: Double) = Metric("node-C", v, i * 1000L)
@@ -158,9 +170,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     val checkpoint = Files.createTempDirectory("graft-ttl-ckpt-").toString
     val outDir = Files.createTempDirectory("graft-ttl-out-").toString
     val prevProvider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
     try {
       val input = MemoryStream[(Long, Timestamp, String)]
       def start() = StreamingCuration.curateWithTtl(

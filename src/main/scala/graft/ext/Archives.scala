@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * records without decompressing its neighbors. This module implements
   * both layers from scratch on top of the repo's own DEFLATE inflate
   * ([[Multimodal.inflateWithEnd]] — the end position past the final block
-  * is exactly what member splitting needs) and its table-driven CRC-32:
+  * is exactly what member splitting needs) and the JDK's CRC-32
+  * ([[Bits.crc32]]):
   *
   *  - gzip reader: full RFC 1952 header walk (magic, CM=8, reserved-bit
   *    check, FEXTRA with little-endian XLEN, NUL-terminated FNAME and
@@ -102,7 +103,7 @@ object Archives {
         out.write((nameId % 256).toInt); out.write(((nameId / 256) % 256).toInt)
       case 3 =>
         val hdr = out.toByteArray
-        val c = Multimodal.crc32(hdr, 0, hdr.length)
+        val c = Bits.crc32(hdr, 0, hdr.length)
         out.write(c & 0xff); out.write((c >> 8) & 0xff)
       case _ => ()
     }
@@ -111,7 +112,7 @@ object Archives {
       case 2 => out.write(Multimodal.deflateDynamic(data))
       case _ => storedDeflate(out, data)
     }
-    val c = Multimodal.crc32(data, 0, data.length)
+    val c = Bits.crc32(data, 0, data.length)
     out.write(c & 0xff); out.write((c >> 8) & 0xff); out.write((c >> 16) & 0xff); out.write((c >> 24) & 0xff)
     val n = data.length
     out.write(n & 0xff); out.write((n >> 8) & 0xff); out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
@@ -152,7 +153,7 @@ object Archives {
     if ((flg & 0x02) != 0) { // FHCRC: low 16 bits of CRC-32 over the header
       if (p + 2 > until) throw new MalformedArchive
       val stored = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
-      if (stored != (Multimodal.crc32(bytes, from, p) & 0xffff)) throw new MalformedArchive
+      if (stored != (Bits.crc32(bytes, from, p) & 0xffff)) throw new MalformedArchive
       p += 2
     }
     val (data, end) =
@@ -161,7 +162,7 @@ object Archives {
     if (end + 8 > until) throw new MalformedArchive
     val crc = (bytes(end) & 0xff) | ((bytes(end + 1) & 0xff) << 8) |
       ((bytes(end + 2) & 0xff) << 16) | ((bytes(end + 3) & 0xff) << 24)
-    if (crc != Multimodal.crc32(data, 0, data.length)) throw new MalformedArchive
+    if (crc != Bits.crc32(data, 0, data.length)) throw new MalformedArchive
     val isize = (bytes(end + 4) & 0xffL) | ((bytes(end + 5) & 0xffL) << 8) |
       ((bytes(end + 6) & 0xffL) << 16) | ((bytes(end + 7) & 0xffL) << 24)
     if (isize != (data.length.toLong & 0xffffffffL)) throw new MalformedArchive
@@ -440,7 +441,7 @@ object Archives {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
     out.write(0x78); out.write(0x01)
     out.write(Multimodal.deflateDynamic(data))
-    val a = Multimodal.adler32(data, 0, data.length)
+    val a = Bits.adler32(data, 0, data.length)
     out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
     out.write((a >>> 8) & 0xff); out.write(a & 0xff)
     out.toByteArray

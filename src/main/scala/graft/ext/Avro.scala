@@ -47,14 +47,8 @@ object Avro {
 
   // ------------------------------------------------------- binary encoding
 
-  private[ext] def writeVarLong(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var n = (v << 1) ^ (v >> 63) // zigzag
-    while ((n & ~0x7fL) != 0) {
-      out.write(((n & 0x7f) | 0x80).toInt)
-      n >>>= 7
-    }
-    out.write(n.toInt)
-  }
+  private[ext] def writeVarLong(out: java.io.ByteArrayOutputStream, v: Long): Unit =
+    Bits.writeUvarint(out, Bits.zigzag(v))
 
   private def writeString(out: java.io.ByteArrayOutputStream, s: String): Unit = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -112,31 +106,13 @@ object Avro {
       extends RuntimeException("malformed avro", null, false, false)
   private def fail(): Nothing = throw new MalformedAvro
 
-  private final class Reader(b: Array[Byte]) {
-    var p = 0
-    def u8(): Int = {
-      if (p >= b.length) fail()
-      val v = b(p) & 0xff
-      p += 1
-      v
-    }
-    def varLong(): Long = {
-      var n = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (shift > 63) fail()
-        val byte = u8()
-        n |= (byte & 0x7fL) << shift
-        shift += 7
-        more = (byte & 0x80) != 0
-      }
-      (n >>> 1) ^ -(n & 1L) // un-zigzag
-    }
+  private final class Reader(b: Array[Byte]) extends Bits.Cursor(b, 0, b.length) {
+    def fail(): Nothing = Avro.fail()
+    def varLong(): Long = Bits.unzigzag(uvarint(10))
     def bytes(len: Int): Array[Byte] = {
-      if (len < 0 || p + len > b.length) fail()
-      val out = java.util.Arrays.copyOfRange(b, p, p + len)
-      p += len
+      if (len < 0 || pos + len > b.length) fail()
+      val out = java.util.Arrays.copyOfRange(b, pos, pos + len)
+      pos += len
       out
     }
     def string(maxLen: Int): String = {
@@ -183,7 +159,7 @@ object Avro {
     if (codec != "null" && codec != "deflate") fail() // unsupported codec
     val sync = r.bytes(16)
     val blocks = Vector.newBuilder[(Long, Array[Byte])]
-    while (r.p < payload.length) {
+    while (r.pos < payload.length) {
       val nRecs = r.varLong()
       val size = r.varLong()
       if (nRecs <= 0 || size <= 0 || size > maxBlockBytes) fail()
@@ -226,7 +202,7 @@ object Avro {
         recIdx += 1L
         i += 1L
       }
-      if (br.p != raw.length) fail() // count must consume the block exactly
+      if (br.pos != raw.length) fail() // count must consume the block exactly
     }
     entries.result()
   }
@@ -506,7 +482,7 @@ object Avro {
         recIdx += 1L
         i += 1L
       }
-      if (br.p != raw.length) fail() // count must consume the block exactly
+      if (br.pos != raw.length) fail() // count must consume the block exactly
     }
     out.toVector
   }

@@ -48,23 +48,9 @@ object Bzip2 {
   private final class MalformedBzip2 extends RuntimeException("malformed bzip2", null, false, false)
   private def fail(): Nothing = throw new MalformedBzip2
 
-  // ---------------------------------------------------------------- CRC
-  /** bzip2's CRC-32: polynomial 0x04C11DB7 fed MSB-first (NOT the
-    * reflected zlib crc32), init and final-xor 0xFFFFFFFF.
-    */
-  private val CrcTab: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) { c = (c << 1) ^ (if ((c & 0x80000000) != 0) 0x04c11db7 else 0); k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-  private def crcUpdate(crc: Int, b: Int): Int = (crc << 8) ^ CrcTab(((crc >>> 24) ^ b) & 0xff)
+  // bzip2's CRC-32 is `Bits.crc32MsbUpdate` (polynomial 0x04C11DB7 fed
+  // MSB-first, NOT the reflected zlib crc32) with init and final-xor
+  // 0xFFFFFFFF.
 
   // ------------------------------------------------------------- bit IO
   private final class BitWr {
@@ -226,7 +212,7 @@ object Bzip2 {
         var run = 1
         while (i + run < data.length && run < 255 && (data(i + run) & 0xff) == b) run += 1
         var r = 0
-        while (r < run) { crc = crcUpdate(crc, b); r += 1 }
+        while (r < run) { crc = Bits.crc32MsbUpdate(crc, b); r += 1 }
         if (run >= 4) {
           buf.write(b); buf.write(b); buf.write(b); buf.write(b); buf.write(run - 4)
         } else { r = 0; while (r < run) { buf.write(b); r += 1 } }
@@ -505,12 +491,12 @@ object Bzip2 {
         if (same == 4) { // c is the repeat-count byte for the preceding run
           if (out.size + c > maxOut) fail()
           var z = 0
-          while (z < c) { out.write(prev); crc = crcUpdate(crc, prev); z += 1 }
+          while (z < c) { out.write(prev); crc = Bits.crc32MsbUpdate(crc, prev); z += 1 }
           same = 0; prev = -1
         } else {
           if (c == prev) same += 1 else { same = 1; prev = c }
           if (out.size + 1 > maxOut) fail()
-          out.write(c); crc = crcUpdate(crc, c)
+          out.write(c); crc = Bits.crc32MsbUpdate(crc, c)
         }
       }
       if (same == 4) fail() // run announced but its count byte is missing

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *  - '''header''': the `dex\n0NN\0` magic (versions 035-040), the
   *    endian tag, and BOTH integrity fields VERIFIED, not echoed —
   *    the adler32 checksum over everything after it (the shared
-  *    from-scratch [[Multimodal.adler32]]) and the 20-byte SHA-1
+  *    [[Bits.adler32]]) and the 20-byte SHA-1
   *    signature over everything after itself (the shared from-scratch
   *    [[Git.sha1]]); header_size and file_size cross-checked;
   *  - '''string_ids''': u32 offsets into string_data items — a
@@ -57,12 +57,6 @@ object Dex {
   private[ext] def sourceOf(id: Long, c: Int): String = s"Fixture$id$c.java"
   private[ext] def flagsOf(id: Long, c: Int): Long = if ((id + c) % 2 == 0) 0x1L else 0x11L
 
-  private def uleb(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    var x = v
-    while ((x & ~0x7f) != 0) { out.write((x & 0x7f) | 0x80); x >>>= 7 }
-    out.write(x)
-  }
-
   private[ext] def renderDex(id: Long): Array[Byte] = {
     val nc = nClassesOf(id)
     // string pool, sorted (dex requires sorted string_ids): descriptors,
@@ -84,7 +78,7 @@ object Dex {
     val data = new java.io.ByteArrayOutputStream()
     val strOffsets = strings.map { s =>
       val o = dataOff + data.size
-      uleb(data, s.length) // UTF-16 code units (ASCII fixture: = length)
+      Bits.writeUvarint(data, s.length) // UTF-16 code units (ASCII fixture: = length)
       val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       data.write(b, 0, b.length)
       data.write(0)
@@ -126,7 +120,7 @@ object Dex {
     val afterSig = tail.toByteArray ++ payload
     val sig = Git.sha1(afterSig)
     val afterChecksum = sig ++ afterSig
-    val adler = Multimodal.adler32(afterChecksum, 0, afterChecksum.length)
+    val adler = Bits.adler32(afterChecksum, 0, afterChecksum.length)
 
     val out = new java.io.ByteArrayOutputStream()
     out.write(s"dex\n${versionOf(id)}".getBytes("ISO-8859-1"), 0, 7)
@@ -178,7 +172,7 @@ object Dex {
     }
     // integrity: VERIFY, never echo
     val declaredAdler = u32(8)
-    val adler = Multimodal.adler32(b, 12, b.length).toLong & 0xffffffffL
+    val adler = Bits.adler32(b, 12, b.length).toLong & 0xffffffffL
     if (adler != declaredAdler) fail()
     val sig = Git.sha1(java.util.Arrays.copyOfRange(b, 32, b.length))
     var i = 0
@@ -201,20 +195,10 @@ object Dex {
     def stringAt(idx: Long): String = {
       if (idx < 0 || idx >= nStrings) fail()
       val off = u32((stringIdsOff + 4 * idx).toInt)
-      var p = off.toInt
-      if (p < 0 || p >= b.length) fail()
-      // uleb128 code-unit count
-      var units = 0
-      var shift = 0
-      var more = true
-      while (more) {
-        if (p >= b.length || shift > 28) fail()
-        val c = b(p) & 0xff
-        p += 1
-        units |= (c & 0x7f) << shift
-        shift += 7
-        more = (c & 0x80) != 0
-      }
+      val r = new Bits.Cursor(b, off.toInt, b.length) { def fail(): Nothing = Dex.fail() }
+      if (r.pos < 0) fail()
+      val units = r.uvarint(5).toInt // uleb128 code-unit count, low 32 bits
+      var p = r.pos
       val start = p
       while (p < b.length && b(p) != 0) p += 1
       if (p >= b.length) fail()

@@ -182,7 +182,7 @@ object Git {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
     out.write(0x78); out.write(0x9c) // CMF/FLG: deflate, 32K window, check ok
     out.write(Multimodal.deflateDynamic(data))
-    val a = Multimodal.adler32(data, 0, data.length)
+    val a = Bits.adler32(data, 0, data.length)
     out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
     out.write((a >>> 8) & 0xff); out.write(a & 0xff)
     out.toByteArray
@@ -196,17 +196,8 @@ object Git {
     val target = blobText(id, 1).getBytes("UTF-8")
     val c = deltaPrefix(id)
     val out = new java.io.ByteArrayOutputStream(32)
-    def sizeVarint(v0: Int): Unit = {
-      var v = v0
-      var more = true
-      while (more) {
-        val b = v & 0x7f; v >>>= 7
-        more = v != 0
-        out.write(if (more) b | 0x80 else b)
-      }
-    }
-    sizeVarint(base.length)
-    sizeVarint(target.length)
+    Bits.writeUvarint(out, base.length)
+    Bits.writeUvarint(out, target.length)
     out.write(0x90); out.write(c) // copy: no offset bytes, one size byte
     val tail = java.util.Arrays.copyOfRange(target, c, target.length)
     require(tail.length >= 1 && tail.length < 128)
@@ -398,7 +389,7 @@ object Git {
       if (data.length != size) fail() // header size is the inflated size
       if (dEnd + 4 > n - 20) fail()
       val adler = be32(dEnd).toInt
-      if (adler != Multimodal.adler32(data, 0, data.length)) fail()
+      if (adler != Bits.adler32(data, 0, data.length)) fail()
       p = dEnd + 4
       entries += RawEntry(offset, typ, size.toInt, data, base)
       k += 1
@@ -482,22 +473,16 @@ object Git {
 
   /** Apply a git delta script to its base. */
   private[ext] def applyDelta(base: Array[Byte], delta: Array[Byte]): Array[Byte] = {
-    var p = 0
+    val r = new Bits.Cursor(delta, 0, delta.length) { def fail(): Nothing = Git.fail() }
     def varint(): Int = {
-      var v = 0L; var shift = 0; var more = true
-      while (more) {
-        if (p >= delta.length || shift > 32) fail()
-        val b = delta(p) & 0xff; p += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        more = (b & 0x80) != 0
-      }
+      val v = r.uvarint(5)
       if (v > SizeCap) fail()
       v.toInt
     }
     val baseSize = varint()
     if (baseSize != base.length) fail()
     val resultSize = varint()
+    var p = r.pos
     val out = new Array[Byte](resultSize)
     var w = 0
     while (p < delta.length) {

@@ -44,49 +44,37 @@ object InvertedIndex {
 
   private val ChecksumMod = 1000000007L
 
-  private[ext] def writeVarint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { out.write(((v & 0x7fL) | 0x80L).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
   /** Encode one block: absolute first id, then strictly-positive gaps. */
   private[ext] def encodeBlock(docs: Array[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(docs.length * 2)
     var prev = 0L
     var i = 0
     while (i < docs.length) {
-      if (i == 0) writeVarint(out, docs(0)) else writeVarint(out, docs(i) - prev)
+      Bits.writeUvarint(out, if (i == 0) docs(0) else docs(i) - prev)
       prev = docs(i)
       i += 1
     }
     out.toByteArray
   }
 
-  /** Decode a block of `n` ids; throws on truncation or a zero gap. */
+  /** Decode a block of `n` ids; throws on a truncated or overlong
+    * (> 10 byte) varint or a zero gap.
+    */
   private[ext] def decodeBlock(bytes: Array[Byte], n: Int): Array[Long] = {
     val out = new Array[Long](n)
-    var p = 0
+    val r = new Bits.Cursor(bytes, 0, bytes.length) {
+      def fail(): Nothing = throw new IllegalArgumentException("truncated or overlong varint in block")
+    }
     var i = 0
     var prev = 0L
     while (i < n) {
-      var v = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (p >= bytes.length) throw new IllegalArgumentException("truncated varint block")
-        val b = bytes(p) & 0xff
-        p += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        more = (b & 0x80) != 0
-      }
+      val v = r.uvarint(10)
       if (i > 0 && v <= 0L) throw new IllegalArgumentException("non-positive gap")
       prev = if (i == 0) v else prev + v
       out(i) = prev
       i += 1
     }
-    if (p != bytes.length) throw new IllegalArgumentException("trailing bytes in block")
+    if (r.pos != bytes.length) throw new IllegalArgumentException("trailing bytes in block")
     out
   }
 

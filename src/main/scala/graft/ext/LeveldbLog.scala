@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *    not fit the current block is split into FIRST/MIDDLE.../LAST
   *    fragments, and a block tail of fewer than 7 bytes (the header
   *    size) is ZERO padding — non-zero trailer bytes are damage;
-  *  - fragment header: 4-byte MASKED crc32c (little-endian, the
-  *    TFRecord/SST masking scheme, VERIFIED per fragment — the crc
+  *  - fragment header: 4-byte MASKED crc32c (little-endian; the JDK's
+  *    CRC-32C through [[Bits.crc32c]] under the TFRecord/SST masking
+  *    scheme, VERIFIED per fragment — the crc
   *    covers the type byte then the payload, exactly as
   *    `log_writer.cc` computes it), 2-byte little-endian length,
   *    1-byte type (1 FULL / 2 FIRST / 3 MIDDLE / 4 LAST);
@@ -76,7 +77,7 @@ object LeveldbLog {
     val buf = new Array[Byte](until - from + 1)
     buf(0) = typ
     System.arraycopy(payload, from, buf, 1, until - from)
-    TfRecord.mask(TfRecord.crc32c(buf, 0, buf.length)) & 0xffffffffL
+    TfRecord.mask(Bits.crc32c(buf, 0, buf.length)) & 0xffffffffL
   }
 
   private[ext] def renderLog(id: Long): Array[Byte] = {
@@ -168,7 +169,7 @@ object LeveldbLog {
           val buf = new Array[Byte](len + 1)
           buf(0) = typ.toByte
           System.arraycopy(b, ds, buf, 1, len)
-          if ((TfRecord.mask(TfRecord.crc32c(buf, 0, buf.length)) & 0xffffffffL) != crc) fail()
+          if ((TfRecord.mask(Bits.crc32c(buf, 0, buf.length)) & 0xffffffffL) != crc) fail()
           typ match {
             case 1 => // FULL
               if (current != null) fail()

@@ -606,31 +606,6 @@ object Multimodal {
     */
   private final class MalformedPng extends Exception(null, null, false, false)
 
-  /** CRC-32 (ISO-HDLC, reflected polynomial 0xEDB88320) — the PNG chunk
-    * checksum, table-driven, implemented from the published algorithm.
-    */
-  private[ext] def crc32(bytes: Array[Byte], from: Int, until: Int): Int = {
-    var c = 0xffffffff
-    var i = from
-    while (i < until) {
-      c ^= bytes(i) & 0xff
-      var k = 0
-      while (k < 8) { c = (c >>> 1) ^ (if ((c & 1) != 0) 0xedb88320 else 0); k += 1 }
-      i += 1
-    }
-    ~c
-  }
-
-  /** Adler-32 (RFC 1950) — the zlib stream checksum over the DECOMPRESSED
-    * bytes: two running sums mod 65521.
-    */
-  private[ext] def adler32(bytes: Array[Byte], from: Int, until: Int): Int = {
-    var s1 = 1L; var s2 = 0L
-    var i = from
-    while (i < until) { s1 = (s1 + (bytes(i) & 0xff)) % 65521; s2 = (s2 + s1) % 65521; i += 1 }
-    ((s2 << 16) | s1).toInt
-  }
-
   /** LSB-first bit reader over a byte window — DEFLATE's bit order: bits
     * fill each byte from the least-significant end; Huffman codes are then
     * read MSB-of-code-first by pulling one bit at a time.
@@ -850,7 +825,7 @@ object Multimodal {
     val data = inflateWithEnd(bytes, from + 2, until - 4, expectedMax, sizeHint)._1
     val stored = ((bytes(until - 4) & 0xff) << 24) | ((bytes(until - 3) & 0xff) << 16) |
       ((bytes(until - 2) & 0xff) << 8) | (bytes(until - 1) & 0xff)
-    if (stored != adler32(data, 0, data.length)) throw new MalformedPng
+    if (stored != Bits.adler32(data, 0, data.length)) throw new MalformedPng
     data
   }
 
@@ -1203,7 +1178,7 @@ object Multimodal {
         if (len > Int.MaxValue - 12 || p + 12 + len > n) throw new MalformedPng
         val typePos = p.toInt + 4
         val dataPos = typePos + 4
-        if (crc32(bytes, typePos, dataPos + len.toInt) != u32(dataPos + len.toInt).toInt)
+        if (Bits.crc32(bytes, typePos, dataPos + len.toInt) != u32(dataPos + len.toInt).toInt)
           throw new MalformedPng
         val ctype = new String(bytes, typePos, 4, java.nio.charset.StandardCharsets.US_ASCII)
         ctype match {
@@ -1425,7 +1400,7 @@ object Multimodal {
           zOut.write(raw, off, len)
           off += len
         } while (off < raw.length)
-        val adler = adler32(raw, 0, raw.length)
+        val adler = Bits.adler32(raw, 0, raw.length)
         zOut.write(adler >>> 24); zOut.write((adler >> 16) & 0xff)
         zOut.write((adler >> 8) & 0xff); zOut.write(adler & 0xff)
         val z = zOut.toByteArray
@@ -1441,7 +1416,7 @@ object Multimodal {
           }
           be32(body.length)
           out.write(chunk, 0, chunk.length)
-          be32(crc32(chunk, 0, chunk.length))
+          be32(Bits.crc32(chunk, 0, chunk.length))
         }
         val ihdr = new Array[Byte](13)
         ihdr(0) = (w >>> 24).toByte; ihdr(1) = (w >> 16).toByte; ihdr(2) = (w >> 8).toByte; ihdr(3) = w.toByte

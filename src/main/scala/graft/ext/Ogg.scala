@@ -47,28 +47,12 @@ object Ogg {
 
   // ------------------------------------------------ the Ogg CRC flavor
 
-  private val crcTable: Array[Int] = locally {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
   private[ext] def oggCrc(b: Array[Byte], from: Int, until: Int, zeroAt: Int = -1): Int = {
     var c = 0
     var i = from
     while (i < until) {
       val byte = if (zeroAt >= 0 && i >= zeroAt && i < zeroAt + 4) 0 else b(i) & 0xff
-      c = (c << 8) ^ crcTable(((c >>> 24) ^ byte) & 0xff)
+      c = Bits.crc32MsbUpdate(c, byte)
       i += 1
     }
     c

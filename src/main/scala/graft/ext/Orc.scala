@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * spec + `orc_proto.proto`):
   *
   *  - '''protobuf wire format''' (shared flavor with [[TfExample]],
-  *    local helpers per house style): varints, length-delimited
+  *    local helpers per house style, varints from [[Bits]]): varints, length-delimited
   *    messages, PACKED repeated uint32 (Type.subtypes,
   *    PostScript.version), unknown fields skipped by wire type;
   *  - '''file layout''': `ORC` magic, stripes (data streams + stripe
@@ -89,18 +89,13 @@ object Orc {
 
   // ---- protobuf wire writer (local per house style; flavor as TfExample)
 
-  private def pbVarint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var n = v
-    while ((n & ~0x7fL) != 0) { out.write(((n & 0x7f) | 0x80).toInt); n >>>= 7 }
-    out.write(n.toInt)
-  }
   private def pbTag(out: java.io.ByteArrayOutputStream, field: Int, wire: Int): Unit =
-    pbVarint(out, ((field.toLong << 3) | wire))
+    Bits.writeUvarint(out, (field.toLong << 3) | wire)
   private def pbU64(out: java.io.ByteArrayOutputStream, field: Int, v: Long): Unit = {
-    pbTag(out, field, 0); pbVarint(out, v)
+    pbTag(out, field, 0); Bits.writeUvarint(out, v)
   }
   private def pbBytes(out: java.io.ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit = {
-    pbTag(out, field, 2); pbVarint(out, b.length.toLong); out.write(b, 0, b.length)
+    pbTag(out, field, 2); Bits.writeUvarint(out, b.length.toLong); out.write(b, 0, b.length)
   }
   private def pbMsg(build: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream(); build(o); o.toByteArray
@@ -115,7 +110,6 @@ object Orc {
     while (FixedWidths(i) < w) i += 1
     FixedWidths(i)
   }
-  private def zz(v: Long): Long = (v << 1) ^ (v >> 63)
   private def bitsNeeded(v: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(v | 1L)
 
   private def packBits(out: java.io.ByteArrayOutputStream, vals: Array[Long], w: Int): Unit = {
@@ -138,7 +132,7 @@ object Orc {
   private[ext] def rleShortRepeat(out: java.io.ByteArrayOutputStream, value: Long,
       len: Int, signed: Boolean): Unit = {
     require(len >= 3 && len <= 10)
-    val u = if (signed) zz(value) else value
+    val u = if (signed) Bits.zigzag(value) else value
     val w = math.max(1, (bitsNeeded(u) + 7) / 8)
     out.write(((w - 1) << 3) | (len - 3))
     var i = w - 1
@@ -149,7 +143,7 @@ object Orc {
   private[ext] def rleDirect(out: java.io.ByteArrayOutputStream, values: Array[Long],
       signed: Boolean): Unit = {
     require(values.nonEmpty && values.length <= 512)
-    val us = values.map(v => if (signed) zz(v) else v)
+    val us = values.map(v => if (signed) Bits.zigzag(v) else v)
     val w = closestWidth(us.map(bitsNeeded).max)
     val code = FixedWidths.indexOf(w)
     val l1 = values.length - 1
@@ -165,8 +159,8 @@ object Orc {
     val l1 = len - 1
     out.write((3 << 6) | ((l1 >> 8) & 1))
     out.write(l1 & 0xff)
-    pbVarint(out, if (signed) zz(base) else base)
-    pbVarint(out, zz(delta)) // the delta is ALWAYS a signed varint
+    Bits.writeUvarint(out, if (signed) Bits.zigzag(base) else base)
+    Bits.writeUvarint(out, Bits.zigzag(delta)) // the delta is ALWAYS a signed varint
   }
 
   private def leDouble(out: java.io.ByteArrayOutputStream, v: Double): Unit = {
@@ -239,7 +233,7 @@ object Orc {
       // types, preorder: 0 struct<id,title,score,cat>, then the leaves
       pbBytes(o, 4, pbMsg { t =>
         pbU64(t, 1, 12L) // STRUCT
-        pbBytes(t, 2, pbMsg(p => Seq(1L, 2L, 3L, 4L).foreach(pbVarint(p, _)))) // packed subtypes
+        pbBytes(t, 2, pbMsg(p => Seq(1L, 2L, 3L, 4L).foreach(Bits.writeUvarint(p, _)))) // packed subtypes
         Seq("id", "title", "score", "cat").foreach(nm => pbBytes(t, 3, nm.getBytes("UTF-8")))
       })
       Seq(4L, 7L, 6L, 4L).foreach(kind => pbBytes(o, 4, pbMsg(t => pbU64(t, 1, kind))))
@@ -252,7 +246,7 @@ object Orc {
       pbU64(o, 1, footer.length.toLong)
       pbU64(o, 2, 0L) // compression NONE
       pbU64(o, 3, 64L * 1024L) // compressionBlockSize
-      pbBytes(o, 4, pbMsg(p => Seq(0L, 12L).foreach(pbVarint(p, _)))) // version [0,12]
+      pbBytes(o, 4, pbMsg(p => Seq(0L, 12L).foreach(Bits.writeUvarint(p, _)))) // version [0,12]
       pbU64(o, 5, 0L) // metadataLength
       pbU64(o, 6, 9L) // writerVersion (modern: no legacy bug workarounds)
       pbBytes(o, 8000, "ORC".getBytes("ISO-8859-1"))
@@ -286,34 +280,23 @@ object Orc {
   private def fail(): Nothing = throw new MalformedOrc
 
   /** protobuf wire reader over a byte range. */
-  private final class PReader(val b: Array[Byte], var p: Int, val until: Int) {
-    def more: Boolean = p < until
-    def varint(): Long = {
-      var n = 0L
-      var shift = 0
-      var cont = true
-      while (cont) {
-        if (p >= until || shift > 63) fail()
-        val byte = b(p) & 0xff
-        p += 1
-        n |= (byte & 0x7fL) << shift
-        shift += 7
-        cont = (byte & 0x80) != 0
-      }
-      n
-    }
+  private final class PReader(b: Array[Byte], from: Int, until: Int)
+      extends Bits.Cursor(b, from, until) {
+    def fail(): Nothing = Orc.fail()
+    def more: Boolean = pos < limit
+    def varint(): Long = uvarint(10)
     def lenDelim(): (Int, Int) = {
       val len = varint()
-      if (len < 0 || len > until - p) fail()
-      val span = (p, p + len.toInt)
-      p += len.toInt
+      if (len < 0 || len > limit - pos) fail()
+      val span = (pos, pos + len.toInt)
+      pos += len.toInt
       span
     }
     def skip(wire: Int): Unit = wire match {
       case 0 => varint()
-      case 1 => if (p + 8 > until) fail() else p += 8
+      case 1 => if (pos + 8 > limit) fail() else pos += 8
       case 2 => lenDelim()
-      case 5 => if (p + 4 > until) fail() else p += 4
+      case 5 => if (pos + 4 > limit) fail() else pos += 4
       case _ => fail()
     }
   }
@@ -372,9 +355,7 @@ object Orc {
       var rem = w
       while (rem > 0) {
         if (bits == 0) {
-          if (r.p >= r.until) fail()
-          cur = r.b(r.p) & 0xff
-          r.p += 1
+          cur = r.u8()
           bits = 8
         }
         val take = math.min(bits, rem)
@@ -388,17 +369,13 @@ object Orc {
     out
   }
 
-  private def unzz(u: Long): Long = (u >>> 1) ^ -(u & 1L)
-
   /** RLEv2 signed/unsigned integer stream → exactly `n` values. */
   private[ext] def decodeRleV2(bytes: Array[Byte], signed: Boolean, n: Int): Array[Long] = {
     val r = new PReader(bytes, 0, bytes.length)
     val out = new Array[Long](n)
     var have = 0
     while (have < n) {
-      if (r.p >= r.until) fail()
-      val first = r.b(r.p) & 0xff
-      r.p += 1
+      val first = r.u8()
       (first >>> 6) match {
         case 0 => // SHORT_REPEAT
           val w = ((first >>> 3) & 7) + 1
@@ -407,34 +384,30 @@ object Orc {
           var u = 0L
           var i = 0
           while (i < w) {
-            if (r.p >= r.until) fail()
-            u = (u << 8) | (r.b(r.p) & 0xffL)
-            r.p += 1
+            u = (u << 8) | r.u8()
             i += 1
           }
-          val v = if (signed) unzz(u) else u
+          val v = if (signed) Bits.unzigzag(u) else u
           i = 0
           while (i < len) { out(have) = v; have += 1; i += 1 }
         case 1 => // DIRECT
           val w = FixedWidths((first >>> 1) & 0x1f)
-          if (r.p >= r.until) fail()
-          val len = (((first & 1) << 8) | (r.b(r.p) & 0xff)) + 1
-          r.p += 1
+          val len = (((first & 1) << 8) | r.u8()) + 1
           if (have + len > n) fail()
           val us = unpackBits(r, len, w)
           var i = 0
           while (i < len) {
-            out(have) = if (signed) unzz(us(i)) else us(i)
+            out(have) = if (signed) Bits.unzigzag(us(i)) else us(i)
             have += 1
             i += 1
           }
         case 2 => // PATCHED_BASE
           val w = FixedWidths((first >>> 1) & 0x1f)
-          if (r.p + 3 > r.until) fail()
-          val len = (((first & 1) << 8) | (r.b(r.p) & 0xff)) + 1
-          val third = r.b(r.p + 1) & 0xff
-          val fourth = r.b(r.p + 2) & 0xff
-          r.p += 3
+          if (r.pos + 3 > r.limit) fail()
+          val len = (((first & 1) << 8) | (r.buf(r.pos) & 0xff)) + 1
+          val third = r.buf(r.pos + 1) & 0xff
+          val fourth = r.buf(r.pos + 2) & 0xff
+          r.pos += 3
           val bw = ((third >>> 5) & 7) + 1
           val pw = FixedWidths(third & 0x1f)
           val pgw = ((fourth >>> 5) & 7) + 1
@@ -444,9 +417,7 @@ object Orc {
           var base = 0L
           var i = 0
           while (i < bw) {
-            if (r.p >= r.until) fail()
-            base = (base << 8) | (r.b(r.p) & 0xffL)
-            r.p += 1
+            base = (base << 8) | r.u8()
             i += 1
           }
           val signMask = 1L << (bw * 8 - 1)
@@ -485,12 +456,10 @@ object Orc {
           }
         case _ => // DELTA — header stores (values - 1); first value is separate
           val code = (first >>> 1) & 0x1f
-          if (r.p >= r.until) fail()
-          val raw = ((first & 1) << 8) | (r.b(r.p) & 0xff)
-          r.p += 1
+          val raw = ((first & 1) << 8) | r.u8()
           if (have + raw + 1 > n) fail()
-          val base = if (signed) unzz(r.varint()) else r.varint()
-          val d0 = unzz(r.varint())
+          val base = if (signed) Bits.unzigzag(r.varint()) else r.varint()
+          val d0 = Bits.unzigzag(r.varint())
           out(have) = base
           have += 1
           if (code == 0) { // fixed delta: raw more values
@@ -519,16 +488,16 @@ object Orc {
     val r = new PReader(bytes, 0, bytes.length)
     val out = new Array[Long](n)
     var have = 0
-    def value(): Long = if (signed) unzz(r.varint()) else r.varint()
+    def value(): Long = if (signed) Bits.unzigzag(r.varint()) else r.varint()
     while (have < n) {
-      if (r.p >= r.until) fail()
-      val c = r.b(r.p)
-      r.p += 1
+      if (r.pos >= r.limit) fail()
+      val c = r.buf(r.pos)
+      r.pos += 1
       if (c >= 0) { // run: c + 3 copies of base, stepping by a signed delta byte
         val len = c + 3
-        if (have + len > n || r.p >= r.until) fail()
-        val delta = r.b(r.p).toLong // two's complement byte
-        r.p += 1
+        if (have + len > n || r.pos >= r.limit) fail()
+        val delta = r.buf(r.pos).toLong // two's complement byte
+        r.pos += 1
         var v = value()
         var i = 0
         while (i < len) { out(have) = v; have += 1; v += delta; i += 1 }

@@ -120,21 +120,16 @@ object ParquetFile {
     val out = new java.io.ByteArrayOutputStream()
     private var lastId = List(0) // per-struct-nesting last field id
 
-    def varint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt)
-    }
-    private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
+    def varint(v: Long): Unit = Bits.writeUvarint(out, v)
 
     def fieldHeader(id: Int, t: Int): Unit = {
       val delta = id - lastId.head
       if (delta >= 1 && delta <= 15) out.write((delta << 4) | t)
-      else { out.write(t); varint(zigzag(id.toLong)) }
+      else { out.write(t); varint(Bits.zigzag(id.toLong)) }
       lastId = id :: lastId.tail
     }
-    def i32(id: Int, v: Int): Unit = { fieldHeader(id, 5); varint(zigzag(v.toLong)) }
-    def i64(id: Int, v: Long): Unit = { fieldHeader(id, 6); varint(zigzag(v)) }
+    def i32(id: Int, v: Int): Unit = { fieldHeader(id, 5); varint(Bits.zigzag(v.toLong)) }
+    def i64(id: Int, v: Long): Unit = { fieldHeader(id, 6); varint(Bits.zigzag(v)) }
     /** Compact-protocol bool: the VALUE rides the field header type. */
     def bool(id: Int, v: Boolean): Unit = fieldHeader(id, if (v) 1 else 2)
     def str(id: Int, s: String): Unit = {
@@ -186,19 +181,13 @@ object ParquetFile {
 
   // ---- RLE/bit-packed hybrid writer pieces (Encodings.md)
 
-  private def uvarint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var x = v
-    while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-    out.write(x.toInt)
-  }
-
   /** One bit-packed run covering all `values` (LSB-first packing, groups
     * of 8, zero-padded tail) — the layout every hybrid consumer accepts.
     */
   private def hybridBitPacked(values: Seq[Int], bitWidth: Int): Array[Byte] = {
     val groups = (values.length + 7) / 8
     val out = new java.io.ByteArrayOutputStream()
-    uvarint(out, (groups.toLong << 1) | 1L)
+    Bits.writeUvarint(out, (groups.toLong << 1) | 1L)
     val packed = new Array[Byte](groups * bitWidth)
     var i = 0
     while (i < values.length) {
@@ -236,7 +225,7 @@ object ParquetFile {
     w.i32(1, 0) // type = DATA_PAGE
     w.i32(2, body.length) // uncompressed_page_size
     w.i32(3, stored.length) // compressed_page_size
-    w.i32(4, Multimodal.crc32(stored, 0, stored.length)) // page CRC (over stored body)
+    w.i32(4, Bits.crc32(stored, 0, stored.length)) // page CRC (over stored body)
     w.structBegin(5) // data_page_header
     w.i32(1, numValues)
     w.i32(2, encoding)
@@ -263,7 +252,7 @@ object ParquetFile {
     w.i32(2, levelsLen + values.length) // uncompressed_page_size
     w.i32(3, levelsLen + stored.length) // compressed_page_size
     // page CRC: levels + stored values — the whole body after the header
-    w.i32(4, Multimodal.crc32(repLevels ++ defLevels ++ stored, 0, levelsLen + stored.length))
+    w.i32(4, Bits.crc32(repLevels ++ defLevels ++ stored, 0, levelsLen + stored.length))
     w.structBegin(8) // data_page_header_v2
     w.i32(1, numValues)
     w.i32(2, numNulls)
@@ -286,7 +275,7 @@ object ParquetFile {
     w.i32(1, 2) // type = DICTIONARY_PAGE
     w.i32(2, values.length)
     w.i32(3, stored.length)
-    w.i32(4, Multimodal.crc32(stored, 0, stored.length)) // page CRC
+    w.i32(4, Bits.crc32(stored, 0, stored.length)) // page CRC
     w.structBegin(7) // dictionary_page_header
     w.i32(1, numValues)
     w.i32(2, 2) // encoding = PLAIN_DICTIONARY
@@ -504,23 +493,13 @@ object ParquetFile {
   private def fail(): Nothing = throw new MalformedParquet
 
   /** Thrift compact protocol reader over a byte range. */
-  private[ext] final class TReader(val bytes: Array[Byte], var pos: Int, val limit: Int) {
+  private[ext] final class TReader(bytes: Array[Byte], from: Int, until: Int)
+      extends Bits.Cursor(bytes, from, until) {
     private var lastId = List(0)
 
-    def u8(): Int = { if (pos >= limit) fail(); val v = bytes(pos) & 0xff; pos += 1; v }
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      while (true) {
-        val b = u8()
-        v |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return v
-        shift += 7
-        if (shift > 63) fail()
-      }
-      0L
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
+    def fail(): Nothing = ParquetFile.fail()
+    def varint(): Long = uvarint(10)
+    def zigzag(): Long = Bits.unzigzag(varint())
     def binary(): Array[Byte] = {
       val n = varint()
       if (n < 0 || n > limit - pos) fail()
@@ -803,25 +782,16 @@ object ParquetFile {
     if (bitWidth < 0 || bitWidth > 32) fail()
     val out = new Array[Int](count)
     var n = 0
-    var p = from
+    val r = new Bits.Cursor(b, from, until) { def fail(): Nothing = ParquetFile.fail() }
     val byteW = (bitWidth + 7) / 8
     while (n < count) {
-      var header = 0L
-      var shift = 0
-      var cont = true
-      while (cont) {
-        if (p >= until) fail()
-        val x = b(p) & 0xff; p += 1
-        header |= (x & 0x7fL) << shift; shift += 7
-        if ((x & 0x80) == 0) cont = false
-        else if (shift > 35) fail()
-      }
+      val header = r.uvarint(6) // the run header: a ULEB128 of ≤ 6 bytes
       if ((header & 1L) == 0L) { // RLE run
         val run = header >>> 1
         if (run <= 0L || run > (count - n).toLong) fail()
         var v = 0L
         var i = 0
-        while (i < byteW) { if (p >= until) fail(); v |= (b(p) & 0xffL) << (8 * i); p += 1; i += 1 }
+        while (i < byteW) { v |= r.u8().toLong << (8 * i); i += 1 }
         val vi = v.toInt
         var j = 0L
         while (j < run) { out(n) = vi; n += 1; j += 1 }
@@ -831,8 +801,9 @@ object ParquetFile {
         // Long arithmetic: at the group cap, groups * 32 bits overflows Int
         // (2^31 negative) and would slip past the bounds check below
         val nbytesL = groups.toLong * bitWidth
-        if (nbytesL > until - p) fail()
+        if (nbytesL > until - r.pos) fail()
         val nbytes = nbytesL.toInt
+        val p = r.pos
         val totalVals = groups * 8
         var j = 0
         var bitPos = 0L
@@ -847,7 +818,7 @@ object ParquetFile {
           bitPos += bitWidth
           out(n) = v.toInt; n += 1; j += 1
         }
-        p += nbytes
+        r.pos += nbytes
       }
     }
     out
@@ -910,21 +881,9 @@ object ParquetFile {
     */
   private def deltaBinaryPacked(b: Array[Byte], from: Int, until: Int,
       wrap32: Boolean): (Array[Long], Int) = {
-    var p = from
-    def uvarint(): Long = {
-      var v = 0L
-      var shift = 0
-      var cont = true
-      while (cont) {
-        if (p >= until) fail()
-        val x = b(p) & 0xff; p += 1
-        v |= (x & 0x7fL) << shift; shift += 7
-        if ((x & 0x80) == 0) cont = false
-        else if (shift > 63) fail()
-      }
-      v
-    }
-    def zz(): Long = { val v = uvarint(); (v >>> 1) ^ -(v & 1) }
+    val r = new Bits.Cursor(b, from, until) { def fail(): Nothing = ParquetFile.fail() }
+    def uvarint(): Long = r.uvarint(10)
+    def zz(): Long = Bits.unzigzag(uvarint())
     val blockSize = uvarint()
     val mbPerBlock = uvarint()
     if (blockSize <= 0 || blockSize % 128 != 0 || blockSize > (1 << 20)) fail()
@@ -944,16 +903,16 @@ object ParquetFile {
       val widths = new Array[Int](mbPerBlock.toInt)
       var i = 0
       while (i < widths.length) {
-        if (p >= until) fail()
-        widths(i) = b(p) & 0xff; p += 1; i += 1
+        widths(i) = r.u8(); i += 1
       }
       var mb = 0
       while (mb < widths.length && n < totalI) {
         val w = widths(mb)
         if (w > 64) fail()
         val nbytesL = mbSize.toLong * w / 8
-        if (nbytesL > until - p) fail()
+        if (nbytesL > until - r.pos) fail()
         val nbytes = nbytesL.toInt
+        val p = r.pos
         var j = 0
         var bitPos = 0L
         while (j < mbSize && n < totalI) {
@@ -969,11 +928,11 @@ object ParquetFile {
           if (wrap32) cur = cur.toInt.toLong
           out(n) = cur; n += 1; j += 1
         }
-        p += nbytes
+        r.pos += nbytes
         mb += 1
       }
     }
-    (out, p)
+    (out, r.pos)
   }
 
   /** DELTA_LENGTH_BYTE_ARRAY: delta-packed lengths, then the concatenated
@@ -1119,7 +1078,7 @@ object ParquetFile {
       // page CRC, when the writer stamped one (parquet-mr does by
       // default since 1.12): CRC-32 over the serialized body after the
       // header — the stored (compressed) bytes, levels included for v2
-      if (crcSet && Multimodal.crc32(bytes, dataStart, dataStart + comp) != crc) fail()
+      if (crcSet && Bits.crc32(bytes, dataStart, dataStart + comp) != crc) fail()
       pos = dataStart + comp
       // ---- page body (decompressed)
       lazy val page: Array[Byte] =
@@ -1745,7 +1704,7 @@ object ParquetFile {
     w.i32(4, ci.boundaryOrder)
     ci.nullCounts.foreach { ns =>
       w.listBegin(5, ns.length, 6)
-      ns.foreach(n => w.varint((n << 1) ^ (n >> 63)))
+      ns.foreach(n => w.varint(Bits.zigzag(n)))
     }
     w.out.write(0)
     w.bytes

@@ -449,7 +449,7 @@ object Pdf {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
     out.write(0x78); out.write(0x9c) // CMF/FLG: deflate, 32K window, check ok
     out.write(Multimodal.deflateDynamic(data))
-    val a = Multimodal.adler32(data, 0, data.length)
+    val a = Bits.adler32(data, 0, data.length)
     out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
     out.write((a >>> 8) & 0xff); out.write(a & 0xff)
     out.toByteArray

@@ -69,11 +69,7 @@ object Protobuf {
 
   private final class W {
     val out = new java.io.ByteArrayOutputStream()
-    def varint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt)
-    }
+    def varint(v: Long): Unit = Bits.writeUvarint(out, v)
     def tag(field: Int, wire: Int): Unit = varint((field.toLong << 3) | wire)
     def fixed64(v: Long): Unit =
       (0 until 8).foreach(i => out.write(((v >>> (8 * i)) & 0xff).toInt))
@@ -143,77 +139,71 @@ object Protobuf {
     doc_id: Long, msg_idx: Long, elem_idx: Long, field_no: Long,
     wire_type: Long, varint_val: Long, len: Long, checksum: Long)
 
-  private def readVarint(b: Array[Byte], p0: Int, limit: Int): (Long, Int) = {
-    var p = p0
-    var shift = 0
-    var v = 0L
-    while (true) {
-      if (p >= limit || shift > 63) fail()
-      val x = b(p) & 0xff
-      v |= (x & 0x7fL) << shift
-      p += 1
-      if ((x & 0x80) == 0) return (v, p)
-      shift += 7
-    }
-    fail()
+  /** A protobuf reader over `b(from until until)`: varints are ≤ 10 bytes. */
+  private final class Reader(b: Array[Byte], from: Int, until: Int)
+      extends Bits.Cursor(b, from, until) {
+    def fail(): Nothing = Protobuf.fail()
+    def varint(): Long = uvarint(10)
   }
 
   /** Scan one message at [from, until). */
   private def scanMsg(id: Long, msgIdx: Long, b: Array[Byte], from: Int, until: Int,
       out: scala.collection.mutable.Builder[ProtoField, Vector[ProtoField]]): Unit = {
-    var p = from
+    val r = new Reader(b, from, until)
     var elem = 0L
-    while (p < until) {
-      val (tag, p1) = readVarint(b, p, until)
+    while (r.pos < until) {
+      val tag = r.varint()
+      val p1 = r.pos
       val field = tag >>> 3
       val wire = (tag & 7).toInt
       if (field == 0 || field > Int.MaxValue) fail()
       wire match {
         case 0 =>
-          val (v, p2) = readVarint(b, p1, until)
+          val v = r.varint()
           out += ProtoField(id, msgIdx, elem, field, 0L, v, 0L, 0L)
-          p = p2
         case 1 =>
           if (p1 + 8 > until) fail()
           var v = 0L
           var i = 7
           while (i >= 0) { v = (v << 8) | (b(p1 + i) & 0xffL); i -= 1 }
           out += ProtoField(id, msgIdx, elem, field, 1L, v, 8L, 0L)
-          p = p1 + 8
+          r.pos = p1 + 8
         case 5 =>
           if (p1 + 4 > until) fail()
           var v = 0L
           var i = 3
           while (i >= 0) { v = (v << 8) | (b(p1 + i) & 0xffL); i -= 1 }
           out += ProtoField(id, msgIdx, elem, field, 5L, v, 4L, 0L)
-          p = p1 + 4
+          r.pos = p1 + 4
         case 2 =>
-          val (n, p2) = readVarint(b, p1, until)
+          val n = r.varint()
+          val p2 = r.pos
           if (n < 0 || n > MaxLen || p2 + n > until) fail()
           var cks = 0L
           var i = p2
           val e = p2 + n.toInt
           while (i < e) { cks = (cks * 31 + (b(i) & 0xff)) % 1000000007L; i += 1 }
           out += ProtoField(id, msgIdx, elem, field, 2L, 0L, n, cks)
-          p = e
+          r.pos = e
         case _ => fail() // groups (3/4) and reserved (6/7) are damage
       }
       elem += 1L
     }
-    if (p != until) fail()
+    if (r.pos != until) fail()
   }
 
   private[ext] def scanStream(id: Long, b: Array[Byte]): Seq[ProtoField] = {
     if (b == null || b.length == 0 || b.length > MaxLen) fail()
     val out = Vector.newBuilder[ProtoField]
-    var p = 0
+    val r = new Reader(b, 0, b.length)
     var msg = 0L
-    while (p < b.length) {
-      val (n, p1) = readVarint(b, p, b.length)
+    while (r.pos < b.length) {
+      val n = r.varint()
+      val p1 = r.pos
       if (n < 0 || n > MaxLen || p1 + n > b.length) fail()
       if (msg >= MaxMsgs) fail()
       scanMsg(id, msg, b, p1, p1 + n.toInt, out)
-      p = p1 + n.toInt
+      r.pos = p1 + n.toInt
       msg += 1L
     }
     out.result()

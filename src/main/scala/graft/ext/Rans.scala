@@ -42,12 +42,6 @@ object Rans {
   private final val M = 1 << ScaleBits
   private final val L = 1 << 23
 
-  private def writeVarint(out: java.io.ByteArrayOutputStream, value: Int): Unit = {
-    var v = value
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-  }
-
   /** Normalize byte frequencies to sum EXACTLY M, every present symbol
     * >= 1 slot. A surplus goes to the most frequent symbol; a deficit
     * (possible when many rare symbols were floored up to 1) is taken
@@ -88,7 +82,7 @@ object Rans {
 
   private[ext] def compress(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-    writeVarint(out, data.length)
+    Bits.writeUvarint(out, data.length)
     if (data.isEmpty) return out.toByteArray
     val freqs = normalizedFreqs(data)
     val present = (0 until 256).filter(freqs(_) > 0)
@@ -123,32 +117,18 @@ object Rans {
     out.toByteArray
   }
 
-  private def readVarint(bytes: Array[Byte], from: Int, until: Int): (Int, Int) = {
-    var v = 0L
-    var shift = 0
-    var p = from
-    while (p < until && shift <= 35) {
-      val b = bytes(p) & 0xff
-      v |= (b & 0x7fL) << shift
-      p += 1
-      if ((b & 0x80) == 0) {
-        if (v > Int.MaxValue) throw new MalformedRans
-        return (v.toInt, p)
-      }
-      shift += 7
-    }
-    throw new MalformedRans
-  }
-
   private[ext] def decompress(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
     if (bytes == null || bytes.length == 0) throw new MalformedRans
-    val (n, afterLen) = readVarint(bytes, 0, bytes.length)
+    val r = new Bits.Cursor(bytes, 0, bytes.length) { def fail(): Nothing = throw new MalformedRans }
+    val len = r.uvarint(6)
+    if (len > Int.MaxValue) throw new MalformedRans
+    val n = len.toInt
     if (n < 0 || n > maxOut) throw new MalformedRans
     if (n == 0) {
-      if (afterLen != bytes.length) throw new MalformedRans
+      if (r.pos != bytes.length) throw new MalformedRans
       return Array.emptyByteArray
     }
-    var p = afterLen
+    var p = r.pos
     if (p >= bytes.length) throw new MalformedRans
     val nSyms = (bytes(p) & 0xff) + 1
     p += 1

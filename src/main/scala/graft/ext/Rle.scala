@@ -38,30 +38,21 @@ object Rle {
   private[ext] def encodeRuns(runs: Seq[(Long, Long)]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(runs.length * 3)
     runs.foreach { case (code, len) =>
-      InvertedIndex.writeVarint(out, code)
-      InvertedIndex.writeVarint(out, len)
+      Bits.writeUvarint(out, code)
+      Bits.writeUvarint(out, len)
     }
     out.toByteArray
   }
 
+  /** Decode `nRuns` (code, run_len) pairs; throws on a truncated or
+    * overlong (> 10 byte) varint or trailing bytes.
+    */
   private[ext] def decodeRuns(bytes: Array[Byte], nRuns: Int): Seq[(Long, Long)] = {
-    var p = 0
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (p >= bytes.length) throw new IllegalArgumentException("truncated RLE stream")
-        val b = bytes(p) & 0xff
-        p += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        more = (b & 0x80) != 0
-      }
-      v
+    val r = new Bits.Cursor(bytes, 0, bytes.length) {
+      def fail(): Nothing = throw new IllegalArgumentException("truncated or overlong varint in RLE stream")
     }
-    val out = (0 until nRuns).map(_ => (varint(), varint()))
-    if (p != bytes.length) throw new IllegalArgumentException("trailing bytes in RLE stream")
+    val out = (0 until nRuns).map(_ => (r.uvarint(10), r.uvarint(10)))
+    if (r.pos != bytes.length) throw new IllegalArgumentException("trailing bytes in RLE stream")
     out
   }
 

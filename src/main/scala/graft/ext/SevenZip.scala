@@ -45,28 +45,6 @@ object SevenZip {
 
   private val Magic = Array[Byte]('7', 'z', 0xbc.toByte, 0xaf.toByte, 0x27, 0x1c)
 
-  // CRC32 (reflected, the zip polynomial) — reuse the xz table via a
-  // tiny local copy to keep module boundaries clean
-  private val crcTable: Array[Int] = locally {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i
-      var k = 0
-      while (k < 8) { c = if ((c & 1) != 0) 0xedb88320 ^ (c >>> 1) else c >>> 1; k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private def crc32(b: Array[Byte], from: Int, until: Int): Int = {
-    var c = ~0
-    var i = from
-    while (i < until) { c = crcTable((c ^ b(i)) & 0xff) ^ (c >>> 8); i += 1 }
-    ~c
-  }
-
   // ------------------------------------------------------ number coding
 
   private[ext] def writeNumber(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
@@ -198,7 +176,7 @@ object SevenZip {
         h.write(0x0a) // kCRC (folder digests)
         h.write(0x01) // all defined
         packed.foreach { case (_, payload, _) =>
-          val c = crc32(payload, 0, payload.length)
+          val c = Bits.crc32(payload, 0, payload.length)
           h.write(c & 0xff); h.write((c >>> 8) & 0xff); h.write((c >>> 16) & 0xff); h.write((c >>> 24) & 0xff)
         }
         h.write(0x00) // kEnd(UnpackInfo)
@@ -233,11 +211,11 @@ object SevenZip {
         }
         w64(packTotal) // next header offset (relative to byte 32)
         w64(header.length.toLong)
-        val hc = crc32(header, 0, header.length)
+        val hc = Bits.crc32(header, 0, header.length)
         start.write(hc & 0xff); start.write((hc >>> 8) & 0xff)
         start.write((hc >>> 16) & 0xff); start.write((hc >>> 24) & 0xff)
         val sb = start.toByteArray
-        val sc = crc32(sb, 0, sb.length)
+        val sc = Bits.crc32(sb, 0, sb.length)
         out.write(sc & 0xff); out.write((sc >>> 8) & 0xff)
         out.write((sc >>> 16) & 0xff); out.write((sc >>> 24) & 0xff)
         out.write(sb, 0, sb.length)
@@ -402,7 +380,7 @@ object SevenZip {
       case _ => fail() // coder out of subset
     }
     if (out.length.toLong != f.unpackSize) fail()
-    f.crc.foreach { c => if (crc32(out, 0, out.length) != c) fail() }
+    f.crc.foreach { c => if (Bits.crc32(out, 0, out.length) != c) fail() }
     out
   }
 
@@ -415,7 +393,7 @@ object SevenZip {
     while (i < 6) { if (payload(i) != Magic(i)) fail(); i += 1 }
     val sig = new Reader(payload, 8, payload.length)
     val startCrc = sig.leInt()
-    if (crc32(payload, 12, 32) != startCrc) fail()
+    if (Bits.crc32(payload, 12, 32) != startCrc) fail()
     val r0 = new Reader(payload, 12, 32)
     var nextOffset = 0L
     var nextSize = 0L
@@ -431,7 +409,7 @@ object SevenZip {
     val hdrStart = 32L + nextOffset
     if (nextSize < 0 || nextSize > (1 << 26) || hdrStart < 32 ||
       hdrStart + nextSize > payload.length) fail()
-    if (crc32(payload, hdrStart.toInt, (hdrStart + nextSize).toInt) != nextCrc) fail()
+    if (Bits.crc32(payload, hdrStart.toInt, (hdrStart + nextSize).toInt) != nextCrc) fail()
 
     // the end header: raw kHeader, or kEncodedHeader -> decode + re-parse
     var hdr = java.util.Arrays.copyOfRange(payload, hdrStart.toInt, (hdrStart + nextSize).toInt)

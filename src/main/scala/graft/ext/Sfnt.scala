@@ -292,7 +292,7 @@ object Sfnt {
     out.write(0x78); out.write(0x01)
     val d = Multimodal.deflateFixed(data)
     out.write(d, 0, d.length)
-    val a = Multimodal.adler32(data, 0, data.length)
+    val a = Bits.adler32(data, 0, data.length)
     out.write((a >>> 24) & 0xff); out.write((a >> 16) & 0xff)
     out.write((a >> 8) & 0xff); out.write(a & 0xff)
     out.toByteArray

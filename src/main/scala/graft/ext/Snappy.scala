@@ -32,27 +32,6 @@ object Snappy {
 
   private final class MalformedSnappy extends RuntimeException("malformed snappy", null, false, false)
 
-  /** little-endian base-128 varint; returns (value, bytesRead) */
-  private def readVarint(bytes: Array[Byte], from: Int, until: Int): (Long, Int) = {
-    var v = 0L
-    var shift = 0
-    var p = from
-    while (p < until && shift <= 35) {
-      val b = bytes(p) & 0xff
-      v |= (b & 0x7fL) << shift
-      p += 1
-      if ((b & 0x80) == 0) return (v, p - from)
-      shift += 7
-    }
-    throw new MalformedSnappy
-  }
-
-  private def writeVarint(out: java.io.ByteArrayOutputStream, value: Int): Unit = {
-    var v = value
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-  }
-
   private def emitLiteral(out: java.io.ByteArrayOutputStream, data: Array[Byte], from: Int, len: Int): Unit = {
     if (len == 0) return
     val l = len - 1
@@ -92,7 +71,7 @@ object Snappy {
     */
   private[ext] def compress(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 32)
-    writeVarint(out, data.length)
+    Bits.writeUvarint(out, data.length)
     val n = data.length
     if (n < 4) { emitLiteral(out, data, 0, n); return out.toByteArray }
     val HashBits = 14
@@ -130,11 +109,12 @@ object Snappy {
     */
   private[ext] def decompress(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
     if (bytes == null || bytes.length == 0) throw new MalformedSnappy
-    val (declared, vlen) = readVarint(bytes, 0, bytes.length)
+    val r = new Bits.Cursor(bytes, 0, bytes.length) { def fail(): Nothing = throw new MalformedSnappy }
+    val declared = r.uvarint(6) // the length preamble
     if (declared < 0 || declared > maxOut) throw new MalformedSnappy
     val out = new Array[Byte](declared.toInt)
     var o = 0
-    var p = vlen
+    var p = r.pos
     val n = bytes.length
     while (p < n) {
       val tag = bytes(p) & 0xff

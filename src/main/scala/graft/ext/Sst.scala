@@ -60,16 +60,7 @@ object Sst {
 
   private final class W {
     val out = new java.io.ByteArrayOutputStream()
-    def varint32(v: Int): Unit = {
-      var x = v
-      while ((x & ~0x7f) != 0) { out.write((x & 0x7f) | 0x80); x >>>= 7 }
-      out.write(x)
-    }
-    def varint64(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt)
-    }
+    def varint(v: Long): Unit = Bits.writeUvarint(out, v)
     def fixed32(v: Long): Unit =
       (0 until 4).foreach(i => out.write(((v >>> (8 * i)) & 0xff).toInt))
     def fixed64(v: Long): Unit =
@@ -100,9 +91,9 @@ object Sst {
           while (s < n && prev(s) == k(s)) s += 1
           s
         }
-      w.varint32(shared)
-      w.varint32(k.length - shared)
-      w.varint32(v.length)
+      w.varint(shared)
+      w.varint(k.length - shared)
+      w.varint(v.length)
       w.raw(java.util.Arrays.copyOfRange(k, shared, k.length))
       w.raw(v)
       prev = k
@@ -114,11 +105,12 @@ object Sst {
   }
 
   /** Masked crc32c over block-data+type. TFRecord and LevelDB share the
-    * identical masking scheme (rotr15 + 0xa282ead8), so this rides
-    * [[graft.ext.TfRecord]]'s coder instead of duplicating the formula.
+    * identical masking scheme (rotr15 + 0xa282ead8), so this applies
+    * [[graft.ext.TfRecord]]'s mask to [[Bits.crc32c]] instead of
+    * duplicating the formula.
     */
   private def maskedCrc(data: Array[Byte], typ: Byte): Long =
-    TfRecord.mask(TfRecord.crc32c(data :+ typ, 0, data.length + 1)) & 0xffffffffL
+    TfRecord.mask(Bits.crc32c(data :+ typ, 0, data.length + 1)) & 0xffffffffL
 
   /** Emit a block (with optional snappy) + trailer; returns its handle. */
   private def writeBlock(out: W, body: Array[Byte], snappy: Boolean): (Long, Long) = {
@@ -134,8 +126,8 @@ object Sst {
 
   private def handleBytes(off: Long, size: Long): Array[Byte] = {
     val w = new W
-    w.varint64(off)
-    w.varint64(size)
+    w.varint(off)
+    w.varint(size)
     w.out.toByteArray
   }
 
@@ -192,19 +184,13 @@ object Sst {
 
   private val MaxLen = 1 << 26
 
-  private def readVarint64(b: Array[Byte], p0: Int, limit: Int): (Long, Int) = {
-    var p = p0
-    var shift = 0
-    var v = 0L
-    while (true) {
-      if (p >= limit || shift > 63) fail()
-      val x = b(p) & 0xff
-      v |= (x & 0x7fL) << shift
-      p += 1
-      if ((x & 0x80) == 0) return (v, p)
-      shift += 7
-    }
-    fail()
+  /** A reader over `b(from until until)`: varint32 and varint64 fields
+    * alike are read with the 64-bit 10-byte bound.
+    */
+  private final class Reader(b: Array[Byte], from: Int, until: Int)
+      extends Bits.Cursor(b, from, until) {
+    def fail(): Nothing = Sst.fail()
+    def varint(): Long = uvarint(10)
   }
 
   private def fixed32At(b: Array[Byte], p: Int): Long =
@@ -250,13 +236,14 @@ object Sst {
     if (restarts.head != 0 && restartsStart > 0) fail()
     val restartSet = restarts.map(_.toInt).toSet
     val out = Vector.newBuilder[(Array[Byte], Array[Byte])]
-    var p = 0
+    val r = new Reader(body, 0, restartsStart)
     var prev = Array.emptyByteArray: Array[Byte]
-    while (p < restartsStart) {
-      val entryStart = p
-      val (shared, p1) = readVarint64(body, p, restartsStart)
-      val (unshared, p2) = readVarint64(body, p1, restartsStart)
-      val (vlen, p3) = readVarint64(body, p2, restartsStart)
+    while (r.pos < restartsStart) {
+      val entryStart = r.pos
+      val shared = r.varint()
+      val unshared = r.varint()
+      val vlen = r.varint()
+      val p3 = r.pos
       // each term capped before the sum: two 2^62 varints would wrap
       // `p3 + unshared + vlen` past Long.MAX and truncate to bogus Ints
       if (shared < 0 || unshared < 0 || vlen < 0 ||
@@ -271,9 +258,9 @@ object Sst {
         p3 + unshared.toInt + vlen.toInt)
       out += ((key, value))
       prev = key
-      p = p3 + unshared.toInt + vlen.toInt
+      r.pos = p3 + unshared.toInt + vlen.toInt
     }
-    if (p != restartsStart) fail()
+    if (r.pos != restartsStart) fail()
     out.result()
   }
 
@@ -296,11 +283,12 @@ object Sst {
     if (b == null || b.length < 48 || b.length > MaxLen) fail()
     if (fixed64At(b, b.length - 8) != 0xdb4775248b80fb57L) fail()
     val footer = b.length - 48
-    val (mOff, f1) = readVarint64(b, footer, footer + 40)
-    val (mSz, f2) = readVarint64(b, f1, footer + 40)
-    val (iOff, f3) = readVarint64(b, f2, footer + 40)
-    val (iSz, f4) = readVarint64(b, f3, footer + 40)
-    (f4 until footer + 40).foreach(i => if (b(i) != 0) fail()) // zero padding
+    val f = new Reader(b, footer, footer + 40)
+    val mOff = f.varint()
+    val mSz = f.varint()
+    val iOff = f.varint()
+    val iSz = f.varint()
+    (f.pos until footer + 40).foreach(i => if (b(i) != 0) fail()) // zero padding
     readBlock(b, mOff, mSz) // metaindex: crc-verified even when unused
     val index = blockEntries(readBlock(b, iOff, iSz))
     if (index.isEmpty) fail()
@@ -308,9 +296,10 @@ object Sst {
     var prevUser: Array[Byte] = null
     var prevEnd = -1L
     index.zipWithIndex.foreach { case ((_, hv), bi) =>
-      val (off, h1) = readVarint64(hv, 0, hv.length)
-      val (sz, h2) = readVarint64(hv, h1, hv.length)
-      if (h2 != hv.length) fail()
+      val h = new Reader(hv, 0, hv.length)
+      val off = h.varint()
+      val sz = h.varint()
+      if (h.pos != hv.length) fail()
       if (off <= prevEnd) fail() // blocks in file order, no overlap
       prevEnd = off + sz + 4
       // bounds before the type-byte peek (readBlock re-checks); each term

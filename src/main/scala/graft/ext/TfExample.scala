@@ -46,21 +46,12 @@ object TfExample {
   private def utf8(s: String): Array[Byte] =
     if (s == null) Array.empty else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  private[ext] def writeVarint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var n = v
-    while ((n & ~0x7fL) != 0) {
-      out.write(((n & 0x7f) | 0x80).toInt)
-      n >>>= 7
-    }
-    out.write(n.toInt)
-  }
-
   private def writeTag(out: java.io.ByteArrayOutputStream, field: Int, wire: Int): Unit =
-    writeVarint(out, ((field << 3) | wire).toLong)
+    Bits.writeUvarint(out, ((field << 3) | wire).toLong)
 
   private def writeLenDelim(out: java.io.ByteArrayOutputStream, field: Int, body: Array[Byte]): Unit = {
     writeTag(out, field, 2)
-    writeVarint(out, body.length.toLong)
+    Bits.writeUvarint(out, body.length.toLong)
     out.write(body, 0, body.length)
   }
 
@@ -88,7 +79,7 @@ object TfExample {
       writeLenDelim(o, 2, feat)
     }
     val fDocId = feature { o => // Int64List field 3, packed
-      writeLenDelim(o, 3, msg(o2 => writeLenDelim(o2, 1, msg(o3 => writeVarint(o3, id)))))
+      writeLenDelim(o, 3, msg(o2 => writeLenDelim(o2, 1, msg(o3 => Bits.writeUvarint(o3, id)))))
     }
     val fText = feature { o => // BytesList field 1
       writeLenDelim(o, 1, msg(o2 => writeLenDelim(o2, 1, utf8(text))))
@@ -97,9 +88,9 @@ object TfExample {
     val fTokens = feature { o =>
       val listBody =
         if (id % 3 == 0) msg { o2 => // unpacked: one varint field per value
-          toks.foreach { t => writeTag(o2, 1, 0); writeVarint(o2, t) }
+          toks.foreach { t => writeTag(o2, 1, 0); Bits.writeUvarint(o2, t) }
         } else msg { o2 => // packed run
-          writeLenDelim(o2, 1, msg(o3 => toks.foreach(t => writeVarint(o3, t))))
+          writeLenDelim(o2, 1, msg(o3 => toks.foreach(t => Bits.writeUvarint(o3, t))))
         }
       writeLenDelim(o, 3, listBody)
     }
@@ -116,7 +107,7 @@ object TfExample {
       writeLenDelim(o, 1, entry("doc_id", fDocId))
       writeLenDelim(o, 1, entry("text", fText))
       // the unknown-field hazard: field 99, varint — parsers must skip
-      writeTag(o, 99, 0); writeVarint(o, 12345L)
+      writeTag(o, 99, 0); Bits.writeUvarint(o, 12345L)
       writeLenDelim(o, 1, entry("tokens", fTokens))
       writeLenDelim(o, 1, entry("score", fScore))
     }
@@ -150,33 +141,22 @@ object TfExample {
       extends RuntimeException("malformed proto", null, false, false)
   private def fail(): Nothing = throw new MalformedProto
 
-  private final class Reader(val b: Array[Byte], var p: Int, val until: Int) {
-    def varint(): Long = {
-      var n = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (p >= until || shift > 63) fail()
-        val byte = b(p) & 0xff
-        p += 1
-        n |= (byte & 0x7fL) << shift
-        shift += 7
-        more = (byte & 0x80) != 0
-      }
-      n
-    }
+  private final class Reader(b: Array[Byte], from: Int, until: Int)
+      extends Bits.Cursor(b, from, until) {
+    def fail(): Nothing = TfExample.fail()
+    def varint(): Long = uvarint(10)
     def lenDelim(): (Int, Int) = {
       val len = varint()
-      if (len < 0 || p + len > until) fail()
-      val span = (p, p + len.toInt)
-      p += len.toInt
+      if (len < 0 || pos + len > limit) fail()
+      val span = (pos, pos + len.toInt)
+      pos += len.toInt
       span
     }
     def skip(wire: Int): Unit = wire match {
       case 0 => varint()
-      case 1 => if (p + 8 > until) fail() else p += 8
+      case 1 => if (pos + 8 > limit) fail() else pos += 8
       case 2 => lenDelim()
-      case 5 => if (p + 4 > until) fail() else p += 4
+      case 5 => if (pos + 4 > limit) fail() else pos += 4
       case _ => fail() // groups (3/4) and reserved types
     }
   }
@@ -190,7 +170,7 @@ object TfExample {
     var checksum = 0L
     val int64s = Seq.newBuilder[Long]
     val floatBits = Seq.newBuilder[Int]
-    while (r.p < until) {
+    while (r.pos < until) {
       val tag = r.varint()
       val field = (tag >>> 3).toInt
       val wire = (tag & 7).toInt
@@ -198,7 +178,7 @@ object TfExample {
         case 1 if wire == 2 => // BytesList
           val (bs, be) = r.lenDelim()
           val br = new Reader(b, bs, be)
-          while (br.p < be) {
+          while (br.pos < be) {
             val t2 = br.varint()
             if ((t2 >>> 3) == 1 && (t2 & 7) == 2) {
               val (vs, ve) = br.lenDelim()
@@ -210,7 +190,7 @@ object TfExample {
         case 2 if wire == 2 => // FloatList
           val (bs, be) = r.lenDelim()
           val br = new Reader(b, bs, be)
-          while (br.p < be) {
+          while (br.pos < be) {
             val t2 = br.varint()
             if ((t2 >>> 3) == 1 && (t2 & 7) == 2) { // packed
               val (vs, ve) = br.lenDelim()
@@ -222,21 +202,21 @@ object TfExample {
                 i += 4
               }
             } else if ((t2 >>> 3) == 1 && (t2 & 7) == 5) { // unpacked
-              if (br.p + 4 > be) fail()
-              floatBits += ((b(br.p) & 0xff) | ((b(br.p + 1) & 0xff) << 8) |
-                ((b(br.p + 2) & 0xff) << 16) | ((b(br.p + 3) & 0xff) << 24))
-              br.p += 4
+              if (br.pos + 4 > be) fail()
+              floatBits += ((b(br.pos) & 0xff) | ((b(br.pos + 1) & 0xff) << 8) |
+                ((b(br.pos + 2) & 0xff) << 16) | ((b(br.pos + 3) & 0xff) << 24))
+              br.pos += 4
             } else br.skip((t2 & 7).toInt)
           }
         case 3 if wire == 2 => // Int64List
           val (bs, be) = r.lenDelim()
           val br = new Reader(b, bs, be)
-          while (br.p < be) {
+          while (br.pos < be) {
             val t2 = br.varint()
             if ((t2 >>> 3) == 1 && (t2 & 7) == 2) { // packed
               val (vs, ve) = br.lenDelim()
               val vr = new Reader(b, vs, ve)
-              while (vr.p < ve) int64s += vr.varint()
+              while (vr.pos < ve) int64s += vr.varint()
             } else if ((t2 >>> 3) == 1 && (t2 & 7) == 0) { // unpacked
               int64s += br.varint()
             } else br.skip((t2 & 7).toInt)
@@ -250,19 +230,19 @@ object TfExample {
   private[ext] def parseExample(b: Array[Byte], from: Int, until: Int): Map[String, FeatureVal] = {
     val r = new Reader(b, from, until)
     var out = Map.empty[String, FeatureVal]
-    while (r.p < until) {
+    while (r.pos < until) {
       val tag = r.varint()
       if ((tag >>> 3) == 1 && (tag & 7) == 2) { // Example.features
         val (fs, fe) = r.lenDelim()
         val fr = new Reader(b, fs, fe)
-        while (fr.p < fe) {
+        while (fr.pos < fe) {
           val t2 = fr.varint()
           if ((t2 >>> 3) == 1 && (t2 & 7) == 2) { // map entry
             val (es, ee) = fr.lenDelim()
             val er = new Reader(b, es, ee)
             var key: String = null
             var value: FeatureVal = null
-            while (er.p < ee) {
+            while (er.pos < ee) {
               val t3 = er.varint()
               if ((t3 >>> 3) == 1 && (t3 & 7) == 2) {
                 val (ks, ke) = er.lenDelim()

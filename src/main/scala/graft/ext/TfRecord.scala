@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   *   [ length  : u64 LE ][ masked_crc32c(length bytes) : u32 LE ]
   *   [ payload : length ][ masked_crc32c(payload)      : u32 LE ]
   *
-  * with CRC-32C (Castagnoli, reflected poly 0x82F63B78) and the mask
-  * `((crc >>> 15) | (crc << 17)) + 0xa282ead8` that guards against
-  * CRCs of CRCs. Both directions from scratch here: a table-driven
-  * CRC-32C (differentialed against java.util.zip.CRC32C — the JDK's
-  * independent implementation), the masking, and the framing. The
+  * with CRC-32C (Castagnoli, the JDK's `CRC32C` via [[Bits.crc32c]])
+  * and the mask `((crc >>> 15) | (crc << 17)) + 0xa282ead8` that guards
+  * against CRCs of CRCs. Both directions are written here: the masking
+  * and the framing. The
   * reader verifies BOTH checksums per record; any mismatch, a
   * truncated frame, or a hostile length quarantines the archive whole
   * — the convention every container family here shares. Payload
@@ -32,34 +31,6 @@ import org.apache.spark.sql.functions._
   * north-star scope.
   */
 object TfRecord {
-
-  // ------------------------------------------------------------- crc32c
-
-  private val crcTable: Array[Int] = locally {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1) != 0) 0x82f63b78 ^ (c >>> 1) else c >>> 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private[ext] def crc32c(data: Array[Byte], from: Int, until: Int): Int = {
-    var c = ~0
-    var i = from
-    while (i < until) {
-      c = crcTable((c ^ data(i)) & 0xff) ^ (c >>> 8)
-      i += 1
-    }
-    ~c
-  }
 
   /** The TFRecord mask: rotate right 15, add the magic. */
   private[ext] def mask(crc: Int): Int =
@@ -86,9 +57,9 @@ object TfRecord {
     w64(lenBytes, payload.length.toLong)
     val lb = lenBytes.toByteArray
     w64(out, payload.length.toLong)
-    w32(out, mask(crc32c(lb, 0, 8)))
+    w32(out, mask(Bits.crc32c(lb, 0, 8)))
     out.write(payload, 0, payload.length)
-    w32(out, mask(crc32c(payload, 0, payload.length)))
+    w32(out, mask(Bits.crc32c(payload, 0, payload.length)))
   }
 
   /** Documents grouped into 16 TFRecord shards (id % 16, records in id
@@ -139,11 +110,11 @@ object TfRecord {
       val lenHi = u32(b, p + 4).toLong & 0xffffffffL
       val len = lenLo | (lenHi << 32)
       if (len < 0 || len > maxRecordBytes) fail() // hostile length
-      if (unmask(u32(b, p + 8)) != crc32c(b, p, p + 8)) fail() // length crc
+      if (unmask(u32(b, p + 8)) != Bits.crc32c(b, p, p + 8)) fail() // length crc
       val dataStart = p + 12
       val dataEnd = dataStart + len.toInt
       if (dataEnd + 4 > b.length) fail() // truncated payload
-      if (unmask(u32(b, dataEnd)) != crc32c(b, dataStart, dataEnd)) fail() // data crc
+      if (unmask(u32(b, dataEnd)) != Bits.crc32c(b, dataStart, dataEnd)) fail() // data crc
       spans += ((dataStart, dataEnd))
       p = dataEnd + 4
     }

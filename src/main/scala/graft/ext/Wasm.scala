@@ -54,15 +54,10 @@ object Wasm {
   private[ext] def exportNameOf(id: Long, j: Int): String =
     s"${words(nib(id, 5 + j) % 8)}_$j"
 
-  private def leb(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var x = v
-    while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-    out.write(x.toInt)
-  }
   private def section(out: java.io.ByteArrayOutputStream, sid: Int,
       body: Array[Byte]): Unit = {
     out.write(sid)
-    leb(out, body.length.toLong)
+    Bits.writeUvarint(out, body.length.toLong)
     out.write(body, 0, body.length)
   }
   private def bytes(build: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
@@ -70,7 +65,7 @@ object Wasm {
   }
   private def name(out: java.io.ByteArrayOutputStream, s: String): Unit = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    leb(out, b.length.toLong)
+    Bits.writeUvarint(out, b.length.toLong)
     out.write(b, 0, b.length)
   }
 
@@ -81,49 +76,49 @@ object Wasm {
     out.write(1); out.write(0); out.write(0); out.write(0)
     // type section: () -> () and (i32) -> (i32)
     section(out, 1, bytes { o =>
-      leb(o, 2)
-      o.write(0x60); leb(o, 0); leb(o, 0)
-      o.write(0x60); leb(o, 1); o.write(0x7f); leb(o, 1); o.write(0x7f)
+      Bits.writeUvarint(o, 2)
+      o.write(0x60); Bits.writeUvarint(o, 0); Bits.writeUvarint(o, 0)
+      o.write(0x60); Bits.writeUvarint(o, 1); o.write(0x7f); Bits.writeUvarint(o, 1); o.write(0x7f)
     })
     // import section (half the corpus): env.log as a func of type 0
     if (hasImportOf(id)) section(out, 2, bytes { o =>
-      leb(o, 1)
+      Bits.writeUvarint(o, 1)
       name(o, "env"); name(o, "log")
-      o.write(0x00); leb(o, 0)
+      o.write(0x00); Bits.writeUvarint(o, 0)
     })
     // function section: nf local functions, alternating type indexes
     section(out, 3, bytes { o =>
-      leb(o, nf.toLong)
-      (0 until nf).foreach(j => leb(o, (j % 2).toLong))
+      Bits.writeUvarint(o, nf.toLong)
+      (0 until nf).foreach(j => Bits.writeUvarint(o, (j % 2).toLong))
     })
     // memory section
     section(out, 5, bytes { o =>
-      leb(o, 1)
+      Bits.writeUvarint(o, 1)
       memMaxOf(id) match {
-        case Some(mx) => o.write(0x01); leb(o, memPagesOf(id)); leb(o, mx)
-        case None => o.write(0x00); leb(o, memPagesOf(id))
+        case Some(mx) => o.write(0x01); Bits.writeUvarint(o, memPagesOf(id)); Bits.writeUvarint(o, mx)
+        case None => o.write(0x00); Bits.writeUvarint(o, memPagesOf(id))
       }
     })
     // export section: every local func + the memory
     section(out, 7, bytes { o =>
-      leb(o, (nf + 1).toLong)
+      Bits.writeUvarint(o, (nf + 1).toLong)
       val base = if (hasImportOf(id)) 1 else 0
       (0 until nf).foreach { j =>
         name(o, exportNameOf(id, j))
-        o.write(0x00); leb(o, (base + j).toLong)
+        o.write(0x00); Bits.writeUvarint(o, (base + j).toLong)
       }
-      name(o, "memory"); o.write(0x02); leb(o, 0)
+      name(o, "memory"); o.write(0x02); Bits.writeUvarint(o, 0)
     })
     // code section: type-0 bodies end immediately; type-1 bodies return
     // local 0 (local.get 0; end) — real, validator-clean bytecode
     section(out, 10, bytes { o =>
-      leb(o, nf.toLong)
+      Bits.writeUvarint(o, nf.toLong)
       (0 until nf).foreach { j =>
         val body = bytes { c =>
-          if (j % 2 == 0) { leb(c, 0); c.write(0x0b) }
-          else { leb(c, 0); c.write(0x20); leb(c, 0); c.write(0x0b) }
+          if (j % 2 == 0) { Bits.writeUvarint(c, 0); c.write(0x0b) }
+          else { Bits.writeUvarint(c, 0); c.write(0x20); Bits.writeUvarint(c, 0); c.write(0x0b) }
         }
-        leb(o, body.length.toLong)
+        Bits.writeUvarint(o, body.length.toLong)
         o.write(body, 0, body.length)
       }
     })
@@ -161,27 +156,18 @@ object Wasm {
     if (b == null || b.length < 8) fail()
     if (b(0) != 0 || b(1) != 'a' || b(2) != 's' || b(3) != 'm') fail()
     if (b(4) != 1 || b(5) != 0 || b(6) != 0 || b(7) != 0) fail()
-    var p = 8
-    def u8(): Int = { if (p >= b.length) fail(); val v = b(p) & 0xff; p += 1; v }
+    val r = new Bits.Cursor(b, 8, b.length) { def fail(): Nothing = Wasm.fail() }
+    def u8(): Int = r.u8()
     def leb(): Long = {
-      var v = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (shift > 34) fail() // LEB128-u32: at most 5 bytes
-        val c = u8()
-        v |= (c & 0x7fL) << shift
-        shift += 7
-        more = (c & 0x80) != 0
-      }
+      val v = r.uvarint(5) // LEB128-u32: at most 5 bytes
       if (v > 0xffffffffL) fail()
       v
     }
     def nameStr(limit: Int): String = {
       val n = leb()
-      if (n > limit - p) fail()
-      val s = new String(b, p, n.toInt, java.nio.charset.StandardCharsets.UTF_8)
-      p += n.toInt
+      if (n > limit - r.pos) fail()
+      val s = new String(b, r.pos, n.toInt, java.nio.charset.StandardCharsets.UTF_8)
+      r.pos += n.toInt
       s
     }
     def valType(): Unit = u8() match {
@@ -211,11 +197,11 @@ object Wasm {
     var nMems = 0L
     var nGlobals = 0L
     val exports = Vector.newBuilder[String]
-    while (p < b.length) {
+    while (r.pos < b.length) {
       val sid = u8()
       val size = leb()
-      if (size > b.length - p) fail()
-      val end = p + size.toInt
+      if (size > b.length - r.pos) fail()
+      val end = r.pos + size.toInt
       nSections += 1
       if (sid != 0) {
         if (sid > 12 || rank(sid) <= lastRank) fail() // ordering rule
@@ -224,7 +210,7 @@ object Wasm {
       sid match {
         case 0 => // custom: name + opaque payload
           nameStr(end)
-          p = end
+          r.pos = end
         case 1 =>
           nTypes = leb()
           if (nTypes > 4096) fail()
@@ -272,7 +258,7 @@ object Wasm {
           val n = leb()
           if (n > 4096) fail()
           nTables += n
-          p = end
+          r.pos = end
         case 5 =>
           val n = leb()
           if (n > 1) fail() // MVP: at most one memory
@@ -289,7 +275,7 @@ object Wasm {
           val n = leb()
           if (n > 4096) fail()
           nGlobals += n
-          p = end
+          r.pos = end
         case 7 =>
           nExports = leb()
           if (nExports > 4096) fail()
@@ -310,20 +296,20 @@ object Wasm {
           if (codeBodies != declaredFuncs) fail() // counts must agree
           for (_ <- 0L until codeBodies) {
             val bodySize = leb()
-            if (bodySize > end - p) fail()
-            val bodyEnd = p + bodySize.toInt
+            if (bodySize > end - r.pos) fail()
+            val bodyEnd = r.pos + bodySize.toInt
             codeBytes += bodySize
             val nLocals = leb()
             if (nLocals > 64) fail()
             for (_ <- 0L until nLocals) { leb(); valType() }
-            if (bodyEnd <= p || (b(bodyEnd - 1) & 0xff) != 0x0b) fail() // must end with end
-            p = bodyEnd
+            if (bodyEnd <= r.pos || (b(bodyEnd - 1) & 0xff) != 0x0b) fail() // must end with end
+            r.pos = bodyEnd
           }
         case 8 | 9 | 11 | 12 =>
-          p = end // valid ids we inventory but do not dissect
+          r.pos = end // valid ids we inventory but do not dissect
         case _ => fail()
       }
-      if (p != end) fail() // each section size must be consumed exactly
+      if (r.pos != end) fail() // each section size must be consumed exactly
     }
     if (declaredFuncs > 0 && codeBodies < 0) fail() // functions without code
     WasmMeta(id, nSections, nTypes, nImports, importedFuncs + declaredFuncs,

@@ -60,28 +60,9 @@ object Xz {
 
   // ----------------------------------------------------------- checks
 
-  private val Crc32Tab: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i
-      var k = 0
-      while (k < 8) { c = (c >>> 1) ^ (if ((c & 1) != 0) 0xedb88320 else 0); k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private def crc32(b: Array[Byte], from: Int, until: Int): Int = {
-    var c = 0xffffffff
-    var i = from
-    while (i < until) { c = (c >>> 8) ^ Crc32Tab((c ^ b(i)) & 0xff); i += 1 }
-    ~c
-  }
-
   /** CRC-64/ECMA-182 reflected (poly 0xC96C5795D7870F42) — xz's default
-    * integrity check.
+    * integrity check. It stays local: xz is its only user and the JDK has
+    * no CRC-64 (the CRC-32 checks go through [[Bits.crc32]]).
     */
   private val Crc64Tab: Array[Long] = {
     val t = new Array[Long](256)
@@ -105,29 +86,12 @@ object Xz {
 
   // -------------------------------------------------------------- VLI
 
-  /** xz variable-length integer: 7 bits per byte, little-endian,
-    * continuation in bit 7, ≤ 9 bytes, minimal form not enforced on
-    * read (per spec, only the 63-bit bound is).
+  /** xz variable-length integers: LEB128 of ≤ 9 bytes (63 bits), minimal
+    * form not enforced on read (per spec, only the 63-bit bound is).
     */
-  private def readVli(b: Array[Byte], pos0: Int): (Long, Int) = {
-    var v = 0L
-    var pos = pos0
-    var shift = 0
-    while (true) {
-      if (pos >= b.length || shift > 56) fail()
-      val x = b(pos) & 0xff
-      v |= (x & 0x7fL) << shift
-      pos += 1
-      if ((x & 0x80) == 0) return (v, pos)
-      shift += 7
-    }
-    (v, pos) // unreachable
-  }
-
-  private def writeVli(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while (v >= 0x80) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
+  private final class VliReader(b: Array[Byte], from: Int) extends Bits.Cursor(b, from, b.length) {
+    def fail(): Nothing = Xz.fail()
+    def vli(): Long = uvarint(9)
   }
 
   // ------------------------------------------------------ LZMA decoder
@@ -452,7 +416,7 @@ object Xz {
       case 0x0a => 32
       case _ => fail()
     }
-    if (crc32(in, pos + 6, pos + 8) != leInt(in, pos + 8)) fail()
+    if (Bits.crc32(in, pos + 6, pos + 8) != leInt(in, pos + 8)) fail()
     pos += 12
     val out = new ExpandBuf(1 << 12, maxOut)
     val records = Vector.newBuilder[(Long, Long)] // (unpaddedSize, uncompressedSize)
@@ -465,22 +429,23 @@ object Xz {
         // ---- block
         val headerSize = (first + 1) * 4
         if (pos + headerSize > in.length) fail()
-        if (crc32(in, pos, pos + headerSize - 4) != leInt(in, pos + headerSize - 4)) fail()
+        if (Bits.crc32(in, pos, pos + headerSize - 4) != leInt(in, pos + headerSize - 4)) fail()
         val flags = in(pos + 1) & 0xff
         val nFilters = (flags & 3) + 1
         if ((flags & 0x3c) != 0) fail() // reserved bits
-        var p = pos + 2
+        val h = new VliReader(in, pos + 2)
         var compSize = -1L
         var uncompSize = -1L
-        if ((flags & 0x40) != 0) { val (v, np) = readVli(in, p); compSize = v; p = np }
-        if ((flags & 0x80) != 0) { val (v, np) = readVli(in, p); uncompSize = v; p = np }
+        if ((flags & 0x40) != 0) compSize = h.vli()
+        if ((flags & 0x80) != 0) uncompSize = h.vli()
         var f = 0
         var sawLzma2 = false
         while (f < nFilters) {
-          val (id, p1) = readVli(in, p)
-          val (propsLen, p2) = readVli(in, p1)
-          p = p2 + propsLen.toInt
-          if (p > pos + headerSize - 4) fail()
+          val id = h.vli()
+          val propsLen = h.vli()
+          val p2 = h.pos
+          h.pos = p2 + propsLen.toInt
+          if (h.pos > pos + headerSize - 4) fail()
           if (id == 0x21) {
             if (propsLen != 1) fail()
             sawLzma2 = true
@@ -490,6 +455,7 @@ object Xz {
           f += 1
         }
         if (!sawLzma2) fail()
+        var p = h.pos
         while (p < pos + headerSize - 4) { if (in(p) != 0) fail(); p += 1 } // header padding
         // ---- block data (LZMA2 stream)
         val dataStart = pos + headerSize
@@ -509,7 +475,7 @@ object Xz {
           case 0x01 =>
             val want = leInt(in, q)
             val data = out.slice(outStart)
-            if (crc32(data, 0, data.length) != want) fail()
+            if (Bits.crc32(data, 0, data.length) != want) fail()
           case 0x04 =>
             val want = leLong(in, q)
             val data = out.slice(outStart)
@@ -527,25 +493,24 @@ object Xz {
     }
     // ---- index: 0x00, VLI count, records, padding, CRC32
     val idxStart = indexPos
-    var p = indexPos + 1
-    val (cnt, p1) = readVli(in, p)
-    p = p1
+    val r = new VliReader(in, indexPos + 1)
+    val cnt = r.vli()
     val recs = records.result()
     if (cnt != recs.length.toLong) fail()
     recs.foreach { case (unpadded, uncomp) =>
-      val (u1, pa) = readVli(in, p)
-      val (u2, pb) = readVli(in, pa)
+      val u1 = r.vli()
+      val u2 = r.vli()
       if (u1 != unpadded || u2 != uncomp) fail()
-      p = pb
     }
+    var p = r.pos
     while (((p - idxStart) & 3) != 0) { if (p >= in.length || in(p) != 0) fail(); p += 1 }
     if (p + 4 > in.length) fail()
-    if (crc32(in, idxStart, p) != leInt(in, p)) fail()
+    if (Bits.crc32(in, idxStart, p) != leInt(in, p)) fail()
     p += 4
     val indexSize = (p - idxStart).toLong
     // ---- footer: CRC32(backwardSize ++ flags), backwardSize, flags, "YZ"
     if (p + 12 > in.length) fail()
-    if (crc32(in, p + 4, p + 10) != leInt(in, p)) fail()
+    if (Bits.crc32(in, p + 4, p + 10) != leInt(in, p)) fail()
     val backward = ((leInt(in, p + 4).toLong & 0xffffffffL) + 1) * 4
     if (backward != indexSize) fail()
     if (in(p + 8) != 0 || (in(p + 9) & 0xff) != checkType) fail()
@@ -597,7 +562,7 @@ object Xz {
     out.write(Magic, 0, 6)
     val flags = Array[Byte](0, 0x01) // CRC32 check
     out.write(flags, 0, 2)
-    writeLeInt(out, crc32(flags, 0, 2))
+    writeLeInt(out, Bits.crc32(flags, 0, 2))
     var unpadded = 0L
     var records = List.empty[(Long, Long)]
     if (data.nonEmpty) {
@@ -605,14 +570,14 @@ object Xz {
       val hdr = new java.io.ByteArrayOutputStream(16)
       hdr.write(0) // placeholder for size byte
       hdr.write(0) // flags: 1 filter, no size fields
-      writeVli(hdr, 0x21) // LZMA2
-      writeVli(hdr, 1)
+      Bits.writeUvarint(hdr, 0x21) // LZMA2
+      Bits.writeUvarint(hdr, 1)
       hdr.write(26) // dict size byte: (2|(26&1)) << (26/2+11) = 2 << 24 = 32 MB, ≥ any record
       while ((hdr.size + 4) % 4 != 0) hdr.write(0)
       val h = hdr.toByteArray
       h(0) = (((h.length + 4) / 4) - 1).toByte
       out.write(h, 0, h.length)
-      writeLeInt(out, crc32(h, 0, h.length))
+      writeLeInt(out, Bits.crc32(h, 0, h.length))
       // ---- LZMA2 uncompressed chunks
       val dataStart = out.size
       var off = 0
@@ -629,19 +594,19 @@ object Xz {
       val dataLen = out.size - dataStart
       var pad = 0
       while ((h.length + 4 + dataLen + pad) % 4 != 0) { out.write(0); pad += 1 }
-      writeLeInt(out, crc32(data, 0, data.length))
+      writeLeInt(out, Bits.crc32(data, 0, data.length))
       unpadded = (h.length + 4 + dataLen).toLong + 4 // header + data + check (no padding)
       records = List((unpadded, data.length.toLong))
     }
     // ---- index
     val idx = new java.io.ByteArrayOutputStream(32)
     idx.write(0x00)
-    writeVli(idx, records.length.toLong)
-    records.foreach { case (u, s) => writeVli(idx, u); writeVli(idx, s) }
+    Bits.writeUvarint(idx, records.length.toLong)
+    records.foreach { case (u, s) => Bits.writeUvarint(idx, u); Bits.writeUvarint(idx, s) }
     while ((idx.size % 4) != 0) idx.write(0)
     val ib = idx.toByteArray
     out.write(ib, 0, ib.length)
-    writeLeInt(out, crc32(ib, 0, ib.length))
+    writeLeInt(out, Bits.crc32(ib, 0, ib.length))
     // ---- footer
     val tail = new Array[Byte](6)
     val backward = ((ib.length + 4) / 4 - 1)
@@ -650,7 +615,7 @@ object Xz {
     tail(2) = ((backward >> 16) & 0xff).toByte
     tail(3) = ((backward >> 24) & 0xff).toByte
     tail(4) = 0; tail(5) = 0x01
-    writeLeInt(out, crc32(tail, 0, 6))
+    writeLeInt(out, Bits.crc32(tail, 0, 6))
     out.write(tail, 0, 6)
     out.write(FooterMagic, 0, 2)
     out.toByteArray
@@ -969,7 +934,7 @@ object Xz {
     out.write(Magic, 0, 6)
     val flags = Array[Byte](0, 0x01) // CRC32 check
     out.write(flags, 0, 2)
-    writeLeInt(out, crc32(flags, 0, 2))
+    writeLeInt(out, Bits.crc32(flags, 0, 2))
     var records = List.newBuilder[(Long, Long)] // (unpaddedSize, uncompressedSize)
     var blockStart = 0
     while (blockStart < data.length) {
@@ -977,12 +942,12 @@ object Xz {
       // ---- block header (one LZMA2 filter, 32 MB dict byte, no sizes)
       val hdr = new java.io.ByteArrayOutputStream(16)
       hdr.write(0); hdr.write(0)
-      writeVli(hdr, 0x21); writeVli(hdr, 1); hdr.write(26)
+      Bits.writeUvarint(hdr, 0x21); Bits.writeUvarint(hdr, 1); hdr.write(26)
       while ((hdr.size + 4) % 4 != 0) hdr.write(0)
       val h = hdr.toByteArray
       h(0) = (((h.length + 4) / 4) - 1).toByte
       out.write(h, 0, h.length)
-      writeLeInt(out, crc32(h, 0, h.length))
+      writeLeInt(out, Bits.crc32(h, 0, h.length))
       // ---- LZMA2 chunks: fresh dict epoch per block (matches and
       // position context never cross a block boundary — each block's
       // first chunk dict-resets, mirroring the decoder's per-block
@@ -992,7 +957,7 @@ object Xz {
       val dataLen = out.size - dataStart
       var pad = 0
       while ((h.length + 4 + dataLen + pad) % 4 != 0) { out.write(0); pad += 1 }
-      writeLeInt(out, crc32(data, blockStart, blockEnd))
+      writeLeInt(out, Bits.crc32(data, blockStart, blockEnd))
       records += (((h.length + 4 + dataLen).toLong + 4, (blockEnd - blockStart).toLong))
       blockStart = blockEnd
     }
@@ -1000,12 +965,12 @@ object Xz {
     val recs = records.result()
     val idx = new java.io.ByteArrayOutputStream(32)
     idx.write(0x00)
-    writeVli(idx, recs.length.toLong)
-    recs.foreach { case (u, s) => writeVli(idx, u); writeVli(idx, s) }
+    Bits.writeUvarint(idx, recs.length.toLong)
+    recs.foreach { case (u, s) => Bits.writeUvarint(idx, u); Bits.writeUvarint(idx, s) }
     while ((idx.size % 4) != 0) idx.write(0)
     val ib = idx.toByteArray
     out.write(ib, 0, ib.length)
-    writeLeInt(out, crc32(ib, 0, ib.length))
+    writeLeInt(out, Bits.crc32(ib, 0, ib.length))
     val tail = new Array[Byte](6)
     val backward = (ib.length + 4) / 4 - 1
     tail(0) = (backward & 0xff).toByte
@@ -1013,7 +978,7 @@ object Xz {
     tail(2) = ((backward >> 16) & 0xff).toByte
     tail(3) = ((backward >> 24) & 0xff).toByte
     tail(4) = 0; tail(5) = 0x01
-    writeLeInt(out, crc32(tail, 0, 6))
+    writeLeInt(out, Bits.crc32(tail, 0, 6))
     out.write(tail, 0, 6)
     out.write(FooterMagic, 0, 2)
     out.toByteArray

@@ -66,7 +66,7 @@ object Zip {
         val cd = Array.newBuilder[(Array[Byte], Int, Int, Long, Int, Int, Int, Int)]
         recs.foreach { case (id, text) =>
           val data = utf8(text)
-          val crc = Multimodal.crc32(data, 0, data.length) & 0xffffffffL
+          val crc = Bits.crc32(data, 0, data.length) & 0xffffffffL
           val method = if (id % 3 == 0) 0 else 8
           val comp = (id % 3) match {
             case 0 => data
@@ -125,7 +125,7 @@ object Zip {
     val cd = Array.newBuilder[(Array[Byte], Int, Long, Int, Int, Int)]
     entries.foreach { case (nameS, data, method) =>
       val name = utf8(nameS)
-      val crc = Multimodal.crc32(data, 0, data.length) & 0xffffffffL
+      val crc = Bits.crc32(data, 0, data.length) & 0xffffffffL
       val comp = method match {
         case 0 => data
         case 8 => Multimodal.deflateDynamic(data)
@@ -359,7 +359,7 @@ object Zip {
         case _ => throw new MalformedZip
       }
       if (data.length.toLong != usize) throw new MalformedZip
-      if ((Multimodal.crc32(data, 0, data.length) & 0xffffffffL) != crc) throw new MalformedZip
+      if ((Bits.crc32(data, 0, data.length) & 0xffffffffL) != crc) throw new MalformedZip
       if ((flags & 0x08) != 0) {
         // the trailing descriptor must agree with the CD copy
         val hasSig = u32(b, dataEnd) == 0x08074b50L
@@ -389,7 +389,7 @@ object Zip {
     val cd = Array.newBuilder[(Array[Byte], Int, Long, Int, Int, Long)]
     entries.foreach { case (nameS, data, method) =>
       val name = utf8(nameS)
-      val crc = Multimodal.crc32(data, 0, data.length) & 0xffffffffL
+      val crc = Bits.crc32(data, 0, data.length) & 0xffffffffL
       val comp = method match {
         case 0 => data
         case 8 => Multimodal.deflateDynamic(data)

@@ -30,7 +30,7 @@ class DexSpec extends AnyFunSuite {
     assert(Dex.parseDexSafe(3L, bad).isEmpty, "payload flip fails the checksum")
     // fix up the adler to match, leaving the SHA-1 wrong: signature catches it
     val fixed = bad.clone()
-    val a = Multimodal.adler32(fixed, 12, fixed.length).toLong & 0xffffffffL
+    val a = Bits.adler32(fixed, 12, fixed.length).toLong & 0xffffffffL
     var i = 0
     while (i < 4) { fixed(8 + i) = ((a >>> (8 * i)) & 0xff).toByte; i += 1 }
     assert(Dex.parseDexSafe(3L, fixed).isEmpty, "a recomputed checksum still fails the SHA-1")
@@ -45,6 +45,26 @@ class DexSpec extends AnyFunSuite {
     assert(Dex.parseDexSafe(id, good.take(good.length - 1)).isEmpty, "file_size rule")
     assert(Dex.parseDexSafe(id, good.take(40)).isEmpty, "truncation")
     assert(Dex.parseDexSafe(id, Array.emptyByteArray).isEmpty)
+    // string 0 moved to the file end with its uleb128 code-unit count
+    // stretched to n bytes, integrity fields recomputed: 5 bytes is
+    // legal, one byte past the u32 bound quarantines
+    def le32(b: Array[Byte], p: Int): Int =
+      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+    def put32(b: Array[Byte], p: Int, v: Int): Unit =
+      (0 until 4).foreach(i => b(p + i) = (v >>> (8 * i)).toByte)
+    def string0CountIn(n: Int): Array[Byte] = {
+      val r = BitsSpec.cursor(good); r.pos = le32(good, 0x70)
+      val units = r.uvarint(5)
+      val text = good.slice(r.pos, good.indexOf(0.toByte, r.pos) + 1) // bytes + NUL
+      val b = good ++ BitsSpec.padded(units, n) ++ text
+      put32(b, 0x70, good.length) // string_ids[0]
+      put32(b, 32, b.length) // file_size
+      Git.sha1(b.drop(32)).copyToArray(b, 12)
+      put32(b, 8, Bits.adler32(b, 12, b.length))
+      b
+    }
+    assert(Dex.parseDexSafe(id, string0CountIn(5)) == Dex.parseDexSafe(id, good))
+    assert(Dex.parseDexSafe(id, string0CountIn(6)).isEmpty, "6-byte uleb128 count")
   }
 
   test("operator: damaged dex quarantines alone (Spark)") {

@@ -76,6 +76,12 @@ class GitSpec extends AnyFunSuite {
     bad3.write(0xff); bad3.write(0xff); bad3.write(0xff); bad3.write(0x7f) // off = 0x7FFFFFFF
     bad3.write(2) // sz = 2: off + sz wraps negative in Int
     assertThrows[RuntimeException](Git.applyDelta(base, bad3.toByteArray))
+    // the base size as a non-minimal varint: 5 bytes is legal, one byte
+    // past the 5-byte bound is rejected
+    def baseSizeIn(n: Int) =
+      BitsSpec.padded(base.length, n) ++ Array[Byte](3, 3, 'x', 'y', 'z')
+    assert(new String(Git.applyDelta(base, baseSizeIn(5)), "US-ASCII") == "xyz")
+    assertThrows[RuntimeException](Git.applyDelta(base, baseSizeIn(6)))
   }
 
   test("damage ladder: trailer, magic, version, zlib, ref-to-missing, truncation") {

@@ -15,7 +15,7 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   private def enc(v: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    InvertedIndex.writeVarint(out, v)
+    Bits.writeUvarint(out, v)
     out.toByteArray
   }
 
@@ -52,6 +52,9 @@ class InvertedIndexSpec extends AnyFunSuite {
     // a zero gap means a duplicate id — never produced by a distinct ranked build
     val zeroGap = Array[Byte](0x05, 0x00, 0x03)
     intercept[IllegalArgumentException](InvertedIndex.decodeBlock(zeroGap, 3))
+    // a first id stretched to 10 bytes decodes; 11 bytes is rejected
+    assert(InvertedIndex.decodeBlock(BitsSpec.padded(5L, 10), 1).toSeq == Seq(5L))
+    intercept[IllegalArgumentException](InvertedIndex.decodeBlock(BitsSpec.padded(5L, 11), 1))
   }
 
   test("postingsBlocks: block segmentation, df across blocks, skip metadata, checksum") {

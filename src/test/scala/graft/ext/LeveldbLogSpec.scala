@@ -37,7 +37,7 @@ class LeveldbLogSpec extends AnyFunSuite {
       val buf = new Array[Byte](payload.length + 1)
       buf(0) = typ.toByte
       System.arraycopy(payload, 0, buf, 1, payload.length)
-      val crc = TfRecord.mask(TfRecord.crc32c(buf, 0, buf.length)) & 0xffffffffL
+      val crc = TfRecord.mask(Bits.crc32c(buf, 0, buf.length)) & 0xffffffffL
       val out = new java.io.ByteArrayOutputStream()
       (0 until 4).foreach(i => out.write(((crc >>> (8 * i)) & 0xff).toInt))
       out.write(payload.length & 0xff); out.write((payload.length >> 8) & 0xff)

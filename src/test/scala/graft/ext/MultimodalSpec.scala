@@ -514,7 +514,7 @@ class MultimodalSpec extends AnyFunSuite {
       Array((v >>> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def chunk(ctype: String, body: Array[Byte]): Array[Byte] = {
       val tb = ctype.getBytes("US-ASCII") ++ body
-      be32(body.length) ++ tb ++ be32(Multimodal.crc32(tb, 0, tb.length))
+      be32(body.length) ++ tb ++ be32(Bits.crc32(tb, 0, tb.length))
     }
     // re-chunk: split the single IDAT into two, insert an ancillary tEXt
     val ihdrLen = 13
@@ -534,14 +534,14 @@ class MultimodalSpec extends AnyFunSuite {
     // corrupt + CRC "fixed" for the new body -> Adler-32 catches it instead
     val fixedBody = corrupt.slice(8 + 25 + 4, 8 + 25 + 8 + idatLen)
     val refixed = corrupt.clone()
-    System.arraycopy(be32(Multimodal.crc32(fixedBody, 0, fixedBody.length)), 0,
+    System.arraycopy(be32(Bits.crc32(fixedBody, 0, fixedBody.length)), 0,
       refixed, 8 + 25 + 8 + idatLen, 4)
     assert(Multimodal.parsePng(refixed).isEmpty)
     // interlaced flag set (with CRC recomputed) on sequential data: the
     // stream no longer matches the Adam7 pass layout -> length check drops
     val inter = payload.clone(); inter(8 + 8 + 12) = 1
     val interBody = inter.slice(8 + 4, 8 + 8 + ihdrLen)
-    System.arraycopy(be32(Multimodal.crc32(interBody, 0, interBody.length)), 0,
+    System.arraycopy(be32(Bits.crc32(interBody, 0, interBody.length)), 0,
       inter, 8 + 8 + ihdrLen, 4)
     assert(Multimodal.parsePng(inter).isEmpty)
     assert(Multimodal.parsePng(payload.dropRight(5)).isEmpty) // truncated
@@ -607,7 +607,7 @@ class MultimodalSpec extends AnyFunSuite {
       Array((v >>> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def chunk(ctype: String, body: Array[Byte]): Array[Byte] = {
       val tb = ctype.getBytes("US-ASCII") ++ body
-      be32(body.length) ++ tb ++ be32(Multimodal.crc32(tb, 0, tb.length))
+      be32(body.length) ++ tb ++ be32(Bits.crc32(tb, 0, tb.length))
     }
     val w4 = 5; val h4 = 3
     val ga = Array.tabulate(h4)(y => Array.tabulate(w4)(x => (y * w4 + x) * 16 % 256))
@@ -1029,10 +1029,10 @@ class MultimodalSpec extends AnyFunSuite {
       Array((v >>> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     val deep = payload.clone(); deep(8 + 8 + 8) = 16 // IHDR depth byte
     val body = deep.slice(8 + 4, 8 + 8 + 13)
-    System.arraycopy(be32(Multimodal.crc32(body, 0, body.length)), 0, deep, 8 + 8 + 13, 4)
+    System.arraycopy(be32(Bits.crc32(body, 0, body.length)), 0, deep, 8 + 8 + 13, 4)
     assert(Multimodal.parsePng(deep).isEmpty) // 16-bit data twice as long: length check fires
     val odd = payload.clone(); odd(8 + 8 + 8) = 3 // depth 3 exists in no profile
-    System.arraycopy(be32(Multimodal.crc32(odd.slice(8 + 4, 8 + 8 + 13), 0, 17)), 0, odd, 8 + 8 + 13, 4)
+    System.arraycopy(be32(Bits.crc32(odd.slice(8 + 4, 8 + 8 + 13), 0, 17)), 0, odd, 8 + 8 + 13, 4)
     assert(Multimodal.parsePng(odd).isEmpty)
   }
 

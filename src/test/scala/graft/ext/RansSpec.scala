@@ -71,6 +71,13 @@ class RansSpec extends AnyFunSuite {
     val hdr = good.clone()
     hdr(6) = (hdr(6) ^ 0x01).toByte
     assert(bad(hdr), "tampered model table")
+    // the length preamble as a non-minimal varint: 6 bytes is legal, one
+    // byte past the 6-byte bound is rejected
+    val pre = BitsSpec.cursor(good)
+    val declared = pre.uvarint(6)
+    def preambleIn(n: Int) = BitsSpec.padded(declared, n) ++ good.drop(pre.pos)
+    assert(!bad(preambleIn(6)), "6-byte preamble")
+    assert(bad(preambleIn(7)), "7-byte preamble")
   }
 
   test("ransSignal over Spark: decoded stats match the source; rate beats LZ on short skewed text") {

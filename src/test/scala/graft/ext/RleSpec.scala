@@ -15,6 +15,10 @@ class RleSpec extends AnyFunSuite {
     assert(Rle.decodeRuns(bytes, 3) == runs)
     intercept[IllegalArgumentException](Rle.decodeRuns(bytes.dropRight(1), 3))
     intercept[IllegalArgumentException](Rle.decodeRuns(bytes :+ 0x00.toByte, 3))
+    // a run length stretched to 10 bytes decodes; 11 bytes is rejected
+    val one = Array[Byte](4)
+    assert(Rle.decodeRuns(one ++ BitsSpec.padded(5L, 10), 1) == Seq((4L, 5L)))
+    intercept[IllegalArgumentException](Rle.decodeRuns(one ++ BitsSpec.padded(5L, 11), 1))
   }
 
   test("runs: dictionary order, run segmentation, byte costs — exact on a crafted frame") {

@@ -68,6 +68,13 @@ class SnappySpec extends AnyFunSuite {
     assert(bad(evil.toByteArray), "copy before start")
     // trailing garbage after the declared output is complete
     assert(bad(good :+ 0.toByte), "trailing garbage")
+    // the length preamble as a non-minimal varint: 6 bytes is legal, one
+    // byte past the 6-byte bound is rejected
+    val pre = BitsSpec.cursor(good)
+    val declared = pre.uvarint(6)
+    def preambleIn(n: Int) = BitsSpec.padded(declared, n) ++ good.drop(pre.pos)
+    assert(!bad(preambleIn(6)), "6-byte preamble")
+    assert(bad(preambleIn(7)), "7-byte preamble")
   }
 
   test("snappySignal over Spark: decoded stats match the source") {

@@ -25,7 +25,7 @@ class TfExampleSpec extends AnyFunSuite {
     for (v <- Seq(0L, 1L, 127L, 128L, 300L, 16383L, 16384L, (1L << 35) + 7, Long.MaxValue)) {
       val ours = {
         val o = new java.io.ByteArrayOutputStream()
-        TfExample.writeVarint(o, v)
+        Bits.writeUvarint(o, v)
         o.toByteArray
       }
       assert(ours.sameElements(coded(_.writeUInt64NoTag(v))), s"varint $v")
@@ -34,8 +34,8 @@ class TfExampleSpec extends AnyFunSuite {
     val payload = "wire bytes".getBytes("UTF-8")
     val oursField = {
       val o = new java.io.ByteArrayOutputStream()
-      TfExample.writeVarint(o, (7L << 3) | 2L)
-      TfExample.writeVarint(o, payload.length.toLong)
+      Bits.writeUvarint(o, (7L << 3) | 2L)
+      Bits.writeUvarint(o, payload.length.toLong)
       o.write(payload, 0, payload.length)
       o.toByteArray
     }

@@ -14,7 +14,7 @@ class TfRecordSpec extends AnyFunSuite {
       for (from <- Seq(0, 3, 16)) {
         val jdk = new java.util.zip.CRC32C
         jdk.update(data, from, len)
-        assert(TfRecord.crc32c(data, from, from + len) == jdk.getValue.toInt,
+        assert(Bits.crc32c(data, from, from + len) == jdk.getValue.toInt,
           s"len=$len from=$from")
       }
     }

@@ -94,6 +94,13 @@ class WasmSpec extends AnyFunSuite {
     assert(Wasm.parseWasmSafe(id, good ++ Array[Byte](0x0b)).isEmpty, "trailing byte")
     assert(Wasm.parseWasmSafe(id, good.take(10)).isEmpty, "truncation")
     assert(Wasm.parseWasmSafe(id, Array.emptyByteArray).isEmpty)
+    // the first section's size as a non-minimal LEB128-u32: 5 bytes is
+    // legal, one byte past the u32 bound quarantines
+    val r = BitsSpec.cursor(good); r.pos = 9
+    val size = r.uvarint(5)
+    def sizeIn(n: Int) = good.take(9) ++ BitsSpec.padded(size, n) ++ good.drop(r.pos)
+    assert(Wasm.parseWasmSafe(id, sizeIn(5)) == Wasm.parseWasmSafe(id, good))
+    assert(Wasm.parseWasmSafe(id, sizeIn(6)).isEmpty, "6-byte section size")
   }
 
   test("operator: damaged module quarantines alone (Spark)") {

@@ -134,6 +134,30 @@ class XzSpec extends AnyFunSuite {
     for (len <- Seq(5, 11, 12, 20, c.length / 2, c.length - 1)) {
       intercept[RuntimeException](Xz.decompress(java.util.Arrays.copyOf(c, len), d.length + 16))
     }
+    // the index's record count as a non-minimal VLI (index CRC, padding
+    // and footer rebuilt): 9 bytes is legal, one byte past is rejected
+    assert(Xz.decompress(indexCountIn(c, 9), d.length + 16).sameElements(d))
+    intercept[RuntimeException](Xz.decompress(indexCountIn(c, 10), d.length + 16))
+  }
+
+  /** Single-stream `s` with its index's record-count VLI stretched to
+    * `n` bytes; the index padding and CRC and the footer are rebuilt.
+    */
+  private def indexCountIn(s: Array[Byte], n: Int): Array[Byte] = {
+    def le32(v: Long): Array[Byte] = Array.tabulate(4)(i => (v >>> (8 * i)).toByte)
+    val footer = s.length - 12
+    val backward = (0 until 4).map(i => (s(footer + 4 + i) & 0xffL) << (8 * i)).sum
+    val idx = footer - ((backward + 1) * 4).toInt
+    val r = BitsSpec.cursor(s); r.pos = idx + 1
+    val count = r.uvarint(9)
+    val records = r.pos
+    (0L until 2 * count).foreach(_ => r.uvarint(9))
+    val body = Array[Byte](0) ++ BitsSpec.padded(count, n) ++ s.slice(records, r.pos)
+    val index = body ++ new Array[Byte]((4 - body.length % 4) % 4)
+    val tail = le32((index.length + 4) / 4 - 1) ++ s.slice(footer + 8, footer + 10)
+    s.take(idx) ++ index ++
+      le32(Bits.crc32(index, 0, index.length) & 0xffffffffL) ++
+      le32(Bits.crc32(tail, 0, tail.length) & 0xffffffffL) ++ tail ++ s.takeRight(2)
   }
 
   test("decompression bomb: maxOut enforced before materialization") {

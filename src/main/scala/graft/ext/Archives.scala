@@ -432,21 +432,6 @@ object Archives {
 
   // ----------------------------------------------------- HTTP-in-WARC layer
 
-  /** zlib (RFC 1950) writer around the from-scratch DEFLATE: 0x78 0x01
-    * header (32 KiB window, valid check bits), dynamic-Huffman body,
-    * big-endian Adler-32 trailer — what HTTP `Content-Encoding: deflate`
-    * means on the wire (RFC 9110 §8.4.1.2).
-    */
-  private def zlibDeflate(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-    out.write(0x78); out.write(0x01)
-    out.write(Multimodal.deflateDynamic(data))
-    val a = Bits.adler32(data, 0, data.length)
-    out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
-    out.write((a >>> 8) & 0xff); out.write(a & 0xff)
-    out.toByteArray
-  }
-
   /** An HTTP/1.1 200 response around a body, the message a real crawl
     * response record stores: status line, Content-Type, then either a
     * Content-Length body or a `Transfer-Encoding: chunked` body (100-byte
@@ -466,7 +451,8 @@ object Archives {
     val (payload, encHeader) = encoding match {
       case 1 => (gzipMember(body, (id % 4).toInt, id, method = (id % 3).toInt),
         "Content-Encoding: gzip\r\n")
-      case 2 => (zlibDeflate(body), "Content-Encoding: deflate\r\n")
+      case 2 => // zlib around a dynamic-Huffman body (RFC 9110 §8.4.1.2)
+        (Bits.zlibWrap(0x01, Multimodal.deflateDynamic(body), body), "Content-Encoding: deflate\r\n")
       case 3 => (Brotli.compressQ1(body), "Content-Encoding: br\r\n")
       case _ => (body, "")
     }

@@ -121,36 +121,12 @@ object Brotli {
 
   // ------------------------------------------------------------ bit I/O
 
-  /** LSB-first forward bit reader (RFC 7932 §1.5: values little-endian
-    * from the least-significant bit; prefix-code bits most-significant
-    * code bit first).
-    */
-  private final class BitReader(val bytes: Array[Byte]) {
-    var bitPos: Long = 0L
-    private val totalBits: Long = bytes.length.toLong * 8
-    def read1(): Int = {
-      if (bitPos >= totalBits) fail()
-      val b = (bytes((bitPos >> 3).toInt) >> (bitPos & 7).toInt) & 1
-      bitPos += 1
-      b
-    }
-    def read(n: Int): Int = {
-      var v = 0
-      var j = 0
-      while (j < n) { v |= read1() << j; j += 1 }
-      v
-    }
-    /** Byte-align; the discarded pad bits must be zero (RFC §9.1). */
-    def alignZero(): Unit =
-      while ((bitPos & 7) != 0) { if (read1() != 0) fail() }
-    def bytePos: Int = { if ((bitPos & 7) != 0) fail(); (bitPos >> 3).toInt }
-    def skipBytes(n: Int): Unit = {
-      if (n < 0 || (bitPos >> 3) + n > bytes.length) fail()
-      bitPos += 8L * n
-    }
-    def atEnd: Boolean = bitPos >= totalBits
-    def byteAligned: Boolean = (bitPos & 7) == 0
-  }
+  // RFC 7932 §1.5: values are LSB-first ([[Bits.LsbReader]]); prefix
+  // codes go most significant code bit first, one `read(1)` per code
+  // bit in [[PrefixCode.decode]].
+
+  /** Byte-align; the discarded pad bits must be zero (RFC §9.1). */
+  private def alignZero(br: Bits.LsbReader): Unit = if (br.alignByte() != 0) fail()
 
   // ----------------------------------------------------- prefix decoding
 
@@ -193,12 +169,12 @@ object Brotli {
         }
       }
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: Bits.LsbReader): Int = {
       if (isSingle) return singleSym
       var code = 0
       var len = 0
       while (true) {
-        code = (code << 1) | br.read1()
+        code = (code << 1) | br.read(1)
         len += 1
         if (len > maxLen) fail()
         if (len <= maxLen && count(len) > 0 && code - firstCode(len) < count(len))
@@ -220,7 +196,7 @@ object Brotli {
     * complex serialization (RFC §3.4/3.5), with strict space accounting
     * at both the code-length-code and symbol level.
     */
-  private def readPrefixCode(br: BitReader, alphabetSize: Int): PrefixCode = {
+  private def readPrefixCode(br: Bits.LsbReader, alphabetSize: Int): PrefixCode = {
     val hskip = br.read(2)
     if (hskip == 1) {
       // ---- simple code
@@ -243,7 +219,7 @@ object Brotli {
         case 2 => sw(0, 1); new PrefixCode(syms, Array(1, 1))
         case 3 => sw(1, 2); new PrefixCode(syms, Array(1, 2, 2))
         case _ =>
-          if (br.read1() == 0) { // flat 2,2,2,2
+          if (br.read(1) == 0) { // flat 2,2,2,2
             sw(0, 1); sw(2, 3); sw(0, 2); sw(1, 3); sw(1, 2)
             new PrefixCode(syms, Array(2, 2, 2, 2))
           } else { // 1,2,3,3: only the two deepest sorted
@@ -335,8 +311,8 @@ object Brotli {
     241, 305, 369, 497, 753, 1265, 2289, 4337, 8433, 16625)
 
   /** NBLTYPES / NTREES variable code (RFC §9.2): 1, or 1+(1<<k)+extra. */
-  private def readTypeCount(br: BitReader): Int = {
-    if (br.read1() == 0) 1
+  private def readTypeCount(br: Bits.LsbReader): Int = {
+    if (br.read(1) == 0) 1
     else {
       val k = br.read(3)
       if (k == 0) 2 else (1 << k) + 1 + br.read(k)
@@ -344,17 +320,17 @@ object Brotli {
   }
 
   private final class BlockState(val n: Int, tCode: PrefixCode, cCode: PrefixCode,
-      br: BitReader) {
+      br: Bits.LsbReader) {
     var btype = 0
     var prev = 1
     var blen: Long = if (n < 2) Long.MaxValue else readCount(br)
-    private def readCount(b: BitReader): Long = {
+    private def readCount(b: Bits.LsbReader): Long = {
       val s = cCode.decode(b)
       if (s >= 26) fail()
       BlkBase(s).toLong + b.read(BlkExtra(s))
     }
     /** Consume one element; switch the block type when the count runs out. */
-    def tick(b: BitReader): Unit = {
+    def tick(b: Bits.LsbReader): Unit = {
       if (blen == 0) {
         val s = tCode.decode(b)
         val next = s match {
@@ -371,7 +347,7 @@ object Brotli {
     }
   }
 
-  private def readBlockState(br: BitReader): BlockState = {
+  private def readBlockState(br: Bits.LsbReader): BlockState = {
     val n = readTypeCount(br)
     if (n >= 2) {
       val tCode = readPrefixCode(br, n + 2)
@@ -398,10 +374,10 @@ object Brotli {
     }
   }
 
-  private def readContextMap(br: BitReader, size: Int, ntrees: Int): Array[Byte] = {
+  private def readContextMap(br: Bits.LsbReader, size: Int, ntrees: Int): Array[Byte] = {
     val map = new Array[Byte](size)
     if (ntrees < 2) return map
-    val rleMax = if (br.read1() == 1) br.read(4) + 1 else 0
+    val rleMax = if (br.read(1) == 1) br.read(4) + 1 else 0
     val code = readPrefixCode(br, rleMax + ntrees)
     var i = 0
     while (i < size) {
@@ -418,7 +394,7 @@ object Brotli {
         i += 1
       }
     }
-    if (br.read1() == 1) inverseMtf(map)
+    if (br.read(1) == 1) inverseMtf(map)
     map
   }
 
@@ -447,10 +423,10 @@ object Brotli {
     */
   def decompress(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
     if (bytes == null || bytes.length == 0) fail()
-    val br = new BitReader(bytes)
+    val br = new Bits.LsbReader(bytes, 0, bytes.length) { def fail(): Nothing = Brotli.fail() }
     // stream header: window bits
     val wbits =
-      if (br.read1() == 0) 16
+      if (br.read(1) == 0) 16
       else {
         val n = br.read(3)
         if (n != 0) 17 + n
@@ -478,15 +454,15 @@ object Brotli {
     var d1 = 4; var d2 = 11; var d3 = 15; var d4 = 16
     var isLast = false
     while (!isLast) {
-      isLast = br.read1() == 1
-      if (isLast && br.read1() == 1) {
+      isLast = br.read(1) == 1
+      if (isLast && br.read(1) == 1) {
         // ISLASTEMPTY
       } else {
         val mnibbles = br.read(2)
         if (mnibbles == 3) {
           // metadata meta-block: skipped, not part of the output
           if (isLast) fail()
-          if (br.read1() != 0) fail() // reserved
+          if (br.read(1) != 0) fail() // reserved
           val mskipBytes = br.read(2)
           val mskip =
             if (mskipBytes == 0) 0
@@ -495,22 +471,22 @@ object Brotli {
               if (mskipBytes > 1 && (v >> (8 * (mskipBytes - 1))) == 0) fail() // minimality
               v + 1
             }
-          br.alignZero()
-          br.skipBytes(mskip)
+          alignZero(br)
+          br.skip(8 * mskip)
         } else {
           val nib = mnibbles + 4
           val mlenRaw = br.read(4 * nib)
           if (nib > 4 && (mlenRaw >> (4 * (nib - 1))) == 0) fail() // minimality
           val mlen = mlenRaw + 1
-          val uncompressed = if (!isLast) br.read1() == 1 else false
+          val uncompressed = if (!isLast) br.read(1) == 1 else false
           if (uncompressed) {
-            br.alignZero()
+            alignZero(br)
             val from = br.bytePos
             ensure(mlen)
             if (from + mlen > bytes.length) fail()
             System.arraycopy(bytes, from, out, pos, mlen)
             pos += mlen
-            br.skipBytes(mlen)
+            br.skip(8 * mlen)
           } else {
             // ---- compressed meta-block header
             val bsL = readBlockState(br)
@@ -637,8 +613,8 @@ object Brotli {
         }
       }
     }
-    br.alignZero()
-    if (!br.atEnd) fail() // strict: exactly one stream
+    alignZero(br)
+    if (br.bitsLeft != 0) fail() // strict: exactly one stream
     java.util.Arrays.copyOf(out, pos)
   }
 
@@ -697,61 +673,24 @@ object Brotli {
     * sophistication lives in the DECODER, where a crawl engine needs it.
     */
   def compressRaw(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length + 8)
-    var acc = 0
-    var nAcc = 0
-    def put(v: Int, n: Int): Unit = {
-      acc |= (v & ((1 << n) - 1)) << nAcc
-      nAcc += n
-      while (nAcc >= 8) { out.write(acc & 0xff); acc >>>= 8; nAcc -= 8 }
-    }
-    def align(): Unit = if (nAcc > 0) { out.write(acc & 0xff); acc = 0; nAcc = 0 }
-    put(0, 1) // WBITS = 16
+    val w = new Bits.LsbWriter(data.length + 8)
+    w.put(0, 1) // WBITS = 16
     var off = 0
     while (off < data.length) {
       val chunk = math.min(1 << 24, data.length - off)
-      put(0, 1) // ISLAST = 0
+      w.put(0, 1) // ISLAST = 0
       val nib = if (chunk - 1 < (1 << 16)) 4 else if (chunk - 1 < (1 << 20)) 5 else 6
-      put(nib - 4, 2)
-      put(chunk - 1, 4 * nib)
-      put(1, 1) // ISUNCOMPRESSED
-      align()
-      out.write(data, off, chunk)
+      w.put(nib - 4, 2)
+      w.put(chunk - 1, 4 * nib)
+      w.put(1, 1) // ISUNCOMPRESSED
+      w.putBytes(data, off, off + chunk) // after zero pad bits
       off += chunk
     }
-    put(1, 1); put(1, 1) // ISLAST, ISLASTEMPTY
-    align()
-    out.toByteArray
+    w.put(1, 1); w.put(1, 1) // ISLAST, ISLASTEMPTY
+    w.toArray
   }
 
   // ----------------------------------------------------- REAL encoder
-
-  /** LSB-first bit writer (RFC 7932 §1.5): `put` appends value bits
-    * least-significant first (the mirror of BitReader.read); `putCode`
-    * appends a canonical prefix code most-significant code bit first
-    * (the mirror of PrefixCode.decode).
-    */
-  private final class BitWriterLsb(hint: Int) {
-    private var a = new Array[Byte](math.max(64, hint))
-    private var len = 0
-    private var acc = 0L
-    private var nb = 0
-    def put(v: Long, n: Int): Unit = {
-      acc |= (v & ((1L << n) - 1)) << nb
-      nb += n
-      while (nb >= 8) {
-        if (len == a.length) a = java.util.Arrays.copyOf(a, len << 1)
-        a(len) = (acc & 0xff).toByte; len += 1
-        acc >>>= 8; nb -= 8
-      }
-    }
-    def putCode(code: Int, clen: Int): Unit = {
-      var k = clen - 1
-      while (k >= 0) { put((code >> k) & 1, 1); k -= 1 }
-    }
-    def alignZero(): Unit = if (nb > 0) put(0, 8 - nb)
-    def toArray: Array[Byte] = { alignZero(); java.util.Arrays.copyOf(a, len) }
-  }
 
   /** Kraft-exact Huffman code lengths over `freq` (used symbols only,
     * every entry > 0), length-limited by the flattening loop
@@ -832,7 +771,7 @@ object Brotli {
     * Returns the canonical (codeBySymbol, lenBySymbol) the decoder will
     * reconstruct — bit-for-bit the inverse of [[readPrefixCode]].
     */
-  private def writePrefixCode(w: BitWriterLsb, alphabetSize: Int,
+  private def writePrefixCode(w: Bits.LsbWriter, alphabetSize: Int,
       freq: Array[Long]): (Array[Int], Array[Int]) = {
     var abits = 0
     while ((1 << abits) < alphabetSize) abits += 1
@@ -963,7 +902,7 @@ object Brotli {
     * framing-only fallback).
     */
   def compressQ1(data: Array[Byte]): Array[Byte] = {
-    val w = new BitWriterLsb(math.max(64, data.length / 2))
+    val w = new Bits.LsbWriter(math.max(64, data.length / 2))
     // window: smallest wbits whose window covers the input (distances
     // never exceed the data length), floored at 10, capped at 24
     var wbits = 10

@@ -52,41 +52,6 @@ object Bzip2 {
   // MSB-first, NOT the reflected zlib crc32) with init and final-xor
   // 0xFFFFFFFF.
 
-  // ------------------------------------------------------------- bit IO
-  private final class BitWr {
-    private var a = new Array[Byte](1 << 10)
-    private var len = 0
-    private var acc = 0L
-    private var nb = 0
-    def put(v: Long, n: Int): Unit = {
-      acc = (acc << n) | (v & ((1L << n) - 1)); nb += n
-      while (nb >= 8) {
-        if (len == a.length) a = java.util.Arrays.copyOf(a, len << 1)
-        a(len) = ((acc >>> (nb - 8)) & 0xff).toByte; len += 1; nb -= 8
-      }
-    }
-    def flushByte(): Unit = if (nb > 0) put(0, 8 - nb)
-    def toArray: Array[Byte] = java.util.Arrays.copyOf(a, len)
-  }
-
-  private final class BitRd(val in: Array[Byte], startByte: Int) {
-    var bitPos: Long = startByte.toLong * 8
-    def get(n: Int): Int = {
-      var v = 0
-      var k = n
-      while (k > 0) {
-        val byteIdx = (bitPos >>> 3).toInt
-        if (byteIdx >= in.length) fail()
-        val bit = (in(byteIdx) >>> (7 - (bitPos & 7)).toInt) & 1
-        v = (v << 1) | bit
-        bitPos += 1; k -= 1
-      }
-      v
-    }
-    def get1(): Int = get(1)
-    def byteAligned: Int = ((bitPos + 7) >>> 3).toInt
-  }
-
   // ------------------------------------------------------------ forward
   /** BWT by prefix-doubling over CYCLIC ranks: key for step k is
     * (rank(i), rank(i+k mod n)) packed with the index into one Long, so
@@ -198,7 +163,7 @@ object Bzip2 {
     */
   def compress(data: Array[Byte], level: Int = 1): Array[Byte] = {
     require(level >= 1 && level <= 9, s"bzip2 level $level")
-    val w = new BitWr
+    val w = new Bits.MsbWriter(1 << 10)
     w.put('B', 8); w.put('Z', 8); w.put('h', 8); w.put('0' + level, 8)
     val cap = level * 100000 - 300 // RLE1 appends ≤ 260 bytes past the check
     var i = 0
@@ -224,11 +189,10 @@ object Bzip2 {
     }
     w.put(0x177245L, 24); w.put(0x385090L, 24) // stream footer magic
     w.put(combined.toLong & 0xffffffffL, 32)
-    w.flushByte()
     w.toArray
   }
 
-  private def encodeBlock(w: BitWr, s: Array[Byte], blockCrc: Int): Unit = {
+  private def encodeBlock(w: Bits.MsbWriter, s: Array[Byte], blockCrc: Int): Unit = {
     val (last, origPtr) = bwt(s)
     // used-byte map
     val used = new Array[Boolean](256)
@@ -340,11 +304,11 @@ object Bzip2 {
         l += 1
       }
     }
-    def decode(r: BitRd): Int = {
+    def decode(r: Bits.MsbReader): Int = {
       var l = minLen
-      var v = r.get(minLen)
+      var v = r.read(minLen)
       while (l <= maxLen && !(v - firstCode(l) < count(l) && v >= firstCode(l))) {
-        v = (v << 1) | r.get1(); l += 1
+        v = (v << 1) | r.read(1); l += 1
       }
       if (l > maxLen) fail()
       perm(firstIdx(l) + v - firstCode(l))
@@ -360,28 +324,28 @@ object Bzip2 {
     val level = in(pos + 3) - '0'
     if (level < 1 || level > 9) fail()
     val blockMax = level * 100000
-    val r = new BitRd(in, pos + 4)
+    val r = new Bits.MsbReader(in, pos + 4, in.length) { def fail(): Nothing = Bzip2.fail() }
     val out = new java.io.ByteArrayOutputStream(math.min(maxOut, 1 << 16))
     var combined = 0
     while (true) {
-      val mHi = r.get(24); val mLo = r.get(24)
+      val mHi = r.read(24); val mLo = r.read(24)
       if (mHi == 0x177245 && mLo == 0x385090) {
-        val stored = (r.get(16).toLong << 16) | r.get(16).toLong
-        if (stored != (combined.toLong & 0xffffffffL)) fail()
-        return (out.toByteArray, r.byteAligned)
+        if (r.read(32) != combined) fail()
+        r.alignByte()
+        return (out.toByteArray, r.bytePos)
       }
       if (mHi != 0x314159 || mLo != 0x265359) fail()
-      val blockCrc = ((r.get(16).toLong << 16) | r.get(16).toLong).toInt
-      if (r.get1() != 0) fail() // randomized blocks: deprecated, never written
-      val origPtr = r.get(24)
+      val blockCrc = r.read(32)
+      if (r.read(1) != 0) fail() // randomized blocks: deprecated, never written
+      val origPtr = r.read(24)
       // symbol map
       val used = new Array[Boolean](256)
-      val hiMap = r.get(16)
+      val hiMap = r.read(16)
       var hi = 0
       var nUsed = 0
       while (hi < 16) {
         if ((hiMap & (0x8000 >>> hi)) != 0) {
-          val lo = r.get(16)
+          val lo = r.read(16)
           var j = 0
           while (j < 16) {
             if ((lo & (0x8000 >>> j)) != 0) { used(hi * 16 + j) = true; nUsed += 1 }
@@ -396,16 +360,16 @@ object Bzip2 {
       var b0 = 0
       while (b0 < 256) { if (used(b0)) { usedList(u) = b0; u += 1 }; b0 += 1 }
       val alpha = nUsed + 2
-      val nGroups = r.get(3)
+      val nGroups = r.read(3)
       if (nGroups < 2 || nGroups > 6) fail()
-      val nSel = r.get(15)
+      val nSel = r.read(15)
       if (nSel < 1) fail()
       val selectors = new Array[Int](nSel)
       val selMtf = Array.tabulate(nGroups)(identity)
       var s = 0
       while (s < nSel) {
         var j = 0
-        while (r.get1() == 1) { j += 1; if (j >= nGroups) fail() }
+        while (r.read(1) == 1) { j += 1; if (j >= nGroups) fail() }
         val v = selMtf(j)
         while (j > 0) { selMtf(j) = selMtf(j - 1); j -= 1 }
         selMtf(0) = v
@@ -414,12 +378,12 @@ object Bzip2 {
       }
       val tables = Array.fill(nGroups) {
         val len = new Array[Int](alpha)
-        var cur = r.get(5)
+        var cur = r.read(5)
         var sym = 0
         while (sym < alpha) {
           var guard = 0
-          while (r.get1() == 1) {
-            if (r.get1() == 0) cur += 1 else cur -= 1
+          while (r.read(1) == 1) {
+            if (r.read(1) == 0) cur += 1 else cur -= 1
             guard += 1; if (guard > 40 || cur < 1 || cur > 23) fail()
           }
           len(sym) = cur

@@ -54,56 +54,8 @@ object Flac {
 
   // ------------------------------------------------------------ bit io
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(1024)
-    private var cur = 0
-    private var nbits = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { var i = 0; while (i < q) { writeBits(0, 1); i += 1 }; writeBits(1, 1) }
-    def alignByte(): Unit = if (nbits > 0) writeBits(0, 8 - nbits)
-    /** Bytes written so far; only meaningful at byte alignment (the two
-      * CRC points are aligned by construction: the header's bit fields
-      * sum to whole bytes, the body gets an explicit align).
-      */
-    def bytesSoFar: Array[Byte] = { if (nbits != 0) fail(); out.toByteArray }
-    def toByteArray: Array[Byte] = { alignByte(); out.toByteArray }
-  }
-
-  private final class BitReader(val bytes: Array[Byte], var pos: Int, val end: Int) {
-    private var cur = 0
-    private var nbits = 0
-    def bytePos: Int = pos // valid only at byte alignment
-    def aligned: Boolean = nbits == 0
-    def readBits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        if (nbits == 0) {
-          if (pos >= end) fail()
-          cur = bytes(pos) & 0xff; pos += 1; nbits = 8
-        }
-        v = (v << 1) | ((cur >> (nbits - 1)) & 1)
-        nbits -= 1
-        i += 1
-      }
-      v
-    }
-    def readUnary(cap: Int): Int = {
-      var q = 0
-      while (readBits(1) == 0) { q += 1; if (q > cap) fail() }
-      q
-    }
-    def alignByte(): Unit = { nbits = 0 }
-    def eof: Boolean = nbits == 0 && pos >= end
-  }
+  private def reader(b: Array[Byte], from: Int, until: Int): Bits.MsbReader =
+    new Bits.MsbReader(b, from, until) { def fail(): Nothing = Flac.fail() }
 
   // ------------------------------------------------------------- crcs
 
@@ -135,8 +87,8 @@ object Flac {
 
   // ------------------------------------------- FLAC's own UTF-8-ish number
 
-  private def writeCodedNumber(bw: BitWriter, v: Long): Unit = {
-    if (v < 0x80) bw.writeBits(v, 8)
+  private def writeCodedNumber(bw: Bits.MsbWriter, v: Long): Unit = {
+    if (v < 0x80) bw.put(v, 8)
     else {
       // count payload bytes needed (6 bits each)
       var bytes = 1
@@ -144,14 +96,14 @@ object Flac {
       // lead byte: (bytes+1) ones, a zero, then the high bits
       val leadDataBits = 6 - bytes
       val mask = (0xff << (leadDataBits + 1)) & 0xff
-      bw.writeBits(mask | ((v >>> (6 * bytes)) & ((1 << leadDataBits) - 1)), 8)
+      bw.put(mask | ((v >>> (6 * bytes)) & ((1 << leadDataBits) - 1)), 8)
       var i = bytes - 1
-      while (i >= 0) { bw.writeBits(0x80L | ((v >>> (6 * i)) & 0x3f), 8); i -= 1 }
+      while (i >= 0) { bw.put(0x80L | ((v >>> (6 * i)) & 0x3f), 8); i -= 1 }
     }
   }
 
-  private def readCodedNumber(br: BitReader): Long = {
-    val b0 = br.readBits(8).toInt
+  private def readCodedNumber(br: Bits.MsbReader): Long = {
+    val b0 = br.read(8)
     if ((b0 & 0x80) == 0) return b0.toLong
     var ones = 0
     while (ones < 8 && ((b0 << ones) & 0x80) != 0) ones += 1
@@ -160,7 +112,7 @@ object Flac {
     var v = (b0 & ((1 << (7 - ones)) - 1)).toLong
     var i = 0
     while (i < cont) {
-      val b = br.readBits(8).toInt
+      val b = br.read(8)
       if ((b & 0xc0) != 0x80) fail()
       v = (v << 6) | (b & 0x3f)
       i += 1
@@ -195,21 +147,23 @@ object Flac {
     if (5L + res.length.toLong * width < bestBits) -width else best
   }
 
-  private def writeResiduals(bw: BitWriter, res: Array[Int]): Unit = {
-    bw.writeBits(0, 2) // residual coding method: rice, 4-bit params
-    bw.writeBits(0, 4) // partition order 0: one partition
+  private def writeResiduals(bw: Bits.MsbWriter, res: Array[Int]): Unit = {
+    bw.put(0, 2) // residual coding method: rice, 4-bit params
+    bw.put(0, 4) // partition order 0: one partition
     val p = bestRice(res)
     if (p < 0) {
       val width = -p
-      bw.writeBits(0xf, 4) // escape
-      bw.writeBits(width.toLong, 5)
-      res.foreach(r => bw.writeBits(r.toLong & ((1L << width) - 1), width))
+      bw.put(0xf, 4) // escape
+      bw.put(width.toLong, 5)
+      res.foreach(r => bw.put(r.toLong & ((1L << width) - 1), width))
     } else {
-      bw.writeBits(p.toLong, 4)
+      bw.put(p.toLong, 4)
       res.foreach { r =>
         val u = zigzag(r)
-        bw.writeUnary((u >>> p).toInt)
-        bw.writeBits(u & ((1L << p) - 1), p)
+        var q = (u >>> p).toInt // unary: q zeros, then a one
+        while (q >= 32) { bw.put(0, 32); q -= 32 }
+        bw.put(1, q + 1)
+        bw.put(u & ((1L << p) - 1), p)
       }
     }
   }
@@ -245,13 +199,13 @@ object Flac {
     val out = new java.io.ByteArrayOutputStream(xs.length * 2 + 128)
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
     // STREAMINFO, last-metadata flag set
-    val si = new BitWriter
-    si.writeBits(block.toLong, 16); si.writeBits(block.toLong, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24) // frame sizes unknown
-    si.writeBits(16000L, 20)
-    si.writeBits(0, 3) // channels - 1
-    si.writeBits(15, 5) // bits per sample - 1
-    si.writeBits(xs.length.toLong, 36)
+    val si = new Bits.MsbWriter
+    si.put(block.toLong, 16); si.put(block.toLong, 16)
+    si.put(0, 24); si.put(0, 24) // frame sizes unknown
+    si.put(16000L, 20)
+    si.put(0, 3) // channels - 1
+    si.put(15, 5) // bits per sample - 1
+    si.put(xs.length.toLong, 36)
     val md5In = new Array[Byte](xs.length * 2)
     var i = 0
     while (i < xs.length) {
@@ -259,7 +213,7 @@ object Flac {
       i += 1
     }
     val md5 = java.security.MessageDigest.getInstance("MD5").digest(md5In)
-    val siBytes = si.toByteArray
+    val siBytes = si.toArray
     out.write(0x80); out.write(0); out.write(0); out.write(siBytes.length + 16)
     out.write(siBytes); out.write(md5)
 
@@ -269,43 +223,43 @@ object Flac {
       val from = f * block
       val until = math.min(xs.length, from + block)
       val n = until - from
-      val bw = new BitWriter
-      bw.writeBits(0x3ffe, 14) // sync
-      bw.writeBits(0, 1) // reserved
-      bw.writeBits(0, 1) // fixed blocking strategy
+      val bw = new Bits.MsbWriter(1024)
+      bw.put(0x3ffe, 14) // sync
+      bw.put(0, 1) // reserved
+      bw.put(0, 1) // fixed blocking strategy
       val fullBlock = n == block
-      bw.writeBits(if (fullBlock) 0x8L else 0x7L, 4) // 256 | get-16-bit
-      bw.writeBits(0xdL, 4) // sample rate: 16-bit Hz follows
-      bw.writeBits(0, 4) // channel assignment: mono
-      bw.writeBits(4, 3) // sample size: 16 bits (0b100)
-      bw.writeBits(0, 1) // reserved
+      bw.put(if (fullBlock) 0x8L else 0x7L, 4) // 256 | get-16-bit
+      bw.put(0xdL, 4) // sample rate: 16-bit Hz follows
+      bw.put(0, 4) // channel assignment: mono
+      bw.put(4, 3) // sample size: 16 bits (0b100)
+      bw.put(0, 1) // reserved
       writeCodedNumber(bw, f.toLong)
-      if (!fullBlock) bw.writeBits((n - 1).toLong, 16)
-      bw.writeBits(16000L, 16)
+      if (!fullBlock) bw.put((n - 1).toLong, 16)
+      bw.put(16000L, 16)
       // subframe selection
       val allEqual = (from until until).forall(j => xs(j) == xs(from))
       val sel = if (allEqual) -1 else Math.floorMod(seed + f, 4L).toInt
       val order = sel match { case 1 => 1; case 2 | 3 => 2; case _ => 0 }
       val usePred = sel > 0 && n > order
-      val headerSnapshot = bw.bytesSoFar
-      bw.writeBits(crc8(headerSnapshot, 0, headerSnapshot.length).toLong, 8)
+      val headerSnapshot = bw.toArray // the header's fields sum to whole bytes
+      bw.put(crc8(headerSnapshot, 0, headerSnapshot.length).toLong, 8)
       if (allEqual) {
-        bw.writeBits(0, 1); bw.writeBits(0, 6); bw.writeBits(0, 1) // CONSTANT
-        bw.writeBits((xs(from) & 0xffff).toLong, 16)
+        bw.put(0, 1); bw.put(0, 6); bw.put(0, 1) // CONSTANT
+        bw.put((xs(from) & 0xffff).toLong, 16)
       } else if (!usePred) {
-        bw.writeBits(0, 1); bw.writeBits(1, 6); bw.writeBits(0, 1) // VERBATIM
+        bw.put(0, 1); bw.put(1, 6); bw.put(0, 1) // VERBATIM
         var j = from
-        while (j < until) { bw.writeBits((xs(j) & 0xffff).toLong, 16); j += 1 }
+        while (j < until) { bw.put((xs(j) & 0xffff).toLong, 16); j += 1 }
       } else if (sel == 3) {
         // LPC order 2: pred = (3*x[i-1] - x[i-2]) >> 1 — precision 4,
         // shift 1, coefficients [3, -1]
-        bw.writeBits(0, 1); bw.writeBits((0x20 | (order - 1)).toLong, 6); bw.writeBits(0, 1)
+        bw.put(0, 1); bw.put((0x20 | (order - 1)).toLong, 6); bw.put(0, 1)
         var j = from
-        while (j < from + order) { bw.writeBits((xs(j) & 0xffff).toLong, 16); j += 1 }
-        bw.writeBits(3, 4) // precision - 1
-        bw.writeBits(1, 5) // shift (signed, non-negative here)
-        bw.writeBits(3L & 0xf, 4) // coef[0] = 3
-        bw.writeBits(-1L & 0xf, 4) // coef[1] = -1 (two's complement)
+        while (j < from + order) { bw.put((xs(j) & 0xffff).toLong, 16); j += 1 }
+        bw.put(3, 4) // precision - 1
+        bw.put(1, 5) // shift (signed, non-negative here)
+        bw.put(3L & 0xf, 4) // coef[0] = 3
+        bw.put(-1L & 0xf, 4) // coef[1] = -1 (two's complement)
         val res = new Array[Int](n - order)
         var i = from + order
         while (i < until) {
@@ -315,15 +269,14 @@ object Flac {
         }
         writeResiduals(bw, res)
       } else {
-        bw.writeBits(0, 1); bw.writeBits((0x8 | order).toLong, 6); bw.writeBits(0, 1) // FIXED
+        bw.put(0, 1); bw.put((0x8 | order).toLong, 6); bw.put(0, 1) // FIXED
         var j = from
-        while (j < from + order) { bw.writeBits((xs(j) & 0xffff).toLong, 16); j += 1 }
+        while (j < from + order) { bw.put((xs(j) & 0xffff).toLong, 16); j += 1 }
         writeResiduals(bw, fixedResiduals(xs, from, until, order))
       }
-      bw.alignByte()
-      val frameSnapshot = bw.bytesSoFar
-      bw.writeBits(crc16(frameSnapshot, 0, frameSnapshot.length).toLong, 16)
-      out.write(bw.toByteArray)
+      val frameSnapshot = bw.toArray
+      bw.put(crc16(frameSnapshot, 0, frameSnapshot.length).toLong, 16)
+      out.write(bw.toArray)
       f += 1
     }
     out.toByteArray
@@ -356,19 +309,19 @@ object Flac {
 
   // --------------------------------------------------------------- reader
 
-  private def readResiduals(br: BitReader, n: Int, order: Int): Array[Int] = {
-    val method = br.readBits(2).toInt
+  private def readResiduals(br: Bits.MsbReader, n: Int, order: Int): Array[Int] = {
+    val method = br.read(2)
     if (method != 0) fail() // rice2 not in the writer's profile
-    val partOrder = br.readBits(4).toInt
+    val partOrder = br.read(4)
     if (partOrder != 0) fail()
     val out = new Array[Int](n - order)
-    val p = br.readBits(4).toInt
+    val p = br.read(4)
     if (p == 0xf) {
-      val width = br.readBits(5).toInt
+      val width = br.read(5)
       if (width == 0 || width > 31) fail()
       var i = 0
       while (i < out.length) {
-        var v = br.readBits(width)
+        var v = br.read(width).toLong
         if ((v & (1L << (width - 1))) != 0) v -= (1L << width) // sign extend
         out(i) = v.toInt
         i += 1
@@ -376,8 +329,9 @@ object Flac {
     } else {
       var i = 0
       while (i < out.length) {
-        val q = br.readUnary(1 << 22)
-        val u = (q.toLong << p) | br.readBits(p)
+        var q = 0
+        while (br.read(1) == 0) { q += 1; if (q > (1 << 22)) fail() }
+        val u = (q.toLong << p) | br.read(p)
         out(i) = (if ((u & 1) == 0) u >>> 1 else -((u + 1) >>> 1)).toInt
         i += 1
       }
@@ -408,12 +362,12 @@ object Flac {
       if (p + 4 + len > n) fail()
       if (first) {
         if (typ != 0 || len != 34) fail() // STREAMINFO must come first
-        val br = new BitReader(bytes, p + 4, p + 4 + 18)
-        br.readBits(16); br.readBits(16); br.readBits(24); br.readBits(24)
-        rate = br.readBits(20).toInt
-        if (br.readBits(3) != 0) fail() // mono only
-        if (br.readBits(5) != 15) fail() // 16-bit only
-        totalSamples = br.readBits(36)
+        val br = reader(bytes, p + 4, p + 4 + 18)
+        br.read(16); br.read(16); br.read(24); br.read(24)
+        rate = br.read(20)
+        if (br.read(3) != 0) fail() // mono only
+        if (br.read(5) != 15) fail() // 16-bit only
+        totalSamples = (br.read(4).toLong << 32) | (br.read(32) & 0xffffffffL)
         if (totalSamples > (1L << 26)) fail() // bomb guard before any sizing
         md5 = java.util.Arrays.copyOfRange(bytes, p + 4 + 18, p + 4 + 34)
         first = false
@@ -428,55 +382,53 @@ object Flac {
     var frameIdx = 0L
     while (p < n) {
       val frameStart = p
-      val br = new BitReader(bytes, p, n)
-      if (br.readBits(14) != 0x3ffe) fail()
-      if (br.readBits(1) != 0) fail()
-      if (br.readBits(1) != 0) fail() // fixed blocking strategy only
-      val bsCode = br.readBits(4).toInt
-      val srCode = br.readBits(4).toInt
-      if (br.readBits(4) != 0) fail() // mono
-      if (br.readBits(3) != 4) fail() // 16-bit
-      if (br.readBits(1) != 0) fail()
+      val br = reader(bytes, p, n)
+      if (br.read(14) != 0x3ffe) fail()
+      if (br.read(1) != 0) fail()
+      if (br.read(1) != 0) fail() // fixed blocking strategy only
+      val bsCode = br.read(4)
+      val srCode = br.read(4)
+      if (br.read(4) != 0) fail() // mono
+      if (br.read(3) != 4) fail() // 16-bit
+      if (br.read(1) != 0) fail()
       val num = readCodedNumber(br)
       if (num != frameIdx) fail()
       val blockSize = bsCode match {
         case 1 => 192
         case c if c >= 2 && c <= 5 => 576 << (c - 2)
-        case 6 => br.readBits(8).toInt + 1
-        case 7 => br.readBits(16).toInt + 1
+        case 6 => br.read(8) + 1
+        case 7 => br.read(16) + 1
         case c if c >= 8 && c <= 15 => 256 << (c - 8)
         case _ => fail()
       }
       val frameRate = srCode match {
-        case 0xc => br.readBits(8).toInt * 1000
-        case 0xd => br.readBits(16).toInt
-        case 0xe => br.readBits(16).toInt * 10
+        case 0xc => br.read(8) * 1000
+        case 0xd => br.read(16)
+        case 0xe => br.read(16) * 10
         case 0 => rate
         case _ => fail() // fixed-table codes not in this profile
       }
       if (frameRate != rate) fail()
       if (blockSize <= 0 || decoded + blockSize > totalSamples) fail()
       // header CRC-8: everything from frameStart up to here (byte-aligned)
-      if (!br.aligned) fail()
       val headerEnd = br.bytePos
-      if (br.readBits(8).toInt != crc8(bytes, frameStart, headerEnd)) fail()
+      if (br.read(8) != crc8(bytes, frameStart, headerEnd)) fail()
       // subframe
-      if (br.readBits(1) != 0) fail()
-      val sfType = br.readBits(6).toInt
-      if (br.readBits(1) != 0) fail() // wasted bits not in profile
+      if (br.read(1) != 0) fail()
+      val sfType = br.read(6)
+      if (br.read(1) != 0) fail() // wasted bits not in profile
       val xs = new Array[Int](blockSize)
-      def s16(v: Long): Int = { val u = (v & 0xffff).toInt; if (u > 32767) u - 65536 else u }
       if (sfType == 0) { // CONSTANT
-        val v = s16(br.readBits(16))
+        val v: Int = br.read(16).toShort
         java.util.Arrays.fill(xs, v)
       } else if (sfType == 1) { // VERBATIM
         var i = 0
-        while (i < blockSize) { xs(i) = s16(br.readBits(16)); i += 1 }
+        while (i < blockSize) { xs(i) = br.read(16).toShort; i += 1 }
       } else if ((sfType & 0x38) == 0x08 && (sfType & 0x07) <= 4) { // FIXED
         val order = sfType & 0x07
         if (order > blockSize) fail()
         var i = 0
-        while (i < order) { xs(i) = s16(br.readBits(16)); i += 1 }
+        while (i < order) { xs(i) = br.read(16).toShort; i += 1 }
         val res = readResiduals(br, blockSize, order)
         val cf = FixedCoef(order)
         i = order
@@ -493,15 +445,15 @@ object Flac {
         val order = (sfType & 0x1f) + 1
         if (order > blockSize) fail()
         var i = 0
-        while (i < order) { xs(i) = s16(br.readBits(16)); i += 1 }
-        val precision = br.readBits(4).toInt + 1
+        while (i < order) { xs(i) = br.read(16).toShort; i += 1 }
+        val precision = br.read(4) + 1
         if (precision == 16) fail() // 0b1111 is the spec's invalid marker
-        var shift = br.readBits(5).toInt
+        var shift = br.read(5)
         if (shift >= 16) fail() // sign bit set: negative shifts are invalid
         val coefs = new Array[Long](order)
         var k = 0
         while (k < order) {
-          var c = br.readBits(precision)
+          var c = br.read(precision).toLong
           if ((c & (1L << (precision - 1))) != 0) c -= (1L << precision) // sign extend
           coefs(k) = c
           k += 1
@@ -520,7 +472,7 @@ object Flac {
       } else fail() // reserved subframe types
       br.alignByte()
       val bodyEnd = br.bytePos
-      if (br.readBits(16).toInt != crc16(bytes, frameStart, bodyEnd)) fail()
+      if (br.read(16) != crc16(bytes, frameStart, bodyEnd)) fail()
       p = br.bytePos
       // stats + md5 over the decoded frame
       var sumSq = 0L

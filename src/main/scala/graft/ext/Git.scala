@@ -178,15 +178,8 @@ object Git {
     sb.toString.getBytes("UTF-8")
   }
 
-  private def zlibDeflate(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-    out.write(0x78); out.write(0x9c) // CMF/FLG: deflate, 32K window, check ok
-    out.write(Multimodal.deflateDynamic(data))
-    val a = Bits.adler32(data, 0, data.length)
-    out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
-    out.write((a >>> 8) & 0xff); out.write(a & 0xff)
-    out.toByteArray
-  }
+  private def zlibDeflate(data: Array[Byte]): Array[Byte] =
+    Bits.zlibWrap(0x9c, Multimodal.deflateDynamic(data), data)
 
   /** The delta script rebuilding blob 1 from blob 0: one copy op (offset
     * 0, the prefix) + one literal insert (the tail).

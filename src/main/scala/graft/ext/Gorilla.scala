@@ -37,38 +37,6 @@ object Gorilla {
 
   private val ChecksumMod = 1000000007L
 
-  private final class BitBuf {
-    private var buf = new Array[Byte](64)
-    var bits = 0
-    private def ensure(n: Int): Unit =
-      if ((bits + n + 7) / 8 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2 + (n + 7) / 8)
-    def put(v: Long, n: Int): Unit = {
-      ensure(n)
-      var k = 0
-      while (k < n) {
-        if (((v >>> k) & 1L) != 0L) buf(bits / 8) = (buf(bits / 8) | (1 << (bits % 8))).toByte
-        bits += 1
-        k += 1
-      }
-    }
-    def bytes: Array[Byte] = java.util.Arrays.copyOf(buf, (bits + 7) / 8)
-  }
-
-  private final class BitCursor(val b: Array[Byte]) {
-    var pos = 0
-    def take(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) {
-        if (pos / 8 >= b.length) throw new IllegalArgumentException("truncated gorilla stream")
-        if (((b(pos / 8) >> (pos % 8)) & 1) != 0) v |= 1L << k
-        pos += 1
-        k += 1
-      }
-      v
-    }
-  }
-
   private[ext] def bitsFor(dod: Long): Int =
     if (dod == 0L) 1
     else if (dod >= -63 && dod <= 64) 9
@@ -77,7 +45,7 @@ object Gorilla {
     else 68
 
   private[ext] def encode(ts: Array[Long]): Array[Byte] = {
-    val out = new BitBuf
+    val out = new Bits.LsbWriter
     out.put(ts(0), 64)
     var prevDelta = 0L
     var i = 1
@@ -92,23 +60,26 @@ object Gorilla {
       prevDelta = delta
       i += 1
     }
-    out.bytes
+    out.toArray
   }
 
   private[ext] def decode(bytes: Array[Byte], n: Int): Array[Long] = {
     require(n >= 1)
-    val in = new BitCursor(bytes)
+    val in = new Bits.LsbReader(bytes, 0, bytes.length) {
+      def fail(): Nothing = throw new IllegalArgumentException("truncated gorilla stream")
+    }
+    def take64(): Long = (in.read(32) & 0xffffffffL) | (in.read(32).toLong << 32)
     val out = new Array[Long](n)
-    out(0) = in.take(64)
+    out(0) = take64()
     var prevDelta = 0L
     var i = 1
     while (i < n) {
       val dod =
-        if (in.take(1) == 0L) 0L
-        else if (in.take(1) == 0L) in.take(7) - 63
-        else if (in.take(1) == 0L) in.take(9) - 255
-        else if (in.take(1) == 0L) in.take(12) - 2047
-        else in.take(64)
+        if (in.read(1) == 0) 0L
+        else if (in.read(1) == 0) in.read(7) - 63L
+        else if (in.read(1) == 0) in.read(9) - 255L
+        else if (in.read(1) == 0) in.read(12) - 2047L
+        else take64()
       prevDelta += dod
       out(i) = out(i - 1) + prevDelta
       i += 1

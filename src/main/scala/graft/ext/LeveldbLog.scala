@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    fragments, and a block tail of fewer than 7 bytes (the header
   *    size) is ZERO padding — non-zero trailer bytes are damage;
   *  - fragment header: 4-byte MASKED crc32c (little-endian; the JDK's
-  *    CRC-32C through [[Bits.crc32c]] under the TFRecord/SST masking
+  *    `CRC32C` under the TFRecord/SST masking
   *    scheme, VERIFIED per fragment — the crc
   *    covers the type byte then the payload, exactly as
   *    `log_writer.cc` computes it), 2-byte little-endian length,
@@ -74,10 +74,10 @@ object LeveldbLog {
 
   private def maskedCrc(payload: Array[Byte], from: Int, until: Int, typ: Byte): Long = {
     // crc over type byte then payload, as log_writer.cc computes it
-    val buf = new Array[Byte](until - from + 1)
-    buf(0) = typ
-    System.arraycopy(payload, from, buf, 1, until - from)
-    TfRecord.mask(Bits.crc32c(buf, 0, buf.length)) & 0xffffffffL
+    val c = new java.util.zip.CRC32C
+    c.update(typ)
+    c.update(payload, from, until - from)
+    TfRecord.mask(c.getValue.toInt) & 0xffffffffL
   }
 
   private[ext] def renderLog(id: Long): Array[Byte] = {
@@ -166,10 +166,7 @@ object LeveldbLog {
         } else {
           if (p + HeaderSize + len > blockEnd) fail() // no crossing the seam
           val ds = p + HeaderSize
-          val buf = new Array[Byte](len + 1)
-          buf(0) = typ.toByte
-          System.arraycopy(b, ds, buf, 1, len)
-          if ((TfRecord.mask(Bits.crc32c(buf, 0, buf.length)) & 0xffffffffL) != crc) fail()
+          if (maskedCrc(b, ds, ds + len, typ.toByte) != crc) fail()
           typ match {
             case 1 => // FULL
               if (current != null) fail()

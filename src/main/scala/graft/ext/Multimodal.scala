@@ -606,36 +606,6 @@ object Multimodal {
     */
   private final class MalformedPng extends Exception(null, null, false, false)
 
-  /** LSB-first bit reader over a byte window — DEFLATE's bit order: bits
-    * fill each byte from the least-significant end; Huffman codes are then
-    * read MSB-of-code-first by pulling one bit at a time.
-    */
-  private final class BitReader(bytes: Array[Byte], var pos: Int, val until: Int) {
-    private var buf = 0L
-    private var cnt = 0
-    def bits(n: Int): Int = {
-      while (cnt < n) {
-        if (pos >= until) throw new MalformedPng
-        buf |= (bytes(pos) & 0xffL) << cnt; pos += 1; cnt += 8
-      }
-      val v = (buf & ((1L << n) - 1)).toInt
-      buf >>>= n; cnt -= n; v
-    }
-    def alignToByte(): Unit = { val drop = cnt % 8; buf >>>= drop; cnt -= drop }
-    def takeAligned(n: Int): Int = { // consume n whole buffered-or-raw bytes, return start
-      if (cnt % 8 != 0) throw new MalformedPng
-      while (cnt > 0) { pos -= 1; cnt -= 8 } // un-buffer whole bytes
-      buf = 0
-      if (pos + n > until) throw new MalformedPng
-      val start = pos; pos += n; start
-    }
-    /** Input position just past the last consumed bit, rounded up to the
-      * next byte boundary — where a byte-aligned trailer (gzip CRC/ISIZE)
-      * begins after the final DEFLATE block.
-      */
-    def streamEnd: Int = { alignToByte(); pos - cnt / 8 }
-  }
-
   /** Canonical Huffman decoder built from per-symbol code lengths
     * (RFC 1951 §3.2.2): count codes per length, then walk the bit stream
     * one bit at a time narrowing the canonical range — the classic
@@ -668,11 +638,11 @@ object Multimodal {
         s += 1
       }
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: Bits.LsbReader): Int = {
       var code = 0; var first = 0; var index = 0
       var len = 1
       while (len <= 15) {
-        code |= br.bits(1)
+        code |= br.read(1)
         val c = count(len)
         if (code - first < c) return symbols(index + (code - first))
         index += c
@@ -738,30 +708,32 @@ object Multimodal {
       }
       out(outLen) = b; outLen += 1
     }
-    val br = new BitReader(bytes, from, until)
+    val br = new Bits.LsbReader(bytes, from, until) { def fail(): Nothing = throw new MalformedPng }
     var fin = false
     while (!fin) {
-      fin = br.bits(1) == 1
-      br.bits(2) match {
+      fin = br.read(1) == 1
+      br.read(2) match {
         case 0 => // stored
-          br.alignToByte()
-          val lenPos = br.takeAligned(4)
+          br.alignByte()
+          val lenPos = br.bytePos
+          br.skip(32)
           val len = (bytes(lenPos) & 0xff) | ((bytes(lenPos + 1) & 0xff) << 8)
           val nlen = (bytes(lenPos + 2) & 0xff) | ((bytes(lenPos + 3) & 0xff) << 8)
           if ((len ^ 0xffff) != nlen) throw new MalformedPng
-          val dataPos = br.takeAligned(len)
+          val dataPos = br.bytePos
+          br.skip(8 * len)
           var i = 0
           while (i < len) { put(bytes(dataPos + i)); i += 1 }
         case bt if bt == 1 || bt == 2 =>
           val (lit, dist) =
             if (bt == 1) (FixedLitHuffman, FixedDistHuffman)
             else {
-              val hlit = br.bits(5) + 257
-              val hdist = br.bits(5) + 1
-              val hclen = br.bits(4) + 4
+              val hlit = br.read(5) + 257
+              val hdist = br.read(5) + 1
+              val hclen = br.read(4) + 4
               val clLens = new Array[Int](19)
               var i = 0
-              while (i < hclen) { clLens(ClOrder(i)) = br.bits(3); i += 1 }
+              while (i < hclen) { clLens(ClOrder(i)) = br.read(3); i += 1 }
               val clHuff = new Huffman(clLens)
               val lens = new Array[Int](hlit + hdist)
               var n = 0
@@ -769,15 +741,15 @@ object Multimodal {
                 clHuff.decode(br) match {
                   case 16 =>
                     if (n == 0) throw new MalformedPng
-                    val rep = 3 + br.bits(2)
+                    val rep = 3 + br.read(2)
                     val prev = lens(n - 1)
                     var r = 0
                     while (r < rep) {
                       if (n >= lens.length) throw new MalformedPng
                       lens(n) = prev; n += 1; r += 1
                     }
-                  case 17 => n += 3 + br.bits(3)
-                  case 18 => n += 11 + br.bits(7)
+                  case 17 => n += 3 + br.read(3)
+                  case 18 => n += 11 + br.read(7)
                   case s => lens(n) = s; n += 1
                 }
               }
@@ -792,10 +764,10 @@ object Multimodal {
             else {
               if (sym > 285) throw new MalformedPng
               val li = sym - 257
-              val len = LenBase(li) + br.bits(LenExtra(li))
+              val len = LenBase(li) + br.read(LenExtra(li))
               val ds = dist.decode(br)
               if (ds > 29) throw new MalformedPng
-              val d = DistBase(ds) + br.bits(DistExtra(ds))
+              val d = DistBase(ds) + br.read(DistExtra(ds))
               if (d > outLen) throw new MalformedPng // reference before stream start
               var i = 0
               while (i < len) { put(out(outLen - d)); i += 1 } // overlap-safe: byte-at-a-time
@@ -804,7 +776,8 @@ object Multimodal {
         case _ => throw new MalformedPng
       }
     }
-    (java.util.Arrays.copyOf(out, outLen), br.streamEnd)
+    br.alignByte() // a trailer after the final block starts on a byte boundary
+    (java.util.Arrays.copyOf(out, outLen), br.bytePos)
   }
 
   /** zlib wrapper (RFC 1950) around [[inflate]]: validate CMF/FLG (deflate
@@ -829,7 +802,7 @@ object Multimodal {
     data
   }
 
-  /** ======== REAL compressor: DEFLATE (RFC 1951), from scratch ========
+  /* ======== REAL compressor: DEFLATE (RFC 1951), from scratch ========
     * The inverse of [[inflate]] — an actual LZ77 compressor, not the
     * stored-block framing the image writers use for SQL-replayability.
     * The matcher ([[lz77Tokens]]) is shared by both emitters: hash-chain
@@ -839,31 +812,14 @@ object Multimodal {
     * Huffman code (BTYPE=01); [[deflateDynamic]] builds per-input
     * Huffman trees (BTYPE=10) — depth-limited tree construction,
     * canonical code assignment, and the RLE 16/17/18 code-length-code
-    * header, the full §3.2.7 machinery. Huffman bits go MSB-first and
-    * extra bits LSB-first, one final block, byte-aligned flush. Output
+    * header, the full §3.2.7 machinery. Both write through
+    * [[Bits.LsbWriter]]: extra bits LSB-first, Huffman codes MSB-first
+    * (`putCode`), one final block, byte-aligned flush. Output
     * decodes through [[inflate]] AND through
     * `java.util.zip.Inflater(nowrap)` — the cross-decoder differential
     * in ArchivesSpec is what makes the streams real rather than
     * self-consistent.
     */
-  private final class BitWriter(sizeHint: Int) {
-    val out = new java.io.ByteArrayOutputStream(sizeHint)
-    private var acc = 0L
-    private var nb = 0
-    def wbits(v: Int, n: Int): Unit = { // LSB-first packing (RFC 1951 §3.1.1)
-      acc |= (v.toLong & ((1L << n) - 1)) << nb
-      nb += n
-      while (nb >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; nb -= 8 }
-    }
-    def whuff(code: Int, len: Int): Unit = { // Huffman codes go MSB-first
-      var i = len - 1
-      while (i >= 0) { wbits((code >> i) & 1, 1); i -= 1 }
-    }
-    def finish(): Array[Byte] = {
-      if (nb > 0) { out.write((acc & 0xff).toInt); acc = 0; nb = 0 } // byte-align flush
-      out.toByteArray
-    }
-  }
 
   /** LZ77 token stream: literals as 0..255, matches packed as
     * `0x40000000 | (len << 16) | dist` (len 3..258 in bits 16..24, dist
@@ -926,27 +882,27 @@ object Multimodal {
   }
 
   private[ext] def deflateFixed(data: Array[Byte]): Array[Byte] = {
-    val bw = new BitWriter(data.length / 2 + 64)
+    val bw = new Bits.LsbWriter(data.length / 2 + 64)
     def litCode(sym: Int): Unit =
-      if (sym < 144) bw.whuff(0x30 + sym, 8)
-      else if (sym < 256) bw.whuff(0x190 + (sym - 144), 9)
-      else if (sym < 280) bw.whuff(sym - 256, 7)
-      else bw.whuff(0xc0 + (sym - 280), 8)
-    bw.wbits(1, 1) // BFINAL
-    bw.wbits(1, 2) // BTYPE = fixed Huffman
+      if (sym < 144) bw.putCode(0x30 + sym, 8)
+      else if (sym < 256) bw.putCode(0x190 + (sym - 144), 9)
+      else if (sym < 280) bw.putCode(sym - 256, 7)
+      else bw.putCode(0xc0 + (sym - 280), 8)
+    bw.put(1, 1) // BFINAL
+    bw.put(1, 2) // BTYPE = fixed Huffman
     lz77Tokens(data).foreach { t =>
       if (t < 0x40000000) litCode(t)
       else {
         val len = (t >> 16) & 0x1ff
         val d = t & 0xffff
         val ls = lengthSymbol(len)
-        litCode(257 + ls); bw.wbits(len - LenBase(ls), LenExtra(ls))
+        litCode(257 + ls); bw.put(len - LenBase(ls), LenExtra(ls))
         val ds = distanceSymbol(d)
-        bw.whuff(ds, 5); bw.wbits(d - DistBase(ds), DistExtra(ds))
+        bw.putCode(ds, 5); bw.put(d - DistBase(ds), DistExtra(ds))
       }
     }
     litCode(256) // end of block
-    bw.finish()
+    bw.toArray
   }
 
   /** Depth-limited Huffman code lengths for a frequency table: a real
@@ -1095,33 +1051,33 @@ object Multimodal {
     var hclen = 19
     while (hclen > 4 && clLens(ClOrder(hclen - 1)) == 0) hclen -= 1
     // ---- emit
-    val bw = new BitWriter(data.length / 2 + 64)
-    bw.wbits(1, 1) // BFINAL
-    bw.wbits(2, 2) // BTYPE = dynamic
-    bw.wbits(hlit - 257, 5)
-    bw.wbits(hdist - 1, 5)
-    bw.wbits(hclen - 4, 4)
+    val bw = new Bits.LsbWriter(data.length / 2 + 64)
+    bw.put(1, 1) // BFINAL
+    bw.put(2, 2) // BTYPE = dynamic
+    bw.put(hlit - 257, 5)
+    bw.put(hdist - 1, 5)
+    bw.put(hclen - 4, 4)
     i = 0
-    while (i < hclen) { bw.wbits(clLens(ClOrder(i)), 3); i += 1 }
+    while (i < hclen) { bw.put(clLens(ClOrder(i)), 3); i += 1 }
     clSyms.foreach { case (s, extra) =>
-      bw.whuff(clCodes(s), clLens(s))
-      if (s == 16) bw.wbits(extra, 2)
-      else if (s == 17) bw.wbits(extra, 3)
-      else if (s == 18) bw.wbits(extra, 7)
+      bw.putCode(clCodes(s), clLens(s))
+      if (s == 16) bw.put(extra, 2)
+      else if (s == 17) bw.put(extra, 3)
+      else if (s == 18) bw.put(extra, 7)
     }
     toks.foreach { t =>
-      if (t < 0x40000000) bw.whuff(litCodes(t), litLens(t))
+      if (t < 0x40000000) bw.putCode(litCodes(t), litLens(t))
       else {
         val len = (t >> 16) & 0x1ff
         val d = t & 0xffff
         val ls = lengthSymbol(len)
-        bw.whuff(litCodes(257 + ls), litLens(257 + ls)); bw.wbits(len - LenBase(ls), LenExtra(ls))
+        bw.putCode(litCodes(257 + ls), litLens(257 + ls)); bw.put(len - LenBase(ls), LenExtra(ls))
         val ds = distanceSymbol(d)
-        bw.whuff(distCodes(ds), distLens(ds)); bw.wbits(d - DistBase(ds), DistExtra(ds))
+        bw.putCode(distCodes(ds), distLens(ds)); bw.put(d - DistBase(ds), DistExtra(ds))
       }
     }
-    bw.whuff(litCodes(256), litLens(256)) // end of block
-    bw.finish()
+    bw.putCode(litCodes(256), litLens(256)) // end of block
+    bw.toArray
   }
 
   private val PngSignature =
@@ -1387,9 +1343,8 @@ object Multimodal {
           }
           y += 1
         }
-        // zlib stream: header, stored-block deflate, Adler-32
+        // zlib stream (FLG 0x01: 0x7801 % 31 == 0) around stored blocks
         val zOut = new java.io.ByteArrayOutputStream()
-        zOut.write(0x78); zOut.write(0x01) // CMF/FLG: deflate, (0x7801 % 31 == 0)
         var off = 0
         do {
           val len = math.min(65535, raw.length - off)
@@ -1400,10 +1355,7 @@ object Multimodal {
           zOut.write(raw, off, len)
           off += len
         } while (off < raw.length)
-        val adler = Bits.adler32(raw, 0, raw.length)
-        zOut.write(adler >>> 24); zOut.write((adler >> 16) & 0xff)
-        zOut.write((adler >> 8) & 0xff); zOut.write(adler & 0xff)
-        val z = zOut.toByteArray
+        val z = Bits.zlibWrap(0x01, zOut.toByteArray, raw)
         // chunks
         val out = new java.io.ByteArrayOutputStream()
         out.write(PngSignature, 0, 8)
@@ -1504,7 +1456,7 @@ object Multimodal {
     var width = minCodeSize + 1
     var next = clear + 2
     var prev = -1
-    var buf = 0L; var cnt = 0; var pos = 0
+    val br = new Bits.LsbReader(data, 0, data.length) { def fail(): Nothing = throw new MalformedPng }
     var done = false
     def firstByte(code: Int): Byte = {
       var c = code
@@ -1520,12 +1472,7 @@ object Multimodal {
       while (sp > 0) { sp -= 1; out(outLen) = stack(sp); outLen += 1 }
     }
     while (!done) {
-      while (cnt < width) {
-        if (pos >= data.length) throw new MalformedPng
-        buf |= (data(pos) & 0xffL) << cnt; pos += 1; cnt += 8
-      }
-      val code = (buf & ((1L << width) - 1)).toInt
-      buf >>>= width; cnt -= width
+      val code = br.read(width)
       if (code == clear) {
         width = minCodeSize + 1; next = clear + 2; prev = -1
       } else if (code == eoi) {
@@ -1695,21 +1642,15 @@ object Multimodal {
         b(0x2c); le16(0); le16(0); le16(w); le16(h); b(0) // image descriptor, no local table
         b(8) // LZW minimum code size
         // 9-bit codes, LSB-first: CLEAR (256) before every literal, then EOI
-        val codes = new java.io.ByteArrayOutputStream()
-        var buf = 0L; var cnt = 0
-        def code(c: Int): Unit = {
-          buf |= (c & 0x1ffL) << cnt; cnt += 9
-          while (cnt >= 8) { codes.write((buf & 0xff).toInt); buf >>>= 8; cnt -= 8 }
-        }
+        val codes = new Bits.LsbWriter
         var k = 0
         while (k < w * h) {
-          code(256)
-          code(if (data.length > 0) data(k % data.length) & 0xff else 0)
+          codes.put(256, 9)
+          codes.put(if (data.length > 0) data(k % data.length) & 0xff else 0, 9)
           k += 1
         }
-        code(257)
-        if (cnt > 0) codes.write((buf & 0xff).toInt)
-        val cb = codes.toByteArray
+        codes.put(257, 9)
+        val cb = codes.toArray
         var off = 0
         while (off < cb.length) { // 255-byte-max sub-blocks
           val len = math.min(255, cb.length - off)

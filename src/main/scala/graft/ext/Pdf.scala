@@ -445,15 +445,8 @@ object Pdf {
     out.toByteArray
   }
 
-  private def zlibCompress(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-    out.write(0x78); out.write(0x9c) // CMF/FLG: deflate, 32K window, check ok
-    out.write(Multimodal.deflateDynamic(data))
-    val a = Bits.adler32(data, 0, data.length)
-    out.write((a >>> 24) & 0xff); out.write((a >>> 16) & 0xff)
-    out.write((a >>> 8) & 0xff); out.write(a & 0xff)
-    out.toByteArray
-  }
+  private def zlibCompress(data: Array[Byte]): Array[Byte] =
+    Bits.zlibWrap(0x9c, Multimodal.deflateDynamic(data), data)
 
   /** One complete PDF for doc `id`: header with a binary comment line,
     * catalog/pages/font objects, per page a page object + content stream
@@ -1510,8 +1503,9 @@ object Pdf {
   /** PDF LZWDecode: MSB-first code packing, Clear=256, EOD=257, first
     * dynamic code 258, widths 9→12. With `/EarlyChange 1` (the default)
     * the width bumps one code early — byte-identical to the TIFF variant
-    * (the [[Tiff.lzwDecode]]/[[Tiff.lzwEncode]] kernel this mirrors, which
-    * is also why the fixture writer encodes through `Tiff.lzwEncode`);
+    * (the [[Tiff.lzwDecode]] loop this repeats over the same
+    * [[Bits.MsbReader]], which is also why the fixture writer encodes
+    * through `Tiff.lzwEncode`);
     * `/EarlyChange 0` bumps at the exact table-full point. Unlike the TIFF
     * side the decoded size is unknown in advance, so output grows up to
     * `maxOut` and the EOD code is REQUIRED — exhaustion without it, an
@@ -1519,18 +1513,8 @@ object Pdf {
     */
   private[ext] def lzwDecode(src: Array[Byte], maxOut: Int, earlyChange: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(math.min(src.length.toLong * 4 + 64, maxOut.toLong).toInt)
-    var bitPos = 0L
-    val totalBits = src.length.toLong * 8
-    def read(width: Int): Int = {
-      if (bitPos + width > totalBits) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        v = (v << 1) | ((src((bitPos >> 3).toInt) >> (7 - (bitPos & 7)).toInt) & 1)
-        bitPos += 1; k += 1
-      }
-      v
-    }
+    val in = new Bits.MsbReader(src, 0, src.length) { def fail(): Nothing = Pdf.fail() }
+    def read(width: Int): Int = if (in.bitsLeft < width) -1 else in.read(width)
     val prefix = new Array[Int](4096)
     val append = new Array[Byte](4096)
     val length = new Array[Int](4096)

@@ -287,17 +287,6 @@ object Sfnt {
     font
   }
 
-  private def zlibDeflate(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length)
-    out.write(0x78); out.write(0x01)
-    val d = Multimodal.deflateFixed(data)
-    out.write(d, 0, d.length)
-    val a = Bits.adler32(data, 0, data.length)
-    out.write((a >>> 24) & 0xff); out.write((a >> 16) & 0xff)
-    out.write((a >> 8) & 0xff); out.write(a & 0xff)
-    out.toByteArray
-  }
-
   /** WOFF 1.0 wrapper around [[renderTtf]]'s tables. */
   private[ext] def renderWoff(id: Long): Array[Byte] = {
     val ttf = renderTtf(id)
@@ -314,7 +303,7 @@ object Sfnt {
       T(tag, u32(p + 4), java.util.Arrays.copyOfRange(ttf, off, off + len))
     }
     val comp = tables.map { t =>
-      val z = zlibDeflate(t.data)
+      val z = Bits.zlibWrap(0x01, Multimodal.deflateFixed(t.data), t.data)
       if (z.length < t.data.length) z else t.data // store when zlib does not win
     }
     val out = new java.io.ByteArrayOutputStream()

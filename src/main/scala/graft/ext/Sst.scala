@@ -104,13 +104,17 @@ object Sst {
     w.out.toByteArray
   }
 
-  /** Masked crc32c over block-data+type. TFRecord and LevelDB share the
-    * identical masking scheme (rotr15 + 0xa282ead8), so this applies
-    * [[graft.ext.TfRecord]]'s mask to [[Bits.crc32c]] instead of
-    * duplicating the formula.
+  /** Masked crc32c over `data(from until until)` then the type byte.
+    * TFRecord and LevelDB share the identical masking scheme (rotr15 +
+    * 0xa282ead8), so this applies [[graft.ext.TfRecord]]'s mask instead
+    * of duplicating the formula.
     */
-  private def maskedCrc(data: Array[Byte], typ: Byte): Long =
-    TfRecord.mask(Bits.crc32c(data :+ typ, 0, data.length + 1)) & 0xffffffffL
+  private def maskedCrc(data: Array[Byte], from: Int, until: Int, typ: Byte): Long = {
+    val c = new java.util.zip.CRC32C
+    c.update(data, from, until - from)
+    c.update(typ)
+    TfRecord.mask(c.getValue.toInt) & 0xffffffffL
+  }
 
   /** Emit a block (with optional snappy) + trailer; returns its handle. */
   private def writeBlock(out: W, body: Array[Byte], snappy: Boolean): (Long, Long) = {
@@ -120,7 +124,7 @@ object Sst {
     val off = out.out.size().toLong
     out.raw(data)
     out.out.write(typ.toInt)
-    out.fixed32(maskedCrc(data, typ))
+    out.fixed32(maskedCrc(data, 0, data.length, typ))
     (off, data.length.toLong)
   }
 
@@ -214,8 +218,8 @@ object Sst {
     val n = size.toInt
     val typ = b(o + n)
     val stored = fixed32At(b, o + n + 1)
+    if (maskedCrc(b, o, o + n, typ) != stored) fail()
     val data = java.util.Arrays.copyOfRange(b, o, o + n)
-    if (maskedCrc(data, typ) != stored) fail()
     typ match {
       case 0 => data
       case 1 => Snappy.decompress(data, MaxLen)

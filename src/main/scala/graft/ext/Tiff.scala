@@ -105,19 +105,9 @@ object Tiff {
   private[ext] def lzwDecode(src: Array[Byte], expected: Int): Option[Array[Byte]] = {
     val out = new Array[Byte](expected)
     var o = 0
-    var bitPos = 0L
-    val totalBits = src.length.toLong * 8
-    def read(width: Int): Int = {
-      if (bitPos + width > totalBits) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        val b = (src((bitPos >> 3).toInt) >> (7 - (bitPos & 7)).toInt) & 1
-        v = (v << 1) | b
-        bitPos += 1; k += 1
-      }
-      v
-    }
+    // fewer than `width` bits left reads as -1, so `fail()` is never reached
+    val in = new Bits.MsbReader(src, 0, src.length) { def fail(): Nothing = throw new IllegalStateException }
+    def read(width: Int): Int = if (in.bitsLeft < width) -1 else in.read(width)
     val prefix = new Array[Int](4096)
     val append = new Array[Byte](4096)
     val length = new Array[Int](4096)
@@ -175,20 +165,12 @@ object Tiff {
     * convention; validated by self round trip AND ImageIO decode).
     */
   private[ext] def lzwEncode(src: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(src.length / 2 + 16)
-    var acc = 0L
-    var nb = 0
-    def put(code: Int, width: Int): Unit = {
-      acc = (acc << width) | code
-      nb += width
-      while (nb >= 8) { out.write(((acc >> (nb - 8)) & 0xff).toInt); nb -= 8 }
-    }
-    def flush(): Unit = if (nb > 0) { out.write(((acc << (8 - nb)) & 0xff).toInt); nb = 0 }
+    val out = new Bits.MsbWriter(src.length / 2 + 16)
     val dict = new java.util.HashMap[Long, Integer](8192)
     var width = 9
     var next = 258
     def reset(): Unit = { dict.clear(); width = 9; next = 258 }
-    put(256, width) // Clear first, per spec
+    out.put(256, width) // Clear first, per spec
     var prev = -1
     var i = 0
     while (i < src.length) {
@@ -199,7 +181,7 @@ object Tiff {
         val hit = dict.get(key)
         if (hit != null) prev = hit.intValue()
         else {
-          put(prev, width)
+          out.put(prev, width)
           if (next < 4094) {
             dict.put(key, Integer.valueOf(next))
             next += 1
@@ -208,7 +190,7 @@ object Tiff {
             // decoder's (1<<width)-1 early-change point
             if (next == (1 << width) && width < 12) width += 1
           } else {
-            put(256, width)
+            out.put(256, width)
             reset()
           }
           prev = b
@@ -216,10 +198,9 @@ object Tiff {
       }
       i += 1
     }
-    if (prev >= 0) put(prev, width)
-    put(257, width) // EOI
-    flush()
-    out.toByteArray
+    if (prev >= 0) out.put(prev, width)
+    out.put(257, width) // EOI
+    out.toArray
   }
 
   // ------------------------------------------------------------ writer

@@ -78,10 +78,10 @@ object UnixCompress {
     */
   def compress(data: Array[Byte], maxbits: Int = 16, blockMode: Boolean = true): Array[Byte] = {
     require(maxbits >= InitBits && maxbits <= 16, s"maxbits $maxbits outside 9..16")
-    val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-    out.write(MagicHi); out.write(MagicLo)
-    out.write(maxbits | (if (blockMode) 0x80 else 0))
-    if (data.length == 0) return out.toByteArray
+    val out = new Bits.LsbWriter(data.length / 2 + 16)
+    out.put(MagicHi, 8); out.put(MagicLo, 8)
+    out.put(maxbits | (if (blockMode) 0x80 else 0), 8)
+    if (data.length == 0) return out.toArray
 
     val maxmaxcode = 1 << maxbits
     val first = if (blockMode) Clear + 1 else 256
@@ -96,24 +96,14 @@ object UnixCompress {
     var maxcode = (1 << nBits) - 1
     var freeEnt = first
 
-    // LSB-first bit writer tracking the absolute bit position (header
-    // excluded) so realign() mirrors the decoder's arithmetic exactly
-    var acc = 0L
-    var accBits = 0
-    var posBits = 0L
-    var epochStart = 0L // bit position of the last width event
-    def putBits(v: Int, n: Int): Unit = {
-      acc |= (v.toLong & ((1L << n) - 1)) << accBits
-      accBits += n
-      posBits += n
-      while (accBits >= 8) {
-        out.write((acc & 0xff).toInt)
-        acc >>>= 8
-        accBits -= 8
-      }
+    // realign() sees the same bit positions as the decoder's, header
+    // included: only the distance from the epoch start matters
+    var epochStart = out.bitLength // bit position of the last width event
+    def realignWriter(): Unit = {
+      val target = realign(out.bitLength, epochStart, nBits)
+      while (out.bitLength < target) out.put(0, 1)
+      epochStart = out.bitLength
     }
-    def padTo(target: Long): Unit =
-      while (posBits < target) putBits(0, 1)
 
     var ent = data(0) & 0xff
     var i = 1
@@ -130,14 +120,13 @@ object UnixCompress {
       }
       if (code >= 0) ent = code
       else {
-        putBits(ent, nBits)
+        out.put(ent, nBits)
         // width change uses the PRE-add count — the reference encoder's
         // check runs inside output(), before this step's free_ent++ —
         // which is what lands it between the same two codes as the
         // decoder's pre-read check (whose table is one entry behind)
         if (freeEnt > maxcode && nBits < maxbits) {
-          padTo(realign(posBits, epochStart, nBits))
-          epochStart = posBits
+          realignWriter()
           nBits += 1
           maxcode = if (nBits == maxbits) maxmaxcode else (1 << nBits) - 1
         }
@@ -147,9 +136,8 @@ object UnixCompress {
           freeEnt += 1
         } else if (blockMode) {
           // table full: emit CLEAR and start over (see scaladoc)
-          putBits(Clear, nBits)
-          padTo(realign(posBits, epochStart, nBits))
-          epochStart = posBits
+          out.put(Clear, nBits)
+          realignWriter()
           nBits = InitBits
           maxcode = (1 << nBits) - 1
           freeEnt = first
@@ -159,9 +147,8 @@ object UnixCompress {
       }
       i += 1
     }
-    putBits(ent, nBits)
-    if (accBits > 0) { out.write((acc & 0xff).toInt) } // final partial byte
-    out.toByteArray
+    out.put(ent, nBits)
+    out.toArray // the final partial byte zero-padded
   }
 
   /** Decompress a `.Z` stream, mirroring the reference decoder's
@@ -190,25 +177,19 @@ object UnixCompress {
     val stack = new Array[Byte](maxmaxcode + 1)
     val out = new java.io.ByteArrayOutputStream(java.lang.Math.min(maxOut, data.length * 4 + 64))
 
-    val totalBits = (data.length - 3).toLong << 3
-    var posBits = 0L
-    var epochStart = 0L // bit position of the last width event
-    def readCode(n: Int): Int = {
-      val byteOff = 3 + (posBits >>> 3).toInt
-      val bitOff = (posBits & 7).toInt
-      var v = 0L
-      var got = 0
-      var b = byteOff
-      while (got < bitOff + n) { v |= (data(b) & 0xffL) << got; got += 8; b += 1 }
-      posBits += n
-      ((v >>> bitOff) & ((1L << n) - 1)).toInt
-    }
+    val in = new Bits.LsbReader(data, 3, data.length) { def fail(): Nothing = UnixCompress.fail() }
+    var epochStart = in.bitPos // bit position of the last width event
 
     var nBits = InitBits
     var maxcode = (1 << nBits) - 1
     var freeEnt = first
     var oldCode = -1
     var finChar = 0
+    // a group boundary past the end leaves nothing to read: stop there
+    def realignReader(): Unit = {
+      in.skip(math.min(realign(in.bitPos, epochStart, nBits) - in.bitPos, in.bitsLeft).toInt)
+      epochStart = in.bitPos
+    }
 
     var done = false
     while (!done) {
@@ -216,14 +197,13 @@ object UnixCompress {
       // guard it): at maxbits = 9 the table fills with the width pinned,
       // and neither side may realign
       if (freeEnt > maxcode && nBits < maxbits) {
-        posBits = realign(posBits, epochStart, nBits)
-        epochStart = posBits
+        realignReader()
         nBits += 1
         maxcode = if (nBits == maxbits) maxmaxcode else (1 << nBits) - 1
       }
-      if (posBits + nBits > totalBits) done = true
+      if (in.bitsLeft < nBits) done = true
       else {
-        val code = readCode(nBits)
+        val code = in.read(nBits)
         if (oldCode == -1) {
           if (code >= 256) fail() // first code must be a literal
           oldCode = code; finChar = code
@@ -232,8 +212,7 @@ object UnixCompress {
         } else if (blockMode && code == Clear) {
           java.util.Arrays.fill(prefix, 0)
           freeEnt = first - 1 // the burned slot (see scaladoc)
-          posBits = realign(posBits, epochStart, nBits)
-          epochStart = posBits
+          realignReader()
           nBits = InitBits
           maxcode = (1 << nBits) - 1
           // oldCode/finChar stay STALE on purpose: the first post-clear

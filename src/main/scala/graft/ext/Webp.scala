@@ -69,40 +69,6 @@ object Webp {
   private val CodeLengthOrder =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
-  // ------------------------------------------------------------ bit io
-
-  /** LSB-first reader (DEFLATE bit order). */
-  private final class BitReader(bytes: Array[Byte], var pos: Int, val end: Int) {
-    private var cur = 0L
-    private var nbits = 0
-    def readBits(n: Int): Int = {
-      while (nbits < n) {
-        if (pos >= end) fail()
-        cur |= (bytes(pos) & 0xffL) << nbits
-        pos += 1; nbits += 8
-      }
-      val v = (cur & ((1L << n) - 1)).toInt
-      cur >>>= n; nbits -= n
-      v
-    }
-    def readBit(): Int = readBits(1)
-  }
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(256)
-    private var cur = 0L
-    private var nbits = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      cur |= (v & ((1L << n) - 1)) << nbits
-      nbits += n
-      while (nbits >= 8) { out.write((cur & 0xff).toInt); cur >>>= 8; nbits -= 8 }
-    }
-    def toByteArray: Array[Byte] = {
-      if (nbits > 0) { out.write((cur & 0xff).toInt); cur = 0; nbits = 0 }
-      out.toByteArray
-    }
-  }
-
   // ------------------------------------------------------- canonical codes
 
   /** Canonical prefix code over `lengths` (DEFLATE assignment: codes
@@ -142,12 +108,12 @@ object Webp {
       }
       syms
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: Bits.LsbReader): Int = {
       if (singleSymbol >= 0) return singleSymbol
       var code = 0
       var len = 0
       while (len < maxLen) {
-        code = (code << 1) | br.readBit()
+        code = (code << 1) | br.read(1)
         len += 1
         val off = code - firstCode(len)
         if (off >= 0 && off < counts(len)) return symbols(firstIdx(len) + off)
@@ -157,34 +123,34 @@ object Webp {
   }
 
   /** Read one prefix code (simple or full serialization). */
-  private def readHuffmanCode(br: BitReader, alphabetSize: Int): Huffman = {
-    if (br.readBit() == 1) { // simple
-      val numSymbols = br.readBit() + 1
-      val firstWide = br.readBit() == 1
-      val sym0 = br.readBits(if (firstWide) 8 else 1)
+  private def readHuffmanCode(br: Bits.LsbReader, alphabetSize: Int): Huffman = {
+    if (br.read(1) == 1) { // simple
+      val numSymbols = br.read(1) + 1
+      val firstWide = br.read(1) == 1
+      val sym0 = br.read(if (firstWide) 8 else 1)
       if (sym0 >= alphabetSize) fail()
       if (numSymbols == 1) new Huffman(null, singleSymbol = sym0)
       else {
-        val sym1 = br.readBits(8)
+        val sym1 = br.read(8)
         if (sym1 >= alphabetSize || sym1 == sym0) fail()
         val lengths = new Array[Int](alphabetSize)
         lengths(sym0) = 1; lengths(sym1) = 1
         new Huffman(lengths)
       }
     } else { // full: code-length code, then RLE-coded lengths
-      val numCodes = 4 + br.readBits(4)
+      val numCodes = 4 + br.read(4)
       if (numCodes > 19) fail()
       val clLengths = new Array[Int](19)
       var i = 0
-      while (i < numCodes) { clLengths(CodeLengthOrder(i)) = br.readBits(3); i += 1 }
+      while (i < numCodes) { clLengths(CodeLengthOrder(i)) = br.read(3); i += 1 }
       val nonzero = clLengths.count(_ > 0)
       if (nonzero == 0) fail()
       val cl = if (nonzero == 1) new Huffman(null, singleSymbol = clLengths.indexWhere(_ > 0))
         else new Huffman(clLengths)
       var maxSymbol =
-        if (br.readBit() == 1) {
-          val lengthNBits = 2 + 2 * br.readBits(3)
-          2 + br.readBits(lengthNBits)
+        if (br.read(1) == 1) {
+          val lengthNBits = 2 + 2 * br.read(3)
+          2 + br.read(lengthNBits)
         } else alphabetSize
       val lengths = new Array[Int](alphabetSize)
       var prev = 8
@@ -197,9 +163,9 @@ object Webp {
           if (c != 0) prev = c
         } else {
           val (repeat, value) = c match {
-            case 16 => (3 + br.readBits(2), prev)
-            case 17 => (3 + br.readBits(3), 0)
-            case 18 => (11 + br.readBits(7), 0)
+            case 16 => (3 + br.read(2), prev)
+            case 17 => (3 + br.read(3), 0)
+            case 18 => (11 + br.read(7), 0)
             case _ => fail()
           }
           if (symbol + repeat > alphabetSize) fail()
@@ -216,19 +182,19 @@ object Webp {
 
   // -------------------------------------------------------- entropy image
 
-  private def prefixValue(br: BitReader, code: Int): Int = {
+  private def prefixValue(br: Bits.LsbReader, code: Int): Int = {
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
       val offset = (2 + (code & 1)) << extra
-      offset + br.readBits(extra) + 1
+      offset + br.read(extra) + 1
     }
   }
 
   /** One Huffman group: the five prefix codes an entropy-coded image
     * reads pixels through.
     */
-  private final class HGroup(br: BitReader, cacheSize: Int) {
+  private final class HGroup(br: Bits.LsbReader, cacheSize: Int) {
     val green = readHuffmanCode(br, 256 + 24 + cacheSize)
     val red = readHuffmanCode(br, 256)
     val blue = readHuffmanCode(br, 256)
@@ -239,7 +205,7 @@ object Webp {
   /** Decode one entropy-coded image (single-group form — transform
     * sub-images and palettes).
     */
-  private def decodeEntropyImage(br: BitReader, w: Int, h: Int): Array[Int] =
+  private def decodeEntropyImage(br: Bits.LsbReader, w: Int, h: Int): Array[Int] =
     decodeImage(br, w, h, allowMeta = false)
 
   /** Decode one spatially-coded image to `w*h` ARGB pixels. Wire order
@@ -248,15 +214,15 @@ object Webp {
     * the group entropy image (whose (red<<8 | green) is each block's
     * group index), then every group's five codes.
     */
-  private def decodeImage(br: BitReader, w: Int, h: Int,
+  private def decodeImage(br: Bits.LsbReader, w: Int, h: Int,
       allowMeta: Boolean): Array[Int] = {
-    val cacheBits = if (br.readBit() == 1) br.readBits(4) else 0
+    val cacheBits = if (br.read(1) == 1) br.read(4) else 0
     if (cacheBits > 11) fail()
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val cache = if (cacheSize > 0) new Array[Int](cacheSize) else null
     val meta: Option[(Int, Array[Int])] =
-      if (allowMeta && br.readBit() == 1) {
-        val bits = br.readBits(3) + 2
+      if (allowMeta && br.read(1) == 1) {
+        val bits = br.read(3) + 2
         val mw = (w + (1 << bits) - 1) >> bits
         val mh = (h + (1 << bits) - 1) >> bits
         Some((bits, decodeEntropyImage(br, mw, mh)))
@@ -437,34 +403,34 @@ object Webp {
 
   private[ext] def parseVp8l(payload: Array[Byte]): DecodedWebp = {
     if (payload.length < 5 || (payload(0) & 0xff) != 0x2f) fail()
-    val br = new BitReader(payload, 1, payload.length)
-    val w = br.readBits(14) + 1
-    val h = br.readBits(14) + 1
-    br.readBit() // alpha hint
-    if (br.readBits(3) != 0) fail() // version
+    val br = new Bits.LsbReader(payload, 1, payload.length) { def fail(): Nothing = Webp.fail() }
+    val w = br.read(14) + 1
+    val h = br.read(14) + 1
+    br.read(1) // alpha hint
+    if (br.read(3) != 0) fail() // version
     if (4L * w * h > (1L << 26)) fail() // family output budget, pre-allocation
     var effW = w
     val transforms = scala.collection.mutable.ArrayBuffer.empty[Transform]
     var seen = 0
-    while (br.readBit() == 1) {
-      val t = br.readBits(2)
+    while (br.read(1) == 1) {
+      val t = br.read(2)
       if ((seen & (1 << t)) != 0) fail() // each transform at most once
       seen |= 1 << t
       t match {
         case 0 =>
-          val bb = br.readBits(3) + 2
+          val bb = br.read(3) + 2
           val bw = (effW + (1 << bb) - 1) >> bb
           val bh = (h + (1 << bb) - 1) >> bb
           transforms += PredictorT(bb, decodeEntropyImage(br, bw, bh))
         case 1 =>
-          val bb = br.readBits(3) + 2
+          val bb = br.read(3) + 2
           val bw = (effW + (1 << bb) - 1) >> bb
           val bh = (h + (1 << bb) - 1) >> bb
           transforms += ColorT(bb, decodeEntropyImage(br, bw, bh))
         case 2 => transforms += SubtractGreenT
         case 3 =>
           if (seen != (1 << 3)) fail() // profile: color-indexing stands alone
-          val paletteSize = br.readBits(8) + 1
+          val paletteSize = br.read(8) + 1
           val deltas = decodeEntropyImage(br, paletteSize, 1)
           val palette = new Array[Int](paletteSize)
           var acc = 0
@@ -576,38 +542,36 @@ object Webp {
 
   private final class CodeWriter(val lengths: Array[Int], singleSymbol: Int = -1) {
     private val codes = if (singleSymbol < 0) canonicalCodes(lengths) else null
-    def write(bw: BitWriter, sym: Int): Unit = {
+    def write(bw: Bits.LsbWriter, sym: Int): Unit = {
       if (singleSymbol >= 0) { if (sym != singleSymbol) fail(); return }
       val len = lengths(sym)
       if (len == 0) fail()
-      val c = codes(sym)
-      var i = len - 1
-      while (i >= 0) { bw.writeBits((c >> i) & 1, 1); i -= 1 }
+      bw.putCode(codes(sym), len)
     }
   }
 
   /** Serialize one prefix code. ≤2 used symbols → SIMPLE form; else the
     * FULL form with 17/18 zero-run RLE over the lengths.
     */
-  private def writeHuffmanCode(bw: BitWriter, freq: Array[Long]): CodeWriter = {
+  private def writeHuffmanCode(bw: Bits.LsbWriter, freq: Array[Long]): CodeWriter = {
     val used = freq.zipWithIndex.filter(_._1 > 0).map(_._2)
     // the SIMPLE form carries symbols in at most 8 bits — green-alphabet
     // length/cache symbols (>= 256) MUST go through the full form, or
     // they'd be silently truncated (constant planes hit exactly this)
     if (used.length <= 2 && used.forall(_ <= 255)) {
-      bw.writeBits(1, 1) // simple
+      bw.put(1, 1) // simple
       val s0 = if (used.isEmpty) 0 else used(0)
       if (used.length <= 1) {
-        bw.writeBits(0, 1) // one symbol
-        if (s0 < 2) { bw.writeBits(0, 1); bw.writeBits(s0, 1) }
-        else { bw.writeBits(1, 1); bw.writeBits(s0, 8) }
+        bw.put(0, 1) // one symbol
+        if (s0 < 2) { bw.put(0, 1); bw.put(s0, 1) }
+        else { bw.put(1, 1); bw.put(s0, 8) }
         new CodeWriter(null, singleSymbol = s0)
       } else {
         val s1 = used(1)
-        bw.writeBits(1, 1) // two symbols
-        if (s0 < 2) { bw.writeBits(0, 1); bw.writeBits(s0, 1) }
-        else { bw.writeBits(1, 1); bw.writeBits(s0, 8) }
-        bw.writeBits(s1, 8)
+        bw.put(1, 1) // two symbols
+        if (s0 < 2) { bw.put(0, 1); bw.put(s0, 1) }
+        else { bw.put(1, 1); bw.put(s0, 8) }
+        bw.put(s1, 8)
         val lengths = new Array[Int](freq.length)
         lengths(s0) = 1; lengths(s1) = 1
         new CodeWriter(lengths)
@@ -651,22 +615,22 @@ object Webp {
         System.arraycopy(built, 0, clLengths, 0, 19)
       }
       if (clLengths.exists(_ > 7)) fail() // 3-bit length fields
-      bw.writeBits(0, 1) // full form
+      bw.put(0, 1) // full form
       // emit as many 3-bit entries as needed to cover every used cl symbol
       var numCodes = 19
       while (numCodes > 4 && clLengths(CodeLengthOrder(numCodes - 1)) == 0) numCodes -= 1
-      bw.writeBits(numCodes - 4, 4)
+      bw.put(numCodes - 4, 4)
       var k = 0
-      while (k < numCodes) { bw.writeBits(clLengths(CodeLengthOrder(k)), 3); k += 1 }
-      bw.writeBits(0, 1) // no max-symbol budget
+      while (k < numCodes) { bw.put(clLengths(CodeLengthOrder(k)), 3); k += 1 }
+      bw.put(0, 1) // no max-symbol budget
       val clWriter =
         if (clUsed.length == 1) new CodeWriter(null, singleSymbol = clUsed(0))
         else new CodeWriter(clLengths)
       clSyms.foreach { case (s, extra) =>
         clWriter.write(bw, s)
-        if (s == 17) bw.writeBits(extra, 3)
-        else if (s == 18) bw.writeBits(extra, 7)
-        else if (s == 16) bw.writeBits(extra, 2)
+        if (s == 17) bw.put(extra, 3)
+        else if (s == 18) bw.put(extra, 7)
+        else if (s == 16) bw.put(extra, 2)
       }
       // a single used symbol decodes through the zero-bit nonzero==1 arm;
       // the writer must be zero-bit too
@@ -700,11 +664,11 @@ object Webp {
     * emits the meta-prefix bit (0) in its wire position — AFTER the
     * color-cache info, per spec.
     */
-  private def writeEntropyImage(bw: BitWriter, toks: Seq[Tok], cacheBits: Int,
+  private def writeEntropyImage(bw: Bits.LsbWriter, toks: Seq[Tok], cacheBits: Int,
       mainImage: Boolean = false): Unit = {
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
-    if (cacheBits > 0) { bw.writeBits(1, 1); bw.writeBits(cacheBits, 4) } else bw.writeBits(0, 1)
-    if (mainImage) bw.writeBits(0, 1) // single group: no meta codes
+    if (cacheBits > 0) { bw.put(1, 1); bw.put(cacheBits, 4) } else bw.put(0, 1)
+    if (mainImage) bw.put(0, 1) // single group: no meta codes
     val gFreq = new Array[Long](256 + 24 + cacheSize)
     val rFreq = new Array[Long](256)
     val bFreq = new Array[Long](256)
@@ -726,9 +690,9 @@ object Webp {
       case Lit(a, r, g, b) => gW.write(bw, g); rW.write(bw, r); bW.write(bw, b); aW.write(bw, a)
       case Copy(len, dist) =>
         val (lc, le, lv) = prefixCodeOf(len)
-        gW.write(bw, 256 + lc); bw.writeBits(lv, le)
+        gW.write(bw, 256 + lc); bw.put(lv, le)
         val (dc, de, dv) = prefixCodeOf(dist + 120)
-        dW.write(bw, dc); bw.writeBits(dv, de)
+        dW.write(bw, dc); bw.put(dv, de)
       case CacheHit(idx) => gW.write(bw, 280 + idx)
     }
   }
@@ -787,27 +751,27 @@ object Webp {
   private[ext] def encodeVp8l(id: Long, w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
     val px = Array.tabulate(w * h)(i =>
       argb(255, rgb(3 * i) & 0xff, rgb(3 * i + 1) & 0xff, rgb(3 * i + 2) & 0xff))
-    val bw = new BitWriter
-    bw.writeBits(w - 1, 14); bw.writeBits(h - 1, 14)
-    bw.writeBits(0, 1) // alpha hint
-    bw.writeBits(0, 3) // version
+    val bw = new Bits.LsbWriter(256)
+    bw.put(w - 1, 14); bw.put(h - 1, 14)
+    bw.put(0, 1) // alpha hint
+    bw.put(0, 3) // version
     (Math.floorMod(id, 5L).toInt: @annotation.switch) match {
       case 0 => // no transform, color-cache literals
-        bw.writeBits(0, 1) // no more transforms
+        bw.put(0, 1) // no more transforms
         writeEntropyImage(bw, cacheToks(px, 6), 6, mainImage = true)
       case 1 => // subtract-green + LZ77
-        bw.writeBits(1, 1); bw.writeBits(2, 2) // transform: subtract green
-        bw.writeBits(0, 1) // no more transforms
+        bw.put(1, 1); bw.put(2, 2) // transform: subtract green
+        bw.put(0, 1) // no more transforms
         val t = px.map { v =>
           val g = sub(v, 8)
           argb(sub(v, 24), (sub(v, 16) - g) & 0xff, g, (sub(v, 0) - g) & 0xff)
         }
         writeEntropyImage(bw, lz77Toks(t), 0, mainImage = true)
       case 2 => // predictor transform, mode 2 (T) in one block
-        bw.writeBits(1, 1); bw.writeBits(0, 2) // transform: predictor
-        bw.writeBits(6, 3) // size_bits 6 + 2 = 8 -> 256-px blocks (one block)
+        bw.put(1, 1); bw.put(0, 2) // transform: predictor
+        bw.put(6, 3) // size_bits 6 + 2 = 8 -> 256-px blocks (one block)
         writeEntropyImage(bw, literalToks(Array(argb(0, 0, 2, 0))), 0)
-        bw.writeBits(0, 1) // no more transforms
+        bw.put(0, 1) // no more transforms
         val res = new Array[Int](w * h)
         var p = 0
         var y = 0
@@ -827,10 +791,10 @@ object Webp {
         }
         writeEntropyImage(bw, literalToks(res), 0, mainImage = true)
       case 4 => // meta-Huffman: groups split at the half-height block row
-        bw.writeBits(0, 1) // no transforms
-        bw.writeBits(0, 1) // no color cache (cache info comes FIRST per spec)
-        bw.writeBits(1, 1) // meta codes present
-        bw.writeBits(0, 3) // subsample bits 0+2 -> 4-pixel blocks
+        bw.put(0, 1) // no transforms
+        bw.put(0, 1) // no color cache (cache info comes FIRST per spec)
+        bw.put(1, 1) // meta codes present
+        bw.put(0, 3) // subsample bits 0+2 -> 4-pixel blocks
         val split = h / 2
         def grpOfY(y: Int): Int = if (((y >> 2) << 2) < split) 0 else 1
         // the written group COUNT must equal the meta image's max+1 — at
@@ -867,12 +831,12 @@ object Webp {
           p += 1
         }
       case _ => // color indexing
-        bw.writeBits(1, 1); bw.writeBits(3, 2) // transform: color indexing
+        bw.put(1, 1); bw.put(3, 2) // transform: color indexing
         val palette = scala.collection.mutable.LinkedHashMap.empty[Int, Int]
         px.foreach(v => if (!palette.contains(v)) palette(v) = palette.size)
         val pal = palette.keys.toArray
         if (pal.length > 256) fail() // fixture images are < 256 pixels
-        bw.writeBits(pal.length - 1, 8)
+        bw.put(pal.length - 1, 8)
         val deltas = Array.tabulate(pal.length) { i =>
           if (i == 0) pal(0)
           else {
@@ -881,7 +845,7 @@ object Webp {
           }
         }
         writeEntropyImage(bw, literalToks(deltas), 0)
-        bw.writeBits(0, 1) // no more transforms
+        bw.put(0, 1) // no more transforms
         val wb = if (pal.length <= 2) 3 else if (pal.length <= 4) 2
           else if (pal.length <= 16) 1 else 0
         val effW = (w + (1 << wb) - 1) >> wb
@@ -901,7 +865,7 @@ object Webp {
         }
         writeEntropyImage(bw, literalToks(packed), 0, mainImage = true)
     }
-    val payload = bw.toByteArray
+    val payload = bw.toArray
     val out = new java.io.ByteArrayOutputStream(payload.length + 32)
     def cc(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     def u32(v: Long): Unit = {

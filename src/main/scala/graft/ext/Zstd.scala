@@ -127,7 +127,7 @@ object Zstd {
     * weights): bits were written LSB-first forward; the last byte's
     * highest set bit is the sentinel; reading proceeds from the top bit
     * index downward, returned MSB-first — so a field written with
-    * [[BitWriter.addBits]] reads back as the same value. Reads past the
+    * [[Bits.LsbWriter.put]] reads back as the same value. Reads past the
     * start return zero bits and set [[overrun]] (the C reader's
     * overflow status, which the two-state FSE weight loop uses as its
     * termination signal); any overrun in a strict context is malformed.
@@ -164,57 +164,6 @@ object Zstd {
     def skip(n: Int): Unit = bitPos -= n
     def overrun: Boolean = bitPos < 0
     def exhausted: Boolean = bitPos == 0
-  }
-
-  /** Forward LSB-first bit reader — FSE table descriptions only. */
-  private final class FwdReader(bytes: Array[Byte], from: Int, until: Int) {
-    private var pos = 0
-    private val totalBits = (until - from) * 8
-    def read(n: Int): Int = {
-      if (pos + n > totalBits) fail()
-      var v = 0; var j = 0
-      while (j < n) {
-        val idx = pos + j
-        v |= ((bytes(from + (idx >> 3)) >> (idx & 7)) & 1) << j
-        j += 1
-      }
-      pos += n
-      v
-    }
-    def peek(n: Int): Int = {
-      var v = 0; var j = 0
-      while (j < n) {
-        val idx = pos + j
-        val bit = if (idx < totalBits) (bytes(from + (idx >> 3)) >> (idx & 7)) & 1 else 0
-        v |= bit << j
-        j += 1
-      }
-      v
-    }
-    def skip(n: Int): Unit = { pos += n; if (pos > totalBits) fail() }
-    def bytesConsumed: Int = (pos + 7) >> 3
-  }
-
-  /** Forward LSB-first bit writer; [[close]] appends the sentinel 1 bit
-    * and zero-pads to a byte boundary — the exact stream [[BackReader]]
-    * consumes.
-    */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nAcc = 0
-    def addBits(value: Int, n: Int): Unit = {
-      if (n > 0) {
-        acc |= (value.toLong & ((1L << n) - 1L)) << nAcc
-        nAcc += n
-        while (nAcc >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; nAcc -= 8 }
-      }
-    }
-    def close(): Array[Byte] = {
-      addBits(1, 1)
-      if (nAcc > 0) { out.write((acc & 0xff).toInt); acc = 0; nAcc = 0 }
-      out.toByteArray
-    }
   }
 
   // ---------------------------------------------------------------- FSE
@@ -285,7 +234,7 @@ object Zstd {
     */
   private def readFseDescription(bytes: Array[Byte], from: Int, until: Int,
       maxLog: Int, maxSymbol: Int): (Array[Int], Int, Int) = {
-    val in = new FwdReader(bytes, from, until)
+    val in = new Bits.LsbReader(bytes, from, until) { def fail(): Nothing = Zstd.fail() }
     val accuracyLog = in.read(4) + 5
     if (accuracyLog > maxLog) fail()
     val tableSize = 1 << accuracyLog
@@ -320,7 +269,8 @@ object Zstd {
       if (norm.length > maxSymbol + 1) fail()
     }
     if (remaining != 1) fail()
-    (norm.toArray, accuracyLog, in.bytesConsumed)
+    in.alignByte()
+    (norm.toArray, accuracyLog, in.bytePos - from)
   }
 
   /** FSE encode table from the same normalized counts as the decode
@@ -374,12 +324,12 @@ object Zstd {
       val state = (nbBitsOut << 16) - deltaNbBits(sym)
       stateTable((state >> nbBitsOut) + deltaFindState(sym))
     }
-    def encode(w: BitWriter, state: Int, sym: Int): Int = {
+    def encode(w: Bits.LsbWriter, state: Int, sym: Int): Int = {
       val nbBitsOut = (state + deltaNbBits(sym)) >> 16
-      w.addBits(state, nbBitsOut)
+      w.put(state, nbBitsOut)
       stateTable((state >> nbBitsOut) + deltaFindState(sym))
     }
-    def flush(w: BitWriter, state: Int): Unit = w.addBits(state, accuracyLog)
+    def flush(w: Bits.LsbWriter, state: Int): Unit = w.put(state, accuracyLog)
   }
 
   // --------------------------------------- sequence code tables (RFC 8878)
@@ -1139,14 +1089,15 @@ object Zstd {
       * reverse so the decoder's first (top-bits) read is `data(from)`.
       */
     def stream(data: Array[Byte], from: Int, until: Int): Array[Byte] = {
-      val bw = new BitWriter
+      val bw = new Bits.LsbWriter
       var i = until - 1
       while (i >= from) {
         val b = data(i) & 0xff
-        bw.addBits(code(b), bits(b))
+        bw.put(code(b), bits(b))
         i -= 1
       }
-      bw.close()
+      bw.put(1, 1) // the sentinel BackReader starts below
+      bw.toArray
     }
   }
 
@@ -1211,24 +1162,6 @@ object Zstd {
     out.toByteArray
   }
 
-  /** Forward LSB-first bit writer padded to a byte boundary (no
-    * sentinel) — FSE table descriptions only.
-    */
-  private final class FwdWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nAcc = 0
-    def addBits(value: Int, n: Int): Unit = {
-      acc |= (value.toLong & ((1L << n) - 1L)) << nAcc
-      nAcc += n
-      while (nAcc >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; nAcc -= 8 }
-    }
-    def close(): Array[Byte] = {
-      if (nAcc > 0) { out.write((acc & 0xff).toInt); acc = 0; nAcc = 0 }
-      out.toByteArray
-    }
-  }
-
   /** Deterministic normalization of code counts to exactly 2^log slots,
     * every present symbol ≥ 1 (the [[Rans]] normalization discipline:
     * surplus off the largest entries, deficit onto the most frequent,
@@ -1273,8 +1206,8 @@ object Zstd {
     * halving as `remaining` shrinks, byte-padded.
     */
   private def writeFseDescription(norm: Array[Int], log: Int): Array[Byte] = {
-    val w = new FwdWriter
-    w.addBits(log - 5, 4)
+    val w = new Bits.LsbWriter
+    w.put(log - 5, 4)
     val tableSize = 1 << log
     var remaining = tableSize + 1
     var threshold = tableSize
@@ -1285,19 +1218,19 @@ object Zstd {
       s += 1
       val value = count + 1
       val max = (2 * threshold - 1) - remaining
-      if (value < max) w.addBits(value, nbBits - 1)
-      else w.addBits(if (value < threshold) value else value + max, nbBits)
+      if (value < max) w.put(value, nbBits - 1)
+      else w.put(if (value < threshold) value else value + max, nbBits)
       remaining -= (if (count < 0) -count else count)
       while (remaining > 1 && remaining < threshold) { nbBits -= 1; threshold >>= 1 }
       if (count == 0 && remaining > 1) {
         // zero-repeat flags for the run of zeros that follows
         var zeros = 0
         while (s < norm.length && norm(s) == 0) { zeros += 1; s += 1 }
-        while (zeros >= 3) { w.addBits(3, 2); zeros -= 3 }
-        w.addBits(zeros, 2)
+        while (zeros >= 3) { w.put(3, 2); zeros -= 3 }
+        w.put(zeros, 2)
       }
     }
-    w.close()
+    w.toArray
   }
 
   /** One sequence channel's encoding choice: predefined table, RLE
@@ -1305,9 +1238,9 @@ object Zstd {
     */
   private final case class SeqChan(mode: Int, header: Array[Byte], ct: FseCTable) {
     def init(sym: Int): Int = if (ct == null) 0 else ct.initState(sym)
-    def encode(w: BitWriter, state: Int, sym: Int): Int =
+    def encode(w: Bits.LsbWriter, state: Int, sym: Int): Int =
       if (ct == null) 0 else ct.encode(w, state, sym)
-    def flush(w: BitWriter, state: Int): Unit = if (ct != null) ct.flush(w, state)
+    def flush(w: Bits.LsbWriter, state: Int): Unit = if (ct != null) ct.flush(w, state)
   }
 
   private def predefChan(ct: FseCTable): SeqChan = SeqChan(0, Array.emptyByteArray, ct)
@@ -1341,28 +1274,29 @@ object Zstd {
     out.write(ll.header, 0, ll.header.length)
     out.write(of.header, 0, of.header.length)
     out.write(ml.header, 0, ml.header.length)
-    val w = new BitWriter
+    val w = new Bits.LsbWriter
     val last = n - 1
     var mlS = ml.init(mlC(last))
     var ofS = of.init(ofC(last))
     var llS = ll.init(llC(last))
-    w.addBits(seqs(last).ll - LlBase(llC(last)), LlBits(llC(last)))
-    w.addBits(seqs(last).ml - MlBase(mlC(last)), MlBits(mlC(last)))
-    w.addBits((ofValues(last) - (1L << ofC(last))).toInt, ofC(last))
+    w.put(seqs(last).ll - LlBase(llC(last)), LlBits(llC(last)))
+    w.put(seqs(last).ml - MlBase(mlC(last)), MlBits(mlC(last)))
+    w.put((ofValues(last) - (1L << ofC(last))).toInt, ofC(last))
     var k = n - 2
     while (k >= 0) {
       ofS = of.encode(w, ofS, ofC(k))
       mlS = ml.encode(w, mlS, mlC(k))
       llS = ll.encode(w, llS, llC(k))
-      w.addBits(seqs(k).ll - LlBase(llC(k)), LlBits(llC(k)))
-      w.addBits(seqs(k).ml - MlBase(mlC(k)), MlBits(mlC(k)))
-      w.addBits((ofValues(k) - (1L << ofC(k))).toInt, ofC(k))
+      w.put(seqs(k).ll - LlBase(llC(k)), LlBits(llC(k)))
+      w.put(seqs(k).ml - MlBase(mlC(k)), MlBits(mlC(k)))
+      w.put((ofValues(k) - (1L << ofC(k))).toInt, ofC(k))
       k -= 1
     }
     ml.flush(w, mlS)
     of.flush(w, ofS)
     ll.flush(w, llS)
-    val bits = w.close()
+    w.put(1, 1) // the sentinel BackReader starts below
+    val bits = w.toArray
     out.write(bits, 0, bits.length)
     out.toByteArray
   }

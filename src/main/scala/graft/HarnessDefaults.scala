@@ -38,7 +38,9 @@ import graft.core.ForkFreeLocalFs
   *    write events.parquet with TIMESTAMP(NANOS), unreadable by Spark
   *    without this flag (ts arrives as int64 nanoseconds);
   *    TIMESTAMP(MICROS) generations are normalized to the same
-  *    representation in QueryCatalog.table.
+  *    representation in QueryCatalog.table. `table` also sets the flag on
+  *    every call, because GraftSession sessions do not, and its memo of
+  *    inferred schemas is keyed by the flag's value among others.
   *  - shuffle partitions = the session's core count (not the 200
   *    default), UTC session time, UI off: the bench contract's
   *    local-mode posture, shared verbatim by every tool so a plan dumped

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{PipelineConfig, SarimaxOrder, SeasonalOrder}
 import graft.ext.{Archives, BitPack, Blocklist, Boilerplate, Bpe, Cdc, Charset, Clusters, Csv, Dedup, Encoding, EventAnalytics, Evaluation, Gorilla, Graph, Html, InvertedIndex, Lz4, Multimodal, Packing, Projection, Rans, Rle, Robots, Sampling, Similarity, Sitemaps, Sketches, Skyline, Snappy, Suffix, Tar, TextAnalysis, Url, Zip}
@@ -37,9 +42,25 @@ object QueryCatalog {
     */
   private val tsMillis = "CAST(ts DIV 1000000 AS BIGINT)"
 
+  /** The fixture table `dir/name.parquet`, read with its parquet schema
+    * inferred once per file version rather than on every call: inference
+    * is a Spark job (`parquet at …`) that every query built on the table
+    * would otherwise run while its DataFrame is still being built.
+    *
+    * The memo ([[schemaOf]]) is keyed by the file's identity and version
+    * (each data file's canonical path, length, modification time and, on
+    * the local filesystem, its device and inode) and by the session
+    * settings Spark's parquet schema converter reads, so a rewritten file
+    * or a session that converts differently infers afresh. It holds only
+    * the schema, never a DataFrame or a plan: every call still builds a
+    * fresh relation with fresh expression ids, which keeps self-joins of
+    * one table resolvable, and nothing held has a lifetime to manage.
+    */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    // HarnessDefaults and the test session set this, GraftSession does not
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = s.read.schema(schemaOf(s, path)).parquet(path)
     // The events table's `ts` arrives as parquet TIMESTAMP(NANOS) in some
     // data generations (read as BIGINT nanos under `nanosAsLong`) and as
     // TIMESTAMP(MICROS) in others (read as a true timestamp, which
@@ -55,6 +76,49 @@ object QueryCatalog {
           (unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)) * 1000L))
       case _ => df
     }
+  }
+
+  /** The session settings Spark 4.1's parquet schema inference passes to
+    * its schema converter; a schema inferred under one set of values is
+    * not the schema under another.
+    */
+  private val schemaSettings = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled")
+
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[(Seq[String], Seq[(String, Long, Long, Any)]), StructType]
+
+  /** The schema `s.read.parquet(path)` infers, inferred once per file
+    * version and settings (see [[table]]). Two threads that miss at once
+    * may both infer; the results are equal.
+    */
+  private[graft] def schemaOf(s: SparkSession, path: String): StructType =
+    schemas.getOrElseUpdate((schemaSettings.map(s.conf.get), fileVersions(s, path)),
+      s.read.parquet(path).schema)
+
+  /** Each data file of `path` (the file itself, or every file under a
+    * directory) as (canonical path, length, modification time, file key).
+    * The file key is the device and inode on the local filesystem and
+    * null elsewhere. Statuses are listed without reading permissions,
+    * which Hadoop's local filesystem gets by launching a process.
+    */
+  private def fileVersions(s: SparkSession, path: String): Seq[(String, Long, Long, Any)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+    files(fs.getFileStatus(root)).map { st =>
+      val uri = st.getPath.toUri
+      if (uri.getScheme == "file") {
+        val local = Paths.get(uri).toRealPath()
+        (local.toString, st.getLen, st.getModificationTime,
+          Files.readAttributes(local, classOf[BasicFileAttributes]).fileKey)
+      } else (st.getPath.toString, st.getLen, st.getModificationTime, null)
+    }.sortBy(_._1)
   }
 
   /** The events table viewed as the reference's metric stream (A1/A2 in

@@ -277,6 +277,14 @@ object Bits {
       len += n
     }
 
+    /** `f` over the bytes written, after [[alignByte]], without copying
+      * them (a checksum of the stream so far). Writing may go on.
+      */
+    final def over[A](f: (Array[Byte], Int, Int) => A): A = {
+      alignByte()
+      f(buf, 0, len)
+    }
+
     /** The bytes written, after [[alignByte]]. Writing may go on. */
     final def toArray: Array[Byte] = {
       alignByte()

@@ -133,7 +133,10 @@ object CurationPipeline {
     sharedDir match {
       case Some(dir) =>
         toStage.write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir)
+        // read back with the schema just written, which spares the
+        // inference job; a file source reads every column as nullable, so
+        // the relation is the one inference gives (CurationPipelineSpec)
+        spark.read.schema(toStage.schema).parquet(dir)
       case None => toStage.localCheckpoint()
     }
   }

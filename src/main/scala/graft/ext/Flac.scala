@@ -59,16 +59,28 @@ object Flac {
 
   // ------------------------------------------------------------- crcs
 
+  /** The CRC of each byte value, one bit shifted in at a time: the table
+    * of a table-driven MSB-first CRC of `width` bits over `poly`.
+    */
+  private def crcTable(width: Int, poly: Int): Array[Int] = {
+    val top = 1 << (width - 1)
+    val mask = (1 << width) - 1
+    Array.tabulate(256) { v =>
+      var c = v << (width - 8)
+      var k = 0
+      while (k < 8) { c = if ((c & top) != 0) ((c << 1) ^ poly) & mask else (c << 1) & mask; k += 1 }
+      c
+    }
+  }
+
+  private val crc8Table = crcTable(8, 0x07)
+  private val crc16Table = crcTable(16, 0x8005)
+
   /** CRC-8, poly 0x07, init 0 — the FLAC frame-header check. */
   private[ext] def crc8(b: Array[Byte], from: Int, until: Int): Int = {
     var c = 0
     var i = from
-    while (i < until) {
-      c ^= b(i) & 0xff
-      var k = 0
-      while (k < 8) { c = if ((c & 0x80) != 0) ((c << 1) ^ 0x07) & 0xff else (c << 1) & 0xff; k += 1 }
-      i += 1
-    }
+    while (i < until) { c = crc8Table(c ^ (b(i) & 0xff)); i += 1 }
     c
   }
 
@@ -76,12 +88,7 @@ object Flac {
   private[ext] def crc16(b: Array[Byte], from: Int, until: Int): Int = {
     var c = 0
     var i = from
-    while (i < until) {
-      c ^= (b(i) & 0xff) << 8
-      var k = 0
-      while (k < 8) { c = if ((c & 0x8000) != 0) ((c << 1) ^ 0x8005) & 0xffff else (c << 1) & 0xffff; k += 1 }
-      i += 1
-    }
+    while (i < until) { c = ((c << 8) & 0xffff) ^ crc16Table((c >>> 8) ^ (b(i) & 0xff)); i += 1 }
     c
   }
 
@@ -241,8 +248,7 @@ object Flac {
       val sel = if (allEqual) -1 else Math.floorMod(seed + f, 4L).toInt
       val order = sel match { case 1 => 1; case 2 | 3 => 2; case _ => 0 }
       val usePred = sel > 0 && n > order
-      val headerSnapshot = bw.toArray // the header's fields sum to whole bytes
-      bw.put(crc8(headerSnapshot, 0, headerSnapshot.length).toLong, 8)
+      bw.put(bw.over(crc8).toLong, 8) // the header's fields sum to whole bytes
       if (allEqual) {
         bw.put(0, 1); bw.put(0, 6); bw.put(0, 1) // CONSTANT
         bw.put((xs(from) & 0xffff).toLong, 16)
@@ -274,8 +280,7 @@ object Flac {
         while (j < from + order) { bw.put((xs(j) & 0xffff).toLong, 16); j += 1 }
         writeResiduals(bw, fixedResiduals(xs, from, until, order))
       }
-      val frameSnapshot = bw.toArray
-      bw.put(crc16(frameSnapshot, 0, frameSnapshot.length).toLong, 16)
+      bw.put(bw.over(crc16).toLong, 16)
       out.write(bw.toArray)
       f += 1
     }

@@ -45,6 +45,18 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(kept(CurationPipeline.curate(d, materialize = false)) == Set(1L))
   }
 
+  test("parquet staging reads the staged set back with the schema inference gives") {
+    val t = (1 to 40).map(i => s"word$i").mkString(" ")
+    val u = (100 to 140).map(i => s"other$i").mkString(" ")
+    val d = docs(2L -> t, 7L -> t, 4L -> u)
+    val written = d.select("doc_id", "text").schema
+    assert(!written("doc_id").nullable) // so the read-back's nullability is tested
+    val dir = java.nio.file.Files.createTempDirectory("graft-curation-stage").resolve("staged").toString
+    val staged = CurationPipeline.curate(d, stageDir = Some(dir))
+    assert(spark.read.schema(written).parquet(dir).schema == spark.read.parquet(dir).schema)
+    assert(staged.collect().toSet == CurationPipeline.curate(d, materialize = false).collect().toSet)
+  }
+
   test("crawlCurate: byte-exact recovery through the six-layer stack, dedup + gates apply") {
     import graft.functions.TextFunctions.fingerprint
     import org.apache.spark.sql.functions.col

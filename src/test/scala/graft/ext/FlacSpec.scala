@@ -13,6 +13,27 @@ class FlacSpec extends AnyFunSuite {
     assert(Flac.crc16(v, 0, v.length) == 0xfee8) // CRC-16/BUYPASS (poly 0x8005)
   }
 
+  test("crc8/crc16: the tables agree with the bit-at-a-time loop on random ranges") {
+    def bitwise(width: Int, poly: Int)(b: Array[Byte], from: Int, until: Int): Int = {
+      val top = 1 << (width - 1)
+      val mask = (1 << width) - 1
+      var c = 0
+      for (i <- from until until) {
+        c ^= (b(i) & 0xff) << (width - 8)
+        for (_ <- 0 until 8) c = if ((c & top) != 0) ((c << 1) ^ poly) & mask else (c << 1) & mask
+      }
+      c
+    }
+    val rnd = new scala.util.Random(5)
+    for (_ <- 0 until 500) {
+      val b = Array.fill(rnd.nextInt(300))(rnd.nextInt(256).toByte)
+      val from = rnd.nextInt(b.length + 1)
+      val until = from + rnd.nextInt(b.length - from + 1)
+      assert(Flac.crc8(b, from, until) == bitwise(8, 0x07)(b, from, until))
+      assert(Flac.crc16(b, from, until) == bitwise(16, 0x8005)(b, from, until))
+    }
+  }
+
   private def statsOf(xs: Array[Int], block: Int = 256): Seq[(Int, Long, Double, Long)] = {
     val nFrames = (xs.length + block - 1) / block
     (0 until nFrames).map { f =>

@@ -1,5 +1,12 @@
 package graft.model
 
+import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.catalyst.encoders.Codec
+
 /** Core data model of the pipeline.
   *
   * Mirrors the reference's row shapes (see /root/reference/src/flinkarima.py):
@@ -85,21 +92,21 @@ final case class Alert(
   * maxHistory; `count/mean/m2` are the Welford accumulators over raw samples;
   * `emitCounter` gates model fits (flinkarima.py:218-223).
   *
-  * Histories are `Vector`s: the hot loop appends and trims once per element
-  * (`:+` then `takeRight`), which is effectively O(1)/O(k) on Vector but an
-  * O(n) full copy on List — at maxHistory=1440 that is ~3k copied cells per
-  * sample per key.
+  * Histories are `ArraySeq`s over a primitive `Array[Double]` (`ofDouble`):
+  * [[NodePipelineStateCodec]] writes and reads each one as a single bulk
+  * copy, and `BaselineOp.step` builds one new array per append+trim, so no
+  * element is ever boxed.
   */
 final case class NodeState(
-    history: Vector[Double],
-    rawHistory: Vector[Double],
+    history: ArraySeq[Double],
+    rawHistory: ArraySeq[Double],
     emitCounter: Int,
     count: Long,
     mean: Double,
     m2: Double)
 
 object NodeState {
-  val empty: NodeState = NodeState(Vector.empty, Vector.empty, 0, 0L, 0.0, 0.0)
+  val empty: NodeState = NodeState(ArraySeq.empty[Double], ArraySeq.empty[Double], 0, 0L, 0.0, 0.0)
 }
 
 /** Output envelope of the fused streaming pipeline: the reference emits both
@@ -123,4 +130,119 @@ final case class NodePipelineState(
 
 object NodePipelineState {
   val empty: NodePipelineState = NodePipelineState(None, NodeState.empty, None)
+}
+
+/** The state store's binary layout of [[NodePipelineState]]: one
+  * `BinaryType` column (see `NodePipeline.stateEncoder`). Little-endian:
+  *  - a version byte;
+  *  - the open window: a presence byte, then windowStart, sum, count, maxTs;
+  *  - closedThrough;
+  *  - history and rawHistory: each a length, then its doubles in bulk;
+  *  - emitCounter, count, mean, m2;
+  *  - the latest baseline: a presence byte, then the nodeId's UTF-8 length
+  *    and bytes, the fields in declaration order, and each optional daily
+  *    average as a presence byte plus the double when present.
+  *
+  * Doubles keep their raw bits, so a state reads back exactly as written.
+  * Bytes that do not parse as this layout (truncated, trailing, an unknown
+  * version or presence byte) throw `IllegalArgumentException`, so a bad
+  * checkpoint fails loudly instead of being misread.
+  */
+object NodePipelineStateCodec extends Codec[NodePipelineState, Array[Byte]] {
+  val Version: Byte = 1
+
+  def encode(st: NodePipelineState): Array[Byte] = {
+    val n = st.node
+    val history = doubles(n.history)
+    val raw = doubles(n.rawHistory)
+    val id = st.latestBaseline.map(_.nodeId.getBytes(UTF_8))
+    def optSize(o: Option[Double]) = if (o.isDefined) 9 else 1
+    // version; open window; closedThrough; histories; node fields; baseline
+    val size = 1 + 1 + (if (st.open.isDefined) 32 else 0) + 8 + 4 + 8 * history.length + 4 + 8 * raw.length +
+      28 + 1 + st.latestBaseline.fold(0)(b => 48 + id.get.length + optSize(b.dailyAvgLatest) + optSize(b.dailyAvgLast5))
+    val bb = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
+    bb.put(Version)
+    putFlag(bb, st.open.isDefined)
+    st.open.foreach(o => bb.putLong(o.windowStart).putDouble(o.sum).putLong(o.count).putLong(o.maxTs))
+    bb.putLong(st.closedThrough)
+    putDoubles(bb, history)
+    putDoubles(bb, raw)
+    bb.putInt(n.emitCounter).putLong(n.count).putDouble(n.mean).putDouble(n.m2)
+    putFlag(bb, st.latestBaseline.isDefined)
+    st.latestBaseline.foreach { b =>
+      bb.putInt(id.get.length).put(id.get)
+      bb.putDouble(b.observedCpu).putDouble(b.baselineCpu).putInt(b.historySize).putLong(b.eventTime)
+        .putDouble(b.runningMean).putDouble(b.runningStd)
+      putOptDouble(bb, b.dailyAvgLatest)
+      putOptDouble(bb, b.dailyAvgLast5)
+    }
+    bb.array
+  }
+
+  def decode(bytes: Array[Byte]): NodePipelineState = {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    try {
+      val version = bb.get()
+      if (version != Version) corrupt(s"unknown version $version")
+      // arguments evaluate left to right: each field reads in layout order
+      val open = if (flag(bb)) Some(OpenWindow(bb.getLong, bb.getDouble, bb.getLong, bb.getLong)) else None
+      val closedThrough = bb.getLong
+      val node = NodeState(getDoubles(bb), getDoubles(bb), bb.getInt, bb.getLong, bb.getDouble, bb.getDouble)
+      val latest =
+        if (!flag(bb)) None
+        else Some(Baseline(getUtf8(bb), bb.getDouble, bb.getDouble, bb.getInt, bb.getLong, bb.getDouble,
+          bb.getDouble, getOptDouble(bb), getOptDouble(bb)))
+      if (bb.hasRemaining) corrupt(s"${bb.remaining} trailing bytes")
+      NodePipelineState(open, node, latest, closedThrough)
+    } catch {
+      case _: BufferUnderflowException => corrupt(s"truncated at ${bytes.length} bytes")
+    }
+  }
+
+  private def corrupt(what: String): Nothing =
+    throw new IllegalArgumentException(s"not a NodePipelineState in state format v$Version: $what")
+
+  // an ofDouble wraps its array as is; any other ArraySeq takes a boxed copy
+  private def doubles(s: ArraySeq[Double]): Array[Double] = s.unsafeArray match {
+    case a: Array[Double] => a
+    case _ => s.toArray
+  }
+
+  private def putDoubles(bb: ByteBuffer, a: Array[Double]): Unit = {
+    bb.putInt(a.length)
+    bb.asDoubleBuffer.put(a)
+    bb.position(bb.position + 8 * a.length)
+  }
+
+  private def getDoubles(bb: ByteBuffer): ArraySeq[Double] = {
+    val len = bb.getInt
+    if (len < 0 || len > bb.remaining / 8) corrupt(s"history length $len with ${bb.remaining} bytes left")
+    val a = new Array[Double](len)
+    bb.asDoubleBuffer.get(a)
+    bb.position(bb.position + 8 * len)
+    ArraySeq.unsafeWrapArray(a)
+  }
+
+  private def getUtf8(bb: ByteBuffer): String = {
+    val len = bb.getInt
+    if (len < 0 || len > bb.remaining) corrupt(s"nodeId length $len with ${bb.remaining} bytes left")
+    val s = new String(bb.array, bb.position, len, UTF_8)
+    bb.position(bb.position + len)
+    s
+  }
+
+  private def putFlag(bb: ByteBuffer, present: Boolean): Unit = bb.put((if (present) 1 else 0).toByte)
+
+  private def flag(bb: ByteBuffer): Boolean = bb.get() match {
+    case 0 => false
+    case 1 => true
+    case b => corrupt(s"presence byte $b")
+  }
+
+  private def putOptDouble(bb: ByteBuffer, o: Option[Double]): Unit = {
+    putFlag(bb, o.isDefined)
+    o.foreach(d => bb.putDouble(d))
+  }
+
+  private def getOptDouble(bb: ByteBuffer): Option[Double] = if (flag(bb)) Some(bb.getDouble) else None
 }

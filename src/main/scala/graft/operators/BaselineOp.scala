@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.internal.Logging
@@ -45,8 +46,8 @@ object BaselineOp extends Logging {
   def step(cfg: PipelineConfig, st: NodeState, aggRow: WindowAggregate): (NodeState, Option[Baseline]) = {
     val pre = Welford(st.count, st.mean, st.m2)
     val scaled = pre.zscore(aggRow.cpu)
-    val history = (st.history :+ scaled).takeRight(cfg.maxHistory)
-    val raw = (st.rawHistory :+ aggRow.cpu).takeRight(cfg.maxHistory)
+    val history = appendCapped(st.history, scaled, cfg.maxHistory)
+    val raw = appendCapped(st.rawHistory, aggRow.cpu, cfg.maxHistory)
     val post = pre.add(aggRow.cpu)
     val counter = (st.emitCounter + 1) % cfg.emitEveryN
     val next = NodeState(history, raw, counter, post.count, post.mean, post.m2)
@@ -83,4 +84,15 @@ object BaselineOp extends Logging {
       }
     }
   }
+
+  /** `(h :+ x).takeRight(cap)` as one new primitive array, never boxing an element. */
+  private def appendCapped(h: ArraySeq[Double], x: Double, cap: Int): ArraySeq[Double] =
+    if (cap <= 0) ArraySeq.empty[Double]
+    else {
+      val keep = math.min(h.length, cap - 1)
+      val out = new Array[Double](keep + 1)
+      Array.copy(h.unsafeArray, h.length - keep, out, 0, keep)
+      out(keep) = x
+      ArraySeq.unsafeWrapArray(out)
+    }
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.classTag
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{BinaryEncoder, TransformingEncoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.PipelineConfig
@@ -35,11 +37,20 @@ import graft.model._
   */
 object NodePipeline {
 
+  /** The state's one encoding: a single binary column that
+    * [[NodePipelineStateCodec]] writes and reads. Spark's derived struct
+    * encoder would rebuild every history element by element on each of a
+    * key's two decodes per micro-batch (the timeout scan and the update).
+    */
+  val stateEncoder: Encoder[NodePipelineState] =
+    TransformingEncoder(classTag[NodePipelineState], BinaryEncoder, () => NodePipelineStateCodec)
+
   def apply(metrics: Dataset[Metric], cfg: PipelineConfig): Dataset[PipelineOutput] = {
     import metrics.sparkSession.implicits._
     metrics
       .groupByKey(_.nodeId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(processGroup(cfg) _)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(processGroup(cfg) _)(
+        stateEncoder, implicitly[Encoder[PipelineOutput]])
   }
 
   def processGroup(cfg: PipelineConfig)(

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.nio.file.Files
+
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -120,5 +124,80 @@ class NodePipelineStreamingSpec extends AnyFunSuite {
       assert(latest.payload.contains(""""observed_cpu": 60.0"""), latest.payload)
       assert(!qBaselines.exists(_.eventTime == 5400L), "late record re-emitted a closed window")
     } finally query.stop()
+  }
+
+  // more micro-batches than maxHistory: the trimmed histories are written to
+  // and read back from the real state store, across one restart
+  test("histories trimmed over many micro-batches match batch NodePipeline (HDFS-backed, restart)") {
+    trimmedHistoriesMatchBatch("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+  }
+
+  test("histories trimmed over many micro-batches match batch NodePipeline (RocksDB, restart)") {
+    trimmedHistoriesMatchBatch("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  }
+
+  private def trimmedHistoriesMatchBatch(providerClass: String): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    // every finalized window emits a baseline; only record arrival finalizes
+    val cfg = PipelineConfig(
+      maxHistory = 8, minHistory = 1, emitEveryN = 1,
+      order = SarimaxOrder(1, 1, 1), seasonalOrder = SeasonalOrder(0, 1, 1, 2),
+      windowMillis = 1000L,
+      idleFlushMillis = Some(600000L))
+    val nodes = Seq("node-T", "nœud-Ü")
+    val batches = 20
+    // one record per node and window; window k closes when batch k+1 arrives.
+    // A spike at window 15 raises alerts against the trimmed baseline.
+    def batch(k: Int): Seq[Metric] = nodes.zipWithIndex.map { case (n, j) =>
+      Metric(n, if (k == 15) 95.0 else 30.0 + (k * 7 + j * 3) % 11, k * 1000L + j * 10L)
+    }
+    val expected = NodePipeline((1 to batches).flatMap(batch).toDS(), cfg).collect().sortBy(_.toString)
+
+    val checkpoint = Files.createTempDirectory("graft-trim-ckpt-").toFile
+    val outDir = Files.createTempDirectory("graft-trim-out-").toFile
+    val prevProvider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", providerClass)
+    try {
+      val input = MemoryStream[Metric]
+      def start() = NodePipeline(input.toDS(), cfg)
+        .writeStream.format("parquet")
+        .option("path", outDir.toString)
+        .option("checkpointLocation", checkpoint.toString)
+        .outputMode("append")
+        .start()
+      def streamed(): Array[PipelineOutput] =
+        scala.util.Try {
+          spark.read.schema(Encoders.product[PipelineOutput].schema)
+            .parquet(outDir.toString).as[PipelineOutput].collect()
+        }.getOrElse(Array.empty)
+      // each batch waits for the previous window's outputs, so no two merge
+      def feed(ks: Range): Unit = ks.foreach { k =>
+        input.addData(batch(k))
+        val closed = expected.count(_.eventTime < k * 1000L)
+        pollUntil(s"windows before batch $k")(streamed().length == closed)
+      }
+
+      val q1 = start()
+      try {
+        feed(1 to 10)
+        // let the last micro-batch commit land before stopping
+        Thread.sleep(1000)
+      } finally q1.stop()
+      val q2 = start()
+      try feed(11 to batches)
+      finally q2.stop()
+
+      assert(streamed().sortBy(_.toString).toSeq == expected.toSeq)
+      // the cap was reached: later baselines fit on maxHistory samples
+      assert(expected.count(o => o.kind == "baseline" && o.payload.contains(""""history_size": 8""")) ==
+        nodes.length * (batches - cfg.maxHistory))
+      assert(expected.exists(_.kind == "alert"), "the spike raised no alert")
+    } finally {
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
+      JavaUtils.deleteRecursively(checkpoint)
+      JavaUtils.deleteRecursively(outDir)
+    }
   }
 }

@@ -687,44 +687,6 @@ object Archives {
       }
   }
 
-  /** [[warcHttpCharsetExtract]] for an ARCHIVE STREAM: event time
-    * inherited per record, `content_length` = the TRANSCODED UTF-8 byte
-    * count — the text-plane number a corpus operator budgets. Same
-    * seven-layer stack as batch; composition in
-    * [[graft.streaming.StreamingArchiveIngest.ingestCharset]].
-    */
-  def warcHttpCharsetExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, blob) =>
-        try {
-          if (blob == null || blob.length == 0) Iterator.empty
-          else {
-            val out = Vector.newBuilder[(Long, java.sql.Timestamp, Long, Long, Long)]
-            var pos = 0
-            var idx = 0L
-            while (pos < blob.length) {
-              val (rec, next) = gunzipMember(blob, pos, blob.length, maxRecordBytes)
-              val (docId, bodyFrom, bodyUntil) = parseWarcRecord(rec)
-              val msg = java.util.Arrays.copyOfRange(rec, bodyFrom, bodyUntil)
-              val (_, contentType, _, body) = parseHttpResponse(msg, maxRecordBytes)
-              val (name, _) = Charset.detect(body, contentType)
-              val nOut = Charset.decodeAs(name, body)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
-              out += ((aid, ts, idx, docId, nOut))
-              pos = next
-              idx += 1
-            }
-            out.result().iterator
-          }
-        } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   final case class WarcHttpEntry(
       archive_id: Long, rec_idx: Long, rec_doc_id: Long, http_status: Long,
       content_type: String, body_len: Long, checksum: Long)
@@ -769,44 +731,6 @@ object Archives {
           }
         } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
       }
-  }
-
-  /** [[warcHttpEncExtract]] for an ARCHIVE STREAM: the input carries an
-    * event time (`archive_id, ts, payload`) every extracted record
-    * inherits, and `content_length` is the DECODED body length — the
-    * streaming twin reports post-Content-Encoding bytes, the number a
-    * crawl operator actually budgets. Stateless flatMap over the same
-    * gzip→WARC→HTTP→coding stack as the batch path, so the two cannot
-    * diverge on what a record is; the streaming composition lives in
-    * [[graft.streaming.StreamingArchiveIngest.ingestHttpEnc]].
-    */
-  def warcHttpEncExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, blob) =>
-        try {
-          if (blob == null || blob.length == 0) Iterator.empty
-          else {
-            val out = Vector.newBuilder[(Long, java.sql.Timestamp, Long, Long, Long)]
-            var pos = 0
-            var idx = 0L
-            while (pos < blob.length) {
-              val (rec, next) = gunzipMember(blob, pos, blob.length, maxRecordBytes)
-              val (docId, bodyFrom, bodyUntil) = parseWarcRecord(rec)
-              val msg = java.util.Arrays.copyOfRange(rec, bodyFrom, bodyUntil)
-              val (_, _, _, body) = parseHttpResponse(msg, maxRecordBytes)
-              out += ((aid, ts, idx, docId, body.length.toLong))
-              pos = next
-              idx += 1
-            }
-            out.result().iterator
-          }
-        } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
   }
 
   /** The full crawl-record decode stack: gzip member split -> WARC record
@@ -1201,40 +1125,6 @@ object Archives {
           Some(WarcEntry(aid, idx, docId, (bodyUntil - bodyFrom).toLong, checksum))
         } catch { case scala.util.control.NonFatal(_) => None } // drop the record
       }
-  }
-
-  /** [[warcExtract]] for an ARCHIVE STREAM: same member-split + record
-    * parse, but the input carries an event time (`archive_id, ts,
-    * payload`) that every extracted record inherits — what a watermarked
-    * downstream aggregation needs. Stateless flatMap, so it runs
-    * identically under batch and Structured Streaming; the streaming
-    * composition lives in [[graft.streaming.StreamingArchiveIngest]].
-    */
-  def warcExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, blob) =>
-        try {
-          if (blob == null || blob.length == 0) Iterator.empty
-          else {
-            val out = Vector.newBuilder[(Long, java.sql.Timestamp, Long, Long, Long)]
-            var pos = 0
-            var idx = 0L
-            while (pos < blob.length) {
-              val (rec, next) = gunzipMember(blob, pos, blob.length, maxRecordBytes)
-              val (docId, bodyFrom, bodyUntil) = parseWarcRecord(rec)
-              out += ((aid, ts, idx, docId, (bodyUntil - bodyFrom).toLong))
-              pos = next
-              idx += 1
-            }
-            out.result().iterator
-          }
-        } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
   }
 
   /** Demux + decode + parse crawl archives: split each blob into gzip

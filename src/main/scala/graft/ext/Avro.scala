@@ -207,27 +207,6 @@ object Avro {
     entries.result()
   }
 
-  /** [[avroExtract]] for a CONTAINER STREAM (archive_id, ts, payload) —
-    * corpus drops land continuously from upstream teams; the
-    * streaming-twin flatMap over the SAME demux, composed in
-    * [[graft.streaming.StreamingArchiveIngest.ingestAvro]].
-    */
-  def avroExtractWithTs(archives: DataFrame, maxBlockBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, payload) =>
-        try {
-          if (payload == null) Vector.empty
-          else demux(aid, payload, maxBlockBytes)
-            .map(e => (e.archive_id, ts, e.rec_idx, e.rec_doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   // ======== schema-driven GENERIC decode ========
   // Real corpus drops carry ARBITRARY schemas, not this fixture's: the
   // generic path parses `avro.schema` from the container metadata and

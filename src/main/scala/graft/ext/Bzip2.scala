@@ -545,27 +545,4 @@ object Bzip2 {
         catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
       }
   }
-
-  /** [[bz2Extract]] for an ARCHIVE STREAM: the input carries an event
-    * time (`archive_id, ts, payload`) every extracted record inherits —
-    * the `.bz2` member of the streaming-ingest twin family. Stateless
-    * flatMap over the SAME demux as the batch path, so the two cannot
-    * diverge on what a record is; the streaming composition lives in
-    * [[graft.streaming.StreamingArchiveIngest.ingestBz2]].
-    */
-  def bz2ExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, payload) =>
-        try {
-          if (payload == null) Vector.empty
-          else demuxBz2Archive(aid, payload, maxRecordBytes)
-            .map(e => (e.archive_id, ts, e.rec_idx, e.rec_doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
 }

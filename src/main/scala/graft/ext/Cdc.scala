@@ -99,33 +99,4 @@ object Cdc {
         count(lit(1)).as("n_copies"),
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("min_doc"))
-
-  /** Streaming chunk-level dedup: the live-ingest twin of [[chunkDedup]].
-    * Documents explode into content-defined chunks through the SAME
-    * stateless [[chunkBytes]] (so batch and streaming cut identical
-    * boundaries), each chunk inherits its document's event time, and
-    * only FIRST-SEEN (len, checksum) chunks pass —
-    * `dropDuplicatesWithinWatermark` keeps the seen-chunk store bounded
-    * by the watermark, which is what lets a long-running byte-level
-    * dedup ingest run without unbounded state. A shifted re-upload
-    * arriving minutes later contributes only its genuinely new bytes.
-    */
-  def streamingChunkDedup(docs: DataFrame, watermarkDelay: String, mask: Long = 64L,
-      idCol: String = "doc_id", tsCol: String = "ts", textCol: String = "text"): DataFrame = {
-    require(mask >= 1, "mask must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(tsCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(tsCol).cast("timestamp"), col(textCol).cast("string"))
-      .as[(Long, java.sql.Timestamp, String)]
-      .flatMap { case (id, ts, text) =>
-        chunkBytes(text.getBytes("UTF-8"), mask).zipWithIndex.map {
-          case ((start, len, cs), idx) => (id, ts, idx.toLong, start, len, cs)
-        }
-      }
-      .toDF(idCol, tsCol, "chunk_idx", "start", "len", "checksum")
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("len", "checksum")
-  }
 }

@@ -126,22 +126,6 @@ object Dedup {
       .groupBy(fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Streaming exact dedup: drop records whose content fingerprint was
-    * already seen, with state bounded by the event-time watermark (the
-    * streaming analog of [[exact]] — state per key is one fingerprint, and
-    * the watermark lets the store evict, which is what keeps a long-running
-    * 100 TB ingest from accumulating unbounded dedup state).
-    */
-  def streamingExact(
-      docs: DataFrame,
-      watermarkDelay: String,
-      tsCol: String = "ts",
-      textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("fp", fingerprint(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("fp")
-
   /** Distinct word-n-gram hashes per doc: (id, g: long).
     *
     * Design notes, each measured on sf0.1:

@@ -607,21 +607,6 @@ object Doc {
     try parseDoc(id, Option(bytes).getOrElse(Array.empty))
     catch { case _: MalformedDoc => Seq.empty }
 
-  /** Streaming-twin row shape: (archive_id, ts, rec_idx, rec_doc_id,
-    * content_length) — the shared windowed-reduction contract.
-    */
-  def docExtractWithTs(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        parseDocSafe(id, payload).map(p => (id % 16, ts, p.para_idx, id, p.n_chars))
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** `doc_extract`: paragraphs of every legacy Word binary. Map-only. */
   def docExtract(docs: DataFrame, idCol: String = "doc_id",
                  binCol: String = "payload"): Dataset[DocPara] = {

@@ -237,28 +237,6 @@ object Epub {
     }
   }
 
-  /** [[epubExtract]] for a BOOK STREAM: `(doc_id, ts, payload)` rows, each
-    * chapter inheriting its book's event time — the [[Pdf.pdfExtractWithTs]]
-    * shape for the shared watermarked ingest reduction. Stateless flatMap;
-    * the composition lives in
-    * [[graft.streaming.StreamingArchiveIngest.ingestEpub]].
-    */
-  def epubExtractWithTs(books: DataFrame, maxEntryBytes: Int = 1 << 26): DataFrame = {
-    val spark = books.sparkSession
-    import spark.implicits._
-    books
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        try {
-          if (payload == null) Nil
-          else parseEpub(id, payload, maxEntryBytes)
-            .map(c => (id % 16, ts, c.chapter_idx, id, c.n_chars))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** The operator: EPUB books → the per-chapter text table; any ZIP, OCF
     * or XML damage quarantines the whole book. Map-only, zero shuffles.
     */

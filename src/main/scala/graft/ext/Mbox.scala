@@ -392,28 +392,6 @@ object Mbox {
     }.toSeq
   }
 
-  /** [[mboxExtract]] for an ARCHIVE STREAM: the input carries an event
-    * time (`archive_id, ts, mbox`) every extracted message inherits —
-    * mail genuinely arrives as a stream, so this is the family's most
-    * natural twin. Stateless flatMap over the SAME parse as the batch
-    * path; the streaming composition lives in
-    * [[graft.streaming.StreamingArchiveIngest.ingestMbox]].
-    */
-  def mboxExtractWithTs(archives: DataFrame): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("mbox").cast("string"))
-      .as[(Long, java.sql.Timestamp, String)]
-      .flatMap { case (aid, ts, mbox) =>
-        try {
-          if (mbox == null) Nil
-          else parseMbox(aid, mbox).map(e => (e.archive_id, ts, e.msg_idx, e.doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   // ---------------------------------------------------- standalone .eml
 
   /** Fixture writer: one standalone RFC 5322 .eml file per document —

@@ -377,27 +377,6 @@ object Odt {
     }
   }
 
-  /** [[odtExtract]] for a DOCUMENT STREAM — the [[Docx.docxExtractWithTs]]
-    * shape for the shared watermarked ingest reduction. Stateless
-    * flatMap; the composition lives in
-    * [[graft.streaming.StreamingArchiveIngest.ingestOdt]].
-    */
-  def odtExtractWithTs(docs: DataFrame, maxEntryBytes: Int = 1 << 26): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        try {
-          if (payload == null) Nil
-          else parseOdt(id, payload, maxEntryBytes)
-            .map(p => (id % 16, ts, p.para_idx, id, p.n_chars))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** The operator: ODT documents → the per-paragraph text table; any ZIP,
     * package or XML damage quarantines the whole document. Map-only,
     * zero shuffles.

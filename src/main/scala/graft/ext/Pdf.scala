@@ -2076,28 +2076,6 @@ object Pdf {
   private[ext] def parsePdfSafe(id: Long, bytes: Array[Byte]): Seq[PdfPage] =
     try parsePdf(id, bytes) catch { case scala.util.control.NonFatal(_) => Nil }
 
-  /** [[pdfExtract]] for a BOOK STREAM: `(doc_id, ts, payload)` rows, each
-    * page inheriting its book's event time — the shape the shared
-    * watermarked ingest reduction consumes (books shard by `doc_id % 16`,
-    * the unit a conversion fleet writes). Stateless flatMap, so it runs
-    * identically under batch and Structured Streaming; the composition
-    * lives in [[graft.streaming.StreamingArchiveIngest.ingestPdf]].
-    */
-  def pdfExtractWithTs(books: DataFrame): DataFrame = {
-    val spark = books.sparkSession
-    import spark.implicits._
-    books
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        try {
-          if (payload == null) Nil
-          else parsePdf(id, payload).map(p => (id % 16, ts, p.page_idx, id, p.n_chars))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** The operator: PDF documents → the per-page text table; any structural
     * damage quarantines the whole document. Map-only, zero shuffles.
     */

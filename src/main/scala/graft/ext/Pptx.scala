@@ -333,26 +333,6 @@ object Pptx {
     }
   }
 
-  /** [[pptxExtract]] for a DECK STREAM — the shared watermarked ingest
-    * shape; composition in
-    * [[graft.streaming.StreamingArchiveIngest.ingestPptx]].
-    */
-  def pptxExtractWithTs(decks: DataFrame, maxEntryBytes: Int = 1 << 26): DataFrame = {
-    val spark = decks.sparkSession
-    import spark.implicits._
-    decks
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        try {
-          if (payload == null) Nil
-          else parsePptx(id, payload, maxEntryBytes)
-            .map(s => (id % 16, ts, s.slide_idx, id, s.n_chars))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** The operator: PPTX decks → the per-slide text table; any ZIP, OPC
     * or XML damage quarantines the whole deck. Map-only, zero shuffles.
     */

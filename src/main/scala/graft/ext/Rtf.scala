@@ -320,25 +320,6 @@ object Rtf {
     }
   }
 
-  /** [[rtfExtract]] for a DOCUMENT STREAM — the shared watermarked
-    * ingest shape; composition in
-    * [[graft.streaming.StreamingArchiveIngest.ingestRtf]].
-    */
-  def rtfExtractWithTs(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        try {
-          if (payload == null) Nil
-          else parseRtf(id, payload).map(p => (id % 16, ts, p.para_idx, id, p.n_chars))
-        } catch { case scala.util.control.NonFatal(_) => Nil } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** The operator: RTF documents → the per-paragraph text table; any
     * structural damage quarantines the whole document. Map-only.
     */

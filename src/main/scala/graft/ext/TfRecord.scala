@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: map-only demux per archive; at 100 TB a TFRecord shard
   * is the unit a data loader requests, and this reader is the
-  * validation pass in front of it. Streaming twin:
-  * [[graft.streaming.StreamingArchiveIngest.ingestTfrecord]] — shards
-  * land continuously from a conversion fleet.
+  * validation pass in front of it.
   *
   * No reference citation — the reference has no ingest path;
   * north-star scope.
@@ -148,25 +146,5 @@ object TfRecord {
         try demux(aid, payload, maxRecordBytes)
         catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
       }
-  }
-
-  /** [[tfrecordExtract]] for a SHARD STREAM (archive_id, ts, payload) —
-    * the streaming-twin flatMap; composition in
-    * [[graft.streaming.StreamingArchiveIngest.ingestTfrecord]].
-    */
-  def tfrecordExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, payload) =>
-        try {
-          if (payload == null) Vector.empty
-          else demux(aid, payload, maxRecordBytes)
-            .map(e => (e.archive_id, ts, e.rec_idx, e.rec_doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
   }
 }

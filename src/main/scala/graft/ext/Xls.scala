@@ -363,25 +363,6 @@ object Xls {
     try parseXls(id, Option(bytes).getOrElse(Array.empty))
     catch { case _: MalformedXls => Seq.empty }
 
-  /** Streaming-twin row shape: (archive_id, ts, rec_idx, rec_doc_id,
-    * content_length) — string cells contribute their UTF-8 length,
-    * numeric cells their 8 stored bytes.
-    */
-  def xlsCellsWithTs(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        parseXlsSafe(id, payload).zipWithIndex.map { case (c, i) =>
-          val len = c.s_val.map(_.getBytes("UTF-8").length.toLong).getOrElse(8L)
-          (id % 16, ts, i.toLong, id, len)
-        }
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
-
   /** `xls_cells`: every cell of every legacy workbook. Map-only. */
   def xlsCells(docs: DataFrame, idCol: String = "doc_id",
                binCol: String = "payload"): Dataset[XlsCell] = {

@@ -1067,25 +1067,4 @@ object Xz {
         catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
       }
   }
-
-  /** [[xzExtract]] for an ARCHIVE STREAM — the `.xz` member of the
-    * streaming-ingest twin family (same demux as batch, event time
-    * inherited per record; composition in
-    * [[graft.streaming.StreamingArchiveIngest.ingestXz]]).
-    */
-  def xzExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, payload) =>
-        try {
-          if (payload == null) Vector.empty
-          else demuxXzArchive(aid, payload, maxRecordBytes)
-            .map(e => (e.archive_id, ts, e.rec_idx, e.rec_doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
-  }
 }

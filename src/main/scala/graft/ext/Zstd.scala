@@ -1672,15 +1672,8 @@ object Zstd {
       out.toByteArray
     }
 
-  /** Demux + decode a multi-frame zstd archive column: each (skippable
-    * id frame, data frame) pair becomes one record row with the decoded
-    * length and base-31 checksum. Damage quarantines the WHOLE archive
-    * (the archive-family contract — a half-read archive is worse than a
-    * reported missing one). Map-only flatMap.
-    */
-  /** The shared demux loop: (skippable id frame, data frame) pairs to
-    * records, THROWING on any damage so each caller applies the
-    * archive-family quarantine at its own granularity.
+  /** The demux loop: (skippable id frame, data frame) pairs to records,
+    * THROWING on any damage; [[zstExtract]] quarantines the archive.
     */
   private def demuxZstArchive(aid: Long, payload: Array[Byte],
       maxRecordBytes: Int): Vector[ZstEntry] = {
@@ -1710,6 +1703,12 @@ object Zstd {
     entries.result()
   }
 
+  /** Demux + decode a multi-frame zstd archive column: each (skippable
+    * id frame, data frame) pair becomes one record row with the decoded
+    * length and base-31 checksum. Damage quarantines the WHOLE archive
+    * (the archive-family contract — a half-read archive is worse than a
+    * reported missing one). Map-only flatMap.
+    */
   def zstExtract(archives: DataFrame, maxRecordBytes: Int = 1 << 26): Dataset[ZstEntry] = {
     val spark = archives.sparkSession
     import spark.implicits._
@@ -1720,29 +1719,6 @@ object Zstd {
         try demuxZstArchive(aid, payload, maxRecordBytes)
         catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
       }
-  }
-
-  /** [[zstExtract]] for an ARCHIVE STREAM: the input carries an event
-    * time (`archive_id, ts, payload`) that every extracted record
-    * inherits — the [[graft.ext.Archives.warcExtractWithTs]] twin for
-    * `.zst` segment files. Stateless flatMap over the SAME demux, so
-    * batch and stream cannot diverge on what a record is; the streaming
-    * composition lives in [[graft.streaming.StreamingArchiveIngest]].
-    */
-  def zstExtractWithTs(archives: DataFrame, maxRecordBytes: Int = 1 << 26): DataFrame = {
-    val spark = archives.sparkSession
-    import spark.implicits._
-    archives
-      .select(col("archive_id").cast("long"), col("ts").cast("timestamp"), col("payload"))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (aid, ts, payload) =>
-        try {
-          if (payload == null) Vector.empty
-          else demuxZstArchive(aid, payload, maxRecordBytes)
-            .map(e => (e.archive_id, ts, e.rec_idx, e.rec_doc_id, e.n_bytes))
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty } // quarantine
-      }
-      .toDF("archive_id", "ts", "rec_idx", "rec_doc_id", "content_length")
   }
 
   /** Compress-then-decode round trip per document — the `deflate_

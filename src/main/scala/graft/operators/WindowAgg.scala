@@ -8,25 +8,22 @@ import graft.model.{Metric, WindowAggregate}
 /** Keyed tumbling-window AVG/MAX (O4/O5,
   * /root/reference/src/flinkarima.py:261-281, :418-428).
   *
-  * The reference uses processing-time tumbling windows; records carry usable
-  * epoch-millis event times, so the idiomatic (and strictly better-behaved)
-  * Spark port is an event-time window with a zero-lateness watermark
-  * (deliberate semantic upgrade, SURVEY §1.4/§7.5.1). The window result keeps
-  * the reference's `event_time` semantics: max element event time, falling
+  * Batch only, with the sliding and session variants the catalog
+  * registers. The reference uses processing-time tumbling windows; records
+  * carry usable epoch-millis event times, so the Spark port windows on
+  * event time (SURVEY §1.4/§7.5.1); the streaming job's zero-lateness
+  * windows live in [[NodePipeline]]. The window result keeps the
+  * reference's `event_time` semantics: max element event time, falling
   * back to the window end when every element's timestamp was 0
   * (flinkarima.py:267-280).
   *
-  * Scale: this is Spark's incremental streaming hash aggregation — partial
-  * aggregates in the state store, map-side combine before the shuffle — an
-  * improvement over the reference's buffer-all ProcessWindowFunction.
+  * Scale: Spark's hash aggregation with map-side combine before the
+  * shuffle — an improvement over the reference's buffer-all
+  * ProcessWindowFunction.
   */
 object WindowAgg {
 
-  /** Streaming variant (requires watermark for Append output). */
-  def streaming(metrics: Dataset[Metric], windowMillis: Long = 300000L): Dataset[WindowAggregate] =
-    agg(metrics, windowMillis, stream = true)
-
-  /** Batch variant (same expressions, no watermark).
+  /** Tumbling windows of `windowMillis` per node.
     *
     * `exactMean = true` computes the window mean via an exact decimal sum
     * (metric cpus are 2-decimal by the reference's own rounding,
@@ -35,29 +32,31 @@ object WindowAgg {
     * oracle engine. Plain double `avg` is partition-order dependent in its
     * last ulp.
     */
-  def batch(metrics: Dataset[Metric], windowMillis: Long = 300000L, exactMean: Boolean = false): Dataset[WindowAggregate] =
-    agg(metrics, windowMillis, stream = false, exactMean)
+  def batch(metrics: Dataset[Metric], windowMillis: Long = 300000L, exactMean: Boolean = false): Dataset[WindowAggregate] = {
+    import metrics.sparkSession.implicits._
+    metrics.withColumn("ts", timestamp_millis($"eventTime"))
+      .groupBy(window($"ts", s"$windowMillis milliseconds"), $"nodeId")
+      .agg(cpuMean(exactMean).as("cpu"), max($"eventTime").as("maxTs"))
+      .select(
+        $"nodeId",
+        $"cpu",
+        when($"maxTs" === 0L, unix_millis($"window.end")).otherwise($"maxTs").as("eventTime"))
+      .as[WindowAggregate]
+  }
 
   /** Sliding (hopping) windows: width `windowMillis`, hop `slideMillis` —
-    * each element lands in windowMillis/slideMillis windows. Batch by
-    * default; pass `watermark = Some(delay)` on a streaming input (Append
-    * mode emits each window once the watermark passes its end). Output keeps
+    * each element lands in windowMillis/slideMillis windows. Output keeps
     * the window start for identity since windows overlap.
     */
   def sliding(
       metrics: Dataset[Metric],
       windowMillis: Long,
       slideMillis: Long,
-      exactMean: Boolean = false,
-      watermark: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      exactMean: Boolean = false): org.apache.spark.sql.DataFrame = {
     import metrics.sparkSession.implicits._
-    val mean =
-      if (exactMean) sum($"cpu".cast("decimal(18,2)")).cast("double") / count(lit(1))
-      else avg($"cpu")
-    val withTs = metrics.withColumn("ts", timestamp_millis($"eventTime"))
-    watermark.fold(withTs)(w => withTs.withWatermark("ts", w))
+    metrics.withColumn("ts", timestamp_millis($"eventTime"))
       .groupBy(window($"ts", s"$windowMillis milliseconds", s"$slideMillis milliseconds"), $"nodeId")
-      .agg(mean.as("cpu"), max($"eventTime").as("maxTs"), count(lit(1)).as("n"))
+      .agg(cpuMean(exactMean).as("cpu"), max($"eventTime").as("maxTs"), count(lit(1)).as("n"))
       .select(
         $"nodeId",
         unix_millis($"window.start").as("windowStart"),
@@ -67,18 +66,11 @@ object WindowAgg {
   }
 
   /** Session windows: events for a key closer than `gapMillis` merge into one
-    * session [first, last + gap). Uses Structured Streaming's
-    * `session_window` directly, so the same expression runs in batch
-    * (default) and — with `watermark = Some(delay)` — streaming, where
-    * Append mode emits a session once the watermark passes its end.
+    * session [first, last + gap), via Spark's `session_window`.
     */
-  def sessions(
-      metrics: Dataset[Metric],
-      gapMillis: Long,
-      watermark: Option[String] = None): org.apache.spark.sql.DataFrame = {
+  def sessions(metrics: Dataset[Metric], gapMillis: Long): org.apache.spark.sql.DataFrame = {
     import metrics.sparkSession.implicits._
-    val withTs = metrics.withColumn("ts", timestamp_millis($"eventTime"))
-    watermark.fold(withTs)(w => withTs.withWatermark("ts", w))
+    metrics.withColumn("ts", timestamp_millis($"eventTime"))
       .groupBy(session_window($"ts", s"$gapMillis milliseconds"), $"nodeId")
       .agg(count(lit(1)).as("n"), max($"eventTime").as("lastTs"))
       .select(
@@ -89,20 +81,7 @@ object WindowAgg {
         $"lastTs")
   }
 
-  private def agg(metrics: Dataset[Metric], windowMillis: Long, stream: Boolean, exactMean: Boolean = false): Dataset[WindowAggregate] = {
-    import metrics.sparkSession.implicits._
-    val withTs = metrics.withColumn("ts", timestamp_millis($"eventTime"))
-    val marked = if (stream) withTs.withWatermark("ts", "0 seconds") else withTs
-    val mean =
-      if (exactMean) sum($"cpu".cast("decimal(18,2)")).cast("double") / count(lit(1))
-      else avg($"cpu")
-    marked
-      .groupBy(window($"ts", s"$windowMillis milliseconds"), $"nodeId")
-      .agg(mean.as("cpu"), max($"eventTime").as("maxTs"))
-      .select(
-        $"nodeId",
-        $"cpu",
-        when($"maxTs" === 0L, unix_millis($"window.end")).otherwise($"maxTs").as("eventTime"))
-      .as[WindowAggregate]
-  }
+  private def cpuMean(exact: Boolean) =
+    if (exact) sum(col("cpu").cast("decimal(18,2)")).cast("double") / count(lit(1))
+    else avg(col("cpu"))
 }

@@ -334,6 +334,19 @@ class ArchivesSpec extends AnyFunSuite {
     // unknown coding quarantines
     assert(Archives.warcHttpEncExtract(
       archiveOf(msgOf("Content-Encoding: zstd\r\n", body))).collect().isEmpty)
+    // a six-record archive (ids cycle all four coding arms) with one byte
+    // flipped mid-stream drops whole; its neighbour decodes in full
+    val texts = (0L until 12L).map(i => (i, s"coded streamed document $i with some body text"))
+    val coded = Archives.encodeWarcHttpEncodedArchives(texts.toDF("doc_id", "text"), nArchives = 2)
+      .as[(Long, Array[Byte])].collect().map { case (aid, p) =>
+        if (aid == 1L) { val q = p.clone(); q(q.length / 2) = (q(q.length / 2) ^ 0x7f).toByte; (aid, q) }
+        else (aid, p)
+      }
+    val left = Archives.warcHttpEncExtract(coded.toSeq.toDF("archive_id", "payload")).collect()
+    assert(left.map(_.archive_id).toSet == Set(0L) && left.length == 6)
+    assert(left.map(_.body_len).sum ==
+      texts.collect { case (i, t) if i % 2 == 0 => t.getBytes("UTF-8").length.toLong }.sum,
+      "decoded, not on-the-wire, body lengths")
   }
 
   test("codec fuzz: corrupted and truncated streams across all four new codecs fail cleanly") {

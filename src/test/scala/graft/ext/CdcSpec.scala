@@ -75,35 +75,6 @@ class CdcSpec extends AnyFunSuite {
     assert(again == out.toSet)
   }
 
-  test("streamingChunkDedup: only first-seen chunks pass across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rnd = new scala.util.Random(15)
-    val body = (0 until 1200).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = input.toDF().toDF("doc_id", "ts", "text")
-    val query = Cdc.streamingChunkDedup(docs, watermarkDelay = "10 minutes")
-      .writeStream.format("memory").queryName("cdc_stream_out").outputMode("append").start()
-    try {
-      def ts(m: Int) = new java.sql.Timestamp(m * 60000L)
-      input.addData((1L, ts(1), body))
-      query.processAllAvailable()
-      val firstCount = spark.table("cdc_stream_out").count()
-      val batchChunks = Cdc.chunkBytes(body.getBytes("UTF-8"), 64L)
-      assert(firstCount == batchChunks.length.toLong,
-        "first sight: every chunk is new, and streaming cuts the SAME boundaries as batch")
-      // a shifted re-upload minutes later: only the re-synchronization
-      // prefix produces new chunks, the shared tail is suppressed
-      input.addData((2L, ts(3), "PREFIX-" + body))
-      query.processAllAvailable()
-      val total = spark.table("cdc_stream_out").count()
-      val newFromDoc2 = total - firstCount
-      assert(newFromDoc2 >= 1, "the modified prefix must surface")
-      assert(newFromDoc2 < batchChunks.length / 2,
-        s"the shared tail must be suppressed (got $newFromDoc2 of ~${batchChunks.length})")
-    } finally query.stop()
-  }
-
   test("chunkDedup: planted duplicate content collapses across documents") {
     val rnd = new scala.util.Random(9)
     val shared = (0 until 800).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString

@@ -27,18 +27,25 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("MG guarantee under reduce+merge: undercount <= n/(k+1), heavy terms always present") {
-    val agg = new MisraGriesAggregator(16)
-    val stream = zipfStream(terms = 200, scale = 3000)
-    val n = stream.length
-    val truth = stream.groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val est = sketchOf(agg, stream.grouped(500).toSeq)
-    assert(est.size <= 16, s"sketch overflowed: ${est.size} entries")
-    val slack = n.toDouble / 17
-    est.foreach { case (t, c) =>
-      assert(c <= truth(t) && c >= truth(t) - slack, s"$t: est $c vs true ${truth(t)}, slack $slack")
+    // two heavy terms over an 800-term uniform tail that keeps evicting
+    val rng = new scala.util.Random(13)
+    val adversarial = (1 to 3000).map { _ =>
+      val r = rng.nextDouble()
+      if (r < 0.3) "h1" else if (r < 0.5) "h2" else s"tail${rng.nextInt(800)}"
     }
-    truth.filter(_._2 > slack).keys.foreach { t =>
-      assert(est.contains(t), s"heavy term $t (freq ${truth(t)} > $slack) evicted")
+    for ((k, stream) <- Seq(16 -> zipfStream(terms = 200, scale = 3000), 8 -> adversarial)) {
+      val agg = new MisraGriesAggregator(k)
+      val n = stream.length
+      val truth = stream.groupBy(identity).view.mapValues(_.length.toLong).toMap
+      val est = sketchOf(agg, stream.grouped(500).toSeq)
+      assert(est.size <= k, s"sketch overflowed: ${est.size} entries")
+      val slack = n.toDouble / (k + 1)
+      est.foreach { case (t, c) =>
+        assert(c <= truth(t) && c >= truth(t) - slack, s"$t: est $c vs true ${truth(t)}, slack $slack")
+      }
+      truth.filter(_._2 > slack).keys.foreach { t =>
+        assert(est.contains(t), s"heavy term $t (freq ${truth(t)} > $slack) evicted")
+      }
     }
   }
 

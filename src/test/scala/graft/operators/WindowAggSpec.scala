@@ -28,57 +28,6 @@ class WindowAggSpec extends AnyFunSuite {
     assert(out.head.eventTime == 300000L) // end of window [0, 300000)
   }
 
-  test("streaming: watermarked windows emit once closed, drop late data") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Metric]
-    val query = WindowAgg.streaming(input.toDS(), windowMillis = 60000L)
-      .writeStream.format("memory").queryName("wagg_out").outputMode("append").start()
-    try {
-      // window [0, 60s) data, then an event in the next window advances the
-      // zero-lateness watermark past the first window -> it emits
-      input.addData(Seq(Metric("a", 10.0, 10000L), Metric("a", 30.0, 20000L)))
-      query.processAllAvailable()
-      assert(spark.table("wagg_out").count() == 0, "open window must not emit under Append")
-      input.addData(Seq(Metric("a", 99.0, 61000L)))
-      query.processAllAvailable()
-      input.addData(Seq(Metric("a", 7.0, 30000L))) // late for the closed window: dropped
-      input.addData(Seq(Metric("a", 1.0, 121000L))) // closes [60s, 120s)
-      query.processAllAvailable()
-      val rows = spark.table("wagg_out").as[graft.model.WindowAggregate].collect().sortBy(_.eventTime)
-      assert(rows.map(w => (w.cpu, w.eventTime)).toSeq == Seq((20.0, 20000L), (99.0, 61000L)))
-    } finally query.stop()
-  }
-
-  test("streaming session windows: gap merge, watermark-gated emission, new session after gap") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Metric]
-    val query = WindowAgg.sessions(input.toDS(), gapMillis = 10000L, watermark = Some("0 seconds"))
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      // three events within the 10s gap -> ONE session [5s, 22s + 10s)
-      input.addData(Seq(Metric("a", 1.0, 5000L), Metric("a", 1.0, 12000L), Metric("a", 1.0, 22000L)))
-      query.processAllAvailable()
-      assert(spark.table("sess_out").count() == 0,
-        "open session must not emit under Append before the watermark passes its end")
-      // an event 10s+ past the session end advances the watermark -> emits;
-      // it also STARTS a new session
-      input.addData(Seq(Metric("a", 1.0, 60000L)))
-      query.processAllAvailable()
-      val first = spark.table("sess_out")
-        .select("nodeId", "sessionStart", "sessionEnd", "n")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(first == Set(("a", 5000L, 32000L, 3L)), s"got $first")
-      // close the second session too
-      input.addData(Seq(Metric("a", 1.0, 120000L)))
-      query.processAllAvailable()
-      val all = spark.table("sess_out").select("sessionStart", "n")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(all.contains((60000L, 1L)), s"second session missing: $all")
-    } finally query.stop()
-  }
-
   test("exactMean equals plain mean on 2-decimal inputs") {
     import spark.implicits._
     val rng = new scala.util.Random(3)

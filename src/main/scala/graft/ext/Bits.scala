@@ -70,6 +70,23 @@ import java.util.zip.{Adler32, CRC32, CRC32C}
   * pack/unpack loops in [[ParquetFile]] and [[BitPack]] run a whole
   * block at one fixed width. None reads plain bytes one field at a
   * time.
+  *
+  * Prefix codes: [[PrefixCode]] is the canonical code of RFC 1951
+  * §3.2.2 (codes by ascending length, then in listed symbol order) with
+  * its bit-at-a-time decoder and its per-symbol codes, and
+  * [[huffmanDepths]] is the one Huffman tree build. Deflate (inflate and
+  * [[Multimodal.deflateDynamic]]), WebP lossless, Brotli and bzip2 use
+  * both; zstd's literal encoder reaches the tree build through
+  * [[Multimodal.huffmanLengths]]. Each format keeps its own rules at
+  * the call site: inflate rejects over-subscribed codes, WebP accepts
+  * only complete codes with lengths 0..15, Brotli keeps its 32/32768
+  * space accounting and bzip2 its 1..23 length bound; each length limit
+  * loop (deflate and zstd halve to a floor of 1, Brotli and bzip2 take
+  * `w / 2 + 1`) stays with its encoder. Left out: the JPEG entropy
+  * decoder (its reader undoes 0xFF stuffing, so it is no
+  * [[BitReader]]), zstd's X1 decode table (a weight-ordered canonical
+  * order, read by table lookup from a backward stream) and WebP's
+  * `buildLengths` (a flat two-length code, no tree).
   */
 object Bits {
 
@@ -328,5 +345,149 @@ object Bits {
         nb += n
         while (nb >= 8) { nb -= 8; store(acc >>> nb) }
       }
+  }
+
+  // ------------------------------------------------------ prefix codes
+
+  /** The canonical prefix code over `symbols(i)` of length `lengths(i)`
+    * (0..31; 0 is unused): codes are assigned by ascending length and,
+    * within a length, in listed order. The code is built as given; what
+    * a format must reject (an over-subscribed or incomplete code, a
+    * length out of its range) it rejects from [[slack]] and its own
+    * bounds.
+    */
+  final class PrefixCode private (symbols: Array[Int], lengths: Array[Int], single: Boolean) {
+    private val maxLen = java.util.Arrays.stream(lengths).max.orElse(0)
+    private val count = new Array[Int](maxLen + 1) // codes per length; count(0) is 1 for `single`
+    // the codes of length l end below limit(l), and code c of length l
+    // is the symbol sorted(c + offset(l)); a code never starts below the
+    // first code of its length, so one compare per bit finds its end
+    private val limit = new Array[Int](maxLen + 1)
+    private val offset = new Array[Int](maxLen + 1)
+    private val sorted: Array[Int] = { // the symbols in code order
+      var i = 0
+      while (i < lengths.length) { if (lengths(i) > 0 || single) count(lengths(i)) += 1; i += 1 }
+      val at = new Array[Int](maxLen + 1) // the next slot of each length
+      var first = 0
+      var index = 0
+      var l = 0
+      while (l <= maxLen) {
+        at(l) = index
+        offset(l) = index - first
+        limit(l) = first + count(l)
+        index += count(l)
+        first = (first + count(l)) << 1
+        l += 1
+      }
+      val out = new Array[Int](index)
+      i = 0
+      while (i < lengths.length) {
+        val l = lengths(i)
+        if (l > 0 || single) { out(at(l)) = symbols(i); at(l) += 1 }
+        i += 1
+      }
+      out
+    }
+
+    /** The Kraft space left at the deepest length: 0 for a complete
+      * code, > 0 for an incomplete one, < 0 for an over-subscribed one.
+      */
+    val slack: Long = {
+      var left = 1L - count(0)
+      var l = 1
+      while (l <= maxLen) { left = 2 * left - count(l); l += 1 }
+      left
+    }
+
+    // One decode per bit order: each format reads through its own
+    // reader subclass, so a shared decode over `BitReader` would call the
+    // abstract `read` once per bit, megamorphic when three formats run in
+    // one JVM, where each order's final `read` is a direct call.
+
+    /** One symbol, one `read(1)` per code bit, most significant code
+      * bit first; `br.fail()` when no code of up to the deepest length
+      * matches. An over-subscribed code decodes to its first match.
+      */
+    def decode(br: LsbReader): Int = {
+      var code = 0
+      var len = 0
+      while (code >= limit(len)) {
+        if (len == maxLen) br.fail()
+        code = (code << 1) | br.read(1)
+        len += 1
+      }
+      sorted(code + offset(len))
+    }
+
+    /** [[decode]] from an MSB-first stream (bzip2). */
+    def decode(br: MsbReader): Int = {
+      var code = 0
+      var len = 0
+      while (code >= limit(len)) {
+        if (len == maxLen) br.fail()
+        code = (code << 1) | br.read(1)
+        len += 1
+      }
+      sorted(code + offset(len))
+    }
+
+    /** The code of each symbol, indexed by symbol (0 where unused), for
+      * [[LsbWriter.putCode]] and [[MsbWriter.put]].
+      */
+    lazy val codes: Array[Int] = {
+      val out = new Array[Int](java.util.Arrays.stream(symbols).max.orElse(-1) + 1)
+      var k = 0
+      var l = 0
+      while (l <= maxLen) {
+        val end = k + count(l)
+        while (k < end) { out(sorted(k)) = k - offset(l); k += 1 }
+        l += 1
+      }
+      out
+    }
+  }
+
+  object PrefixCode {
+    def apply(symbols: Array[Int], lengths: Array[Int]): PrefixCode =
+      new PrefixCode(symbols, lengths, single = false)
+
+    /** Over per-symbol lengths: symbol `s` has length `lengths(s)`. */
+    def apply(lengths: Array[Int]): PrefixCode =
+      new PrefixCode(Array.range(0, lengths.length), lengths, single = false)
+
+    /** The one-symbol code, which reads zero bits. */
+    def single(sym: Int): PrefixCode = new PrefixCode(Array(sym), Array(0), single = true)
+  }
+
+  /** The leaf depths of a Huffman tree over `weights` (each > 0); one
+    * weight gets depth 1. Two queues: the leaves sorted by weight (ties
+    * in index order) and the internal nodes in the order they are made;
+    * a leaf goes before an internal node of the same weight. A format's
+    * length limit (rebuild with reduced weights until the deepest leaf
+    * fits) stays with its encoder.
+    */
+  def huffmanDepths(weights: Array[Long]): Array[Int] = {
+    val m = weights.length
+    if (m <= 1) return Array.fill(m)(1)
+    val order = (0 until m).sortBy(weights(_)).toArray
+    val weight = java.util.Arrays.copyOf(weights, 2 * m - 1)
+    val parent = new Array[Int](2 * m - 1)
+    var qa = 0 // next leaf in `order`
+    var qb = m // first internal node not yet taken
+    var next = m // next internal node
+    def takeMin(): Int =
+      if (qa < m && (qb == next || weight(order(qa)) <= weight(qb))) { qa += 1; order(qa - 1) }
+      else { qb += 1; qb - 1 }
+    while (next < 2 * m - 1) {
+      val a = takeMin(); val b = takeMin()
+      weight(next) = weight(a) + weight(b)
+      parent(a) = next; parent(b) = next
+      next += 1
+    }
+    // a parent is made after its children: one pass down from the root
+    val depth = new Array[Int](2 * m - 1)
+    var i = 2 * m - 3
+    while (i >= 0) { depth(i) = depth(parent(i)) + 1; i -= 1 }
+    java.util.Arrays.copyOf(depth, m)
   }
 }

@@ -123,72 +123,18 @@ object Brotli {
 
   // RFC 7932 §1.5: values are LSB-first ([[Bits.LsbReader]]); prefix
   // codes go most significant code bit first, one `read(1)` per code
-  // bit in [[PrefixCode.decode]].
+  // bit in [[Bits.PrefixCode.decode]].
 
   /** Byte-align; the discarded pad bits must be zero (RFC §9.1). */
   private def alignZero(br: Bits.LsbReader): Unit = if (br.alignByte() != 0) fail()
 
   // ----------------------------------------------------- prefix decoding
 
-  /** Canonical prefix code over symbols listed with their code lengths;
-    * canonical codes are assigned grouped by ascending length, STABLE in
-    * the listed order (complex codes list symbols in increasing id, the
-    * simple-code sorting rules define their own order). Decoding walks
-    * bit-by-bit, most-significant code bit first.
-    */
-  private final class PrefixCode(syms: Array[Int], lens: Array[Int]) {
-    private val maxLen = { var m = 0; var i = 0; while (i < lens.length) { if (lens(i) > m) m = lens(i); i += 1 }; m }
-    val isSingle: Boolean = maxLen == 0
-    private val singleSym: Int = if (syms.length > 0) syms(0) else 0
-    // per length: first canonical code, number of codes, symbol slice
-    private val count = new Array[Int](maxLen + 1)
-    private val firstCode = new Array[Int](maxLen + 1)
-    private val offset = new Array[Int](maxLen + 1)
-    private val ordered = new Array[Int](syms.length)
-    locally {
-      if (!isSingle) {
-        var i = 0
-        while (i < lens.length) { if (lens(i) > 0) count(lens(i)) += 1; i += 1 }
-        var code = 0
-        var len = 1
-        var off = 0
-        while (len <= maxLen) {
-          firstCode(len) = code
-          offset(len) = off
-          code = (code + count(len)) << 1
-          off += count(len)
-          len += 1
-        }
-        // Kraft exactness was validated by the callers; fill symbols stably
-        val fill = new Array[Int](maxLen + 1)
-        i = 0
-        while (i < lens.length) {
-          val l = lens(i)
-          if (l > 0) { ordered(offset(l) + fill(l)) = syms(i); fill(l) += 1 }
-          i += 1
-        }
-      }
-    }
-    def decode(br: Bits.LsbReader): Int = {
-      if (isSingle) return singleSym
-      var code = 0
-      var len = 0
-      while (true) {
-        code = (code << 1) | br.read(1)
-        len += 1
-        if (len > maxLen) fail()
-        if (len <= maxLen && count(len) > 0 && code - firstCode(len) < count(len))
-          return ordered(offset(len) + (code - firstCode(len)))
-      }
-      fail()
-    }
-  }
-
   /** The fixed meta-code for code-length code lengths (RFC §3.5):
     * symbols 0..5 with lengths 2,4,3,2,2,4.
     */
-  private lazy val metaCode: PrefixCode =
-    new PrefixCode(Array(0, 3, 4, 2, 1, 5), Array(2, 2, 2, 3, 4, 4))
+  private val MetaLens = Array(2, 4, 3, 2, 2, 4)
+  private val metaCode = Bits.PrefixCode(MetaLens)
 
   private val ClOrder = Array(1, 2, 3, 4, 0, 5, 17, 6, 16, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
@@ -196,7 +142,7 @@ object Brotli {
     * complex serialization (RFC §3.4/3.5), with strict space accounting
     * at both the code-length-code and symbol level.
     */
-  private def readPrefixCode(br: Bits.LsbReader, alphabetSize: Int): PrefixCode = {
+  private def readPrefixCode(br: Bits.LsbReader, alphabetSize: Int): Bits.PrefixCode = {
     val hskip = br.read(2)
     if (hskip == 1) {
       // ---- simple code
@@ -215,16 +161,16 @@ object Brotli {
       def sw(a: Int, b: Int): Unit =
         if (syms(a) > syms(b)) { val t = syms(a); syms(a) = syms(b); syms(b) = t }
       nsym match {
-        case 1 => new PrefixCode(syms, Array(0))
-        case 2 => sw(0, 1); new PrefixCode(syms, Array(1, 1))
-        case 3 => sw(1, 2); new PrefixCode(syms, Array(1, 2, 2))
+        case 1 => Bits.PrefixCode.single(syms(0))
+        case 2 => sw(0, 1); Bits.PrefixCode(syms, Array(1, 1))
+        case 3 => sw(1, 2); Bits.PrefixCode(syms, Array(1, 2, 2))
         case _ =>
           if (br.read(1) == 0) { // flat 2,2,2,2
             sw(0, 1); sw(2, 3); sw(0, 2); sw(1, 3); sw(1, 2)
-            new PrefixCode(syms, Array(2, 2, 2, 2))
+            Bits.PrefixCode(syms, Array(2, 2, 2, 2))
           } else { // 1,2,3,3: only the two deepest sorted
             sw(2, 3)
-            new PrefixCode(syms, Array(1, 2, 3, 3))
+            Bits.PrefixCode(syms, Array(1, 2, 3, 3))
           }
       }
     } else {
@@ -242,18 +188,8 @@ object Brotli {
       if (space > 32) fail()
       if (space < 32 && numNonZero != 1) fail()
       val clCode =
-        if (numNonZero == 1) {
-          var s = 0
-          var k = 0
-          while (k < 18) { if (clLens(k) != 0) s = k; k += 1 }
-          new PrefixCode(Array(s), Array(0))
-        } else {
-          val syms = Array.newBuilder[Int]
-          val lens = Array.newBuilder[Int]
-          var k = 0
-          while (k < 18) { if (clLens(k) != 0) { syms += k; lens += clLens(k) }; k += 1 }
-          new PrefixCode(syms.result(), lens.result())
-        }
+        if (numNonZero == 1) Bits.PrefixCode.single(clLens.indexWhere(_ != 0))
+        else Bits.PrefixCode(clLens)
       // ---- now the symbol code lengths with 16/17 repeats
       val symLens = new Array[Int](alphabetSize)
       var space2 = 0
@@ -291,14 +227,8 @@ object Brotli {
         var k = 0
         while (k < alphabetSize) { if (symLens(k) != 0) { nz = k; n += 1 }; k += 1 }
         if (n != 1) fail()
-        new PrefixCode(Array(nz), Array(0))
-      } else {
-        val syms = Array.newBuilder[Int]
-        val lens = Array.newBuilder[Int]
-        var k = 0
-        while (k < alphabetSize) { if (symLens(k) != 0) { syms += k; lens += symLens(k) }; k += 1 }
-        new PrefixCode(syms.result(), lens.result())
-      }
+        Bits.PrefixCode.single(nz)
+      } else Bits.PrefixCode(symLens)
     }
   }
 
@@ -319,7 +249,7 @@ object Brotli {
     }
   }
 
-  private final class BlockState(val n: Int, tCode: PrefixCode, cCode: PrefixCode,
+  private final class BlockState(val n: Int, tCode: Bits.PrefixCode, cCode: Bits.PrefixCode,
       br: Bits.LsbReader) {
     var btype = 0
     var prev = 1
@@ -502,14 +432,14 @@ object Brotli {
             val cmapL = readContextMap(br, 64 * bsL.n, ntreesL)
             val ntreesD = readTypeCount(br)
             val cmapD = readContextMap(br, 4 * bsD.n, ntreesD)
-            val litCodes = new Array[PrefixCode](ntreesL)
+            val litCodes = new Array[Bits.PrefixCode](ntreesL)
             i = 0
             while (i < ntreesL) { litCodes(i) = readPrefixCode(br, 256); i += 1 }
-            val icCodes = new Array[PrefixCode](bsI.n)
+            val icCodes = new Array[Bits.PrefixCode](bsI.n)
             i = 0
             while (i < bsI.n) { icCodes(i) = readPrefixCode(br, 704); i += 1 }
             val distAlphabet = 16 + ndirect + (48 << npostfix)
-            val distCodes = new Array[PrefixCode](ntreesD)
+            val distCodes = new Array[Bits.PrefixCode](ntreesD)
             i = 0
             while (i < ntreesD) { distCodes(i) = readPrefixCode(br, distAlphabet); i += 1 }
             // ---- command loop
@@ -693,77 +623,20 @@ object Brotli {
   // ----------------------------------------------------- REAL encoder
 
   /** Kraft-exact Huffman code lengths over `freq` (used symbols only,
-    * every entry > 0), length-limited by the flattening loop
-    * (freq = freq/2 + 1, rebuild) — ≤ 15 for symbol codes, ≤ 5 for the
-    * code-length code whose lengths must fit the fixed meta-code.
+    * every entry > 0): [[Bits.huffmanDepths]], length-limited by the
+    * flattening loop (freq = freq/2 + 1, rebuild) — ≤ 15 for symbol
+    * codes, ≤ 5 for the code-length code whose lengths must fit the
+    * fixed meta-code.
     */
-  private def huffLens(freq0: Array[Long], maxLen: Int): Array[Int] = {
-    val n = freq0.length
-    if (n == 1) return Array(1)
-    val freq = freq0.clone()
-    while (true) {
-      val weight = new Array[Long](2 * n)
-      val parent = new Array[Int](2 * n)
-      val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
-        Ordering.by[(Long, Int), (Long, Int)](x => (-x._1, -x._2)))
-      var i = 0
-      while (i < n) { weight(i) = freq(i); pq.enqueue((weight(i), i)); i += 1 }
-      var nextId = n
-      while (pq.size > 1) {
-        val (w1, x) = pq.dequeue(); val (w2, y) = pq.dequeue()
-        weight(nextId) = w1 + w2; parent(x) = nextId; parent(y) = nextId
-        pq.enqueue((weight(nextId), nextId)); nextId += 1
-      }
-      val root = pq.dequeue()._2
-      val lens = new Array[Int](n)
-      var deep = false
-      i = 0
-      while (i < n) {
-        var d = 0; var p = i
-        while (p != root) { p = parent(p); d += 1 }
-        lens(i) = d
-        if (d > maxLen) deep = true
-        i += 1
-      }
-      if (!deep) return lens
-      i = 0
-      while (i < n) { freq(i) = (freq(i) >> 1) + 1; i += 1 }
+  private[ext] def limitedLengths(freq0: Array[Long], maxLen: Int): Array[Int] = {
+    var freq = freq0
+    var lens = Bits.huffmanDepths(freq)
+    while (lens.max > maxLen) {
+      freq = freq.map(f => (f >> 1) + 1)
+      lens = Bits.huffmanDepths(freq)
     }
-    null // unreachable
+    lens
   }
-
-  /** Canonical code values for (syms, lens) listed in the decoder's
-    * normalized order — the EXACT assignment [[PrefixCode]] makes:
-    * grouped by ascending length, stable in listed order. Returns
-    * (codeBySymbol, lenBySymbol) arrays over the full alphabet.
-    */
-  private def canonAssign(alphabetSize: Int, syms: Array[Int], lens: Array[Int]): (Array[Int], Array[Int]) = {
-    val code = new Array[Int](alphabetSize)
-    val len = new Array[Int](alphabetSize)
-    var maxLen = 0
-    lens.foreach(l => if (l > maxLen) maxLen = l)
-    val count = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) count(l) += 1)
-    val nextCode = new Array[Int](maxLen + 1)
-    var c = 0
-    var l = 1
-    while (l <= maxLen) { nextCode(l) = c; c = (c + count(l)) << 1; l += 1 }
-    var i = 0
-    while (i < syms.length) {
-      if (lens(i) > 0) {
-        code(syms(i)) = nextCode(lens(i)); nextCode(lens(i)) += 1
-        len(syms(i)) = lens(i)
-      }
-      i += 1
-    }
-    (code, len)
-  }
-
-  /** Fixed meta-code encoding (mirror of [[metaCode]]): value →
-    * (canonical code, length) for code-length-code lengths 0..5.
-    */
-  private val MetaEnc: Array[(Int, Int)] =
-    Array((0, 2), (14, 4), (6, 3), (1, 2), (2, 2), (15, 4))
 
   /** Serialize one prefix code over `alphabetSize` symbols from symbol
     * frequencies, choosing the SIMPLE form for ≤ 4 used symbols and the
@@ -777,31 +650,30 @@ object Brotli {
     while ((1 << abits) < alphabetSize) abits += 1
     val used0 = (0 until alphabetSize).filter(freq(_) > 0L).toArray
     val used = if (used0.isEmpty) Array(0) else used0
+    val symLens = new Array[Int](alphabetSize) // all 0 for the 0-bit one-symbol code
     if (used.length == 1) {
       w.put(1, 2) // simple form
       w.put(0, 2) // NSYM = 1
       w.put(used(0).toLong, abits)
-      (new Array[Int](alphabetSize), new Array[Int](alphabetSize)) // 0-bit code
     } else if (used.length == 2) {
       w.put(1, 2); w.put(1, 2)
       w.put(used(0).toLong, abits); w.put(used(1).toLong, abits)
-      canonAssign(alphabetSize, used, Array(1, 1))
+      used.foreach(symLens(_) = 1)
     } else if (used.length == 3) {
       // lengths 1,2,2 with the FIRST LISTED symbol depth 1: most frequent first
       val top = used.maxBy(s => (freq(s), -s))
       val rest = used.filter(_ != top) // ascending already
       w.put(1, 2); w.put(2, 2)
       w.put(top.toLong, abits); w.put(rest(0).toLong, abits); w.put(rest(1).toLong, abits)
-      canonAssign(alphabetSize, Array(top, rest(0), rest(1)), Array(1, 2, 2))
+      symLens(top) = 1; rest.foreach(symLens(_) = 2)
     } else if (used.length == 4) {
       w.put(1, 2); w.put(3, 2)
       used.foreach(s => w.put(s.toLong, abits))
       w.put(0, 1) // tree-select: flat 2,2,2,2
-      canonAssign(alphabetSize, used, Array(2, 2, 2, 2))
+      used.foreach(symLens(_) = 2)
     } else {
       // ---- complex form
-      val lensUsed = huffLens(used.map(freq), 15)
-      val symLens = new Array[Int](alphabetSize)
+      val lensUsed = limitedLengths(used.map(freq), 15)
       var i = 0
       while (i < used.length) { symLens(used(i)) = lensUsed(i); i += 1 }
       val lastNz = used.last
@@ -842,7 +714,7 @@ object Brotli {
       val clFreqMap = new Array[Long](18)
       cls.foreach(s => clFreqMap(s) += 1)
       val clUsed = (0 until 18).filter(clFreqMap(_) > 0).toArray
-      val clLensUsed = huffLens(clUsed.map(clFreqMap), 5)
+      val clLensUsed = limitedLengths(clUsed.map(clFreqMap), 5)
       val clLens = new Array[Int](18)
       i = 0
       while (i < clUsed.length) { clLens(clUsed(i)) = clLensUsed(i); i += 1 }
@@ -850,15 +722,14 @@ object Brotli {
       // under-full numNonZero==1 path) — emit nothing for it
       val (clCode, clLen) =
         if (clUsed.length == 1) (new Array[Int](18), new Array[Int](18))
-        else canonAssign(18, clUsed, clLensUsed)
+        else (Bits.PrefixCode(clLens).codes, clLens)
       w.put(0, 2) // HSKIP = 0
       // CL lengths in ClOrder; stop exactly where the decoder stops
       var space = 0
       i = 0
       while (i < 18 && space < 32) {
         val v = clLens(ClOrder(i))
-        val (mc, ml) = MetaEnc(v)
-        w.putCode(mc, ml)
+        w.putCode(metaCode.codes(v), MetaLens(v))
         if (v != 0) space += 32 >> v
         i += 1
       }
@@ -870,8 +741,8 @@ object Brotli {
         if (s == 17) w.put(cle(i).toLong, 3)
         i += 1
       }
-      canonAssign(alphabetSize, used, lensUsed)
     }
+    (Bits.PrefixCode(symLens).codes, symLens)
   }
 
   // insert/copy code lookup: largest code whose base is ≤ the length

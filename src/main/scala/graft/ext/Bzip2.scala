@@ -105,55 +105,18 @@ object Bzip2 {
     (out, orig)
   }
 
-  /** Huffman code lengths for `freq` (every entry ≥ 1), capped at
-    * `maxLen` by the bzip2 flattening loop (freq = freq/2 + 1, rebuild).
+  /** Huffman code lengths for `freq` (every entry ≥ 1): the
+    * [[Bits.huffmanDepths]] tree, capped at `maxLen` by the bzip2
+    * flattening loop (freq = freq/2 + 1, rebuild).
     */
-  private def huffLengths(freq0: Array[Int], maxLen: Int): Array[Int] = {
-    val n = freq0.length
-    val freq = freq0.clone()
-    while (true) {
-      // heap of (weight, nodeId); parents n..2n-2
-      val weight = new Array[Long](2 * n)
-      val parent = new Array[Int](2 * n)
-      val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
-        Ordering.by[(Long, Int), (Long, Int)](x => (-x._1, -x._2)))
-      var i = 0
-      while (i < n) { weight(i) = freq(i).toLong; pq.enqueue((weight(i), i)); i += 1 }
-      var nextId = n
-      while (pq.size > 1) {
-        val (w1, a) = pq.dequeue(); val (w2, b) = pq.dequeue()
-        weight(nextId) = w1 + w2; parent(a) = nextId; parent(b) = nextId
-        pq.enqueue((weight(nextId), nextId)); nextId += 1
-      }
-      val root = pq.dequeue()._2
-      val len = new Array[Int](n)
-      var deep = false
-      i = 0
-      while (i < n) {
-        var d = 0; var p = i
-        while (p != root) { p = parent(p); d += 1 }
-        len(i) = math.max(d, 1) // n == 1 degenerate: one-symbol code
-        if (d > maxLen) deep = true
-        i += 1
-      }
-      if (!deep) return len
-      i = 0
-      while (i < n) { freq(i) = (freq(i) >> 1) + 1; i += 1 }
+  private[ext] def limitedLengths(freq: Array[Int], maxLen: Int): Array[Int] = {
+    var weight = freq.map(_.toLong)
+    var len = Bits.huffmanDepths(weight)
+    while (len.max > maxLen) {
+      weight = weight.map(f => (f >> 1) + 1)
+      len = Bits.huffmanDepths(weight)
     }
-    null // unreachable
-  }
-
-  /** Canonical code assignment in bzip2's order: by (length, symbol). */
-  private def canonCodes(len: Array[Int]): Array[Int] = {
-    val order = len.indices.sortBy(i => (len(i), i))
-    val code = new Array[Int](len.length)
-    var c = 0
-    var prev = len(order.head)
-    order.foreach { sym =>
-      c <<= (len(sym) - prev); prev = len(sym)
-      code(sym) = c; c += 1
-    }
-    code
+    len
   }
 
   /** One logical `.bz2` stream. `level` ∈ 1..9 selects the block size
@@ -235,8 +198,8 @@ object Bzip2 {
     java.util.Arrays.fill(freq, 1)
     i = 0
     while (i < syms.size) { freq(syms.get(i)) += 1; i += 1 }
-    val len = huffLengths(freq, 20)
-    val code = canonCodes(len)
+    val len = limitedLengths(freq, 20)
+    val code = Bits.PrefixCode(len).codes
     // --- emit
     w.put(0x314159L, 24); w.put(0x265359L, 24) // block magic
     w.put(blockCrc.toLong & 0xffffffffL, 32)
@@ -286,35 +249,6 @@ object Bzip2 {
   }
 
   // ------------------------------------------------------------ decode
-  private final class HuffDec(len: Array[Int]) {
-    val alpha = len.length
-    var minLen = 32; var maxLen = 0
-    len.foreach { l => if (l < 1 || l > 23) fail(); if (l < minLen) minLen = l; if (l > maxLen) maxLen = l }
-    val count = new Array[Int](maxLen + 2)
-    len.foreach(l => count(l) += 1)
-    val perm: Array[Int] = len.indices.sortBy(i => (len(i), i)).toArray
-    val firstCode = new Array[Int](maxLen + 2)
-    val firstIdx = new Array[Int](maxLen + 2)
-    locally {
-      var c = 0; var idx = 0
-      var l = minLen
-      while (l <= maxLen) {
-        firstCode(l) = c; firstIdx(l) = idx
-        c = (c + count(l)) << 1; idx += count(l)
-        l += 1
-      }
-    }
-    def decode(r: Bits.MsbReader): Int = {
-      var l = minLen
-      var v = r.read(minLen)
-      while (l <= maxLen && !(v - firstCode(l) < count(l) && v >= firstCode(l))) {
-        v = (v << 1) | r.read(1); l += 1
-      }
-      if (l > maxLen) fail()
-      perm(firstIdx(l) + v - firstCode(l))
-    }
-  }
-
   /** Decode ONE `.bz2` stream starting at byte `pos`; returns (content,
     * end byte position) so concatenated streams demux. `maxOut` caps
     * total regenerated output (checked in-loop during RLE1).
@@ -386,10 +320,11 @@ object Bzip2 {
             if (r.read(1) == 0) cur += 1 else cur -= 1
             guard += 1; if (guard > 40 || cur < 1 || cur > 23) fail()
           }
+          if (cur < 1 || cur > 23) fail() // a start length with no delta bits
           len(sym) = cur
           sym += 1
         }
-        new HuffDec(len)
+        Bits.PrefixCode(len)
       }
       // MTF + RLE2 inverse into the BWT buffer
       val bwtBuf = new Array[Byte](blockMax)

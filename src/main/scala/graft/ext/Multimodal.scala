@@ -606,52 +606,14 @@ object Multimodal {
     */
   private final class MalformedPng extends Exception(null, null, false, false)
 
-  /** Canonical Huffman decoder built from per-symbol code lengths
-    * (RFC 1951 §3.2.2): count codes per length, then walk the bit stream
-    * one bit at a time narrowing the canonical range — the classic
-    * counts/offsets scheme, O(code length) per symbol with no tables
-    * beyond the two small arrays.
+  /** An inflate prefix code: over-subscribed lengths are damage; an
+    * incomplete code is kept (zlib emits a one-distance-code block), and
+    * decoding one of its unused paths fails.
     */
-  private final class Huffman(lengths: Array[Int]) {
-    private val count = new Array[Int](16)
-    locally {
-      var i = 0
-      while (i < lengths.length) { count(lengths(i)) += 1; i += 1 }
-      count(0) = 0
-      // reject over-subscribed codes (an incomplete code is tolerated, as
-      // puff-style decoders do: it just means some bit paths are invalid)
-      var left = 1
-      var l = 1
-      while (l <= 15) { left = (left << 1) - count(l); if (left < 0) throw new MalformedPng; l += 1 }
-    }
-    private val offsets = new Array[Int](16)
-    locally {
-      var l = 1
-      while (l < 15) { offsets(l + 1) = offsets(l) + count(l); l += 1 }
-    }
-    private val symbols = new Array[Int](lengths.count(_ != 0))
-    locally {
-      val next = offsets.clone()
-      var s = 0
-      while (s < lengths.length) {
-        if (lengths(s) != 0) { symbols(next(lengths(s))) = s; next(lengths(s)) += 1 }
-        s += 1
-      }
-    }
-    def decode(br: Bits.LsbReader): Int = {
-      var code = 0; var first = 0; var index = 0
-      var len = 1
-      while (len <= 15) {
-        code |= br.read(1)
-        val c = count(len)
-        if (code - first < c) return symbols(index + (code - first))
-        index += c
-        first = (first + c) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new MalformedPng
-    }
+  private def inflateCode(lengths: Array[Int]): Bits.PrefixCode = {
+    val code = Bits.PrefixCode(lengths)
+    if (code.slack < 0) throw new MalformedPng
+    code
   }
 
   // RFC 1951 §3.2.5: length symbols 257..285 and distance symbols 0..29
@@ -666,16 +628,10 @@ object Multimodal {
   // order in which code-length-code lengths appear in a dynamic block header
   private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
 
-  private val FixedLitHuffman: Huffman = {
-    val l = new Array[Int](288)
-    var i = 0
-    while (i < 288) {
-      l(i) = if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
-      i += 1
-    }
-    new Huffman(l)
-  }
-  private val FixedDistHuffman: Huffman = new Huffman(Array.fill(30)(5))
+  private val FixedLitCode = Bits.PrefixCode(Array.tabulate(288) { i =>
+    if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
+  })
+  private val FixedDistCode = Bits.PrefixCode(Array.fill(30)(5))
 
   /** ======== REAL decompressor: DEFLATE (RFC 1951), from scratch ========
     * All three block types: stored (byte-aligned LEN/~LEN copy), fixed
@@ -726,7 +682,7 @@ object Multimodal {
           while (i < len) { put(bytes(dataPos + i)); i += 1 }
         case bt if bt == 1 || bt == 2 =>
           val (lit, dist) =
-            if (bt == 1) (FixedLitHuffman, FixedDistHuffman)
+            if (bt == 1) (FixedLitCode, FixedDistCode)
             else {
               val hlit = br.read(5) + 257
               val hdist = br.read(5) + 1
@@ -734,11 +690,11 @@ object Multimodal {
               val clLens = new Array[Int](19)
               var i = 0
               while (i < hclen) { clLens(ClOrder(i)) = br.read(3); i += 1 }
-              val clHuff = new Huffman(clLens)
+              val clCode = inflateCode(clLens)
               val lens = new Array[Int](hlit + hdist)
               var n = 0
               while (n < hlit + hdist) {
-                clHuff.decode(br) match {
+                clCode.decode(br) match {
                   case 16 =>
                     if (n == 0) throw new MalformedPng
                     val rep = 3 + br.read(2)
@@ -754,7 +710,7 @@ object Multimodal {
                 }
               }
               if (n > lens.length || lens(256) == 0) throw new MalformedPng
-              (new Huffman(lens.take(hlit)), new Huffman(lens.drop(hlit)))
+              (inflateCode(lens.take(hlit)), inflateCode(lens.drop(hlit)))
             }
           var eob = false
           while (!eob) {
@@ -905,89 +861,28 @@ object Multimodal {
     bw.toArray
   }
 
-  /** Depth-limited Huffman code lengths for a frequency table: a real
-    * Huffman build (two sorted queues), then — if the deepest leaf
-    * exceeds `maxLen` — frequencies are halved (floor at 1) and the tree
-    * rebuilt, which provably converges to uniform weights whose depth is
-    * ceil(log2 n) <= 9 for n <= 286. Zero, one, and two-symbol corner
-    * cases get explicit handling: DEFLATE requires a decodable tree, so
-    * a lone used symbol is assigned length 1.
+  /** Depth-limited Huffman code lengths for a frequency table: the
+    * leaf depths of [[Bits.huffmanDepths]] over the used symbols, and
+    * while the deepest leaf exceeds `maxLen` the weights are halved
+    * (floor at 1) and the tree rebuilt, which provably converges to
+    * uniform weights whose depth is ceil(log2 n) <= 9 for n <= 286. A
+    * lone used symbol gets length 1 (DEFLATE requires a decodable tree).
+    * zstd's literal encoder ([[Zstd]]'s `HufEncoder`) shares it at
+    * `maxLen` 11.
     */
   private[ext] def huffmanLengths(freq: Array[Int], maxLen: Int): Array[Int] = {
-    val n = freq.length
-    val lens = new Array[Int](n)
-    val used = (0 until n).filter(freq(_) > 0)
+    val lens = new Array[Int](freq.length)
+    val used = freq.indices.filter(freq(_) > 0)
     if (used.isEmpty) return lens
-    if (used.size == 1) { lens(used.head) = 1; return lens }
     var w = used.map(freq(_).toLong).toArray
-    var depths: Array[Int] = null
-    var ok = false
-    while (!ok) {
-      // classic two-queue Huffman over (weight, node); parent pointers give depths
-      val m = w.length
-      val order = (0 until m).sortBy(w(_)).toArray
-      val weight = new Array[Long](2 * m - 1)
-      val parent = new Array[Int](2 * m - 1)
-      java.util.Arrays.fill(parent, -1)
-      var qa = 0 // next leaf in `order`
-      var qb = m // first not-yet-consumed internal node
-      var next = m // next internal node slot
-      var i = 0
-      while (i < m) { weight(order(i)) = w(order(i)); i += 1 }
-      def takeMin(): Int = {
-        val leafOk = qa < m
-        val intOk = qb < next
-        if (leafOk && (!intOk || weight(order(qa)) <= weight(qb))) { val v = order(qa); qa += 1; v }
-        else { val v = qb; qb += 1; v }
-      }
-      while (next < 2 * m - 1) {
-        val a = takeMin(); val b = takeMin()
-        weight(next) = weight(a) + weight(b)
-        parent(a) = next; parent(b) = next
-        next += 1
-      }
-      depths = new Array[Int](m)
-      var maxD = 0
-      i = 0
-      while (i < m) {
-        var d = 0
-        var p = parent(i)
-        while (p >= 0) { d += 1; p = parent(p) }
-        depths(i) = d
-        if (d > maxD) maxD = d
-        i += 1
-      }
-      if (maxD <= maxLen) ok = true
-      else w = w.map(x => math.max(1L, x >> 1))
+    var depths = Bits.huffmanDepths(w)
+    while (depths.max > maxLen) {
+      w = w.map(x => math.max(1L, x >> 1))
+      depths = Bits.huffmanDepths(w)
     }
     var k = 0
     while (k < used.size) { lens(used(k)) = depths(k); k += 1 }
     lens
-  }
-
-  /** Canonical codes from lengths — the encoder-side twin of the
-    * decoder's [[Huffman]] construction (same RFC 1951 §3.2.2 rule).
-    */
-  private def canonicalCodes(lens: Array[Int]): Array[Int] = {
-    val maxLen = lens.max
-    val codes = new Array[Int](lens.length)
-    if (maxLen == 0) return codes
-    val blCount = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) blCount(l) += 1)
-    val nextCode = new Array[Int](maxLen + 2)
-    var code = 0
-    var bits = 1
-    while (bits <= maxLen) {
-      code = (code + blCount(bits - 1)) << 1
-      nextCode(bits) = code
-      bits += 1
-    }
-    var i = 0
-    while (i < lens.length) {
-      if (lens(i) > 0) { codes(i) = nextCode(lens(i)); nextCode(lens(i)) += 1 }
-      i += 1
-    }
-    codes
   }
 
   /** DEFLATE with per-input DYNAMIC Huffman trees (BTYPE=10): token
@@ -1015,8 +910,8 @@ object Multimodal {
     val distLens = huffmanLengths(distFreq, 15)
     // a block with no matches still must declare a decodable distance tree
     if (distLens.forall(_ == 0)) distLens(0) = 1
-    val litCodes = canonicalCodes(litLens)
-    val distCodes = canonicalCodes(distLens)
+    val litCodes = Bits.PrefixCode(litLens).codes
+    val distCodes = Bits.PrefixCode(distLens).codes
     val hlit = math.max(257, 286 - litLens.reverse.takeWhile(_ == 0).length)
     val hdist = math.max(1, 30 - distLens.reverse.takeWhile(_ == 0).length)
     // ---- RLE the combined length array with 16 (repeat 3-6) / 17 (zeros
@@ -1047,7 +942,7 @@ object Multimodal {
     val clFreq = new Array[Int](19)
     clSyms.foreach { case (s, _) => clFreq(s) += 1 }
     val clLens = huffmanLengths(clFreq, 7)
-    val clCodes = canonicalCodes(clLens)
+    val clCodes = Bits.PrefixCode(clLens).codes
     var hclen = 19
     while (hclen > 4 && clLens(ClOrder(hclen - 1)) == 0) hclen -= 1
     // ---- emit

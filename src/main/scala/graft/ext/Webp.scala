@@ -71,71 +71,30 @@ object Webp {
 
   // ------------------------------------------------------- canonical codes
 
-  /** Canonical prefix code over `lengths` (DEFLATE assignment: codes
-    * increase with (length, symbol)). `decode` walks the LSB-first stream
-    * bit by bit, accumulating the code MSB-first. A single-symbol code
-    * (all lengths 0 except bookkeeping) reads zero bits.
+  /** A prefix code from per-symbol lengths, which VP8L accepts only
+    * in 0..15 and complete.
     */
-  private final class Huffman(lengths: Array[Int], singleSymbol: Int = -1) {
-    // canonical first-code/offset tables: O(1) array walk per bit, no
-    // boxing in the per-pixel hot loop
-    private var maxLen = 0
-    private val firstCode = new Array[Int](16)
-    private val firstIdx = new Array[Int](16)
-    private val counts = new Array[Int](16)
-    private val symbols: Array[Int] = if (singleSymbol >= 0) null else {
-      var kraft = 0L
-      lengths.foreach { l =>
-        if (l < 0 || l > 15) fail()
-        if (l > 0) { counts(l) += 1; kraft += 1L << (15 - l); if (l > maxLen) maxLen = l }
-      }
-      if (kraft != (1L << 15)) fail() // complete codes only
-      var code = 0
-      var idx = 0
-      var l = 1
-      while (l <= 15) {
-        code = (code + counts(l - 1)) << 1
-        firstCode(l) = code; firstIdx(l) = idx; idx += counts(l)
-        l += 1
-      }
-      val syms = new Array[Int](idx)
-      val next = new Array[Int](16)
-      var s = 0
-      while (s < lengths.length) {
-        val len = lengths(s)
-        if (len > 0) { syms(firstIdx(len) + next(len)) = s; next(len) += 1 }
-        s += 1
-      }
-      syms
-    }
-    def decode(br: Bits.LsbReader): Int = {
-      if (singleSymbol >= 0) return singleSymbol
-      var code = 0
-      var len = 0
-      while (len < maxLen) {
-        code = (code << 1) | br.read(1)
-        len += 1
-        val off = code - firstCode(len)
-        if (off >= 0 && off < counts(len)) return symbols(firstIdx(len) + off)
-      }
-      fail()
-    }
+  private def completeCode(lengths: Array[Int]): Bits.PrefixCode = {
+    if (lengths.exists(l => l < 0 || l > 15)) fail()
+    val code = Bits.PrefixCode(lengths)
+    if (code.slack != 0) fail()
+    code
   }
 
   /** Read one prefix code (simple or full serialization). */
-  private def readHuffmanCode(br: Bits.LsbReader, alphabetSize: Int): Huffman = {
+  private def readHuffmanCode(br: Bits.LsbReader, alphabetSize: Int): Bits.PrefixCode = {
     if (br.read(1) == 1) { // simple
       val numSymbols = br.read(1) + 1
       val firstWide = br.read(1) == 1
       val sym0 = br.read(if (firstWide) 8 else 1)
       if (sym0 >= alphabetSize) fail()
-      if (numSymbols == 1) new Huffman(null, singleSymbol = sym0)
+      if (numSymbols == 1) Bits.PrefixCode.single(sym0)
       else {
         val sym1 = br.read(8)
         if (sym1 >= alphabetSize || sym1 == sym0) fail()
         val lengths = new Array[Int](alphabetSize)
         lengths(sym0) = 1; lengths(sym1) = 1
-        new Huffman(lengths)
+        Bits.PrefixCode(lengths)
       }
     } else { // full: code-length code, then RLE-coded lengths
       val numCodes = 4 + br.read(4)
@@ -145,8 +104,8 @@ object Webp {
       while (i < numCodes) { clLengths(CodeLengthOrder(i)) = br.read(3); i += 1 }
       val nonzero = clLengths.count(_ > 0)
       if (nonzero == 0) fail()
-      val cl = if (nonzero == 1) new Huffman(null, singleSymbol = clLengths.indexWhere(_ > 0))
-        else new Huffman(clLengths)
+      val cl = if (nonzero == 1) Bits.PrefixCode.single(clLengths.indexWhere(_ > 0))
+        else completeCode(clLengths)
       var maxSymbol =
         if (br.read(1) == 1) {
           val lengthNBits = 2 + 2 * br.read(3)
@@ -175,8 +134,8 @@ object Webp {
       }
       val used = lengths.count(_ > 0)
       if (used == 0) fail()
-      if (used == 1) new Huffman(null, singleSymbol = lengths.indexWhere(_ > 0))
-      else new Huffman(lengths)
+      if (used == 1) Bits.PrefixCode.single(lengths.indexWhere(_ > 0))
+      else completeCode(lengths)
     }
   }
 
@@ -529,19 +488,8 @@ object Webp {
     lengths
   }
 
-  /** Canonical codes (value per symbol) from lengths, DEFLATE assignment. */
-  private def canonicalCodes(lengths: Array[Int]): Array[Int] = {
-    val counts = new Array[Int](16)
-    lengths.foreach(l => if (l > 0) counts(l) += 1)
-    val next = new Array[Int](16)
-    var code = 0
-    var l = 1
-    while (l <= 15) { code = (code + counts(l - 1)) << 1; next(l) = code; l += 1 }
-    lengths.map { l => if (l == 0) 0 else { val c = next(l); next(l) += 1; c } }
-  }
-
   private final class CodeWriter(val lengths: Array[Int], singleSymbol: Int = -1) {
-    private val codes = if (singleSymbol < 0) canonicalCodes(lengths) else null
+    private val codes = if (singleSymbol < 0) Bits.PrefixCode(lengths).codes else null
     def write(bw: Bits.LsbWriter, sym: Int): Unit = {
       if (singleSymbol >= 0) { if (sym != singleSymbol) fail(); return }
       val len = lengths(sym)

@@ -1033,8 +1033,9 @@ object Zstd {
   }
 
   /** Canonical zstd Huffman encode table from byte frequencies, depth
-    * ≤ 11 (the literals limit): lengths from the shared depth-limited
-    * two-queue builder, weights `maxBits + 1 − len`, codes read off the
+    * ≤ 11 (the literals limit): lengths from [[Multimodal.huffmanLengths]]
+    * (the [[Bits.huffmanDepths]] tree build under deflate's halving
+    * limit loop), weights `maxBits + 1 − len`, codes read off the
     * decoder's own table layout (cells assigned in weight order then
     * symbol order — symbol code = cellStart >> (w−1)), so encode and
     * decode are inverses by construction. Returns null when Huffman

@@ -187,6 +187,77 @@ class BitsSpec extends AnyFunSuite {
     p.skip(4)
     assert(p.peek(3) == 0 && p.bitsLeft == 0)
   }
+
+  test("prefix code: every symbol's code round-trips through both bit orders") {
+    val gen = for {
+      n <- Gen.choose(1, 300)
+      freq <- Gen.listOfN(n, Gen.choose(1, 1000))
+      seed <- Gen.long
+    } yield (freq.toArray, seed)
+    val prop = Prop.forAll(gen) { case (freq, seed) =>
+      val lens = Multimodal.huffmanLengths(freq, 20)
+      // by index, and listed in a shuffled order (another canonical code)
+      val listed = new scala.util.Random(seed).shuffle(lens.indices.toVector).toArray
+      Seq(Bits.PrefixCode(lens), Bits.PrefixCode(listed, listed.map(lens))).forall { code =>
+        val syms = lens.indices ++ lens.indices.reverse
+        val lw = new Bits.LsbWriter(1)
+        val mw = new Bits.MsbWriter(1)
+        syms.foreach { s => lw.putCode(code.codes(s), lens(s)); mw.put(code.codes(s), lens(s)) }
+        val bits = lw.bitLength
+        Seq(lw.toArray -> true, mw.toArray -> false).forall { case (b, lsb) =>
+          val r = reader(b, 0, b.length, lsb)
+          syms.forall(decode(code, r) == _) && r.bitPos == bits
+        }
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(res.passed, res.toString)
+  }
+
+  test("prefix code: listed order, the one-symbol code, slack and unused paths") {
+    // Brotli's fixed meta-code (RFC 7932 §3.5), symbols listed 0, 3, 4, 2, 1, 5:
+    // its (code, length) wire vector for symbols 0..5
+    val meta = Bits.PrefixCode(Array(0, 3, 4, 2, 1, 5), Array(2, 2, 2, 3, 4, 4))
+    assert(meta.codes.toSeq == Seq(0, 14, 6, 1, 2, 15) && meta.slack == 0)
+    val single = Bits.PrefixCode.single(7)
+    assert(single.slack == 0 && single.codes(7) == 0)
+    for (lsb <- Seq(true, false)) {
+      val r = reader(Array[Byte](0x55), 0, 1, lsb)
+      assert(decode(single, r) == 7 && decode(single, r) == 7 && r.bitPos == 0)
+    }
+    assert(Bits.PrefixCode(Array(1, 2, 2)).slack == 0) // complete
+    assert(Bits.PrefixCode(Array(2, 0, 1)).slack == 1) // one 2-bit code unused
+    assert(Bits.PrefixCode(Array(0, 0)).slack == 1) // empty
+    assert(Bits.PrefixCode(Array(1, 1, 1)).slack == -1) // over-subscribed
+    assert(Bits.PrefixCode(Array(3, 1, 1, 0, 3)).slack == -2)
+    // an unused path of an incomplete code reaches the reader's fail() at
+    // the deepest length, not at the end of the input
+    val incomplete = Bits.PrefixCode(Array(1, 2, 0)) // "0", "10"; "11" unused
+    for (lsb <- Seq(true, false)) {
+      val ones = reader(Array(0xff.toByte, 0xff.toByte), 0, 2, lsb)
+      intercept[Truncated](decode(incomplete, ones))
+      assert(ones.bitPos == 2)
+      val any = reader(Array(0xff.toByte), 0, 1, lsb)
+      intercept[Truncated](decode(Bits.PrefixCode(Array(0, 0)), any))
+      assert(any.bitPos == 0)
+    }
+  }
+
+  test("huffmanDepths: the PriorityQueue build's depths and each limit loop's old lengths") {
+    val prop = Prop.forAll(weightsGen) { w =>
+      val ints = w.map(_.toInt)
+      Bits.huffmanDepths(w).sameElements(pqDepths(w)) &&
+        Seq(5, 7, 11, 15, 20).filter(m => w.length <= (1 << (m - 1))).forall { m =>
+          val halved = pqLimited(w, m, x => math.max(1L, x >> 1))
+          val plusOne = pqLimited(w, m, x => (x >> 1) + 1)
+          Multimodal.huffmanLengths(ints, m).sameElements(halved) &&
+            Brotli.limitedLengths(w, m).sameElements(plusOne) &&
+            Bzip2.limitedLengths(ints, m).sameElements(plusOne)
+        }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.toString)
+  }
 }
 
 object BitsSpec {
@@ -196,6 +267,12 @@ object BitsSpec {
   def reader(b: Array[Byte], from: Int, until: Int, lsb: Boolean): Bits.BitReader =
     if (lsb) new Bits.LsbReader(b, from, until) { def fail(): Nothing = throw new Truncated }
     else new Bits.MsbReader(b, from, until) { def fail(): Nothing = throw new Truncated }
+
+  /** `code` decoded in `r`'s bit order. */
+  def decode(code: Bits.PrefixCode, r: Bits.BitReader): Int = r match {
+    case l: Bits.LsbReader => code.decode(l)
+    case m: Bits.MsbReader => code.decode(m)
+  }
 
   sealed trait Op
   final case class Put(v: Long, n: Int, skipOnRead: Boolean) extends Op
@@ -233,6 +310,54 @@ object BitsSpec {
       out(i / 8) = (out(i / 8) | (1 << shift)).toByte
     }
     out
+  }
+
+  /** Weight vectors of 1..300 positive weights below 2^30: small
+    * weights with many ties, all ones, powers of two (heavy skew),
+    * Fibonacci runs (the deepest trees) and uniform draws.
+    */
+  val weightsGen: Gen[Array[Long]] = for {
+    n <- Gen.choose(1, 300)
+    w <- Gen.oneOf(
+      Gen.listOfN(n, Gen.choose(1L, 6L)),
+      Gen.const(List.fill(n)(1L)),
+      Gen.listOfN(n, Gen.choose(0, 29).map(1L << _)),
+      Gen.choose(0, 40).map(k => List.tabulate(n)(i => fib((i + k) % 43))),
+      Gen.listOfN(n, Gen.choose(1L, (1L << 30) - 1)))
+  } yield w.toArray
+
+  private def fib(i: Int): Long = (0 until i).foldLeft((1L, 1L)) { case ((a, b), _) => (b, a + b) }._1
+
+  /** The PriorityQueue tree build the Brotli and bzip2 encoders used
+    * before [[Bits.huffmanDepths]], kept as its reference: a min-heap on
+    * (weight, node id), so of equal weights the leaf (ids 0..n-1) and
+    * then the older internal node is taken first.
+    */
+  def pqDepths(w: Array[Long]): Array[Int] = {
+    val n = w.length
+    if (n == 1) return Array(1)
+    val parent = new Array[Int](2 * n)
+    val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
+      Ordering.by[(Long, Int), (Long, Int)](x => (-x._1, -x._2)))
+    (0 until n).foreach(i => pq.enqueue((w(i), i)))
+    var next = n
+    while (pq.size > 1) {
+      val (w1, a) = pq.dequeue(); val (w2, b) = pq.dequeue()
+      parent(a) = next; parent(b) = next
+      pq.enqueue((w1 + w2, next)); next += 1
+    }
+    val root = pq.dequeue()._2
+    Array.tabulate(n) { i => var d = 0; var p = i; while (p != root) { p = parent(p); d += 1 }; d }
+  }
+
+  /** The old length-limit loop over [[pqDepths]]: rebuild from `reduce`d
+    * weights until the deepest leaf fits `maxLen`.
+    */
+  def pqLimited(w0: Array[Long], maxLen: Int, reduce: Long => Long): Array[Int] = {
+    var w = w0
+    var d = pqDepths(w)
+    while (d.max > maxLen) { w = w.map(reduce); d = pqDepths(w) }
+    d
   }
 
   def cursor(b: Array[Byte]): Bits.Cursor = new Bits.Cursor(b, 0, b.length) {

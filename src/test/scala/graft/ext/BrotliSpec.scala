@@ -181,6 +181,9 @@ class BrotliSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(Brotli.decompress(got, math.max(1, input.length)), input),
         s"$name: round trip")
     }
+    val pinned = EncoderPins.digest(EncoderPins.inputs.map(Brotli.compressRaw))
+    assert(pinned == "f40a60908d679d19a85a7e42af7375b93829bc7fc6c51885a68e9f9f7adc8606",
+      "compressRaw output moved")
   }
 
   test("metadata meta-blocks are skipped; malformed streams are quarantined") {
@@ -274,6 +277,11 @@ class BrotliSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------- quality-1 encoder
+
+  test("q1 encoder: output bytes are pinned over the fixed input set") {
+    val got = EncoderPins.digest(EncoderPins.inputs.map(Brotli.compressQ1))
+    assert(got == "630c9456c5cae30b3f5ac7206f76a9684fdb61db27140e617c0ced993e7bb0ac", "compressQ1 output moved")
+  }
 
   test("q1 encoder: round trips every fixture corpus through the pinned decoder") {
     fixtures.foreach { case (name, input) =>

@@ -103,6 +103,34 @@ class Bzip2Spec extends AnyFunSuite {
       // either detected (CRC/structure) or — never — silently wrong bytes
       r.foreach(got => assert(got.sameElements(d), s"undetected corruption at byte $p"))
     }
+    // one block of "aa" by hand: two tables over (RUNA, RUNB, EOB), each
+    // a 5-bit start length then per symbol its delta bits ("10" up, "11"
+    // down, "0" ends), then RUNB (a run of two) and EOB. A start of 0 or
+    // 24 with no delta bits never meets the delta loop's bound, and the
+    // table is still rejected.
+    def aa(start: Int, deltas: Seq[String], runb: (Int, Int), eob: (Int, Int)): Array[Byte] = {
+      val crc = ~"aa".getBytes.foldLeft(-1)((c, b) => Bits.crc32MsbUpdate(c, b & 0xff))
+      val w = new Bits.MsbWriter
+      "BZh1".foreach(ch => w.put(ch, 8))
+      w.put(0x314159L, 24); w.put(0x265359L, 24); w.put(crc & 0xffffffffL, 32)
+      w.put(0, 1); w.put(0, 24) // not randomized, origPtr 0
+      w.put(0x0200, 16); w.put(0x4000, 16) // used bytes: 'a' = 0x61, row 6 column 1
+      w.put(2, 3); w.put(1, 15); w.put(0, 1) // two tables, one selector: table 0
+      (0 until 2).foreach { _ => w.put(start, 5); deltas.foreach(_.foreach(bit => w.put(bit - '0', 1))) }
+      w.put(runb._1, runb._2); w.put(eob._1, eob._2)
+      w.put(0x177245L, 24); w.put(0x385090L, 24); w.put(crc & 0xffffffffL, 32)
+      w.toArray
+    }
+    val valid = aa(2, Seq("0", "110", "100"), runb = (0, 1), eob = (3, 2)) // lengths 2, 1, 2
+    assert(new String(Bzip2.decompress(valid, 16)) == "aa" && new String(ccDecompress(valid)) == "aa")
+    val zeroStart = aa(0, Seq("0", "100", "0"), runb = (0, 1), eob = (1, 1)) // lengths 0, 1, 1
+    val start24 = aa(24, Seq("0", "110", "0"), runb = (0, 23), eob = (1, 23)) // lengths 24, 23, 23
+    for (bad <- Seq(zeroStart, start24)) intercept[RuntimeException](Bzip2.decompress(bad, 16))
+  }
+
+  test("compress: output bytes are pinned over the fixed input set") {
+    val got = EncoderPins.digest(EncoderPins.inputs.map(Bzip2.compress(_)))
+    assert(got == "6d5ee736a9ce255f9358c7b90d0c16f714c38d2ae36a8eebe3de1c1722e49f90", "bzip2 compress output moved")
   }
 
   test("decompression bomb: output cap enforced in-loop") {

@@ -503,6 +503,67 @@ class MultimodalSpec extends AnyFunSuite {
     val arr = bytes.toArray
     // dist 2 < len 4: the copy must read bytes it just wrote ("ab" -> "ababab")
     assert(new String(Multimodal.inflate(arr, 0, arr.length, 6), "US-ASCII") == "ababab")
+
+    // dynamic blocks (RFC 1951 §3.2.7) by hand: `cl` is the code-length
+    // code's lengths, `lens` the HLIT literal/length lengths then the
+    // distance lengths, each sent as one code-length symbol; `body` is
+    // (distance alphabet?, symbol) under the codes `lens` makes, every
+    // symbol chosen without extra bits
+    def canon(l: Array[Int]): Array[Int] = {
+      val codes = new Array[Int](l.length)
+      var code = 0
+      var prev = 0
+      for (s <- l.indices.filter(l(_) > 0).sortBy(s => (l(s), s))) {
+        code <<= l(s) - prev; prev = l(s); codes(s) = code; code += 1
+      }
+      codes
+    }
+    def dynamic(cl: Map[Int, Int], hlit: Int, lens: Map[Int, Int], hdist: Int,
+        body: Seq[(Boolean, Int)]): Array[Byte] = {
+      val clLens = Array.tabulate(19)(cl.getOrElse(_, 0))
+      val all = Array.tabulate(hlit + hdist)(lens.getOrElse(_, 0))
+      val (clCodes, lit, dist) = (canon(clLens), canon(all.take(hlit)), canon(all.drop(hlit)))
+      val w = new Bits.LsbWriter
+      w.put(1, 1); w.put(2, 2) // BFINAL, BTYPE = dynamic
+      w.put(hlit - 257, 5); w.put(hdist - 1, 5); w.put(19 - 4, 4)
+      Seq(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15).foreach(s => w.put(clLens(s), 3))
+      all.foreach(l => w.putCode(clCodes(l), clLens(l)))
+      body.foreach { case (isDist, s) =>
+        if (isDist) w.putCode(dist(s), all(hlit + s)) else w.putCode(lit(s), all(s))
+      }
+      w.toArray
+    }
+    def ours(b: Array[Byte]): Option[String] =
+      try Some(new String(Multimodal.inflate(b, 0, b.length, 16), "US-ASCII"))
+      catch { case _: Exception => None }
+    def zlib(b: Array[Byte]): Option[String] = {
+      val inf = new java.util.zip.Inflater(true)
+      inf.setInput(b :+ 0.toByte) // nowrap wants one byte past the stream
+      val out = new Array[Byte](16)
+      try { val n = inf.inflate(out); if (inf.finished()) Some(new String(out, 0, n, "US-ASCII")) else None }
+      catch { case _: java.util.zip.DataFormatException => None }
+      finally inf.end()
+    }
+    val (a, b, c, eob, len3) = ('a'.toInt, 'b'.toInt, 'c'.toInt, 256, 257)
+    // zlib's one-distance-code block: a complete literal/length code and
+    // a single length-1 distance code, incomplete; both decoders take it
+    val oneDist = dynamic(cl = Map(0 -> 1, 2 -> 2, 3 -> 3, 1 -> 3), hlit = 258,
+      lens = Map(a -> 2, b -> 2, c -> 2, eob -> 3, len3 -> 3, 258 + 2 -> 1), hdist = 3,
+      body = Seq(false -> a, false -> b, false -> c, false -> len3, true -> 2, false -> eob))
+    assert(ours(oneDist).contains("abcabc") && zlib(oneDist).contains("abcabc"))
+    // an over-subscribed code-length code (1 + 1 + 2 bits) and an
+    // over-subscribed literal code (1 + 1 + 8 bits) are dropped, though
+    // `body` only takes paths a first-match decoder would resolve
+    val overCl = dynamic(cl = Map(0 -> 1, 8 -> 1, 1 -> 2), hlit = 257,
+      lens = Map(a -> 8, eob -> 8), hdist = 1, body = Seq(false -> a, false -> eob))
+    val overLit = dynamic(cl = Map(0 -> 1, 1 -> 2, 8 -> 2), hlit = 257,
+      lens = Map(a -> 1, eob -> 1, b -> 8), hdist = 1, body = Seq(false -> a, false -> eob))
+    for (over <- Seq(overCl, overLit)) assert(ours(over).isEmpty && zlib(over).isEmpty)
+  }
+
+  test("deflateDynamic: output bytes are pinned over the fixed input set") {
+    val got = EncoderPins.digest(EncoderPins.inputs.map(Multimodal.deflateDynamic))
+    assert(got == "b87f5f08cab1fc44c722c6e9311eae2e2c9575988658ef6e821528cdabb433c4", "deflateDynamic output moved")
   }
 
   test("png: multiple IDAT chunks concatenate; malformed payloads drop") {

@@ -71,6 +71,32 @@ class WebpSpec extends AnyFunSuite {
     assert(drops(good.take(good.length / 2))) // truncated entropy data
     val sig = good.clone(); sig(20) = 0x30 // corrupt the 0x2f signature
     assert(drops(sig))
+    // a 1x1 image by hand whose green code is full-form: the code-length
+    // code {0: "0", 1: "10", 2: "11"}, then `green`'s 280 lengths; red,
+    // blue, alpha and distance are one-symbol simple codes, and the pixel
+    // is green symbol 0 (code "0"). Only complete full-form codes pass.
+    def oneByOne(green: Map[Int, Int]): Array[Byte] = {
+      val w = new Bits.LsbWriter
+      w.put(0x2f, 8); w.put(0, 14); w.put(0, 14) // signature, 1x1
+      w.put(0, 1); w.put(0, 3) // alpha hint, version
+      w.put(0, 1); w.put(0, 1); w.put(0, 1) // no transform, no color cache, no meta codes
+      w.put(0, 1); w.put(5 - 4, 4) // full form, code-length lengths for 17, 18, 0, 1, 2
+      Seq(0, 0, 1, 2, 2).foreach(w.put(_, 3))
+      w.put(0, 1) // lengths for the whole alphabet
+      val clCode = Map(0 -> (0, 1), 1 -> (2, 2), 2 -> (3, 2))
+      (0 until 280).foreach { s => val (c, n) = clCode(green.getOrElse(s, 0)); w.putCode(c, n) }
+      (0 until 4).foreach(_ => w.put(1, 4)) // simple, one symbol, 1-bit symbol 0
+      w.putCode(0, 1) // the pixel
+      val payload = w.toArray
+      val riff = new java.io.ByteArrayOutputStream()
+      def le32(v: Int): Unit = (0 until 4).foreach(k => riff.write(v >>> (8 * k)))
+      riff.write("RIFF".getBytes); le32(12 + payload.length); riff.write("WEBPVP8L".getBytes)
+      le32(payload.length); riff.write(payload)
+      riff.toByteArray
+    }
+    val complete = Webp.parseWebp(oneByOne(Map(0 -> 1, 1 -> 2, 2 -> 2)))
+    assert(complete.exists(i => i.width == 1 && i.height == 1 && i.pixels.sameElements(Array[Byte](0, 0, 0))))
+    assert(drops(oneByOne(Map(0 -> 1, 1 -> 2)))) // incomplete: "11" unused
     // hostile dims: a 16383x16383 header must drop without the 1 GB allocation
     val bomb = {
       val bw = Webp.encodeVp8l(0L, 8, 8, Array.fill(192)(1.toByte))
@@ -89,6 +115,15 @@ class WebpSpec extends AnyFunSuite {
     (0 until 16).foreach(_ => assert(drops(bomb)))
     val allocated = tmx.getThreadAllocatedBytes(tid) - before
     assert(allocated < (8L << 20), s"allocated $allocated bytes across 16 bomb parses")
+  }
+
+  test("encodeVp8l: output bytes are pinned over all five arms") {
+    val planes = (0L until 10L).map(id => (id, plane(id, s"pinned webp plane $id " * (1 + id.toInt)))) ++
+      (0L until 5L).map(arm => (arm, (9, 10, Array.fill(3 * 9 * 10)(77.toByte))))
+    val got = EncoderPins.digest(planes.flatMap { case (id, (w, h, p)) =>
+      (0L until 5L).map(arm => Webp.encodeVp8l(5 * id + arm, w, h, p))
+    })
+    assert(got == "43219de8b4ce017e96d6d051129eb711254c2471ab10f4e2383a442d50730661", "encodeVp8l output moved")
   }
 
   test("operator + shared byte model over Spark") {

@@ -45,6 +45,11 @@ class ZstdSpec extends AnyFunSuite {
     }
   }
 
+  test("compress: output bytes are pinned over the fixed input set") {
+    val got = EncoderPins.digest(EncoderPins.inputs.map(Zstd.compress))
+    assert(got == "aed499fbf33d57020fdd1d6fa7155567e259f3ae31c98c8c2c4db0b4b7021aa3", "zstd compress output moved")
+  }
+
   test("xxh64 matches Spark's catalyst XXH64 (and known vectors)") {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     import org.apache.spark.unsafe.Platform

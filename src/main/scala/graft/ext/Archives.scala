@@ -210,14 +210,7 @@ object Archives {
   def encodeGzipDocs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         val data = utf8(text)
         val variant = (id % 4).toInt
@@ -292,14 +285,7 @@ object Archives {
   def compressionSignal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[CompressionSignal] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         val data = utf8(text)
         val comp = Multimodal.deflateDynamic(data)
@@ -354,11 +340,7 @@ object Archives {
       idCol: String, textCol: String)(member: (Long, String) => Array[Byte]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) => (id, member(id, text)) }
       .groupByKey(_._1 % nArchives)
       .mapGroups { (aid, it) =>

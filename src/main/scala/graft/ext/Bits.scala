@@ -166,6 +166,36 @@ object Bits {
     }
   }
 
+  /** A protobuf wire-format cursor: base-128 varints of at most 10 bytes,
+    * length-delimited spans and the skip of an unknown field. Wire types
+    * 3 and 4 (groups) and 6 and 7 (reserved) are damage, as is a span or
+    * fixed field that runs past `limit`. Each format supplies `fail()`.
+    */
+  abstract class WireReader(b: Array[Byte], from: Int, until: Int) extends Cursor(b, from, until) {
+    final def more: Boolean = pos < limit
+
+    final def varint(): Long = uvarint(10)
+
+    /** The span `(start, end)` of a length-delimited field; the cursor
+      * moves past it.
+      */
+    final def lenDelim(): (Int, Int) = {
+      val len = varint()
+      if (len < 0 || len > limit - pos) fail()
+      val span = (pos, pos + len.toInt)
+      pos += len.toInt
+      span
+    }
+
+    final def skip(wire: Int): Unit = wire match {
+      case 0 => varint()
+      case 1 => if (pos + 8 > limit) fail() else pos += 8
+      case 2 => lenDelim()
+      case 5 => if (pos + 4 > limit) fail() else pos += 4
+      case _ => fail()
+    }
+  }
+
   // ------------------------------------------------------ zlib wrapper
 
   /** `body` (a raw deflate stream of `raw`) framed as zlib: CMF 0x78

@@ -916,14 +916,7 @@ object Brotli {
   def brotliQ1Signal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[BrotliQ1Stats] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         try {
           val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -940,14 +933,7 @@ object Brotli {
   def brotliSignal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[BrotliStats] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val comp = compressRaw(data)

@@ -418,14 +418,7 @@ object Charset {
   def encodeCharsetDocs(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col("text").isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs.filter(col("text").isNotNull), idCol)
       .map { id =>
         val (ct, payload) = fixtureRecord(id)
         (id, ct, payload)

@@ -104,20 +104,8 @@ object Cpio {
   }
 
   /** Fixture writer: one cpio archive per document row. */
-  def encodeCpio(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderCpio(id)))
-      .toDF("doc_id", "cpio")
-  }
+  def encodeCpio(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "cpio")(renderCpio)
 
   // --------------------------------------------------------------- reader
 

@@ -156,22 +156,11 @@ object Deb {
     out.toByteArray
   }
 
-  /** Fixture writer: one .deb per document row. The per-document DEFLATE
-    * of two tars makes this an EXPENSIVE writer — the one round-robin
-    * exchange of bare doc ids spreads synthesis across cores, modeling a
-    * real many-files corpus scan (the [[Pdf]] staging pattern).
+  /** Fixture writer: one .deb per document row (per-document DEFLATE of
+    * two tars).
     */
-  def encodeDeb(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderDeb(id)))
-      .toDF("doc_id", "deb")
-  }
+  def encodeDeb(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "deb")(renderDeb)
 
   // --------------------------------------------------------------- reader
 

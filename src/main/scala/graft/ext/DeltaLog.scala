@@ -103,14 +103,7 @@ object DeltaLog {
   def encodeDeltaLog(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-table
-      // metadata/manifest render must not inherit the scan's split count —
-      // one round-robin exchange of bare ids spreads it across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .flatMap(id => (0 until nCommits(id)).map(c => (id, c.toLong, renderCommit(id, c))))
       .toDF("doc_id", "version", "content")
   }
@@ -403,14 +396,7 @@ object DeltaLog {
   def encodeDeltaCheckpointLog(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-table
-      // metadata/manifest render must not inherit the scan's split count —
-      // one round-robin exchange of bare ids spreads it across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .flatMap { id =>
         val acts = checkpointActions(id)
         val files = Vector.newBuilder[(Long, String, Array[Byte])]

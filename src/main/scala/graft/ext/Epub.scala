@@ -132,22 +132,8 @@ object Epub {
   }
 
   /** Fixture writer: one EPUB per document row. */
-  def encodeEpub(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one round-robin staging exchange: the bench's documents table is
-      // a single parquet row group (one scan partition), which would
-      // serialize the per-document render+extract CPU onto one thread; a
-      // real corpus is many files (many partitions), so this models the
-      // production layout (see Pdf.encodePdf for the full rationale)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderEpub(id)))
-      .toDF("doc_id", "payload")
-  }
+  def encodeEpub(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "payload")(renderEpub)
 
   // --------------------------------------------------------------- reader
 

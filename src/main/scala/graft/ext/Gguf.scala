@@ -167,20 +167,8 @@ object Gguf {
   }
 
   /** Fixture writer: one .gguf per document row. */
-  def encodeGguf(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderGguf(id)))
-      .toDF("doc_id", "gguf")
-  }
+  def encodeGguf(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "gguf")(renderGguf)
 
   // --------------------------------------------------------------- reader
 

@@ -118,22 +118,8 @@ object Gpx {
   }
 
   /** Fixture writer: one GPX track per document row. */
-  def encodeGpx(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one round-robin staging exchange: the bench's documents table is
-      // a single parquet row group (one scan partition), which would
-      // serialize the per-document render+extract CPU onto one thread; a
-      // real corpus is many files (many partitions), so this models the
-      // production layout (see Pdf.encodePdf for the full rationale)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderGpx(id)))
-      .toDF("doc_id", "gpx_text")
-  }
+  def encodeGpx(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "gpx_text")(renderGpx)
 
   // --------------------------------------------------------------- parser
 

@@ -153,14 +153,7 @@ object Iceberg {
   def encodeIceberg(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-table
-      // metadata/manifest render must not inherit the scan's split count —
-      // one round-robin exchange of bare ids spreads it across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .flatMap { id =>
         Seq((id, "metadata/v1.metadata.json",
           renderMetadataJson(id).getBytes(java.nio.charset.StandardCharsets.UTF_8))) ++
@@ -420,14 +413,7 @@ object Iceberg {
   def encodeIcebergV2(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-table
-      // metadata/manifest render must not inherit the scan's split count —
-      // one round-robin exchange of bare ids spreads it across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .flatMap { id =>
         val manifests = (0 until nManifests2(id)).map(m => renderManifest2(id, m))
         val delManifest = renderDeleteManifest2(id)
@@ -666,14 +652,7 @@ object Iceberg {
   def encodeIcebergEq(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-table
-      // metadata/manifest render must not inherit the scan's split count —
-      // one round-robin exchange of bare ids spreads it across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .flatMap { id =>
         val manifests = (0 until nManifestsE(id)).map(m => renderManifestE(id, m))
         val delManifest = renderDeleteManifestE(id)

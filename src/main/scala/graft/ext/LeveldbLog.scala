@@ -113,20 +113,8 @@ object LeveldbLog {
   }
 
   /** Fixture writer: one WAL per document row. */
-  def encodeLog(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one staging exchange: each log is ~35 KiB of crc32c'd fragments,
-      // which would serialize on the bench's single-row-group scan (the
-      // Pdf.encodePdf rationale)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderLog(id)))
-      .toDF("doc_id", "wal")
-  }
+  def encodeLog(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "wal")(renderLog)
 
   // --------------------------------------------------------------- reader
 

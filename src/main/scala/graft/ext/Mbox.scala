@@ -204,14 +204,7 @@ object Mbox {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
+    Stage.docIds(docs, idCol)
       .groupByKey(_ % nArchives)
       .mapGroups { (aid, it) =>
         val ids = it.toArray.sorted
@@ -402,20 +395,8 @@ object Mbox {
     * [[emlBodyFor]] plants a literal `>From ` line to catch a parser
     * that unquotes anyway).
     */
-  def encodeEmlFiles(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderRfc5322(id, mbox = false)))
-      .toDF("doc_id", "eml")
-  }
+  def encodeEmlFiles(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "eml")(id => renderRfc5322(id, mbox = false))
 
   final case class EmlEntry(doc_id: Long, subject: String, n_bytes: Long, checksum: Long)
 

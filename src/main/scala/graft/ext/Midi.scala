@@ -114,20 +114,8 @@ object Midi {
   }
 
   /** Fixture writer: one SMF per document row. */
-  def encodeMidi(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderMidi(id)))
-      .toDF("doc_id", "midi")
-  }
+  def encodeMidi(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "midi")(renderMidi)
 
   // --------------------------------------------------------------- reader
 

@@ -138,20 +138,8 @@ object Msgpack {
   }
 
   /** Fixture writer: one msgpack document per row. */
-  def encodeMsgpack(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderMsgpack(id)))
-      .toDF("doc_id", "msgpack")
-  }
+  def encodeMsgpack(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "msgpack")(renderMsgpack)
 
   // --------------------------------------------------------------- reader
 

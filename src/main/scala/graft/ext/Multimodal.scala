@@ -118,14 +118,7 @@ object Multimodal {
   def encodePpm(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val w = 8 + java.lang.Math.floorMod(id, 8L).toInt
@@ -511,14 +504,7 @@ object Multimodal {
   def encodeBmp(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val w = 8 + java.lang.Math.floorMod(id, 8L).toInt
@@ -1192,14 +1178,7 @@ object Multimodal {
   def encodePng(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val w = 8 + java.lang.Math.floorMod(id, 8L).toInt
@@ -1512,14 +1491,7 @@ object Multimodal {
   def encodeGif(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val w = 8 + java.lang.Math.floorMod(id, 8L).toInt
@@ -2192,14 +2164,7 @@ object Multimodal {
   def encodeJpeg(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val nTxt = data.length
@@ -3034,14 +2999,7 @@ object Multimodal {
     import spark.implicits._
     val (w, h) = (8, 6)
     val fb = 3 * w * h // 144, even: no pad bytes
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = utf8Bytes(textOrNull)
         val nf = (1 + java.lang.Math.floorMod(id, 5L)).toInt

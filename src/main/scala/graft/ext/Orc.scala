@@ -258,20 +258,8 @@ object Orc {
   }
 
   /** Fixture writer: one ORC file per document row. */
-  def encodeOrc(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderOrc(id)))
-      .toDF("doc_id", "orc")
-  }
+  def encodeOrc(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "orc")(renderOrc)
 
   // --------------------------------------------------------------- reader
 
@@ -281,24 +269,8 @@ object Orc {
 
   /** protobuf wire reader over a byte range. */
   private final class PReader(b: Array[Byte], from: Int, until: Int)
-      extends Bits.Cursor(b, from, until) {
+      extends Bits.WireReader(b, from, until) {
     def fail(): Nothing = Orc.fail()
-    def more: Boolean = pos < limit
-    def varint(): Long = uvarint(10)
-    def lenDelim(): (Int, Int) = {
-      val len = varint()
-      if (len < 0 || len > limit - pos) fail()
-      val span = (pos, pos + len.toInt)
-      pos += len.toInt
-      span
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 1 => if (pos + 8 > limit) fail() else pos += 8
-      case 2 => lenDelim()
-      case 5 => if (pos + 4 > limit) fail() else pos += 4
-      case _ => fail()
-    }
   }
 
   // ---- compression chunk framing

@@ -95,20 +95,8 @@ object Packidx {
   }
 
   /** Fixture writer: one .idx per document row. */
-  def encodeIdx(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one staging exchange: per-file SHA-1 + md5-derived tables would
-      // serialize on the single-row-group scan (the Pdf.encodePdf
-      // rationale)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderIdx(id)))
-      .toDF("doc_id", "idx")
-  }
+  def encodeIdx(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "idx")(renderIdx)
 
   // --------------------------------------------------------------- reader
 

@@ -471,20 +471,8 @@ object ParquetFile {
   }
 
   /** Fixture writer: one parquet file per document row. */
-  def encodeParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderParquet(id)))
-      .toDF("doc_id", "pq")
-  }
+  def encodeParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pq")(renderParquet)
 
   // --------------------------------------------------------------- reader
 
@@ -1536,20 +1524,8 @@ object ParquetFile {
   }
 
   /** Fixture writer: one nested parquet file per document row. */
-  def encodeNestedParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderNestedParquet(id)))
-      .toDF("doc_id", "pq")
-  }
+  def encodeNestedParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pq")(renderNestedParquet)
 
   final case class ParquetNestedRow(
     doc_id: Long, row_idx: Long, id_val: Long,
@@ -1949,20 +1925,8 @@ object ParquetFile {
   }
 
   /** Fixture writer: one page-indexed parquet file per document row. */
-  def encodePageIndexParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderPageIndexParquet(id)))
-      .toDF("doc_id", "pq")
-  }
+  def encodePageIndexParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pq")(renderPageIndexParquet)
 
   final case class ParquetPageIndexRow(
     doc_id: Long, col_idx: Long, path: String, page: Long, first_row: Long,
@@ -2350,20 +2314,8 @@ object ParquetFile {
   }
 
   /** Fixture writer: one bloom-carrying parquet file per document row. */
-  def encodeBloomParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderBloomParquet(id)))
-      .toDF("doc_id", "pq")
-  }
+  def encodeBloomParquet(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pq")(renderBloomParquet)
 
   final case class ParquetBloomStat(
     doc_id: Long, row_group: Long, col_idx: Long, path: String,

@@ -140,20 +140,8 @@ object Pcap {
   }
 
   /** Fixture writer: one capture per document row. */
-  def encodePcap(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one staging exchange: per-packet md5 payloads + checksummed
-      // headers make this synthesis expensive enough to serialize on the
-      // bench's single-row-group scan (the Pdf.encodePdf rationale)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderPcap(id)))
-      .toDF("doc_id", "pcap")
-  }
+  def encodePcap(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pcap")(renderPcap)
 
   // --------------------------------------------------------------- reader
 

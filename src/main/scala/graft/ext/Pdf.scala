@@ -761,25 +761,8 @@ object Pdf {
   }
 
   /** Fixture writer: one PDF per document row. */
-  def encodePdf(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // Spread fixture SYNTHESIS across cores: the bench's documents
-      // table is one small parquet row group (one scan partition), which
-      // would serialize ~100 ms/doc of render+extract CPU (zlib + the R6
-      // handler's Algorithm 2.B) onto a single thread. A real corpus
-      // arrives as many files — many scan partitions — so this one
-      // round-robin exchange of (doc_id) longs models the production
-      // layout rather than distorting it. The EXTRACTOR itself stays
-      // map-only.
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderPdf(id)))
-      .toDF("doc_id", "payload")
-  }
+  def encodePdf(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "payload")(renderPdf)
 
   // --------------------------------------------------------------- parser
 

@@ -111,20 +111,8 @@ object Protobuf {
   }
 
   /** Fixture writer: one delimited stream per document row. */
-  def encodeProto(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderStream(id)))
-      .toDF("doc_id", "proto")
-  }
+  def encodeProto(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "proto")(renderStream)
 
   // --------------------------------------------------------------- reader
 
@@ -141,9 +129,8 @@ object Protobuf {
 
   /** A protobuf reader over `b(from until until)`: varints are ≤ 10 bytes. */
   private final class Reader(b: Array[Byte], from: Int, until: Int)
-      extends Bits.Cursor(b, from, until) {
+      extends Bits.WireReader(b, from, until) {
     def fail(): Nothing = Protobuf.fail()
-    def varint(): Long = uvarint(10)
   }
 
   /** Scan one message at [from, until). */

@@ -148,21 +148,11 @@ object Rpm {
     out.toByteArray
   }
 
-  /** Fixture writer: one .rpm per document row. Per-document DEFLATE of
-    * the cpio payload = expensive writer: one round-robin staging
-    * exchange, the [[Pdf]] pattern.
+  /** Fixture writer: one .rpm per document row (per-document DEFLATE of
+    * the cpio payload).
     */
-  def encodeRpm(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderRpm(id)))
-      .toDF("doc_id", "rpm")
-  }
+  def encodeRpm(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "rpm")(renderRpm)
 
   // --------------------------------------------------------------- reader
 

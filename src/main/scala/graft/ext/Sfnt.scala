@@ -408,21 +408,11 @@ object Sfnt {
     if (isWoff(id)) { if (id % 2 == 0) renderWoff(id) else renderWoff2(id) }
     else renderTtf(id)
 
-  /** Fixture writer: one font file per document row. The woff arms'
-    * per-document zlib/brotli compression = expensive writer: one
-    * round-robin staging exchange, the [[Pdf]] pattern.
+  /** Fixture writer: one font file per document row (the woff arms
+    * compress per document with zlib or brotli).
     */
-  def encodeFonts(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderFont(id)))
-      .toDF("doc_id", "font")
-  }
+  def encodeFonts(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "font")(renderFont)
 
   // --------------------------------------------------------------- reader
 

@@ -340,20 +340,8 @@ object Sqlite {
   }
 
   /** Fixture writer: one database file per document row. */
-  def encodeSqlite(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the expensive per-doc
-      // render must not inherit the scan's split count — one round-robin
-      // exchange of bare ids spreads render+decode across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderSqlite(id)))
-      .toDF("doc_id", "db")
-  }
+  def encodeSqlite(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "db")(renderSqlite)
 
   // --------------------------------------------------------------- reader
 

@@ -149,20 +149,8 @@ object SqliteWal {
   }
 
   /** Fixture writer: one -wal per document row. */
-  def encodeWal(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one staging exchange: per-frame checksum chains over 512-byte
-      // pages serialize on the single-row-group scan otherwise (the
-      // Pdf.encodePdf rationale)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderWal(id)))
-      .toDF("doc_id", "wal")
-  }
+  def encodeWal(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "wal")(renderWal)
 
   // --------------------------------------------------------------- reader
 

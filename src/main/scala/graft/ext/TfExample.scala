@@ -142,23 +142,8 @@ object TfExample {
   private def fail(): Nothing = throw new MalformedProto
 
   private final class Reader(b: Array[Byte], from: Int, until: Int)
-      extends Bits.Cursor(b, from, until) {
+      extends Bits.WireReader(b, from, until) {
     def fail(): Nothing = TfExample.fail()
-    def varint(): Long = uvarint(10)
-    def lenDelim(): (Int, Int) = {
-      val len = varint()
-      if (len < 0 || pos + len > limit) fail()
-      val span = (pos, pos + len.toInt)
-      pos += len.toInt
-      span
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 1 => if (pos + 8 > limit) fail() else pos += 8
-      case 2 => lenDelim()
-      case 5 => if (pos + 4 > limit) fail() else pos += 4
-      case _ => fail() // groups (3/4) and reserved types
-    }
   }
 
   private[ext] final case class FeatureVal(

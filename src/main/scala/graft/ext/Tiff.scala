@@ -215,14 +215,7 @@ object Tiff {
   def encodeTiff(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol).cast("long") >= 0)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol)
       .map { case (id, textOrNull) =>
         val data = Option(textOrNull).getOrElse("").getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val w = 8 + java.lang.Math.floorMod(id, 8L).toInt

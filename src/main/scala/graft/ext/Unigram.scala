@@ -250,13 +250,7 @@ object Unigram {
     val spark = docs.sparkSession
     import spark.implicits._
     val vocab = trainVocab(docs, rounds, seedK, pruneKs, textCol)
-    docs
-      .filter(col("doc_id").isNotNull && col("doc_id") >= 0 && col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc Viterbi DP
-      // must not inherit the scan's split count
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, "doc_id", textCol).filter(col(textCol).isNotNull)
       .map { case (id, t) =>
         val cs = t.split(' ').iterator.filter(_.nonEmpty).flatMap(chunksOf).toSeq
         val nTok = cs.iterator.map(c => viterbi(c, vocab).length.toLong).sum

@@ -262,15 +262,7 @@ object UnixCompress {
     import org.apache.spark.sql.functions.col
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the LZW compress +
-      // decompress kernel must not inherit the scan's split count — one
-      // round-robin exchange of the narrow (id, text) rows spreads the
-      // roundtrip across every core
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         try {
           val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -87,20 +87,8 @@ object Vcard {
   }
 
   /** Fixture writer: one .vcf (possibly multi-card) per document row. */
-  def encodeVcf(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderVcf(id)))
-      .toDF("doc_id", "vcf_text")
-  }
+  def encodeVcf(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "vcf_text")(renderVcf)
 
   // --------------------------------------------------------------- parser
 

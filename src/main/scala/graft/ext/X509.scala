@@ -209,21 +209,8 @@ object X509 {
   /** Fixture writer: one PEM file per document row (every 4th a 2-cert
     * chain).
     */
-  def encodePem(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // one staging exchange: ~32 md5 blocks + DER build + base64 per doc
-      // is the family's most expensive synthesis, and the bench's
-      // single-row-group documents scan would serialize it (the
-      // Pdf.encodePdf rationale)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderPem(id)))
-      .toDF("doc_id", "pem")
-  }
+  def encodePem(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "pem")(renderPem)
 
   // --------------------------------------------------------------- reader
 

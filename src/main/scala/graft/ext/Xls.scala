@@ -199,20 +199,8 @@ object Xls {
     * the MINI layer (BIFF payloads here are small — the other CFB path is
     * exercised by [[Doc]]'s padded WordDocument).
     */
-  def encodeXls(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, Doc.renderCfb(Seq(("Workbook", renderWorkbook(id))))))
-      .toDF("doc_id", "payload")
-  }
+  def encodeXls(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "payload")(id => Doc.renderCfb(Seq(("Workbook", renderWorkbook(id)))))
 
   // --------------------------------------------------------------- parser
 

@@ -997,14 +997,7 @@ object Xz {
   def xzSignal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[XzStats] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         try {
           val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -161,20 +161,8 @@ object Yaml {
   }
 
   /** Fixture writer: one manifest per document row. */
-  def encodeYaml(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0)
-      .select(col(idCol).cast("long"))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[Long]
-      .map(id => (id, renderYaml(id)))
-      .toDF("doc_id", "yaml_text")
-  }
+  def encodeYaml(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    Stage.render(docs, idCol, "yaml_text")(renderYaml)
 
   // --------------------------------------------------------------- parser
 

@@ -1557,7 +1557,7 @@ object Zstd {
       // one staging exchange: the bench's documents table is a single
       // parquet row group (one scan partition), which would serialize
       // the 8-gram explosion onto one thread before the groupBy; a real
-      // corpus scan is many partitions (see Pdf.encodePdf)
+      // corpus scan is many partitions (see [[Stage]])
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .as[String]
     // docs shorter than the window produce no slices, exactly the old
@@ -1627,15 +1627,7 @@ object Zstd {
       idCol: String = "doc_id", textCol: String = "text"): Dataset[ZstdDictStats] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // one staging exchange: per-document dictionary compress+decompress
-      // is the repo's most expensive per-row codec work, and the bench's
-      // single-row-group documents scan would serialize it (see
-      // Pdf.encodePdf for the full rationale)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         // family convention (zstdSignal, brotliSignal): one damaged
         // round trip quarantines as a (-1, -1) sentinel row instead of
@@ -1730,14 +1722,7 @@ object Zstd {
   def zstdSignal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[ZstdStats] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .filter(col(idCol).isNotNull && col(idCol) >= 0 && col(textCol).isNotNull)
-      .select(col(idCol).cast("long"), col(textCol))
-      // staging exchange (optimization guide §2.5): the per-doc kernel must
-      // not inherit the scan's split count — one round-robin exchange of the
-      // narrow pre-kernel rows spreads it across every core
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+    Stage.docTexts(docs, idCol, textCol).filter(col(textCol).isNotNull)
       .map { case (id, text) =>
         val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val comp = compress(data)

@@ -75,6 +75,45 @@ class BitsSpec extends AnyFunSuite {
     }
   }
 
+  test("protobuf wire: spans, skips and the limit that bounds them") {
+    // field 1 varint 150, field 2 "hi", field 3 fixed64, field 4 fixed32
+    val msg = Array(0x08, 0x96, 0x01, 0x12, 0x02, 'h', 'i', 0x19, 1, 2, 3, 4, 5, 6, 7, 8,
+      0x25, 9, 10, 11, 12).map(_.toByte)
+    val r = wire(msg, 0, msg.length)
+    assert(r.varint() == 8L && r.varint() == 150L)
+    assert(r.varint() == 0x12L && r.lenDelim() == ((5, 7)) && r.pos == 7)
+    assert(r.varint() == 0x19L); r.skip(1); assert(r.pos == 16)
+    assert(r.varint() == 0x25L); r.skip(5); assert(r.pos == 21 && !r.more)
+    // the same skips by wire type from each field's value start
+    for ((at, w, end) <- Seq((1, 0, 3), (4, 2, 7), (8, 1, 16), (17, 5, 21))) {
+      val q = wire(msg, at, msg.length)
+      q.skip(w)
+      assert(q.pos == end, s"wire $w")
+    }
+  }
+
+  test("protobuf wire: over-long spans, groups, reserved types and truncated fixed fields fail") {
+    // a length past the limit, also when the array itself runs on
+    val long = Array(0x05, 1, 2, 3).map(_.toByte)
+    intercept[IllegalStateException](wire(long, 0, long.length).lenDelim())
+    intercept[IllegalStateException](wire(long, 0, long.length).skip(2))
+    val framed = Array(0x03, 1, 2, 3).map(_.toByte)
+    assert(wire(framed, 0, 4).lenDelim() == ((1, 4)))
+    intercept[IllegalStateException](wire(framed, 0, 3).lenDelim())
+    // a 10-byte length whose value is negative as a Long
+    val negative = padded(-1L, 10)
+    intercept[IllegalStateException](wire(negative, 0, negative.length).lenDelim())
+    // groups (3, 4) and the reserved types (6, 7)
+    for (w <- Seq(3, 4, 6, 7))
+      intercept[IllegalStateException](wire(Array.fill(16)(0.toByte), 0, 16).skip(w))
+    // fixed64 needs 8 bytes and fixed32 needs 4 before the limit
+    val eight = Array.fill(8)(0.toByte)
+    intercept[IllegalStateException](wire(eight, 0, 7).skip(1))
+    intercept[IllegalStateException](wire(eight, 0, 3).skip(5))
+    intercept[IllegalStateException](wire(eight, 5, 8).skip(5))
+    val ok = wire(eight, 0, 8); ok.skip(1); assert(ok.pos == 8)
+  }
+
   test("zlibWrap: the JDK's zlib framing around the same deflate body") {
     val data = ("zlib wrapper " * 40).getBytes("US-ASCII")
     def deflate(nowrap: Boolean): Array[Byte] = {
@@ -363,6 +402,11 @@ object BitsSpec {
   def cursor(b: Array[Byte]): Bits.Cursor = new Bits.Cursor(b, 0, b.length) {
     def fail(): Nothing = throw new IllegalStateException("bad varint")
   }
+
+  def wire(b: Array[Byte], from: Int, until: Int): Bits.WireReader =
+    new Bits.WireReader(b, from, until) {
+      def fail(): Nothing = throw new IllegalStateException("bad wire bytes")
+    }
 
   /** `v` as an LEB128 varint stretched to exactly `n` bytes: the
     * non-minimal form a reader accepts only up to its byte bound.

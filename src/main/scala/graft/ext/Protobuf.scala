@@ -133,12 +133,15 @@ object Protobuf {
     def fail(): Nothing = Protobuf.fail()
   }
 
-  /** Scan one message at [from, until). */
+  /** Scan one message at [from, until). The reader bounds every field by
+    * `until` (`skip` for the fixed widths, `lenDelim` for spans), so a
+    * field that runs past the message fails there.
+    */
   private def scanMsg(id: Long, msgIdx: Long, b: Array[Byte], from: Int, until: Int,
       out: scala.collection.mutable.Builder[ProtoField, Vector[ProtoField]]): Unit = {
     val r = new Reader(b, from, until)
     var elem = 0L
-    while (r.pos < until) {
+    while (r.more) {
       val tag = r.varint()
       val p1 = r.pos
       val field = tag >>> 3
@@ -149,34 +152,27 @@ object Protobuf {
           val v = r.varint()
           out += ProtoField(id, msgIdx, elem, field, 0L, v, 0L, 0L)
         case 1 =>
-          if (p1 + 8 > until) fail()
+          r.skip(1)
           var v = 0L
           var i = 7
           while (i >= 0) { v = (v << 8) | (b(p1 + i) & 0xffL); i -= 1 }
           out += ProtoField(id, msgIdx, elem, field, 1L, v, 8L, 0L)
-          r.pos = p1 + 8
         case 5 =>
-          if (p1 + 4 > until) fail()
+          r.skip(5)
           var v = 0L
           var i = 3
           while (i >= 0) { v = (v << 8) | (b(p1 + i) & 0xffL); i -= 1 }
           out += ProtoField(id, msgIdx, elem, field, 5L, v, 4L, 0L)
-          r.pos = p1 + 4
         case 2 =>
-          val n = r.varint()
-          val p2 = r.pos
-          if (n < 0 || n > MaxLen || p2 + n > until) fail()
+          val (p2, e) = r.lenDelim()
           var cks = 0L
           var i = p2
-          val e = p2 + n.toInt
           while (i < e) { cks = (cks * 31 + (b(i) & 0xff)) % 1000000007L; i += 1 }
-          out += ProtoField(id, msgIdx, elem, field, 2L, 0L, n, cks)
-          r.pos = e
+          out += ProtoField(id, msgIdx, elem, field, 2L, 0L, (e - p2).toLong, cks)
         case _ => fail() // groups (3/4) and reserved (6/7) are damage
       }
       elem += 1L
     }
-    if (r.pos != until) fail()
   }
 
   private[ext] def scanStream(id: Long, b: Array[Byte]): Seq[ProtoField] = {
@@ -184,13 +180,10 @@ object Protobuf {
     val out = Vector.newBuilder[ProtoField]
     val r = new Reader(b, 0, b.length)
     var msg = 0L
-    while (r.pos < b.length) {
-      val n = r.varint()
-      val p1 = r.pos
-      if (n < 0 || n > MaxLen || p1 + n > b.length) fail()
+    while (r.more) {
+      val (p1, e) = r.lenDelim()
       if (msg >= MaxMsgs) fail()
-      scanMsg(id, msg, b, p1, p1 + n.toInt, out)
-      r.pos = p1 + n.toInt
+      scanMsg(id, msg, b, p1, e, out)
       msg += 1L
     }
     out.result()

@@ -24,20 +24,24 @@ import org.apache.spark.sql.functions.col
   * the exchange fire exactly when the input is narrower than the session's
   * cores (the [[CurationPipeline]] exactStage convention).
   *
-  * Rule 2, UNCONDITIONAL ([[docIds]], [[docTexts]], [[render]]), for the
-  * fixture writers that synthesize one file per document row. Fixture
-  * SYNTHESIS is expensive (a PDF's zlib plus its R6 handler's Algorithm
-  * 2.B is ~100 ms/doc; a PEM is ~32 md5 blocks plus DER and base64), and
-  * on the one-row-group documents scan it would serialize onto one thread.
-  * A real corpus arrives as many files — many scan partitions — so the
-  * exchange of bare ids (or (id, text) rows) models the production layout
-  * rather than distorting it; the input is a document table, never a
-  * corpus-scale relation, so no guard is needed and none is probed. The
-  * extractors that read the fixtures stay map-only. The row rule is fixed
-  * too: ids that are null or negative drop out (id 0 stays) and the rest
-  * are cast to long. A writer that keeps negative ids or stages a derived
-  * column is not a fixture writer in this sense and writes its own
-  * exchange.
+  * Rule 2, UNCONDITIONAL ([[docIds]], [[docTexts]], [[render]]), for
+  * per-document work over the documents table itself: the fixture writers
+  * that synthesize one file per document row, and the per-document
+  * kernels that take the table's (id, text) rows as they are
+  * (`Unigram.tokenStats`, `Archives.compressionSignal`, the Brotli, Xz,
+  * Zstd and UnixCompress signals). Fixture SYNTHESIS is expensive (a
+  * PDF's zlib plus its R6 handler's Algorithm 2.B is ~100 ms/doc; a PEM
+  * is ~32 md5 blocks plus DER and base64), and so is a per-document
+  * compressor; on the one-row-group documents scan either would serialize
+  * onto one thread. A real corpus arrives as many files — many scan
+  * partitions — so the exchange of bare ids (or (id, text) rows) models
+  * the production layout rather than distorting it; the input is a
+  * document table, never a corpus-scale relation, so no guard is needed
+  * and none is probed. The extractors that read the fixtures stay
+  * map-only. The row rule is fixed too: ids that are null or negative
+  * drop out (id 0 stays) and the rest are cast to long. A site that keeps
+  * negative ids or stages a derived column (normalized text, token lists,
+  * a group key) is outside this rule and writes its own exchange.
   *
   * Why the guard is memoized: `df.rdd.getNumPartitions` runs physical
   * planning of the subtree — measured ~0.25s per query BUILD on the

@@ -22,7 +22,7 @@ Masked, because they vary from run to run without the plan changing:
 Trailing spaces and blank lines, and sbt's own `[info]`-style log lines,
 are dropped.
 
-Usage: python3 tools/plan_diff.py <parent_dump> <change_dump> [--context N]
+Usage: python3 tools/plan_diff.py <parent_dump> <change_dump>
 """
 import difflib
 import re
@@ -63,19 +63,16 @@ def mask(line):
 
 
 def main(argv):
-    if len(argv) < 3:
+    if len(argv) != 3:
         print(__doc__)
         return 2
-    context = 3
-    if "--context" in argv:
-        context = int(argv[argv.index("--context") + 1])
     a, b = split_dump(argv[1]), split_dump(argv[2])
     only_a = sorted(set(a) - set(b))
     only_b = sorted(set(b) - set(a))
     changed = sorted(k for k in set(a) & set(b) if a[k] != b[k])
     for k in changed:
         print(f"CHANGED {k}")
-        diff = difflib.unified_diff(a[k], b[k], "parent", "change", n=context, lineterm="")
+        diff = difflib.unified_diff(a[k], b[k], "parent", "change", n=3, lineterm="")
         for line in list(diff)[2:]:
             print("    " + line)
     for k in only_a:
